@@ -207,10 +207,14 @@ object Bench {
     // line — whatever stdout tail the driver keeps, the chunks nearest
     // the end parse, so per-query data is recoverable without the file.
     val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
+    // The canonical bench_out.json is ALSO rewritten on every run, so
+    // the file a reader of the default name opens is always this run's.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_out.c$cpus.$sfBase.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Seq(out, "bench_out.json").distinct.foreach { f =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(f),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
     val chunkSize = 64
     val chunks = results.grouped(chunkSize).toSeq
     chunks.zipWithIndex.foreach { case (chunk, i) =>

@@ -1112,28 +1112,18 @@ object Estimation {
     * mismatch here.
     */
   def qRasterStream(s: SparkSession, dir: String): DataFrame =
-    // r15 optimization: the streaming aggregate ran at the session's 32
-    // shuffle partitions — 32 state-store open/commit cycles per
-    // micro-batch for a 5-band state. Run the gate under the SAME
-    // 8-partition stateful scope every StreamingGates gate uses
-    // (r16: via the shared graft.core.StreamScope, ADVICE r15 —
-    // the set/restore logic was an inlined duplicate here).
-    graft.core.StreamScope.withStreamPartitions(s) {
-      val name = "raster_stream_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = s.readStream.format("graft.sources.v2.RasterSource")
+    // the scope's 8 shuffle partitions, not the session's 32: every
+    // micro-batch pays one state-store open/commit per partition, for a
+    // 5-band state
+    graft.core.StreamScope.drain(s, "raster_stream_out",
+      s.readStream.format("graft.sources.v2.RasterSource")
         .option("w", 120).option("h", 80).option("rowsPerBatch", 16).load()
         .groupBy(expr("y div 16").as("band"))
         .agg(count(lit(1)).as("n_cells"), count(col("v")).as("n_valid"),
              sum(col("v")).as("vsum"), min(col("v")).as("vmin"),
-             max(col("v")).as("vmax"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("band"))
-    }
+             max(col("v")).as("vmax")),
+      "complete")
+      .orderBy(col("band"))
 
   /** G7 (query-backed): dimension-join DYNAMIC pruning through the
     * custom source ([[graft.sources.v2.RasterScan]]'s
@@ -1174,16 +1164,17 @@ object Estimation {
     */
   def qStatsStreamSink(s: SparkSession, dir: String): DataFrame = {
     val key = java.util.UUID.randomUUID().toString
-    val q = s.readStream.format("graft.sources.v2.RasterSource")
-      .option("w", 120).option("h", 80).option("rowsPerBatch", 16).load()
-      .filter(col("v").isNotNull).select(col("v"))
-      .writeStream.format("graft.sources.v2.StatsSink").option("key", key)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("g6gate").toString)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.core.TempDir("g6gate") { checkpoint =>
+      s.readStream.format("graft.sources.v2.RasterSource")
+        .option("w", 120).option("h", 80).option("rowsPerBatch", 16).load()
+        .filter(col("v").isNotNull).select(col("v"))
+        .writeStream.format("graft.sources.v2.StatsSink").option("key", key)
+        .option("checkpointLocation", checkpoint.toString)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
     val (nEpochs, st) = graft.sources.v2.StatsSink.streamCommitted(key).get
     s.range(1).select(lit(nEpochs).as("n_epochs"), lit(st.n).as("n_valid"),
       lit(st.sum).as("vsum"), lit(st.min).as("vmin"), lit(st.max).as("vmax"))

@@ -1,49 +1,50 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.core.StreamScope
+import graft.core.StreamScope.lastWins
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables._
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.{CmsOut, KeyedVal, KmvArrival, KmvOut,
   MgOut, MomIn, MomOut, RunningOut, SampIn, SampOut}
 
-/** Streaming sketch components promoted from spec-only coverage to
-  * DRIVER-GATE queries (SURVEY §2 F17 / F21 / F24 — the round-11 brief's
-  * "run the stream to completion, publish final state, DuckDB-oracle the
-  * batch twin" idiom, G6's posture for stateful operators):
+/** Streaming operators promoted from spec-only coverage to DRIVER-GATE
+  * queries (SURVEY §2 F17 / F21 / F24 — "run the stream to completion,
+  * publish final state, DuckDB-oracle the batch twin", G6's posture for
+  * stateful operators). Each gate feeds a deterministic fixture through
+  * the REAL streaming operator via [[graft.core.StreamScope.gate]] — a
+  * genuine incremental execution with state persisted across batches,
+  * not a batch query in costume — reads the final state off the
+  * changelog ([[graft.core.StreamScope.lastWins]], what a production
+  * reader of the changelog topic does), and publishes values a DuckDB
+  * oracle recomputes with no knowledge of the stream. Batch-split
+  * sensitivity is covered by StreamingSpec (arbitrary splits + replay);
+  * a gate pins one canonical split so the published frame is bit-stable.
   *
-  * Each query feeds the deterministic fixture through the REAL streaming
-  * operator (flatMapGroupsWithState over a MemoryStream, split into three
-  * micro-batches — a genuine incremental execution with state persisted
-  * across batches, not a batch query in costume), takes the latest
-  * versioned summary per shard/group from the Update-mode changelog
-  * (max-version union — exactly what a production reader of the changelog
-  * topic does), and publishes values a DuckDB oracle can recompute with
-  * no knowledge of the stream: exact per-key counts and theorem-
-  * guaranteed contract flags (F17/F21), or the batch-twin sketch values
-  * the stream must match EXACTLY by the kernel-sharing construction
-  * (F24). Batch-split sensitivity is covered by StreamingSpec (arbitrary
-  * splits + replay); the gate pins one canonical split so the published
-  * frame is bit-stable.
-  *
-  * Scale posture: the MemoryStream driver feed is the SIMULATED ingest —
-  * a production deployment reads Kafka with the same operators; the
-  * arrival sets are count-bounded (the 50k pinned Zipf stream; the KMV
-  * arrivals capped at l_orderkey < 10⁶ — inactive at gate scales, frozen
-  * beyond, the hash-stable bound rule), so the gate cost never grows
-  * with the corpus.
+  * Scale posture: the MemoryStream feed is the SIMULATED ingest — a
+  * production deployment reads Kafka with the same operators; every
+  * arrival set is count-bounded (the caps below are hash-stable bound
+  * rules: inactive at gate scales, frozen beyond), so a gate's cost
+  * never grows with the corpus.
   */
 object StreamingGates {
 
-  /** Stateful partition scope — hoisted to [[graft.core.StreamScope]]
-    * (r16, ADVICE r15: qRasterStream had duplicated the set/restore
-    * logic); rationale documented there.
+  /** Split arrivals into `n` micro-batches of `length / n` each (the
+    * last takes the remainder), with `replay` re-delivered at the end
+    * of batch `at` (the last by default).
     */
-  private def withStreamPartitions(s: SparkSession, n: Int = 8)(f: => DataFrame): DataFrame =
-    graft.core.StreamScope.withStreamPartitions(s, n)(f)
+  private def batches[T](xs: Seq[T], n: Int, replay: Seq[T] = Nil,
+                         at: Int = -1): Seq[Seq[T]] = {
+    val cut = xs.length / n
+    val bs = (0 until n).map { i =>
+      if (i == n - 1) xs.drop(i * cut) else xs.slice(i * cut, (i + 1) * cut)
+    }
+    val j = if (at < 0) n - 1 else at
+    bs.updated(j, bs(j) ++ replay)
+  }
 
   /** The F17/F21 gate fixture: 50k rows of the B57-B62 Zipf formula —
     * small enough to stream from the driver, same md5 derivation the
@@ -57,14 +58,6 @@ object StreamingGates {
       .map(r => KeyedVal(r.getLong(1), r.getLong(0), r.getLong(2)))
       .toSeq
 
-  /** Latest-version rows per shard from an Update-mode changelog. */
-  private def latestPerShard[T](rows: Seq[T])(shard: T => Int,
-                                              ver: T => Long): Seq[T] =
-    rows.groupBy(shard).values.flatMap { sh =>
-      val maxVer = sh.map(ver).max
-      sh.filter(r => ver(r) == maxVer)
-    }.toSeq
-
   /** F17 (query-backed): STREAMING HEAVY HITTERS — the B62 Misra-Gries
     * summary maintained incrementally (same MisraGries.add kernel),
     * key space sharded by hash, three micro-batches over the 50k Zipf
@@ -77,26 +70,15 @@ object StreamingGates {
     * flags at 1 — a state bug that loses or inflates a counter across
     * batches breaks the hash.
     */
-  def qStreamHeavyHitters(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val k = 64
     val shards = 4
     val ev = zipfArrivals(s)
     val n = ev.size.toLong
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.heavyHittersStream(input.toDS(), k, shards)
-      .writeStream.format("memory")
-      .queryName("gate_mg_out").outputMode("update").start()
-    val summary =
-      try {
-        val third = ev.length / 3
-        input.addData(ev.take(third)); q.processAllAvailable()
-        input.addData(ev.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(ev.drop(2 * third)); q.processAllAvailable()
-        val rows = s.table("gate_mg_out").as[MgOut].collect().toSeq
-        latestPerShard(rows)(_.shard, _.ver).map(o => o.key -> o.est).toMap
-      } finally q.stop()
+    val rows = StreamScope.gate(s, "gate_mg_out", "update", batches(ev, 3))(
+      EventStreams.heavyHittersStream(_, k, shards)).as[MgOut].collect().toSeq
+    val summary = lastWins(rows)(_.shard, _.ver).map(o => o.key -> o.est).toMap
     val bound = n / (k + 1)
     val exact = ev.groupBy(_.user_id).view.mapValues(_.size.toLong).toMap
     val top5 = exact.toSeq.sortBy { case (u, c) => (-c, u) }.take(5)
@@ -123,30 +105,20 @@ object StreamingGates {
     * and bound_ok (est ≤ true + 4N/width — deterministic on the fixed
     * fixture). Oracle: true counts from the md5 formula, flags pinned.
     */
-  def qStreamCms(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCms(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val depth = 4
     val width = 2048
     val shards = 4
     val ev = zipfArrivals(s)
     val n = ev.size.toLong
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.cmsStream(input.toDS(), depth, width, shards)
-      .writeStream.format("memory")
-      .queryName("gate_cms_out").outputMode("update").start()
+    val rows = StreamScope.gate(s, "gate_cms_out", "update", batches(ev, 3))(
+      EventStreams.cmsStream(_, depth, width, shards)).as[CmsOut].collect().toSeq
     val summed = new Array[Long](depth * width)
-    try {
-      val third = ev.length / 3
-      input.addData(ev.take(third)); q.processAllAvailable()
-      input.addData(ev.slice(third, 2 * third)); q.processAllAvailable()
-      input.addData(ev.drop(2 * third)); q.processAllAvailable()
-      val rows = s.table("gate_cms_out").as[CmsOut].collect().toSeq
-      latestPerShard(rows)(_.shard, _.ver).foreach { o =>
-        var i = 0
-        while (i < summed.length) { summed(i) += o.grid(i); i += 1 }
-      }
-    } finally q.stop()
+    lastWins(rows)(_.shard, _.ver).foreach { o =>
+      var i = 0
+      while (i < summed.length) { summed(i) += o.grid(i); i += 1 }
+    }
     // the kernel-sharing identity, enforced loudly: stream state summed
     // over shards == the batch sketch, bit for bit
     val batchGrid = graft.sources.Synthetic.zipfEventsPinned(s, StreamZipfRows)
@@ -199,9 +171,8 @@ object StreamingGates {
     * stream. The arrival set is capped at l_orderkey < 10⁶ on BOTH
     * sides (inactive at gate scales).
     */
-  def qStreamKmv(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamKmv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val k = 64
     // 8-way SHARD-PREFIXED group keys (the F48 one-job layout, which
     // took the merge gate 6.3s → 4.2s): the stateful operator
@@ -216,32 +187,21 @@ object StreamingGates {
       .select(col("l_returnflag"), col("l_partkey")).collect()
       .map(r => KmvArrival(s"${r.getLong(1) % nShards}|${r.getString(0)}",
         r.getLong(1))).toSeq
-    val input = MemoryStream[KmvArrival]
-    val q = EventStreams.kmvStream(input.toDS(), k)
-      .writeStream.format("memory")
-      .queryName("gate_kmv_out").outputMode("update").start()
-    val latest =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        // re-deliver the first 100 arrivals with the final batch: the
-        // sketch set must not move
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(100))
-        q.processAllAvailable()
-        val rows = s.table("gate_kmv_out").as[KmvOut].collect().toSeq
-        rows.groupBy(_.grp).map { case (g, os) => g -> os.maxBy(_.ver) }
-          .toSeq
-          .groupBy { case (g, _) => g.substring(g.indexOf('|') + 1) }
-          .map { case (grp, shards) =>
-            val (mh, _) = shards.map(_._2)
-              .foldLeft((Array.empty[Long], Array.empty[Long])) {
-                case ((hs, vs), o) =>
-                  EventStreams.kmvMerge(hs, vs, o.hs, o.vs, k)
-              }
-            grp -> EventStreams.kmvEstimate(mh, k)
+    // re-deliver the first 100 arrivals with the final batch: the
+    // sketch set must not move
+    val rows = StreamScope.gate(s, "gate_kmv_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(100)))(
+      EventStreams.kmvStream(_, k)).as[KmvOut].collect().toSeq
+    val latest = lastWins(rows)(_.grp, _.ver)
+      .groupBy(o => o.grp.substring(o.grp.indexOf('|') + 1))
+      .map { case (grp, shards) =>
+        val (mh, _) = shards
+          .foldLeft((Array.empty[Long], Array.empty[Long])) {
+            case ((hs, vs), o) =>
+              EventStreams.kmvMerge(hs, vs, o.hs, o.vs, k)
           }
-      } finally q.stop()
+        grp -> EventStreams.kmvEstimate(mh, k)
+      }
     val exact = lineitem(s, dir)
       .filter(col("l_orderkey") < StreamFactMaxKey)
       .select(col("l_returnflag"), col("l_partkey")).distinct()
@@ -265,26 +225,15 @@ object StreamingGates {
     * both recomputed by the oracle from the md5 formulas alone
     * (a double-counted replay or a lost batch breaks the hash).
     */
-  def qStreamRunningSums(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamRunningSums(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // the monotone-source contract: arrivals in event_id order
     val ev = zipfArrivals(s).sortBy(_.event_id)
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.runningSumStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_run_out").outputMode("update").start()
-    val rows =
-      try {
-        val third = ev.length / 3
-        input.addData(ev.take(third)); q.processAllAvailable()
-        input.addData(ev.slice(third, 2 * third)); q.processAllAvailable()
-        // re-deliver the first 100 events with the final batch: at or
-        // below each key's high-water mark, they must be dropped
-        input.addData(ev.drop(2 * third) ++ ev.take(100))
-        q.processAllAvailable()
-        s.table("gate_run_out").as[RunningOut].collect().toSeq
-      } finally q.stop()
+    // re-deliver the first 100 events with the final batch: at or
+    // below each key's high-water mark, they must be dropped
+    val rows = StreamScope.gate(s, "gate_run_out", "update",
+        batches(ev, 3, replay = ev.take(100)))(
+      EventStreams.runningSumStream).as[RunningOut].collect().toSeq
     val byUser = rows.groupBy(_.user_id)
     val finals = byUser.map { case (u, rs) =>
       (u, rs.size.toLong, rs.maxBy(_.event_id).running)
@@ -305,9 +254,8 @@ object StreamingGates {
     * the batch B147 query on the same capped set, which is exactly
     * what the oracle recomputes.
     */
-  def qStreamBottomk(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamBottomk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val arrivals = orders(s, dir)
       .filter(col("o_orderkey") < StreamFactMaxKey)
       .select(col("o_orderkey"),
@@ -316,22 +264,11 @@ object StreamingGates {
       .map(r => SampIn(r.getLong(0), r.getLong(1)))
       .sortBy(e => (e.cents, e.key)) // fixed NON-key order: order-free proof
       .toSeq
-    val input = MemoryStream[SampIn]
-    val q = EventStreams.bottomkSampleStream(input.toDS(), k = 100)
-      .writeStream.format("memory")
-      .queryName("gate_samp_out").outputMode("update").start()
-    val latest =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(100))
-        q.processAllAvailable()
-        val rows = s.table("gate_samp_out").as[SampOut].collect().toSeq
-        val maxVer = rows.map(_.version).max
-        rows.filter(_.version == maxVer)
-      } finally q.stop()
-    latest.sortBy(_.rank)
+    val rows = StreamScope.gate(s, "gate_samp_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(100)))(
+      EventStreams.bottomkSampleStream(_, k = 100)).as[SampOut].collect().toSeq
+    // one global sample: its latest version is the whole snapshot
+    lastWins(rows)(_ => (), _.version).sortBy(_.rank)
       .map(o => (o.rank, o.key, o.cents))
       .toDF("rank", "o_orderkey", "cents")
       .orderBy(col("rank"))
@@ -348,9 +285,8 @@ object StreamingGates {
     * kurtosis/JB through the SAME shared formula text — and the
     * oracle recomputes every value from parquet, blind to the stream.
     */
-  def qStreamMoments(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamMoments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // seq must be UNIQUE per key ((l_orderkey, l_linenumber) is not —
     // the fixture has duplicate line numbers, and a duplicate straddling
     // a batch boundary would be watermark-dropped): deterministic total
@@ -367,20 +303,10 @@ object StreamingGates {
       .zipWithIndex
       .map { case ((flag, _, _, x), i) => MomIn(flag, i.toLong, x) }
       .toSeq
-    val input = MemoryStream[MomIn]
-    val q = EventStreams.momentsStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_mom_out").outputMode("update").start()
-    val finals =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(100))
-        q.processAllAvailable()
-        val rows = s.table("gate_mom_out").as[MomOut].collect().toSeq
-        rows.groupBy(_.flag).values.map(_.maxBy(_.seq)).toSeq
-      } finally q.stop()
+    val finals = StreamScope.gate(s, "gate_mom_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(100)))(
+      EventStreams.momentsStream).as[MomOut].collect().toSeq
+      .groupBy(_.flag).values.map(_.maxBy(_.seq)).toSeq
     import graft.operators.{Relational => R}
     finals.sortBy(_.flag)
       .map(o => (o.flag, o.n, o.s1, o.s2, o.s3, o.s4))
@@ -412,9 +338,8 @@ object StreamingGates {
     * F24 uses, while the per-shard kept counts pin that both shards
     * really ran (the oracle re-derives them from the parity split).
     */
-  def qStreamKmvMerge(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamKmvMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val k = 64
     val arrivals = lineitem(s, dir)
       .filter(col("l_orderkey") < StreamFactMaxKey)
@@ -433,22 +358,14 @@ object StreamingGates {
       evs.map(e => KmvArrival(s"$shard|${e.grp}", e.value))
     val t0 = tag(0, sh0)
     val t1 = tag(1, sh1)
-    val input = MemoryStream[KmvArrival]
-    val q = EventStreams.kmvStream(input.toDS(), k)
-      .writeStream.format("memory")
-      .queryName("gate_kmvm_out").outputMode("update").start()
-    val latest =
-      try {
-        val (tA, tB) = (t0.length / 3, t1.length / 3)
-        input.addData(t0.take(tA) ++ t1.take(tB))
-        q.processAllAvailable()
-        input.addData(t0.slice(tA, 2 * tA) ++ t1.slice(tB, 2 * tB))
-        q.processAllAvailable()
-        input.addData(t0.drop(2 * tA) ++ t1.drop(2 * tB) ++ t0.take(100))
-        q.processAllAvailable()
-        s.table("gate_kmvm_out").as[KmvOut].collect().toSeq
-          .groupBy(_.grp).map { case (g, os) => g -> os.maxBy(_.ver) }
-      } finally q.stop()
+    val (tA, tB) = (t0.length / 3, t1.length / 3)
+    val feed = Seq(
+      t0.take(tA) ++ t1.take(tB),
+      t0.slice(tA, 2 * tA) ++ t1.slice(tB, 2 * tB),
+      t0.drop(2 * tA) ++ t1.drop(2 * tB) ++ t0.take(100))
+    val rows = StreamScope.gate(s, "gate_kmvm_out", "update", feed)(
+      EventStreams.kmvStream(_, k)).as[KmvOut].collect().toSeq
+    val latest = lastWins(rows)(_.grp, _.ver).map(o => o.grp -> o).toMap
     val a = latest.collect { case (g, o) if g.startsWith("0|") =>
       g.drop(2) -> o }
     val b = latest.collect { case (g, o) if g.startsWith("1|") =>
@@ -488,9 +405,8 @@ object StreamingGates {
     * HEADLINE row itself — and the oracle is the B140 oracle,
     * verbatim.
     */
-  def qStreamPageHinkley(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamPageHinkley(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val daily = Relational.dailyRevenue(s, dir).collect()
       .map { r =>
         // o_orderdate has shipped in several physical temporal types
@@ -510,19 +426,10 @@ object StreamingGates {
     val gmean = daily.map(_._2).sum / n // λ calibration, the B140 rule
     val lambda = 10L * gmean
     val arrivals = daily.map { case (d, x) => EventStreams.PhIn(d, x) }.toSeq
-    val input = MemoryStream[EventStreams.PhIn]
-    val q = EventStreams.pageHinkleyStream(input.toDS(), lambda)
-      .writeStream.format("memory")
-      .queryName("gate_ph_out").outputMode("update").start()
-    val series =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(50))
-        q.processAllAvailable()
-        s.table("gate_ph_out").as[EventStreams.PhOut].collect().toSeq
-      } finally q.stop()
+    val series = StreamScope.gate(s, "gate_ph_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(50)))(
+      EventStreams.pageHinkleyStream(_, lambda))
+      .as[EventStreams.PhOut].collect().toSeq
     require(series.length == daily.length,
       s"stream emitted ${series.length} rows for ${daily.length} days " +
         "(a replayed day double-counted or a day was lost)")
@@ -557,9 +464,8 @@ object StreamingGates {
     * the SAME shared formula text — recomputed by the oracle from
     * parquet, blind to the stream.
     */
-  def qStreamTwoProportion(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamTwoProportion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val arrivals = events(s, dir)
       .filter(col("event_id") < AbEventMaxId)
       .select(col("event_id"), (col("user_id") % 2).cast("int"),
@@ -569,20 +475,10 @@ object StreamingGates {
         if (r.getInt(1) == 0) 0 else 1, r.getBoolean(2)))
       .sortBy(_.event_id)
       .toSeq
-    val input = MemoryStream[EventStreams.AbIn]
-    val q = EventStreams.abMonitorStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_ab_out").outputMode("update").start()
-    val fin =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(100))
-        q.processAllAvailable()
-        s.table("gate_ab_out").as[EventStreams.AbOut].collect()
-          .maxBy(_.event_id)
-      } finally q.stop()
+    val fin = StreamScope.gate(s, "gate_ab_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(100)))(
+      EventStreams.abMonitorStream)
+      .as[EventStreams.AbOut].collect().maxBy(_.event_id)
     Seq((fin.n1, fin.x1, fin.n2, fin.x2, fin.p1_ppm, fin.p2_ppm))
       .toDF("n1", "x1", "n2", "x2", "p1_ppm", "p2_ppm")
       .select(col("n1"), col("x1"), col("n2"), col("x2"),
@@ -599,9 +495,8 @@ object StreamingGates {
     * on the capped arrivals; the trend z is the SAME one-float-step
     * shared text, so the oracle recomputes every value from parquet.
     */
-  def qStreamCochranArmitage(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCochranArmitage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val arrivals = orders(s, dir)
       .filter(col("o_orderkey") < StreamFactMaxKey)
       .select(col("o_orderkey"),
@@ -611,20 +506,10 @@ object StreamingGates {
       .map(r => EventStreams.CaIn(r.getLong(0), r.getLong(1), r.getBoolean(2)))
       .sortBy(_.event_id)
       .toSeq
-    val input = MemoryStream[EventStreams.CaIn]
-    val q = EventStreams.caMonitorStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_ca_out").outputMode("update").start()
-    val fin =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(100))
-        q.processAllAvailable()
-        s.table("gate_ca_out").as[EventStreams.CaOut].collect()
-          .maxBy(_.event_id)
-      } finally q.stop()
+    val fin = StreamScope.gate(s, "gate_ca_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(100)))(
+      EventStreams.caMonitorStream)
+      .as[EventStreams.CaOut].collect().maxBy(_.event_id)
     Seq((fin.n, fin.x, fin.sx, fin.sn, fin.sn2))
       .toDF("n", "x", "sx", "sn", "sn2")
       .select(col("n"), col("x"), col("sx"), col("sn"), col("sn2"),
@@ -642,9 +527,8 @@ object StreamingGates {
     * watermark. Latest census + the shared δ text == the B155 replica
     * on the capped rows, which the oracle recomputes blind.
     */
-  def qStreamCliffsDelta(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCliffsDelta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val arrivals = lineitem(s, dir)
       .filter(col("l_orderkey") < StreamFactMaxKey &&
         col("l_shipdate") >= lit("1997-01-01") &&
@@ -660,20 +544,10 @@ object StreamingGates {
         EventStreams.CdIn(i.toLong, cohort, v)
       }
       .toSeq
-    val input = MemoryStream[EventStreams.CdIn]
-    val q = EventStreams.dominanceStream(input.toDS(), vMax = 50)
-      .writeStream.format("memory")
-      .queryName("gate_cd_out").outputMode("update").start()
-    val fin =
-      try {
-        val third = arrivals.length / 3
-        input.addData(arrivals.take(third)); q.processAllAvailable()
-        input.addData(arrivals.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(arrivals.drop(2 * third) ++ arrivals.take(100))
-        q.processAllAvailable()
-        s.table("gate_cd_out").as[EventStreams.CdOut].collect()
-          .maxBy(_.ver)
-      } finally q.stop()
+    val fin = StreamScope.gate(s, "gate_cd_out", "update",
+        batches(arrivals, 3, replay = arrivals.take(100)))(
+      EventStreams.dominanceStream(_, vMax = 50))
+      .as[EventStreams.CdOut].collect().maxBy(_.ver)
     Seq((fin.n_a, fin.n_b, fin.n_gt, fin.n_lt))
       .toDF("na", "nb", "gt", "lt")
       .select(col("na").as("n_a"), col("nb").as("n_b"),
@@ -700,9 +574,8 @@ object StreamingGates {
     * the batch LSH pipeline row-for-row — which is exactly what the
     * oracle recomputes from parquet, blind to the stream.
     */
-  def qStreamLshPairs(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamLshPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
@@ -710,20 +583,11 @@ object StreamingGates {
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id)
       .toSeq
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = EventStreams.lshPairsStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_lsh_out").outputMode("update").start()
-    val cand =
-      try {
-        val third = docsArr.length / 3
-        input.addData(docsArr.take(third)); q.processAllAvailable()
-        input.addData(docsArr.slice(third, 2 * third)); q.processAllAvailable()
-        input.addData(docsArr.drop(2 * third) ++ docsArr.take(100))
-        q.processAllAvailable()
-        s.table("gate_lsh_out").as[EventStreams.LshCand].collect()
-          .map(c => (c.a_id, c.b_id)).distinct.toSeq
-      } finally q.stop()
+    val cand = StreamScope.gate(s, "gate_lsh_out", "update",
+        batches(docsArr, 3, replay = docsArr.take(100)))(
+      EventStreams.lshPairsStream(_))
+      .as[EventStreams.LshCand].collect()
+      .map(c => (c.a_id, c.b_id)).distinct.toSeq
     TextOps.lshStreamConfirm(s, dir,
       cand.toDF("a_id", "b_id"), LshDocMaxId)
   }
@@ -742,9 +606,8 @@ object StreamingGates {
     * (vec_id < 10,000: every gate-scale vector, frozen at 10×+ where
     * ScaleData replicas start at 10,000).
     */
-  def qStreamSemDedup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSemDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val tau = 0.35
     val cents = Similarity.semCentroids(16)
     val vecs = embeddings(s, dir)
@@ -754,23 +617,13 @@ object StreamingGates {
       .map(r => EventStreams.VecArrival(r.getLong(0),
         r.getSeq[Double](1).toArray))
       .sortBy(_.vec_id)
-    val input = MemoryStream[EventStreams.VecArrival]
-    val q = EventStreams.semDedupStream(input.toDS(), cents, tau)
-      .writeStream.format("memory")
-      .queryName("gate_sem_out").outputMode("update").start()
-    val marks =
-      try {
-        val (odd, even) = vecs.partition(_.vec_id % 2 == 1)
-        input.addData(odd.toSeq); q.processAllAvailable()
-        input.addData(even.toSeq ++ odd.take(50)) // replay slice: ignored
-        q.processAllAvailable()
-        s.table("gate_sem_out").as[EventStreams.DupMark].collect()
-          .zipWithIndex
-          .groupBy(_._1.vec_id)
-          .map { case (_, ms) => ms.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
-    marks.map(m => (m.vec_id, m.cell, m.dup_of, m.cosine))
+    val (odd, even) = vecs.partition(_.vec_id % 2 == 1)
+    val rows = StreamScope.gate(s, "gate_sem_out", "update",
+        Seq(odd.toSeq, even.toSeq ++ odd.take(50)))( // replay slice: ignored
+      EventStreams.semDedupStream(_, cents, tau))
+      .as[EventStreams.DupMark].collect().toSeq
+    lastWins(rows.zipWithIndex)(_._1.vec_id, _._2).map(_._1)
+      .map(m => (m.vec_id, m.cell, m.dup_of, m.cosine))
       .toDF("vec_id", "cell", "dup_of", "sim")
       .select(col("vec_id"), col("cell"), col("dup_of"),
         graft.functions.dec4(col("sim")).as("cosine"))
@@ -789,9 +642,8 @@ object StreamingGates {
     * docs, so the oracle is the C31 DuckDB replica with the cap
     * applied at both documents scans.
     */
-  def qStreamCurate(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCurate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsAll = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
@@ -801,17 +653,9 @@ object StreamingGates {
     val corpus = docsAll.collect()
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id) // monotone-source contract: first-seen == MIN keeper
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = EventStreams.curationStream(input.toDF(), evalGrams)
-      .writeStream.format("memory")
-      .queryName("gate_cur_out").outputMode("append").start()
-    val out =
-      try {
-        val half = corpus.length / 2
-        input.addData(corpus.take(half).toSeq); q.processAllAvailable()
-        input.addData(corpus.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_cur_out").as[EventStreams.CurOut].collect().toSeq
-      } finally q.stop()
+    val out = StreamScope.gate(s, "gate_cur_out", "append", batches(corpus.toSeq, 2))(
+        in => EventStreams.curationStream(in.toDF(), evalGrams))
+      .as[EventStreams.CurOut].collect().toSeq
     out.map(o => (o.doc_id, o.is_keeper, o.keep_quality, o.contaminated,
         o.split, o.selected))
       .toDF("doc_id", "is_keeper", "keep_quality", "contaminated",
@@ -832,9 +676,8 @@ object StreamingGates {
     * + gap), value sums dec2 per the B11 convention. Arrivals capped
     * at event_id < 25,000 (count-bounded feed, the stream-gate rule).
     */
-  def qStreamSession(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSession(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = events(s, dir)
       .filter(col("event_id") < SessionEvMaxId)
       .select(col("user_id"), unix_micros(col("ts")).as("ts"),
@@ -846,32 +689,21 @@ object StreamingGates {
       .toSeq
     val sentinelUid = 999999999L
     val sentinelTs = evs.map(_.ts).max + 7L * 24 * 3600 * 1000000L
-    val input = MemoryStream[EventStreams.Ev]
-    val q = EventStreams.sessionWindowStream(
-        input.toDF().withColumn("ts", timestamp_micros(col("ts"))))
-      .writeStream.format("memory")
-      .queryName("gate_sw_out").outputMode("append").start()
-    val rows =
-      try {
-        val half = evs.length / 2
-        input.addData(evs.take(half)); q.processAllAvailable()
-        input.addData(evs.drop(half)); q.processAllAvailable()
-        // two sentinel batches: the first advances max event time, the
-        // second runs with the advanced watermark and flushes every
-        // real session out of the state store
-        input.addData(Seq(EventStreams.Ev(sentinelUid, sentinelTs, 1L, 0.0)))
-        q.processAllAvailable()
-        input.addData(Seq(EventStreams.Ev(sentinelUid, sentinelTs + 1000000L,
-          2L, 0.0)))
-        q.processAllAvailable()
-        s.table("gate_sw_out")
-          .filter(col("user_id") =!= sentinelUid)
-          .select(col("user_id"),
-            unix_micros(col("session_start")).as("session_start"),
-            unix_micros(col("session_end")).as("session_end"),
-            col("n_events"), col("sum_value"))
-          .collect().toSeq
-      } finally q.stop()
+    // two sentinel batches: the first advances max event time, the
+    // second runs with the advanced watermark and flushes every real
+    // session out of the state store
+    val feed = batches(evs, 2) ++ Seq(
+      Seq(EventStreams.Ev(sentinelUid, sentinelTs, 1L, 0.0)),
+      Seq(EventStreams.Ev(sentinelUid, sentinelTs + 1000000L, 2L, 0.0)))
+    val rows = StreamScope.gate(s, "gate_sw_out", "append", feed)(in =>
+        EventStreams.sessionWindowStream(
+          in.toDF().withColumn("ts", timestamp_micros(col("ts")))))
+      .filter(col("user_id") =!= sentinelUid)
+      .select(col("user_id"),
+        unix_micros(col("session_start")).as("session_start"),
+        unix_micros(col("session_end")).as("session_end"),
+        col("n_events"), col("sum_value"))
+      .collect().toSeq
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))
       .toDF("user_id", "session_start", "session_end", "n_events", "sv")
@@ -897,25 +729,16 @@ object StreamingGates {
     * regex drift, a redaction-order bug, or a row lost between batches
     * breaks the hash.
     */
-  def qStreamPii(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamPii(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = TextOps.piiInput(
         documents(s, dir).filter(col("doc_id") < LshDocMaxId))
       .collect()
       .map(r => PiiArrival(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id)
-    val input = MemoryStream[PiiArrival]
-    val q = TextOps.piiOn(input.toDF())
-      .writeStream.format("memory")
-      .queryName("gate_pii_out").outputMode("append").start()
-    val rows =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_pii_out").collect().toSeq
-      } finally q.stop()
+    val rows = StreamScope.gate(s, "gate_pii_out", "append", batches(docsArr.toSeq, 2))(
+        in => TextOps.piiOn(in.toDF()))
+      .collect().toSeq
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4)))
       .toDF("doc_id", "n_email", "n_phone", "n_ip", "redacted_md5")
@@ -929,26 +752,17 @@ object StreamingGates {
     * verdicts, oracle = the C15 replica with the cap at its documents
     * scan.
     */
-  def qStreamGopher(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamGopher(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
       .collect()
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id)
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = TextOps.gopherOn(input.toDF())
-      .writeStream.format("memory")
-      .queryName("gate_gopher_out").outputMode("append").start()
-    val rows =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_gopher_out").collect().toSeq
-      } finally q.stop()
+    val rows = StreamScope.gate(s, "gate_gopher_out", "append", batches(docsArr.toSeq, 2))(
+        in => TextOps.gopherOn(in.toDF()))
+      .collect().toSeq
     rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
         r.getInt(4), r.getInt(5), r.getInt(6)))
       .toDF("doc_id", "n_words", "f_wordcount", "f_wordlen", "f_alpha",
@@ -966,28 +780,18 @@ object StreamingGates {
     * exactly, so the oracle is the A29 md5-formula replica verbatim
     * (the grid is corpus-independent; no cap needed).
     */
-  def qStreamZonal(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamZonal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val cells = graft.sources.Synthetic.rasterGrid(s, 120L, 80L)
       .collect()
       .map(r => CellArrival(r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2))))
-    val input = MemoryStream[CellArrival]
-    val q = Estimation.zonalStats(input.toDF())
-      .writeStream.format("memory")
-      .queryName("gate_zonal_out").outputMode("update").start()
-    val latest =
-      try {
-        val (h1, h2) = cells.partition(_.x % 2 == 0) // interleaved stripes
-        input.addData(h1.toSeq); q.processAllAvailable()
-        input.addData(h2.toSeq); q.processAllAvailable()
-        s.table("gate_zonal_out").collect().toSeq.zipWithIndex
-          .groupBy(_._1.getLong(0))
-          .map { case (_, rs) => rs.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
-    latest.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+    val (h1, h2) = cells.partition(_.x % 2 == 0) // interleaved stripes
+    val rows = StreamScope.gate(s, "gate_zonal_out", "update", Seq(h1.toSeq, h2.toSeq))(
+        in => Estimation.zonalStats(in.toDF()))
+      .collect().toSeq
+    lastWins(rows.zipWithIndex)(_._1.getLong(0), _._2).map(_._1)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getDouble(6)))
       .toDF("zone", "n_cells", "n_valid", "vsum", "vmin", "vmax",
         "zonal_mean")
@@ -1003,26 +807,17 @@ object StreamingGates {
     * boundary-off-by-one in the window math or a row lost between
     * batches breaks the hash.
     */
-  def qStreamChunks(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamChunks(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
       .collect()
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id)
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = TextOps.chunksOn(input.toDF())
-      .writeStream.format("memory")
-      .queryName("gate_chunks_out").outputMode("append").start()
-    val rows =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_chunks_out").collect().toSeq
-      } finally q.stop()
+    val rows = StreamScope.gate(s, "gate_chunks_out", "append", batches(docsArr.toSeq, 2))(
+        in => TextOps.chunksOn(in.toDF()))
+      .collect().toSeq
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toDF("doc_id", "chunk_idx", "n_tokens", "chunk_md5")
       .orderBy(col("doc_id"), col("chunk_idx"))
@@ -1041,30 +836,19 @@ object StreamingGates {
     * count state lost or double-applied across the batch boundary
     * breaks the hash).
     */
-  def qStreamVocab(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamVocab(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
       .collect()
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id)
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = EventStreams.vocabStream(input.toDF())
-      .writeStream.format("memory")
-      .queryName("gate_vocab_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_vocab_out").collect().toSeq.zipWithIndex
-          .groupBy(_._1.getString(0))
-          .map { case (_, rs) => rs.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
-    latest.map(r => (r.getString(0), r.getLong(1)))
+    val rows = StreamScope.gate(s, "gate_vocab_out", "update", batches(docsArr.toSeq, 2))(
+        in => EventStreams.vocabStream(in.toDF()))
+      .collect().toSeq
+    lastWins(rows.zipWithIndex)(_._1.getString(0), _._2).map(_._1)
+      .map(r => (r.getString(0), r.getLong(1)))
       .sortBy { case (t, n) => (-n, t) }
       .take(30)
       .toDF("term", "tf")
@@ -1113,28 +897,20 @@ object StreamingGates {
     * census (count, distinct users, exact value cents) equals the plain
     * batch census a DuckDB scan computes with no duplicates fed at all.
     */
-  def qStreamDedup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evs = orderedEventArrivals(s, dir)
-    val input = MemoryStream[FullEv]
-    val q = EventStreams.dedupStream(
-        input.toDF().withColumn("ts", timestamp_micros(col("ts"))),
-        Seq("event_id"), watermark = "30 days")
-      .writeStream.format("memory")
-      .queryName("gate_dedup_out").outputMode("append").start()
-    val rows =
-      try {
-        val (h1, h2) = splitAtTsBoundary(evs)(_.ts)
-        input.addData(h1); q.processAllAvailable()
-        // second batch arrives WITH duplicates of the first (cross-batch
-        // re-delivery: must hit batch-1's state store entries)
-        input.addData(h2 ++ h1.take(500)); q.processAllAvailable()
-        // third batch: re-deliver slices of both batches
-        input.addData(h1.slice(100, 200) ++ h2.take(300))
-        q.processAllAvailable()
-        s.table("gate_dedup_out").collect().toSeq
-      } finally q.stop()
+    val (h1, h2) = splitAtTsBoundary(orderedEventArrivals(s, dir))(_.ts)
+    val feed = Seq(h1,
+      // second batch arrives WITH duplicates of the first (cross-batch
+      // re-delivery: must hit batch-1's state store entries)
+      h2 ++ h1.take(500),
+      // third batch: re-deliver slices of both batches
+      h1.slice(100, 200) ++ h2.take(300))
+    val rows = StreamScope.gate(s, "gate_dedup_out", "append", feed)(in =>
+        EventStreams.dedupStream(
+          in.toDF().withColumn("ts", timestamp_micros(col("ts"))),
+          Seq("event_id"), watermark = "30 days"))
+      .collect().toSeq
     rows.map(r => (r.getAs[String]("event_type"), r.getAs[Long]("user_id"),
         math.round(r.getAs[Double]("value") * 100)))
       .groupBy(_._1).toSeq
@@ -1164,35 +940,24 @@ object StreamingGates {
     * count and dec2 value sum — and the oracle is the B12 replica with
     * the cap at both scans.
     */
-  // 2 shuffle partitions, not the stream-gate default 8: the join pays
-  // FOUR state-store commits per partition per micro-batch (two keyed
-  // stores per side), so partition count is the dominant fixed cost at
-  // this feed size (measured quiet: 8 → 6.8s, 4 → 4.7s, 2 → 4.1s).
-  def qStreamIntervalJoin(s: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(s, 2) {
+  def qStreamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evs = orderedEventArrivals(s, dir, cap = IntervalEvMaxId)
-    // INNER stream-stream joins emit at match time — the no-data
-    // watermark batches only evict state early (the next data batch
-    // evicts identically), so the gate skips them: 4 micro-batches → 2.
-    // Scoped + restored, like the partition override.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = s.conf.get(ndKey)
-    s.conf.set(ndKey, "false")
-    try {
-    val input = MemoryStream[FullEv]
-    val q = EventStreams.incidentJoinStream(
-        input.toDF().withColumn("ts", timestamp_micros(col("ts"))))
-      .writeStream.format("memory")
-      .queryName("gate_ij_out").outputMode("append").start()
-    val joined =
-      try {
-        val (h1, h2) = splitAtTsBoundary(evs)(_.ts)
-        input.addData(h1); q.processAllAvailable()
-        input.addData(h2); q.processAllAvailable()
-        s.table("gate_ij_out").collect().toSeq
-      } finally q.stop()
+    val (h1, h2) = splitAtTsBoundary(
+      orderedEventArrivals(s, dir, cap = IntervalEvMaxId))(_.ts)
+    val joined = StreamScope.gate(s, "gate_ij_out", "append", Seq(h1, h2),
+        // 2 shuffle partitions, not the stream-gate default 8: the join
+        // pays FOUR state-store commits per partition per micro-batch
+        // (two keyed stores per side), so partition count is the
+        // dominant fixed cost at this feed size (measured quiet:
+        // 8 → 6.8s, 4 → 4.7s, 2 → 4.1s)
+        "spark.sql.shuffle.partitions" -> "2",
+        // INNER stream-stream joins emit at match time — the no-data
+        // watermark batches only evict state early (the next data batch
+        // evicts identically), so the gate skips them: 4 micro-batches → 2
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(in =>
+        EventStreams.incidentJoinStream(
+          in.toDF().withColumn("ts", timestamp_micros(col("ts")))))
+      .collect().toSeq
     joined.map(r => (r.getAs[Long]("incident_id"), r.getAs[Double]("value")))
       .groupBy(_._1).toSeq
       .map { case (inc, rs) => (inc, rs.size.toLong, rs.map(_._2).sum) }
@@ -1200,7 +965,6 @@ object StreamingGates {
       .select(col("incident_id"), col("n_events"),
         graft.functions.dec2(col("sv")).as("sum_value"))
       .orderBy(col("incident_id"))
-    } finally s.conf.set(ndKey, ndPrev)
   }
 
   /** F5 (query-backed): STREAMING AS-OF JOIN — each event enriched with
@@ -1216,9 +980,8 @@ object StreamingGates {
     * event). The published frame is B9's; the oracle is the DuckDB
     * ASOF LEFT JOIN replica with the caps applied at both scans.
     */
-  def qStreamAsOf(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamAsOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ords = orders(s, dir)
       .filter(col("o_orderkey") < StreamFactMaxKey)
       .select(col("o_custkey"),
@@ -1235,21 +998,13 @@ object StreamingGates {
         r.getLong(2), -1L, 0.0))
     val all = (ords ++ probes)
       .sortBy(r => (r.ts, r.tag, r.event_id, r.o_orderkey)).toSeq
-    val input = MemoryStream[EventStreams.AsOfIn]
-    val q = EventStreams.asOfStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_asof_out").outputMode("update").start()
-    val rows =
-      try {
-        val (h1, h2) = splitAtTsBoundary(all)(_.ts)
-        input.addData(h1); q.processAllAvailable()
-        input.addData(h2); q.processAllAvailable()
-        // replay a slice of ORDER rows only: monotone state ignores
-        // stale re-deliveries, so the changelog stays one-row-per-event
-        input.addData(h1.filter(_.tag == 0).take(200))
-        q.processAllAvailable()
-        s.table("gate_asof_out").collect().toSeq
-      } finally q.stop()
+    val (h1, h2) = splitAtTsBoundary(all)(_.ts)
+    // replay a slice of ORDER rows only: monotone state ignores stale
+    // re-deliveries, so the changelog stays one-row-per-event
+    val rows = StreamScope.gate(s, "gate_asof_out", "update",
+        Seq(h1, h2, h1.filter(_.tag == 0).take(200)))(
+      EventStreams.asOfStream)
+      .collect().toSeq
     rows.map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None: Option[Long] else Some(r.getLong(2)),
         if (r.isNullAt(3)) None: Option[Double] else Some(r.getDouble(3))))
@@ -1269,28 +1024,17 @@ object StreamingGates {
     * (value DESC, event_id), recomputed by the oracle from the capped
     * events scan.
     */
-  def qStreamTopN(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamTopN(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = orderedEventArrivals(s, dir)
       .map(e => EventStreams.Ev(e.user_id, e.ts, e.event_id, e.value))
-    val input = MemoryStream[EventStreams.Ev]
-    val q = EventStreams.topNStream(input.toDS(), n = 3)
-      .writeStream.format("memory")
-      .queryName("gate_topn_out").outputMode("update").start()
-    val latest =
-      try {
-        val (h1, h2) = splitAtTsBoundary(evs)(_.ts)
-        input.addData(h1); q.processAllAvailable()
-        input.addData(h2 ++ h1.take(300)) // replay: set-distinct merge
-        q.processAllAvailable()
-        s.table("gate_topn_out").as[EventStreams.TopNOut].collect()
-          .zipWithIndex
-          .groupBy(o => (o._1.user_id, o._1.rn))
-          .map { case (_, os) => os.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
-    latest.map(o => (o.user_id, o.rn.toLong, o.event_id, o.value))
+    val (h1, h2) = splitAtTsBoundary(evs)(_.ts)
+    val rows = StreamScope.gate(s, "gate_topn_out", "update",
+        Seq(h1, h2 ++ h1.take(300)))( // replay: set-distinct merge
+      EventStreams.topNStream(_, n = 3))
+      .as[EventStreams.TopNOut].collect().toSeq
+    lastWins(rows.zipWithIndex)(o => (o._1.user_id, o._1.rn), _._2).map(_._1)
+      .map(o => (o.user_id, o.rn.toLong, o.event_id, o.value))
       .toDF("user_id", "rn", "event_id", "v")
       .select(col("user_id"), col("rn"), col("event_id"),
         graft.functions.dec2(col("v")).as("value"))
@@ -1306,27 +1050,16 @@ object StreamingGates {
     * batch B50 funnel census — the oracle is the B50 replica with the
     * cap at its events scan.
     */
-  def qStreamFunnel(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = orderedEventArrivals(s, dir)
       .map(e => EventStreams.FEv(e.user_id, e.ts, e.event_type))
-    val input = MemoryStream[EventStreams.FEv]
-    val q = EventStreams.funnelStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_funnel_out").outputMode("update").start()
-    val latest =
-      try {
-        val (h1, h2) = splitAtTsBoundary(evs)(_.ts)
-        input.addData(h1); q.processAllAvailable()
-        input.addData(h2 ++ h1.take(400)) // replay: min-fold idempotent
-        q.processAllAvailable()
-        s.table("gate_funnel_out").as[EventStreams.FunnelOut].collect()
-          .zipWithIndex
-          .groupBy(_._1.user_id)
-          .map { case (_, os) => os.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
+    val (h1, h2) = splitAtTsBoundary(evs)(_.ts)
+    val rows = StreamScope.gate(s, "gate_funnel_out", "update",
+        Seq(h1, h2 ++ h1.take(400)))( // replay: min-fold idempotent
+      EventStreams.funnelStream)
+      .as[EventStreams.FunnelOut].collect().toSeq
+    val latest = lastWins(rows.zipWithIndex)(_._1.user_id, _._2).map(_._1)
     val n = latest.size.toLong
     Seq((n,
         latest.count(_.stage >= 1).toLong,
@@ -1346,9 +1079,8 @@ object StreamingGates {
     * no false negatives, so every true eval gram is in the flagged
     * set), oracle = the C18 replica with the cap at its documents scan.
     */
-  def qStreamBloom(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamBloom(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsAll = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
@@ -1360,17 +1092,9 @@ object StreamingGates {
     val docsArr = docsAll.filter(col("doc_id") % 97 =!= 0).collect()
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id)
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = EventStreams.bloomDecontamStream(input.toDF(), bitmask)
-      .writeStream.format("memory")
-      .queryName("gate_bloom_out").outputMode("append").start()
-    val flagged =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_bloom_out").collect().toSeq
-      } finally q.stop()
+    val flagged = StreamScope.gate(s, "gate_bloom_out", "append", batches(docsArr.toSeq, 2))(
+        in => EventStreams.bloomDecontamStream(in.toDF(), bitmask))
+      .collect().toSeq
     flagged.map(r => (r.getLong(0), r.getString(1)))
       .groupBy(_._1).toSeq
       .map { case (d, gs) =>
@@ -1388,27 +1112,19 @@ object StreamingGates {
     * keepers exactly, so the oracle is the min-id-per-canonical-form
     * group with the cap at the documents scan.
     */
-  def qStreamCanonDedup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCanonDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
       .collect()
       .map(r => EventStreams.LshDoc(r.getLong(0), r.getString(1)))
       .sortBy(_.doc_id) // monotone-source contract: first-seen == MIN keeper
-    val input = MemoryStream[EventStreams.LshDoc]
-    val q = EventStreams.canonDedupStream(input.toDF())
-      .writeStream.format("memory")
-      .queryName("gate_canon_out").outputMode("append").start()
-    val keepers =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq ++ docsArr.take(200)) // replay
-        q.processAllAvailable()
-        s.table("gate_canon_out").collect().toSeq
-      } finally q.stop()
+      .toSeq
+    val keepers = StreamScope.gate(s, "gate_canon_out", "append",
+        batches(docsArr, 2, replay = docsArr.take(200)))(
+        in => EventStreams.canonDedupStream(in.toDF()))
+      .collect().toSeq
     keepers.map(r => (r.getLong(0), r.getString(1)))
       .toDF("keeper_id", "canon_md5")
       .orderBy(col("keeper_id"))
@@ -1476,25 +1192,15 @@ object StreamingGates {
     * value and the maxima exactly. A counter lost across batches, a
     * replay advancing state, or a clamp mis-ordered breaks the hash.
     */
-  def qStreamCusum(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCusum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // the monotone-source contract: arrivals in event_id order
     val ev = zipfArrivals(s).sortBy(_.event_id)
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.cusumStream(input.toDS(), CusumMu0, CusumSlack)
-      .writeStream.format("memory")
-      .queryName("gate_cusum_out").outputMode("update").start()
-    val rows =
-      try {
-        val third = ev.length / 3
-        input.addData(ev.take(third)); q.processAllAvailable()
-        // replay below the high-water mark must not advance any state
-        input.addData(ev.slice(third, 2 * third) ++ ev.take(100))
-        q.processAllAvailable()
-        input.addData(ev.drop(2 * third)); q.processAllAvailable()
-        s.table("gate_cusum_out").as[EventStreams.CusumOut].collect().toSeq
-      } finally q.stop()
+    // replay below the high-water mark must not advance any state
+    val rows = StreamScope.gate(s, "gate_cusum_out", "update",
+        batches(ev, 3, replay = ev.take(100), at = 1))(
+      EventStreams.cusumStream(_, CusumMu0, CusumSlack))
+      .as[EventStreams.CusumOut].collect().toSeq
     rows.groupBy(_.user_id).toSeq.map { case (u, rs) =>
       val fin = rs.maxBy(_.event_id)
       (u, rs.size.toLong, fin.s_pos, fin.s_neg, fin.max_pos, fin.max_neg)
@@ -1524,25 +1230,14 @@ object StreamingGates {
     * recursive-CTE oracle VERBATIM — two implementations (stateful
     * stream vs bounded-partition fold), one DuckDB-checked contract.
     */
-  def qStreamHolt(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamHolt(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = dailySeriesArrivals(s, dir)
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.holtStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_holt_out").outputMode("update").start()
-    val fin =
-      try {
-        val third = ev.length / 3
-        input.addData(ev.take(third)); q.processAllAvailable()
-        // replay below the high-water mark must not advance the recursion
-        input.addData(ev.slice(third, 2 * third) ++ ev.take(50))
-        q.processAllAvailable()
-        input.addData(ev.drop(2 * third)); q.processAllAvailable()
-        s.table("gate_holt_out").as[EventStreams.HoltOut].collect()
-          .maxBy(_.event_id)
-      } finally q.stop()
+    // replay below the high-water mark must not advance the recursion
+    val fin = StreamScope.gate(s, "gate_holt_out", "update",
+        batches(ev, 3, replay = ev.take(50), at = 1))(
+      EventStreams.holtStream)
+      .as[EventStreams.HoltOut].collect().maxBy(_.event_id)
     Seq((fin.n, fin.level_e6, fin.trend_e6, fin.level_e6 + fin.trend_e6,
         fin.level_e6 + 7L * fin.trend_e6, fin.level_e6 + 30L * fin.trend_e6))
       .toDF("n_days", "level_e6", "trend_e6", "f1_e6", "f7_e6", "f30_e6")
@@ -1559,24 +1254,13 @@ object StreamingGates {
     * needs the full queue, which HwOut deliberately omits — O(1)
     * emission width).
     */
-  def qStreamHoltWinters(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamHoltWinters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = dailySeriesArrivals(s, dir)
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.holtWintersStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_hw_out").outputMode("update").start()
-    val fin =
-      try {
-        val third = ev.length / 3
-        input.addData(ev.take(third)); q.processAllAvailable()
-        input.addData(ev.slice(third, 2 * third) ++ ev.take(50))
-        q.processAllAvailable()
-        input.addData(ev.drop(2 * third)); q.processAllAvailable()
-        s.table("gate_hw_out").as[EventStreams.HwOut].collect()
-          .maxBy(_.event_id)
-      } finally q.stop()
+    val fin = StreamScope.gate(s, "gate_hw_out", "update",
+        batches(ev, 3, replay = ev.take(50), at = 1))(
+      EventStreams.holtWintersStream)
+      .as[EventStreams.HwOut].collect().maxBy(_.event_id)
     Seq((fin.n, fin.level_e6, fin.trend_e6, fin.f1_e6))
       .toDF("n_days", "level_e6", "trend_e6", "f1_e6")
   }
@@ -1591,28 +1275,19 @@ object StreamingGates {
     * nine digits, absent ones as zero — the kernel's convention) from
     * the capped orders scan.
     */
-  def qStreamBenford(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamBenford(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val vals = orders(s, dir)
       .filter(col("o_orderkey") < StreamFactMaxKey)
       .select(col("o_orderkey"), col("o_totalprice"))
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._1)
-    val input = MemoryStream[(Long, Double)]
-    val q = EventStreams.benfordDigitStream(input.toDF().toDF("id", "value"))
-      .writeStream.format("memory")
-      .queryName("gate_benford_out").outputMode("update").start()
-    val hist =
-      try {
-        val half = vals.length / 2
-        input.addData(vals.take(half).toSeq); q.processAllAvailable()
-        input.addData(vals.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_benford_out").collect()
-          .groupBy(_.getLong(0))
-          .map { case (d, rs) => d -> rs.map(_.getLong(1)).max } // counts only grow
-      } finally q.stop()
+    val hist = StreamScope.gate(s, "gate_benford_out", "update", batches(vals.toSeq, 2))(
+        in => EventStreams.benfordDigitStream(in.toDF("id", "value")))
+      .collect()
+      .groupBy(_.getLong(0))
+      .map { case (d, rs) => d -> rs.map(_.getLong(1)).max } // counts only grow
     val mad = EventStreams.benfordMadE6(hist)
     val n = hist.values.sum
     val refs = Relational.benford1Table.toMap
@@ -1651,22 +1326,13 @@ object StreamingGates {
     * scan — a double-credit, lost state, or lookback-boundary error
     * breaks counts or the exact gap sums.
     */
-  def qStreamAttribution(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamAttribution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = attrArrivals(s, dir)
-    val input = MemoryStream[EventStreams.AttrEvent]
-    val q = EventStreams.attributionStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_attr_out").outputMode("update").start()
-    val got =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(300)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_attr_out").as[EventStreams.AttrOut].collect().toSeq
-      } finally q.stop()
+    val got = StreamScope.gate(s, "gate_attr_out", "update",
+        batches(ev, 2, replay = ev.take(300)))( // replay: watermark drops
+      EventStreams.attributionStream)
+      .as[EventStreams.AttrOut].collect().toSeq
     val lastAgg = got.groupBy(_.last_type).toSeq.map { case (t, xs) =>
       ("last", t, xs.size.toLong, xs.filter(_.gap_us >= 0).map(_.gap_us).sum)
     }
@@ -1687,22 +1353,13 @@ object StreamingGates {
     * B105's frame; the oracle is the B105 replica with the cap at its
     * events scan.
     */
-  def qStreamTransitions(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamTransitions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = attrArrivals(s, dir)
-    val input = MemoryStream[EventStreams.AttrEvent]
-    val q = EventStreams.transitionStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_trans_out").outputMode("update").start()
-    val got =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(300)) // replay: no dup pairs
-        q.processAllAvailable()
-        s.table("gate_trans_out").as[EventStreams.TransOut].collect().toSeq
-      } finally q.stop()
+    val got = StreamScope.gate(s, "gate_trans_out", "update",
+        batches(ev, 2, replay = ev.take(300)))( // replay: no dup pairs
+      EventStreams.transitionStream)
+      .as[EventStreams.TransOut].collect().toSeq
     val counts = got.groupBy(t => (t.from_type, t.to_type)).toSeq
       .map { case ((f, t), xs) => (f, t, xs.size.toLong) }
     val fromTot = counts.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._3).sum }
@@ -1721,22 +1378,13 @@ object StreamingGates {
     * census (top-20 by count with exact ppm shares) is B112's frame;
     * the oracle is the B112 replica with the cap at its events scan.
     */
-  def qStreamEventPaths(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamEventPaths(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = attrArrivals(s, dir)
-    val input = MemoryStream[EventStreams.AttrEvent]
-    val q = EventStreams.eventPathsStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_paths_out").outputMode("update").start()
-    val got =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(300)) // replay: no dup trigrams
-        q.processAllAvailable()
-        s.table("gate_paths_out").as[EventStreams.PathOut].collect().toSeq
-      } finally q.stop()
+    val got = StreamScope.gate(s, "gate_paths_out", "update",
+        batches(ev, 2, replay = ev.take(300)))( // replay: no dup trigrams
+      EventStreams.eventPathsStream)
+      .as[EventStreams.PathOut].collect().toSeq
     val counts = got.groupBy(p => (p.t1, p.t2, p.t3)).toSeq
       .map { case ((t1, t2, t3), xs) => (t1, t2, t3, xs.size.toLong) }
     val nt = counts.map(_._4).sum
@@ -1779,28 +1427,19 @@ object StreamingGates {
     * clamp mis-ordered across the batch boundary breaks every
     * downstream value.
     */
-  def qStreamClampedBalance(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamClampedBalance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = ledgerArrivals(s, dir,
         col("l_quantity").cast("long") *
           when(col("l_returnflag") === "R", -1L).otherwise(1L))
       .map { case (pk, id, _, delta) => KeyedVal(pk, id, delta) }
-    val input = MemoryStream[KeyedVal]
-    val q = EventStreams.clampedBalanceStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_bal_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(200)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_bal_out").as[EventStreams.BalOut].collect()
-          .groupBy(_.user_id)
-          .map { case (_, rs) => rs.maxBy(_.event_id) }
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_bal_out", "update",
+        batches(ev, 2, replay = ev.take(200)))( // replay: watermark drops
+      EventStreams.clampedBalanceStream)
+      .as[EventStreams.BalOut].collect()
+      .groupBy(_.user_id)
+      .map { case (_, rs) => rs.maxBy(_.event_id) }
+      .toSeq
     latest.map(o => (o.user_id, o.n, o.bal, o.mx, o.clamps))
       .toDF("partkey", "n_events", "final_bal", "max_bal", "n_clamps")
       .orderBy(col("partkey"))
@@ -1816,28 +1455,19 @@ object StreamingGates {
     * oracle is the B117 recursive-CTE replica with the cap at its
     * scan.
     */
-  def qStreamCroston(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCroston(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = ledgerArrivals(s, dir, col("l_quantity").cast("long"))
       .map { case (pk, id, ed, z) =>
         EventStreams.CrostonEvent(pk, id, ed * 86400000000L, z)
       }
-    val input = MemoryStream[EventStreams.CrostonEvent]
-    val q = EventStreams.crostonStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_croston_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(200)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_croston_out").as[EventStreams.CrostonOut].collect()
-          .groupBy(_.user_id)
-          .map { case (_, rs) => rs.maxBy(_.event_id) }
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_croston_out", "update",
+        batches(ev, 2, replay = ev.take(200)))( // replay: watermark drops
+      EventStreams.crostonStream)
+      .as[EventStreams.CrostonOut].collect()
+      .groupBy(_.user_id)
+      .map { case (_, rs) => rs.maxBy(_.event_id) }
+      .toSeq
     latest.map(o => (o.user_id, o.n, o.z_e6, o.p_e6, o.forecast_e6))
       .toDF("partkey", "n_demands", "z_e6", "p_e6", "forecast_e6")
       .orderBy(col("partkey"))
@@ -1863,9 +1493,8 @@ object StreamingGates {
     * oracle recomputes the top-20 burst frame from the capped orders
     * scan.
     */
-  def qStreamSameDayBursts(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSameDayBursts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = orders(s, dir)
       .filter(col("o_orderkey") < BurstOrderMaxKey)
       .select(col("o_custkey"), col("o_orderkey"),
@@ -1876,21 +1505,13 @@ object StreamingGates {
         r.getLong(2), r.getLong(3)))
       .sortBy(e => (e.day_ed, e.order_key)) // the lexicographic watermark order
       .toSeq
-    val input = MemoryStream[EventStreams.OrderEvent]
-    val q = EventStreams.sameDayBurstStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_burst_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(200)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_burst_out").as[EventStreams.BurstOut].collect()
-          .groupBy(o => (o.ck, o.day_ed))
-          .map { case (_, rs) => rs.maxBy(_.n_today) }
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_burst_out", "update",
+        batches(ev, 2, replay = ev.take(200)))( // replay: watermark drops
+      EventStreams.sameDayBurstStream)
+      .as[EventStreams.BurstOut].collect()
+      .groupBy(o => (o.ck, o.day_ed))
+      .map { case (_, rs) => rs.maxBy(_.n_today) }
+      .toSeq
     latest.sortBy(o => (-o.n_today, o.ck, o.day_ed)).take(20)
       .map(o => (o.ck, o.day_ed, o.n_today, o.total_cents, o.order_key,
         o.spread_cents))
@@ -1911,9 +1532,8 @@ object StreamingGates {
     * B134 sessionization replica on the capped error scan with the
     * same global rollup.
     */
-  def qStreamErrorBursts(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamErrorBursts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = events(s, dir)
       .filter(col("event_id") < SessionEvMaxId && col("event_type") === "error")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
@@ -1921,21 +1541,13 @@ object StreamingGates {
       .map(r => EventStreams.ErrEvent(r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_.event_id)
       .toSeq
-    val input = MemoryStream[EventStreams.ErrEvent]
-    val q = EventStreams.errorBurstStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_errburst_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(100)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_errburst_out").as[EventStreams.ErrBurstOut].collect()
-          .groupBy(o => (o.user_id, o.burst_seq))
-          .map { case (_, rs) => rs.maxBy(_.n_errors) }
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_errburst_out", "update",
+        batches(ev, 2, replay = ev.take(100)))( // replay: watermark drops
+      EventStreams.errorBurstStream)
+      .as[EventStreams.ErrBurstOut].collect()
+      .groupBy(o => (o.user_id, o.burst_seq))
+      .map { case (_, rs) => rs.maxBy(_.n_errors) }
+      .toSeq
     val nb = latest.size.toLong
     val nu = latest.map(_.user_id).distinct.size.toLong
     Seq((nb, nu,
@@ -1957,9 +1569,8 @@ object StreamingGates {
     * stream sees predictions, not gold labels); the oracle is the C48
     * replica with the cap at its scan and that column dropped.
     */
-  def qStreamSourcePurity(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSourcePurity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = TextOps.qLangId(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .join(documents(s, dir).select(col("doc_id"), col("source")), "doc_id")
@@ -1969,21 +1580,13 @@ object StreamingGates {
         r.getString(2)))
       .sortBy(_.doc_id)
       .toSeq
-    val input = MemoryStream[EventStreams.DocLangEvent]
-    val q = EventStreams.sourcePurityStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_purity_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(100)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_purity_out").as[EventStreams.PurityOut].collect()
-          .groupBy(_.source)
-          .map { case (_, os) => os.maxBy(_.n_docs) } // n_docs only grows
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_purity_out", "update",
+        batches(ev, 2, replay = ev.take(100)))( // replay: watermark drops
+      EventStreams.sourcePurityStream)
+      .as[EventStreams.PurityOut].collect()
+      .groupBy(_.source)
+      .map { case (_, os) => os.maxBy(_.n_docs) } // n_docs only grows
+      .toSeq
     latest.map(o => (o.source, o.n_docs, o.major_lang, o.n_major, o.purity_ppm))
       .toDF("source", "n_docs", "major_lang", "n_major", "purity_ppm")
       .orderBy(col("source"))
@@ -2000,9 +1603,8 @@ object StreamingGates {
     * independent implementations (broadcast kernel vs DataFrame), one
     * DuckDB-checked contract.
     */
-  def qStreamDomainCls(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamDomainCls(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val capped = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"), col("source"))
@@ -2011,20 +1613,11 @@ object StreamingGates {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
     val srcOf = docsArr.map(d => d._1 -> d._3).toMap
-    val input = MemoryStream[(Long, String)]
-    val q = EventStreams.nbClassifyStream(input.toDS().toDF("doc_id", "text"), model)
-      .writeStream.format("memory")
-      .queryName("gate_nb_out").outputMode("append").start()
-    val preds =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).map(d => (d._1, d._2)).toSeq)
-        q.processAllAvailable()
-        input.addData(docsArr.drop(half).map(d => (d._1, d._2)).toSeq)
-        q.processAllAvailable()
-        s.table("gate_nb_out").collect()
-          .map(r => (srcOf(r.getLong(0)), r.getString(1)))
-      } finally q.stop()
+    val preds = StreamScope.gate(s, "gate_nb_out", "append",
+        batches(docsArr.map(d => (d._1, d._2)).toSeq, 2))(
+        in => EventStreams.nbClassifyStream(in.toDF("doc_id", "text"), model))
+      .collect()
+      .map(r => (srcOf(r.getLong(0)), r.getString(1)))
     preds.groupBy(identity).toSeq
       .map { case ((a, p), xs) => (a, p, xs.size.toLong) }
       .toDF("actual", "predicted", "n")
@@ -2041,33 +1634,24 @@ object StreamingGates {
     * it from the capped documents scan with the packed-min spelling
     * (equal to the struct MIN at any in-cap id).
     */
-  def qStreamSegmentStats(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSegmentStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1)
-    val input = MemoryStream[(Long, String)]
-    val q = EventStreams.segmentStatsStream(input.toDS().toDF("doc_id", "text"))
-      .writeStream.format("memory")
-      .queryName("gate_seg_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_seg_out").collect()
-          .groupBy(_.getString(0))
-          .map { case (_, os) =>
-            val r = os.maxBy(_.getLong(1)) // n_occ only grows
-            val k = r.getStruct(2)
-            (r.getString(0), r.getLong(1), k.getLong(0), k.getLong(1))
-          }
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_seg_out", "update", batches(docsArr.toSeq, 2))(
+        in => EventStreams.segmentStatsStream(in.toDF("doc_id", "text")))
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (_, os) =>
+        val r = os.maxBy(_.getLong(1)) // n_occ only grows
+        val k = r.getStruct(2)
+        (r.getString(0), r.getLong(1), k.getLong(0), k.getLong(1))
+      }
+      .toSeq
     latest.toDF("seg", "n_occ", "keeper_doc", "keeper_idx")
       .select(md5(col("seg")).as("seg_md5"), col("n_occ"),
         col("keeper_doc"), col("keeper_idx"))
@@ -2083,9 +1667,8 @@ object StreamingGates {
     * (docs, tokens, sequences, spanning docs, max span, last fill);
     * the oracle is the C50 replica with the cap at its scan.
     */
-  def qStreamSeqPack(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSeqPack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val B = 512L
     val docsArr = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
@@ -2094,18 +1677,10 @@ object StreamingGates {
       .map(r => EventStreams.PackIn(r.getLong(0), r.getLong(1)))
       .sortBy(_.doc_id)
       .toSeq
-    val input = MemoryStream[EventStreams.PackIn]
-    val q = EventStreams.seqPackStream(input.toDS(), B)
-      .writeStream.format("memory")
-      .queryName("gate_pack_out").outputMode("update").start()
-    val packs =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half)); q.processAllAvailable()
-        input.addData(docsArr.drop(half) ++ docsArr.take(50)) // replay: dropped
-        q.processAllAvailable()
-        s.table("gate_pack_out").as[EventStreams.PackOut].collect().toSeq
-      } finally q.stop()
+    val packs = StreamScope.gate(s, "gate_pack_out", "update",
+        batches(docsArr, 2, replay = docsArr.take(50)))( // replay: dropped
+      EventStreams.seqPackStream(_, B))
+      .as[EventStreams.PackOut].collect().toSeq
     val total = packs.map(p => p.endx - p.start).sum
     Seq((packs.size.toLong, total, (total + B - 1) / B,
         packs.count(_.span > 1).toLong, packs.map(_.span).max,
@@ -2126,9 +1701,8 @@ object StreamingGates {
     * row per key IS the compacted snapshot — B82's frame, oracle = the
     * B82 replica with the cap at its scan.
     */
-  def qStreamUpsertCompact(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamUpsertCompact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = events(s, dir)
       .filter(col("event_id") < SessionEvMaxId)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -2141,23 +1715,12 @@ object StreamingGates {
     val winners = ev.groupBy(_.user_id).values
       .map(_.maxBy(e => (e.ts_us, e.event_id))).toSeq
       .sortBy(_.user_id).take(200)
-    val input = MemoryStream[EventStreams.UpsertEv]
-    val q = EventStreams.upsertCompactStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_upsert_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ winners) // winner replays: dropped
-        q.processAllAvailable()
-        s.table("gate_upsert_out").as[EventStreams.UpsertOut].collect()
-          .zipWithIndex
-          .groupBy(_._1.user_id)
-          .map { case (_, os) => os.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
-    latest.map(o => (o.user_id, o.last_event_id, o.last_type, o.last_value,
+    val rows = StreamScope.gate(s, "gate_upsert_out", "update",
+        batches(ev, 2, replay = winners))( // winner replays: dropped
+      EventStreams.upsertCompactStream)
+      .as[EventStreams.UpsertOut].collect().toSeq
+    lastWins(rows.zipWithIndex)(_._1.user_id, _._2).map(_._1)
+      .map(o => (o.user_id, o.last_event_id, o.last_type, o.last_value,
         o.n_versions))
       .toDF("user_id", "last_event_id", "last_type", "lv", "n_versions")
       .select(col("user_id"), col("last_event_id"), col("last_type"),
@@ -2176,9 +1739,8 @@ object StreamingGates {
     * recomputes both histograms and the identical float formula text
     * from the capped events scan.
     */
-  def qStreamPsi(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamPsi(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val capped = events(s, dir)
       .filter(col("event_id") < SessionEvMaxId)
       .select(col("event_id"), col("value"))
@@ -2189,20 +1751,11 @@ object StreamingGates {
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._1)
-    val input = MemoryStream[(Long, Double)]
-    val q = EventStreams.driftBucketStream(
-        input.toDF().toDF("event_id", "value"))
-      .writeStream.format("memory")
-      .queryName("gate_psi_out").outputMode("update").start()
-    val curHist =
-      try {
-        val half = cur.length / 2
-        input.addData(cur.take(half).toSeq); q.processAllAvailable()
-        input.addData(cur.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_psi_out").collect()
-          .groupBy(_.getLong(0))
-          .map { case (b, rs) => b -> rs.map(_.getLong(1)).max } // counts only grow
-      } finally q.stop()
+    val curHist = StreamScope.gate(s, "gate_psi_out", "update", batches(cur.toSeq, 2))(
+        in => EventStreams.driftBucketStream(in.toDF("event_id", "value")))
+      .collect()
+      .groupBy(_.getLong(0))
+      .map { case (b, rs) => b -> rs.map(_.getLong(1)).max } // counts only grow
     val psi = EventStreams.psiE6(baseHist, curHist)
     (baseHist.keySet ++ curHist.keySet).toSeq.sorted
       .map(b => (b, baseHist.getOrElse(b, 0L), curHist.getOrElse(b, 0L), psi))
@@ -2220,9 +1773,8 @@ object StreamingGates {
     * the frame the D25 rollup reads; the oracle recomputes it from the
     * capped embeddings scan with the abs-div CASE spelling.
     */
-  def qStreamEmbedDrift(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamEmbedDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = embeddings(s, dir)
       .filter(col("vec_id") < SemStreamMaxVec)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
@@ -2236,23 +1788,12 @@ object StreamingGates {
       }
       .sortBy(_.vec_id)
       .toSeq
-    val input = MemoryStream[EventStreams.DimEvent]
-    val q = EventStreams.embedDriftStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_dim_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(1000)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_dim_out").as[EventStreams.DimDriftOut].collect()
-          .zipWithIndex
-          .groupBy(_._1.d)
-          .map { case (_, os) => os.maxBy(_._2)._1 } // changelog: last wins
-          .toSeq
-      } finally q.stop()
-    latest.map(o => (o.d, o.n0, o.n1, o.m0_e6, o.m1_e6, o.drift_e6))
+    val rows = StreamScope.gate(s, "gate_dim_out", "update",
+        batches(ev, 2, replay = ev.take(1000)))( // replay: watermark drops
+      EventStreams.embedDriftStream)
+      .as[EventStreams.DimDriftOut].collect().toSeq
+    lastWins(rows.zipWithIndex)(_._1.d, _._2).map(_._1)
+      .map(o => (o.d, o.n0, o.n1, o.m0_e6, o.m1_e6, o.drift_e6))
       .toDF("d", "n0", "n1", "m0_e6", "m1_e6", "drift_e6")
       .orderBy(col("d"))
   }
@@ -2268,9 +1809,8 @@ object StreamingGates {
     * integral per-customer LTV; the oracle is the B139 replica with
     * the cap at its scan.
     */
-  def qStreamCohortLtv(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCohortLtv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = orders(s, dir)
       .filter(col("o_orderkey") < StreamFactMaxKey)
       .select(col("o_custkey"), col("o_orderkey"),
@@ -2282,18 +1822,10 @@ object StreamingGates {
         r.getLong(2), r.getLong(3)))
       .sortBy(e => (e.m, e.order_key)) // the lexicographic watermark order
       .toSeq
-    val input = MemoryStream[EventStreams.CohortIn]
-    val q = EventStreams.cohortLtvStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_cohort_out").outputMode("update").start()
-    val stamps =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(200)) // replay: watermark drops
-        q.processAllAvailable()
-        s.table("gate_cohort_out").as[EventStreams.CohortOut].collect().toSeq
-      } finally q.stop()
+    val stamps = StreamScope.gate(s, "gate_cohort_out", "update",
+        batches(ev, 2, replay = ev.take(200)))( // replay: watermark drops
+      EventStreams.cohortLtvStream)
+      .as[EventStreams.CohortOut].collect().toSeq
     val sizes = stamps.groupBy(_.cohort_m)
       .map { case (m, xs) => m -> xs.map(_.ck).distinct.size.toLong }
     val cells = stamps.groupBy(o => (o.cohort_m, o.age_months)).toSeq
@@ -2327,9 +1859,8 @@ object StreamingGates {
     * id checksums; the oracle scores the same latest-version corpus
     * (reversed where upserted) through the shared quantizer CTE.
     */
-  def qStreamIvfUpserts(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamIvfUpserts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val cents = Similarity.ivfCentroids()
     val vecs = embeddings(s, dir)
       .filter(col("vec_id") < SemStreamMaxVec)
@@ -2337,28 +1868,20 @@ object StreamingGates {
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
-    val input = MemoryStream[EventStreams.VecUpsert]
-    val q = EventStreams.ivfUpsertStream(input.toDS(), cents)
-      .writeStream.format("memory")
-      .queryName("gate_ivf_out").outputMode("update").start()
-    val index =
-      try {
-        input.addData(vecs.map { case (id, v) =>
-          EventStreams.VecUpsert(id, v, ts = 100L) }.toSeq)
-        q.processAllAvailable()
-        input.addData(
-          vecs.filter(_._1 % 7 == 0).map { case (id, v) =>
-            EventStreams.VecUpsert(id, v.reverse, ts = 200L) }.toSeq ++
-          vecs.filter(_._1 % 5 == 0).map { case (id, v) =>
-            EventStreams.VecUpsert(id, v, ts = 50L) } ++      // stale: dropped
-          vecs.take(100).map { case (id, v) =>
-            EventStreams.VecUpsert(id, v, ts = 100L) })       // equal: dropped
-        q.processAllAvailable()
-        s.table("gate_ivf_out").as[EventStreams.CellAssign].collect()
-          .groupBy(_.vec_id)
-          .map { case (id, as) => id -> as.maxBy(_.ts).cell }
-          .toSeq
-      } finally q.stop()
+    val feed = Seq(
+      vecs.map { case (id, v) => EventStreams.VecUpsert(id, v, ts = 100L) }.toSeq,
+      vecs.filter(_._1 % 7 == 0).map { case (id, v) =>
+        EventStreams.VecUpsert(id, v.reverse, ts = 200L) }.toSeq ++
+      vecs.filter(_._1 % 5 == 0).map { case (id, v) =>
+        EventStreams.VecUpsert(id, v, ts = 50L) } ++      // stale: dropped
+      vecs.take(100).map { case (id, v) =>
+        EventStreams.VecUpsert(id, v, ts = 100L) })       // equal: dropped
+    val index = StreamScope.gate(s, "gate_ivf_out", "update", feed)(
+      EventStreams.ivfUpsertStream(_, cents))
+      .as[EventStreams.CellAssign].collect()
+      .groupBy(_.vec_id)
+      .map { case (id, as) => id -> as.maxBy(_.ts).cell }
+      .toSeq
     index.groupBy(_._2).toSeq
       .map { case (cell, xs) =>
         val ids = xs.map(_._1)
@@ -2377,9 +1900,8 @@ object StreamingGates {
     * doc is the C33 frame; the oracle is the C33 replica with the cap
     * at its scan.
     */
-  def qStreamLmScore(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamLmScore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val capped = documents(s, dir)
       .filter(col("doc_id") < LshDocMaxId)
       .select(col("doc_id"), col("text"))
@@ -2394,27 +1916,21 @@ object StreamingGates {
     val docsArr = capped.collect()
       .map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1)
-    val input = MemoryStream[(Long, String)]
-    val q = TextOps.lmScoreOn(input.toDS().toDF("doc_id", "text"), uni, c2)
-      .writeStream.format("memory")
-      .queryName("gate_lm_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = docsArr.length / 2
-        input.addData(docsArr.take(half).toSeq); q.processAllAvailable()
-        input.addData(docsArr.drop(half).toSeq); q.processAllAvailable()
-        s.table("gate_lm_out").collect()
-          .groupBy(_.getLong(0))
-          .map { case (_, os) =>
-            val r = os.maxBy(_.getLong(1)) // n_bigrams only grows
-            (r.getLong(0), r.getLong(1), r.getDouble(2))
-          }
-          .toSeq
-      } finally {
-        q.stop()
+    val rows =
+      try StreamScope.gate(s, "gate_lm_out", "update", batches(docsArr.toSeq, 2))(
+          in => TextOps.lmScoreOn(in.toDF("doc_id", "text"), uni, c2))
+        .collect()
+      finally {
         graft.core.Materialize.release(uni)
         graft.core.Materialize.release(c2)
       }
+    val latest = rows
+      .groupBy(_.getLong(0))
+      .map { case (_, os) =>
+        val r = os.maxBy(_.getLong(1)) // n_bigrams only grows
+        (r.getLong(0), r.getLong(1), r.getDouble(2))
+      }
+      .toSeq
     latest.toDF("doc_id", "n_bigrams", "avg_logprob")
       .orderBy(col("doc_id"))
   }
@@ -2429,25 +1945,16 @@ object StreamingGates {
     * of entry is B115's frame; the oracle is the B115 replica with
     * the cap at its events scan.
     */
-  def qStreamSessionPaths(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSessionPaths(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = attrArrivals(s, dir)
-    val input = MemoryStream[EventStreams.AttrEvent]
-    val q = EventStreams.sessionPathsStream(input.toDS())
-      .writeStream.format("memory")
-      .queryName("gate_spaths_out").outputMode("update").start()
-    val latest =
-      try {
-        val half = ev.length / 2
-        input.addData(ev.take(half)); q.processAllAvailable()
-        input.addData(ev.drop(half) ++ ev.take(300)) // replay: state suppresses
-        q.processAllAvailable()
-        s.table("gate_spaths_out").as[EventStreams.SessPathOut].collect()
-          .groupBy(o => (o.user_id, o.session_seq))
-          .map { case (_, os) => os.maxBy(_.n_events) } // n_events only grows
-          .toSeq
-      } finally q.stop()
+    val latest = StreamScope.gate(s, "gate_spaths_out", "update",
+        batches(ev, 2, replay = ev.take(300)))( // replay: state suppresses
+      EventStreams.sessionPathsStream)
+      .as[EventStreams.SessPathOut].collect()
+      .groupBy(o => (o.user_id, o.session_seq))
+      .map { case (_, os) => os.maxBy(_.n_events) } // n_events only grows
+      .toSeq
     val cells = latest.groupBy(p => (p.entry_type, p.exit_type)).toSeq
       .map { case ((en, ex), xs) =>
         (en, ex, xs.size.toLong, xs.count(_.n_events == 1L).toLong)

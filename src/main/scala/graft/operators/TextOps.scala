@@ -1736,6 +1736,7 @@ object TextOps {
           }
         }
       }
+      require(counts.nonEmpty, "BPE merge round found no adjacent pairs")
       val ((a, b), n) = counts.toSeq.minBy { case ((a, b), n) => (-n, a, b) }
       st = st.map { case (t, c) =>
         (t.replace("|" + a + "||" + b + "|", "|" + a + b + "|"), c)
@@ -1998,7 +1999,11 @@ object TextOps {
     * aggregate — argmax with class-name tie-break happens in a single
     * projection, never materializing a docs×classes frame; publishes
     * the sparse confusion matrix. At 100 TB: token-scale shuffles + a
-    * broadcast weight frame — the C33 fit-artifact posture.
+    * broadcast weight frame — the C33 fit-artifact posture. The class
+    * domain (distinct sources) is capped at 64: every class is a column
+    * of the per-word delta vector and of the scoring aggregate, and the
+    * fit collects per-class artifacts to the driver, so a larger domain
+    * fails loudly with a `require` instead of fanning out.
     */
   def qMultinomialNb(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir).select(col("doc_id"), col("source"))

@@ -1509,12 +1509,9 @@ object GeoTiff {
       .load(fx.toString)
       .select(col("path"), col("content"))
       .mapPartitions(statsRows)(org.apache.spark.sql.Encoders.row(statsSchema))
-    val q = stream.writeStream.format("memory")
-      .queryName("gate_rtiff_out")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    gateTail(s, dir, s.table("gate_rtiff_out"), GateFiles)
+    gateTail(s, dir,
+      graft.core.StreamScope.drain(s, "gate_rtiff_out", stream, "append"),
+      GateFiles)
       .drop("compression", "predictor", "tiled", "byte_order", "bigtiff")
   }
 
@@ -1565,13 +1562,6 @@ object GeoTiff {
       GridMeta(Some("EPSG:32614"),
         Vector(30.0, 0.0, 500000.0, 0.0, -30.0, 4200000.0),
         fillValue = Some(-9999L)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rt")
-    val singlePath = tmp.resolve("pred.tif").toString
-    writeRaster(rf, singlePath, rowsPerStrip = 16)
-    val single = loadRaster(s, singlePath)
-    val shardDir = tmp.resolve("sharded").toString
-    writeRasterSharded(rf, shardDir, bandRows = 16)
-    val sharded = loadRasterSharded(s, shardDir)
     def stats(kind: String, r: RasterFrame): DataFrame =
       r.df
         .withColumn("zone", expr("y div 8"))
@@ -1588,8 +1578,18 @@ object GeoTiff {
           lit(r.meta.transform(2)).as("tie_x"),
           lit(r.meta.transform(5)).as("tie_y"),
           lit(r.meta.fillValue.getOrElse(0L)).as("fill"))
-    stats("sharded", sharded).unionAll(stats("single", single))
-      .orderBy(col("kind"), col("zone"))
+    // both rasters are read back and their stats collected before the
+    // scratch dir goes
+    graft.core.TempDir("graft_rt") { tmp =>
+      val singlePath = tmp.resolve("pred.tif").toString
+      writeRaster(rf, singlePath, rowsPerStrip = 16)
+      val single = loadRaster(s, singlePath)
+      val shardDir = tmp.resolve("sharded").toString
+      writeRasterSharded(rf, shardDir, bandRows = 16)
+      val sharded = loadRasterSharded(s, shardDir)
+      val both = stats("sharded", sharded).unionAll(stats("single", single))
+      s.createDataFrame(both.collectAsList(), both.schema)
+    }.orderBy(col("kind"), col("zone"))
   }
 
   /** The streaming ingest publishes the batch gate's frame exactly, so
