@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -148,23 +147,26 @@ object Bench {
     // queries each pass and the cross-pass median sheds it. The warm
     // pass (plan optimization + Janino codegen) is unchanged in cost:
     // one extra full pass, same 1 + nRuns executions per query.
-    val failed = scala.collection.mutable.Set.empty[String]
+    // a failed query keeps its -1 entry in the per-query map, and its
+    // first exception's class and message go to the artifact's
+    // `failures` map, so a failure is never silent
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     for ((name, fn) <- sched) {
       try run(fn(spark, sfDir))
-      catch { case _: Throwable => failed += name }
+      catch { case e: Throwable => failures(name) = e }
     }
     val passTimes = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
-    for (_ <- 0 until nRuns; (name, fn) <- sched if !failed(name)) {
+    for (_ <- 0 until nRuns; (name, fn) <- sched if !failures.contains(name)) {
       reap()
       val t0 = System.nanoTime()
       try {
         run(fn(spark, sfDir))
         passTimes(name) = passTimes(name) :+ (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => failed += name }
+      } catch { case e: Throwable => failures(name) = e }
     }
     val results = sched.map { case (name, _) =>
-      name -> (if (failed(name)) Seq(-1.0) else passTimes(name): Seq[Double])
+      name -> (if (failures.contains(name)) Seq(-1.0) else passTimes(name): Seq[Double])
     }
     // true median: average the two middle elements for even run counts
     // (the upper-middle alone would bias even-N runs high)
@@ -189,8 +191,13 @@ object Bench {
       s""""ref_mt_sec_before":$refMtBefore,"ref_mt_sec_after":$refMtAfter,""" +
       s""""loadavg1_before":$loadBefore,"loadavg1_after":$loadAfter,""" +
       s""""quiet":$quiet}"""
+    val failuresJson = failures.map { case (k, e) =>
+      Verify.jsonString(k) + ":{\"class\":" + Verify.jsonString(e.getClass.getName) +
+        ",\"message\":" + Verify.jsonString(String.valueOf(e.getMessage)) + "}"
+    }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""runs":$nRuns,"spread":$spread,"load":$load,"action":"$actionName",""" +
+      s""""n_failed":${failures.size},"failures":$failuresJson,""" +
       s""""sf":"$sfDir"}"""
     println(line)
     // the driver keeps only a truncated stdout TAIL of this process —
@@ -224,7 +231,8 @@ object Bench {
         s""""of":${chunks.size},"cpus":$cpus,"sf":"$sfDir","queries":$body}""")
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""n_queries":${results.size},"runs":$nRuns,"load":$load,""" +
+      s""""n_queries":${results.size},"n_failed":${failures.size},""" +
+      s""""runs":$nRuns,"load":$load,""" +
       s""""action":"$actionName","queries_file":"$out","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -5,6 +5,8 @@ package graft
   * registry query at the given SF and flags the plan shapes that are
   * scale-killers at 100 TB: CartesianProduct anywhere, Expand outside
   * the cube/rollup/grouping-sets family (the multi-countDistinct trap),
+  * a global Sort at the plan root (a registry query returns a row set,
+  * so a trailing sort only adds a sampling job and a range shuffle),
   * and — the r9 q_conformal lesson — an UNPARTITIONED window whose
   * input subtree reaches a file relation without passing through an
   * Aggregate or a Limit: such a window funnels a fact-proportional row
@@ -42,6 +44,21 @@ object ExplainAudit {
     }.exists(w => reachesScan(w.child))
   }
 
+  /** True if the optimized plan's root, looking through Project and
+    * SubqueryAlias, is a global Sort: a trailing sort on a registry
+    * query, whose order is not part of its row-set result. A sort
+    * under a Limit (TopN) or inside a Window is not a root sort. */
+  private[graft] def rootSort(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    plan match {
+      case p: Project        => rootSort(p.child)
+      case a: SubqueryAlias  => rootSort(a.child)
+      case s: Sort           => s.global
+      case _                 => false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val all = args.contains("--all")
     val dir = args.filterNot(_ == "--all").headOption
@@ -57,7 +74,8 @@ object ExplainAudit {
           val shapes = Seq(
             if (plan.contains("CartesianProduct")) Some("CartesianProduct") else None,
             if (plan.contains("Expand") && !expandOk(n)) Some("Expand") else None,
-            if (unboundedFactWindow(qe.optimizedPlan)) Some("UnboundedFactWindow") else None
+            if (unboundedFactWindow(qe.optimizedPlan)) Some("UnboundedFactWindow") else None,
+            if (rootSort(qe.optimizedPlan)) Some("RootSort") else None
           ).flatten
           if (shapes.nonEmpty) { flagged += 1; println(s"FLAG $n: ${shapes.mkString(", ")}") }
           if (plan.contains("SortMergeJoin")) println(s"INFO $n: SortMergeJoin")

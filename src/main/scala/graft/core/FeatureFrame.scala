@@ -72,7 +72,7 @@ final case class PredictOptions(
     */
   def resolveOutputType(natural: DataType = DoubleType): DataType = outputType match {
     case scala.Some(dt) if PredictOptions.representable(noDataOutput, dt) => dt
-    case scala.Some(dt) if allowCast => natural
+    case scala.Some(_) if allowCast => natural
     case scala.Some(dt) =>
       throw new IllegalArgumentException(
         s"noDataOutput $noDataOutput cannot be represented in the requested " +

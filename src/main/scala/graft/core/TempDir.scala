@@ -12,10 +12,27 @@ object TempDir {
   def apply[A](prefix: String)(f: Path => A): A = {
     val dir = Files.createTempDirectory(prefix)
     try f(dir)
-    finally {
-      val paths = Files.walk(dir)
-      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
-    }
+    finally delete(dir)
+  }
+
+  /** A scratch directory that lives as long as the JVM: for fixtures a
+    * session writes once and reuses. One shutdown hook deletes every
+    * such directory when the JVM exits. */
+  def forJvm(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    jvmDirs.synchronized { jvmDirs += dir }
+    dir
+  }
+
+  private lazy val jvmDirs = {
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+    sys.addShutdownHook(dirs.synchronized(dirs.filter(Files.exists(_)).foreach(delete)))
+    dirs
+  }
+
+  private def delete(dir: Path): Unit = {
+    val paths = Files.walk(dir)
+    try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+    finally paths.close()
   }
 }

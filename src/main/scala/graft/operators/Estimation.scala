@@ -72,7 +72,6 @@ object Estimation {
       .fit(trainLi(s, dir), Seq("l_extendedprice"), Seq("l_quantity"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), Seq("l_extendedprice")))
       .select(col("li_id"), dec4(col("l_quantity")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A1b: distance-weighted kNN regression (sklearn weights="distance";
@@ -85,7 +84,6 @@ object Estimation {
       .fit(trainLi(s, dir), Seq("l_extendedprice"), Seq("l_quantity"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), Seq("l_extendedprice")))
       .select(col("li_id"), dec4(col("l_quantity")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A1c: RadiusNeighborsRegressor — mean target over ALL training
@@ -100,7 +98,6 @@ object Estimation {
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), Seq("l_extendedprice")))
       .select(col("li_id"), col("n_in_radius"),
               dec4(col("l_quantity")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A2: multi-feature (d=3), multi-target (t=2) kNN regression. */
@@ -113,7 +110,6 @@ object Estimation {
       .select(col("li_id"),
               dec4(col("l_extendedprice")).as("pred_price"),
               dec4(col("l_suppkey")).as("pred_supp"))
-      .orderBy(col("li_id"))
   }
 
   /** A3: KNeighborsClassifier.predict — majority vote, sklearn tie rule. */
@@ -122,7 +118,6 @@ object Estimation {
       .fit(trainLi(s, dir), Seq("l_extendedprice", "l_quantity"), Seq("l_returnflag"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"),
         Seq("l_extendedprice", "l_quantity")))
-      .orderBy(col("li_id"))
   }
 
   /** A3b: distance-weighted classification (sklearn weights="distance"
@@ -137,7 +132,6 @@ object Estimation {
       .fit(trainLi(s, dir), Seq("l_extendedprice", "l_quantity"), Seq("l_returnflag"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"),
         Seq("l_extendedprice", "l_quantity")))
-      .orderBy(col("li_id"))
   }
 
   /** A11b: prediction under partially missing features — sklearn
@@ -161,7 +155,6 @@ object Estimation {
         FeatureFrame(input, Seq("li_id", "pat"), Seq("l_extendedprice", "l_discount")))
       .select(col("li_id"), col("pat"),
               dec4(col("l_quantity")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A4: predict_proba — neighbor class frequencies, one column per class. */
@@ -171,7 +164,6 @@ object Estimation {
     val raw = model.predictProba(FeatureFrame(li(s, dir), Seq("li_id"),
         Seq("l_extendedprice", "l_quantity")))
     raw.select(col("li_id") +: model.classes.map(c => dec4(col(s"p_$c")).as(s"p_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A5: kneighbors — k=3 neighbor ids + Euclidean distances as columns. */
@@ -184,7 +176,6 @@ object Estimation {
               dec4(col("distance0")).as("distance0"),
               dec4(col("distance1")).as("distance1"),
               dec4(col("distance2")).as("distance2"))
-      .orderBy(col("li_id"))
   }
 
   private val scaleFeatures = Seq("l_quantity", "l_extendedprice", "l_discount")
@@ -195,7 +186,6 @@ object Estimation {
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
       .select(col("li_id") +:
         scaleFeatures.map(c => dec4(col(s"scaled_$c")).as(s"scaled_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A7: MinMaxScaler.transform. */
@@ -204,7 +194,6 @@ object Estimation {
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
       .select(col("li_id") +:
         scaleFeatures.map(c => dec4(col(s"scaled_$c")).as(s"scaled_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A7c: RobustScaler.transform — (x − median)/IQR, the
@@ -216,7 +205,6 @@ object Estimation {
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
       .select(col("li_id") +:
         scaleFeatures.map(c => dec4(col(s"scaled_$c")).as(s"scaled_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A7d: row-wise L2 normalization (sklearn Normalizer) — stateless,
@@ -228,7 +216,6 @@ object Estimation {
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
       .select(col("li_id") +:
         scaleFeatures.map(c => dec4(col(s"norm_$c")).as(s"norm_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A7e: quantile-strategy discretization (sklearn KBinsDiscretizer,
@@ -238,7 +225,6 @@ object Estimation {
   def qKbins(s: SparkSession, dir: String): DataFrame = {
     val model = KBinsDiscretizer(nBins = 5).fit(trainLi(s, dir), scaleFeatures)
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
-      .orderBy(col("li_id"))
   }
 
   /** A7f: MaxAbsScaler.transform — x/max|x|, sparsity- and
@@ -250,7 +236,6 @@ object Estimation {
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
       .select(col("li_id") +:
         scaleFeatures.map(c => dec4(col(s"scaled_$c")).as(s"scaled_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A7g: percentile winsorization — clamp to the fitted exact
@@ -261,7 +246,6 @@ object Estimation {
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
       .select(col("li_id") +:
         scaleFeatures.map(c => dec4(col(s"w_$c")).as(s"w_$c")): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A9c: ridge regression (α=1000, intercept unpenalized) on
@@ -278,7 +262,6 @@ object Estimation {
       .fit(enc(trainLi(s, dir)), Seq("x1", "x2"), Seq("y_cents"))
     model.predict(FeatureFrame(enc(li(s, dir)), Seq("li_id"), Seq("x1", "x2")))
       .select(col("li_id"), dec2(col("y_cents") / 100.0).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A20: smoothed target-mean encoding of the supplier key (m=10) —
@@ -297,7 +280,6 @@ object Estimation {
       // alike, unlike a direct dec4 of the quotient (see TargetEncoder)
       .select(col("li_id"),
               (round(col("enc_l_suppkey") * 100, 0) / 10000.0).as("enc_supp"))
-      .orderBy(col("li_id"))
   }
 
   /** A23: mean imputation (sklearn SimpleImputer) — x1 goes missing on
@@ -311,7 +293,6 @@ object Estimation {
     val model = SimpleImputer("mean").fit(enc(trainLi(s, dir)), Seq("x1"))
     model.transform(FeatureFrame(enc(li(s, dir)), Seq("li_id"), Seq("x1")))
       .select(col("li_id"), dec4(col("imp_x1")).as("imp_x1"))
-      .orderBy(col("li_id"))
   }
 
   /** A24: degree-2 polynomial feature expansion (include_bias=false),
@@ -326,7 +307,6 @@ object Estimation {
         dec4(col("p_l_quantity_l_quantity")).as("p_qq"),
         dec4(col("p_l_quantity_l_discount")).as("p_qd"),
         dec4(col("p_l_discount_l_discount")).as("p_dd"))
-      .orderBy(col("li_id"))
 
   /** A25: balanced class weights (sklearn compute_class_weight):
     * w_c = n / (k · n_c) — the loss-reweighting companion to the
@@ -340,7 +320,6 @@ object Estimation {
     g.crossJoin(t)
       .select(col("l_returnflag").as("class"), col("n_c"),
               (col("n").cast("double") / (col("k") * col("n_c"))).as("weight"))
-      .orderBy(col("class"))
   }
 
   /** A27: classifier calibration curve for the A4 probability surface —
@@ -376,7 +355,6 @@ object Estimation {
       .agg(count(lit(1)).as("n"), sum(col("hit")).as("n_true"))
       .select(col("bin"), col("n"), col("n_true"),
               dec4(col("n_true").cast("double") / col("n")).as("actual_rate"))
-      .orderBy(col("bin"))
   }
 
   /** A26: regression evaluation metrics (MAE/RMSE/R²) for the A9 OLS
@@ -424,7 +402,6 @@ object Estimation {
     val model = CategoricalNB()
       .fit(enc(trainLi(s, dir)), Seq("f1", "f2", "f3"), "l_returnflag")
     model.predict(FeatureFrame(enc(li(s, dir)), Seq("li_id"), Seq("f1", "f2", "f3")))
-      .orderBy(col("li_id"))
   }
 
   /** A22: one-hot encoding of the two status categoricals — fit learns
@@ -434,7 +411,6 @@ object Estimation {
   def qOneHot(s: SparkSession, dir: String): DataFrame = {
     val model = OneHotEncoder(Seq("l_returnflag", "l_linestatus")).fit(trainLi(s, dir))
     model.transform(li(s, dir), Seq("li_id"))
-      .orderBy(col("li_id"))
   }
 
   /** A7b: rank/quantile normalization (QuantileTransformer family) —
@@ -474,7 +450,6 @@ object Estimation {
       .select(col("li_id"),
         ((row_number().over(w) - 1 + element_at(lit(offsets), col("__bkt") + 1))
           .cast("double") / lit((total - 1).toDouble)).as("rank_pct"))
-      .orderBy(col("li_id"))
   }
 
   /** A8: inverse_transform roundtrip (scale → unscale ≈ identity). */
@@ -483,7 +458,6 @@ object Estimation {
     val scaled = model.transform(FeatureFrame(li(s, dir), Seq("li_id"), scaleFeatures))
     model.inverseTransform(scaled, Seq("li_id"))
       .select(col("li_id") +: scaleFeatures.map(c => dec2(col(c)).as(c)): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A9: LinearRegression.predict — d=1 OLS via distributed normal equations. */
@@ -492,7 +466,6 @@ object Estimation {
       .fit(trainLi(s, dir), Seq("l_quantity"), Seq("l_extendedprice"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), Seq("l_quantity")))
       .select(col("li_id"), dec2(col("l_extendedprice")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A10: d=2 OLS (closed-form oracle via covariances). */
@@ -501,7 +474,6 @@ object Estimation {
       .fit(trainLi(s, dir), Seq("l_quantity", "l_discount"), Seq("l_extendedprice"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), Seq("l_quantity", "l_discount")))
       .select(col("li_id"), dec2(col("l_extendedprice")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A57: EXACT Shapley attribution for the linear model — the
@@ -535,7 +507,6 @@ object Estimation {
         dec2(lit(b2) * (col("l_discount") - col("m2"))).as("phi_disc"),
         dec2(lit(b0) + lit(b1) * col("l_quantity")
           + lit(b2) * col("l_discount")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A11: NoData semantics — NULL + per-feature sentinel masking, skip +
@@ -555,7 +526,6 @@ object Estimation {
       NoData.perFeature(Map("l_quantity" -> -1.0)))
     model.predict(frame, PredictOptions(noDataOutput = -999.0))
       .select(col("li_id"), dec4(col("l_suppkey")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A12: arbitrary-estimator delegation — MLlib RandomForest wrapped in
@@ -600,7 +570,6 @@ object Estimation {
          col("l_extendedprice") <= hi + eps).cast("int").as("in_hull"),
         (max(col("l_extendedprice")).over(w) ===
          min(col("l_extendedprice")).over(w)).cast("int").as("consistent"))
-      .orderBy(col("li_id"))
   }
 
   /** A12b: GBT delegation, same hull-invariant oracle shape as A12 with
@@ -637,7 +606,6 @@ object Estimation {
          col("l_extendedprice") <= hi + slack).cast("int").as("in_hull"),
         (max(col("l_extendedprice")).over(w) ===
          min(col("l_extendedprice")).over(w)).cast("int").as("consistent"))
-      .orderBy(col("li_id"))
   }
 
   /** A12d: one exact gradient-boosting stage (Boosting.scala) — the
@@ -656,7 +624,6 @@ object Estimation {
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"),
         Seq("l_quantity", "l_discount", "l_tax")))
       .select(col("li_id"), dec4(col("l_extendedprice")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A12e: TWO exact boosting stages (Boosting.GradientBoostTwoStage) —
@@ -675,7 +642,6 @@ object Estimation {
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"),
         Seq("l_quantity", "l_discount", "l_tax")))
       .select(col("li_id"), dec4(col("l_extendedprice")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A12c: deterministic CART regression tree (depth 2, exact-integer
@@ -698,7 +664,6 @@ object Estimation {
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"),
         Seq("l_quantity", "l_discount", "l_tax")))
       .select(col("li_id"), dec4(col("l_extendedprice")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** A13: PCA transform — distributed moment aggregation + driver
@@ -715,7 +680,6 @@ object Estimation {
     val model = PCA(k = 2).fit(trainLi(s, dir), pcaFeatures)
     model.transform(FeatureFrame(li(s, dir), Seq("li_id"), pcaFeatures))
       .select(col("li_id"), dec4(col("pc1")).as("pc1"), dec4(col("pc2")).as("pc2"))
-      .orderBy(col("li_id"))
   }
 
   /** A13c: PCA inverse_transform roundtrip — transform to the FULL
@@ -731,7 +695,6 @@ object Estimation {
     val scores = model.transform(FeatureFrame(li(s, dir), Seq("li_id"), pcaFeatures))
     model.inverseTransform(scores, Seq("li_id"))
       .select(col("li_id") +: pcaFeatures.map(c => dec4(col(c)).as(c)): _*)
-      .orderBy(col("li_id"))
   }
 
   /** A13b: the PCA FIT pass oracled EXACTLY — the same second-moment
@@ -788,7 +751,6 @@ object Estimation {
     val model = pipe.fit(trainLi(s, dir), Seq("l_extendedprice", "l_quantity"), Seq("l_discount"))
     model.predict(FeatureFrame(li(s, dir), Seq("li_id"), Seq("l_extendedprice", "l_quantity")))
       .select(col("li_id"), dec4(col("l_discount")).as("prediction"))
-      .orderBy(col("li_id"))
   }
 
   /** One CART node's split search in SQL: per feature, sort by
@@ -861,7 +823,6 @@ object Estimation {
       .agg(sum(col("v")).as("vsum"), count(col("v")).as("vcnt"))
       .select(col("tx").as("x"), col("ty").as("y"), col("vsum"), col("vcnt"),
               dec4(col("vsum").cast("double") / col("vcnt")).as("focal_mean"))
-      .orderBy(col("x"), col("y"))
   }
 
   /** A29: zonal statistics — the other raster-domain reduction
@@ -901,7 +862,6 @@ object Estimation {
 
   def qZonal(s: SparkSession, dir: String): DataFrame =
     zonalStats(graft.sources.Synthetic.rasterGrid(s, 120L, 80L))
-      .orderBy(col("zone"))
 
   /** A30: raster resample / overview build — 2×2 block-mean downsample
     * (the pyramid level-1 primitive every raster store materializes
@@ -921,7 +881,6 @@ object Estimation {
       .agg(sum(col("v")).as("vsum"), count(col("v")).as("vcnt"))
       .select(col("rx"), col("ry"), col("vsum"), col("vcnt"),
               dec4(col("vsum").cast("double") / col("vcnt")).as("mean_v"))
-      .orderBy(col("rx"), col("ry"))
   }
 
   /** A34: LOCAL map algebra — the cell-wise member of the raster-op
@@ -949,7 +908,6 @@ object Estimation {
           .otherwise(
             (when(col("v") >= col("b"), lit(1L)).otherwise(lit(-1L))) *
             expr("(abs(v - b) * 1000000) div (v + b)")).as("nd_ppm"))
-      .orderBy(col("x"), col("y"))
   }
 
   /** A35: GLOBAL raster statistics — the whole-grid reduction closing
@@ -997,6 +955,7 @@ object Estimation {
     val model = KNeighborsRegressor(k = 5, orderBy = Seq("plot_id"))
       .fit(x.join(y, Seq("plot_id")), feats, Nil)
     // bounded fit artifact: 240 plot covers, deci-units (×10 exact)
+    // order kept: kneighbors indices address these arrays by plot_id rank
     val covs = y.orderBy("plot_id").collect()
     def deciCol(i: Int): Array[Long] = covs.map(r => math.round(r.getDouble(i) * 10))
     val Seq(t1, t2, t3) = Seq(1, 2, 3).map(deciCol)
@@ -1019,7 +978,6 @@ object Estimation {
         dec4(col("ss1").cast("double") / (col("n_valid").cast("double") * 50.0)).as("mean_psme"),
         dec4(col("ss2").cast("double") / (col("n_valid").cast("double") * 50.0)).as("mean_pila"),
         dec4(col("ss3").cast("double") / (col("n_valid").cast("double") * 50.0)).as("mean_abco"))
-      .orderBy(col("zone"))
   }
 
   /** G1 (query-backed since r9): per-row raster statistics read THROUGH
@@ -1040,7 +998,6 @@ object Estimation {
       .agg(count(lit(1)).as("n_cells"), count(col("v")).as("n_valid"),
            sum(col("v")).as("vsum"), min(col("v")).as("vmin"),
            max(col("v")).as("vmax"))
-      .orderBy(col("y"))
 
   /** G15 (query-backed): the MODERN V2 predicate path
     * (`SupportsPushDownV2Filters`) machine-checked through the driver
@@ -1076,7 +1033,6 @@ object Estimation {
       .select(col("y"), col("n_cells"), col("n_valid"), col("vsum"),
         lit(if (clamped) 1L else 0L).as("v2_clamped"),
         lit(if (xWhole) 1L else 0L).as("untranslatable_whole"))
-      .orderBy(col("y"))
   }
 
   /** G3 (query-backed): TopN pushdown through the DataSource V2 source
@@ -1123,7 +1079,6 @@ object Estimation {
              sum(col("v")).as("vsum"), min(col("v")).as("vmin"),
              max(col("v")).as("vmax")),
       "complete")
-      .orderBy(col("band"))
 
   /** G7 (query-backed): dimension-join DYNAMIC pruning through the
     * custom source ([[graft.sources.v2.RasterScan]]'s
@@ -1147,7 +1102,6 @@ object Estimation {
       .agg(count(lit(1)).as("n_cells"), count(col("v")).as("n_valid"),
            sum(col("v")).as("vsum"), min(col("v")).as("vmin"),
            max(col("v")).as("vmax"))
-      .orderBy(col("y"))
   }
 
   /** G6 (query-backed): the full STREAMING extension path chained end
@@ -1252,7 +1206,6 @@ object Estimation {
       .agg(count(lit(1)).as("n_cells"), count(col("v")).as("n_valid"),
            sum(col("v")).as("vsum"),
            min(col("y")).as("y_min"), max(col("y")).as("y_max"))
-      .orderBy(col("_stripe"))
   }
 
   /** G14 (query-backed): the ordering REPORT (`SupportsReportOrdering`)
@@ -1308,6 +1261,7 @@ object Estimation {
                                sum(col("viol")).as("viol"))
     val vRow = verified.collect()(0)
     val localElided = sorts(verified.queryExecution.executedPlan) == 0
+    // order kept: this probe checks that a requested global sort survives
     val global = v2().filter(col("y") >= 8 && col("y") <= 71).orderBy(col("y"), col("x"))
     global.collect()
     val globalKept = sorts(global.queryExecution.executedPlan) >= 1
@@ -1428,7 +1382,6 @@ object Estimation {
       s.createDataFrame(
         rows.map(r => Row(r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), flag)).toSeq.asJava, schema)
-        .orderBy(col("y"))
     } finally prior match {
       case Some(v) => s.conf.set(bucketingKey, v)
       case None    => s.conf.unset(bucketingKey)
@@ -1550,7 +1503,7 @@ object Estimation {
     s.sql("""SELECT prio,
       graft_fns.kernels.gcd_agg(cents) AS price_grid,
       graft_fns.kernels.floor_div(MIN(cents) - MAX(cents), 7919L) AS fd
-      FROM catalog_fn_src GROUP BY prio ORDER BY prio""")
+      FROM catalog_fn_src GROUP BY prio""")
   }
 
   /** G20 (query-backed): SQL UPDATE and MERGE INTO through the V2
@@ -1590,7 +1543,7 @@ object Estimation {
     s.sql(s"""SELECT st, CAST(COUNT(*) AS BIGINT) AS n,
       CAST(SUM(cents) AS BIGINT) AS sum_cents,
       CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-      FROM $t GROUP BY st ORDER BY st""")
+      FROM $t GROUP BY st""")
   }
 
   /** G23 (query-backed): MERGE WITH SCHEMA EVOLUTION — G20's row-level
@@ -1650,7 +1603,7 @@ object Estimation {
     s.sql(s"""SELECT st, CAST(COUNT(*) AS BIGINT) AS n,
       CAST(SUM(cents) AS BIGINT) AS sum_cents,
       CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-      FROM $t GROUP BY st ORDER BY st""")
+      FROM $t GROUP BY st""")
   }
 
   /** G22 (query-backed): TIME TRAVEL through the V2 catalog — the
@@ -1691,7 +1644,7 @@ object Estimation {
       statsAt(2L, s"$t VERSION AS OF 2"),
       statsAt(3L, s"$t VERSION AS OF 3"),
       statsAt(4L, t) // current state must EQUAL version 3
-    ).mkString("\nUNION ALL\n") + "\nORDER BY version")
+    ).mkString("\nUNION ALL\n"))
   }
 
   /** G22b (query-backed): SNAPSHOT RETENTION — the other half of time
@@ -1741,7 +1694,6 @@ object Estimation {
         lit(ret.getLong(1)).as("retained_from"),
         lit(ret.getLong(2)).as("retained_to"),
         lit(refused).as("refused_expired")))
-      .orderBy(col("probe"))
   }
 
   /** A39 derivation chain (the featImpDerivs machine): Fisher LDA with
@@ -2765,7 +2717,6 @@ object Estimation {
         graft.functions.dec6(col("w")).as("slope"),
         graft.functions.dec6(col("b0")).as("intercept"),
         dec4(sqrt(col("sse").cast("double") / col("nt")) / 100.0).as("rmse"))
-      .orderBy(col("fold"))
   }
 
   /** The A33 derivation chain: every float step from raw moments to the
@@ -2838,7 +2789,6 @@ object Estimation {
               graft.functions.dec6(col("t.r2_full")).as("r2_full"),
               graft.functions.dec6(col("t.r2_without")).as("r2_without"),
               graft.functions.dec6(col("t.imp")).as("importance"))
-      .orderBy(col("feature"))
   }
 
   /** A32: ridge regularization path — hyperparameter grid search from
@@ -2877,7 +2827,6 @@ object Estimation {
       .select(col("alpha"), graft.functions.dec6(col("w")).as("slope"),
         graft.functions.dec6(col("b0")).as("intercept"),
         dec4(sqrt(col("sse") / col("nd"))).as("rmse_train"))
-      .orderBy(col("alpha"))
   }
 
   /** A36 float steps as shared formula text (the sseFromMomentsSql /
@@ -2943,7 +2892,6 @@ object Estimation {
       .withColumn("rmse", dec4(expr(lcRmseSql)))
       .select(col("frac_pct"), col("n_train"),
               dec6(col("b1")).as("b1"), dec6(col("b0")).as("b0"), col("rmse"))
-      .orderBy(col("frac_pct"))
   }
 
   /** A37 shared formula text (the featImpDerivs rule): per-feature
@@ -3014,7 +2962,6 @@ object Estimation {
       .select(col("t.feature").as("feature"), dec6(col("t.r2")).as("r2"),
               dec4(col("t.f")).as("f_stat"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy(col("rank"))
   }
 
   /** A38: isotonic regression (sklearn IsotonicRegression — the
@@ -3060,7 +3007,6 @@ object Estimation {
       .select(col("x"), col("w"),
         expr("(CAST(sy AS DECIMAL(38,0)) * 1000000) div w").as("mean_e6"),
         col("yhat_e6"))
-      .orderBy(col("x"))
   }
 
   /** Oracle SQL (DuckDB dialect). The kNN oracles use the crossJoin +
@@ -3228,7 +3174,6 @@ object Estimation {
     val w = Window.orderBy(col("ll").desc, col("lam_x2"))
     ll.withColumn("is_best",
         (row_number().over(w) === 1).cast("int"))
-      .orderBy(col("lam_x2"))
   }
 
   /** The 240 packaged ecoplot plots as a DuckDB VALUES list for the

@@ -34,7 +34,6 @@ object Multimodal {
         length(col("payload")).cast("long").as("n_bytes"),
         sha2(col("payload"), 256).as("sha"),
         lower(hex(substring(col("payload"), 1, 4))).as("magic"))
-      .orderBy(col("doc_id"))
 
   /** E3: media decode roundtrip through the oracle gate — the widths/
     * heights READ BACK from the synthesized GRFT headers must equal the
@@ -50,7 +49,6 @@ object Multimodal {
               col("width").cast("long").as("width"),
               col("height").cast("long").as("height"),
               size(col("features")).cast("long").as("n_features"))
-      .orderBy(col("media_id"))
   }
 
   /** E4 media record: multi-frame payload ("GRFV" + frame count + int
@@ -127,7 +125,6 @@ object Multimodal {
 
   def qMediaFrames(s: SparkSession, dir: String): DataFrame =
     sampleFrames(synthesizeVideo(s, dir), stride = 2)
-      .orderBy(col("media_id"), col("frame_idx"))
 
   /** E5 media record: BYTE-OFFSET chunked container ("GRFB" + frame
     * count + int length-prefixed byte frames) — the production chunking
@@ -222,7 +219,6 @@ object Multimodal {
 
   def qMediaBytes(s: SparkSession, dir: String): DataFrame =
     sampleByteFrames(synthesizeVideoBytes(s, dir), stride = 2)
-      .orderBy(col("media_id"), col("frame_idx"))
 
   val oracles: Map[String, String] = Map(
     "q_media_warc" ->
@@ -611,7 +607,6 @@ object Multimodal {
       .select(col("media_id"), col("chunk_idx"), col("n_samples"),
               col("peak"), col("n_zero_cross"),
               dec4(sqrt(col("sumsq").cast("double") / col("n_samples"))).as("rms"))
-      .orderBy(col("media_id"), col("chunk_idx"))
   }
 
   /** E9 synthesis: REAL RIFF/WAVE audio files — a canonical 44-byte
@@ -710,7 +705,6 @@ object Multimodal {
               col("peak"), col("n_zero_cross"),
               dec4(sqrt(col("sumsq").cast("double") / col("n_samples"))).as("rms"),
               col("duration_us"))
-      .orderBy(col("media_id"))
   }
 
   /** E18 synthesis: REAL RIFF/AVI video containers — the standard
@@ -879,7 +873,6 @@ object Multimodal {
           Row(id, w, h, nf, nf * usf, nKey, nSampled, checksum)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("media_id"))
   }
 
   /** E19 synthesis: REAL MPEG-1 Layer III (MP3) streams — an ID3v2
@@ -1004,7 +997,6 @@ object Multimodal {
             nf * 1152L * 1000000L / sr, streamBytes, checksum)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("media_id"))
   }
 
   /** E20 synthesis: REAL ZIP archives (STORED entries) — the
@@ -1154,7 +1146,6 @@ object Multimodal {
           Row(id, n, tb, probe, ok)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("media_id"))
   }
 
   /** E21 synthesis: REAL WARC/1.0 files — the web-crawl archive format
@@ -1281,7 +1272,6 @@ object Multimodal {
           Row(id, nRec, nResp, payloadBytes, probe)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("media_id"))
   }
 
   /** E17: PNG container-INTEGRITY audit — the ingest-side corruption
@@ -1321,7 +1311,6 @@ object Multimodal {
           Row(id, sigOk, nBad, ok)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("media_id"))
   }
 
   /** The E17 chunk walker: (sig_ok, n_bad_chunks, crc_ok). A structural
@@ -1412,7 +1401,6 @@ object Multimodal {
                 .as("silent_permille"),
               expr("CAST(CASE WHEN (n_silent * 1000) div n_samples <= 900 " +
                    "THEN 1 ELSE 0 END AS BIGINT)").as("qc_pass"))
-      .orderBy(col("media_id"))
   }
 
   /** E11: decimation resampling through the REAL audio codec path —
@@ -1471,7 +1459,6 @@ object Multimodal {
       .select(col("media_id"), col("out_rate"), col("n_out"), col("peak"),
               dec4(sqrt(col("sumsq").cast("double") / col("n_out"))).as("rms"),
               col("wsum"), col("duration_us"))
-      .orderBy(col("media_id"))
   }
 
   def synthesizeMedia(s: SparkSession, dir: String): DataFrame = {
@@ -1709,7 +1696,6 @@ object Multimodal {
       }(Encoders.row(outSchema))
       .groupBy(col("digest"))
       .agg(count(lit(1)).as("n_members"), min(col("media_id")).as("keeper"))
-      .orderBy(col("keeper"))
   }
 
   /** E13: cross-modal curation JOIN — the decision step of every
@@ -1745,7 +1731,6 @@ object Multimodal {
       .crossJoin(broadcast(digest))
       .select(col("t_ok").cast("long").as("t_ok"),
               col("i_ok").cast("long").as("i_ok"), col("n"), col("kept_md5"))
-      .orderBy(col("t_ok"), col("i_ok"))
   }
 
   private[graft] def encodeBmp(id: Long): Array[Byte] = {
@@ -1869,7 +1854,7 @@ object Multimodal {
              sum(expr("n * (n - 1) div 2")).as("n_candidate_pairs"))
     val full = hashes.select(lit(-1L).as("band_id"),
       concat_ws(",", col("b0"), col("b1"), col("b2"), col("b3")).as("v"))
-    census(bands).unionByName(census(full)).orderBy(col("band_id"))
+    census(bands).unionByName(census(full))
   }
 
   /** Shared codec-gate kernel: decode each payload (any ImageIO
@@ -1901,7 +1886,6 @@ object Multimodal {
           Row(id, w.toLong, h.toLong, w.toLong * h, sr, sg, sb, maxL)
         }
       }(Encoders.row(decodeStatsSchema))
-      .orderBy(col("media_id"))
 
   private val resizeStatsSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -1952,7 +1936,6 @@ object Multimodal {
           Row(id, w.toLong, h.toLong, sr, sg, sb, ws)
         }
       }(Encoders.row(resizeStatsSchema))
-      .orderBy(col("media_id"))
   }
 
   /** E8 synthesis: deterministic RGB images (distinct formulas and
@@ -2056,7 +2039,6 @@ object Multimodal {
           Row(id, w.toLong, h.toLong, w.toLong * h, sr, sg, sb, maxL)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("media_id"))
   }
 
   def synthesizePng(s: SparkSession, dir: String): DataFrame = {

@@ -28,9 +28,7 @@ object Relational {
         dec2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("sum_disc_price"),
         dec4(avg(col("l_quantity"))).as("avg_qty"),
         dec4(avg(col("l_discount"))).as("avg_disc"),
-        count(lit(1)).as("count_order")
-      )
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
+        count(lit(1)).as("count_order"))
   }
 
   /** B2: shipping priority — selective join chain + agg + deterministic top-N. */
@@ -62,7 +60,6 @@ object Relational {
             col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name"))
       .agg(dec2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue"))
-      .orderBy(col("n_name"))
   }
 
   /** B4: running total per customer — single shuffle on the window key. */
@@ -74,7 +71,6 @@ object Relational {
       .select(
         col("o_custkey"), col("o_orderkey"),
         dec2(sum(col("o_totalprice")).over(w)).as("running_total"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** B5: top-3 orders per customer by price (Windowed.topNPerKey). */
@@ -83,7 +79,6 @@ object Relational {
         order = col("o_totalprice"), tieBreak = col("o_orderkey"), n = 3)
       .select(col("o_custkey"), col("o_orderkey"),
               dec2(col("o_totalprice")).as("totalprice"), col("rn"))
-      .orderBy(col("o_custkey"), col("rn"))
 
   /** B6: rollup aggregation over returnflag × linestatus. */
   def qRollup(s: SparkSession, dir: String): DataFrame = {
@@ -94,7 +89,6 @@ object Relational {
         coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
         coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
         col("n"), col("sum_qty"))
-      .orderBy(col("returnflag"), col("linestatus"))
   }
 
   /** B7: distinct counting per group. */
@@ -104,7 +98,6 @@ object Relational {
       .agg(countDistinct(col("c_nationkey")).as("n_nations"),
            count(lit(1)).as("n_customers"),
            dec2(sum(col("c_acctbal"))).as("sum_acctbal"))
-      .orderBy(col("c_mktsegment"))
   }
 
   /** The generator's closed event-type vocabulary — shared by B8 pivot
@@ -123,7 +116,6 @@ object Relational {
     events(s, dir)
       .groupBy(col("user_id"))
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col("user_id"))
   }
 
   /** B9: as-of join — latest order per user at event time.
@@ -150,7 +142,6 @@ object Relational {
         payload = Seq("o_orderkey", "o_totalprice"))
       .select(col("event_id"), col("user_id"),
               col("o_orderkey"), dec2(col("o_totalprice")).as("o_totalprice"))
-      .orderBy(col("event_id"))
   }
 
   /** B9b: the same as-of join through the CUSTOM PHYSICAL OPERATOR
@@ -172,7 +163,6 @@ object Relational {
         payload = Seq("o_orderkey", "o_totalprice"))
       .select(col("event_id"), col("user_id"),
               col("o_orderkey"), dec2(col("o_totalprice")).as("o_totalprice"))
-      .orderBy(col("event_id"))
   }
 
   /** B9c: the G16/G17 optimizer rules driven through the DRIVER gate —
@@ -200,7 +190,6 @@ object Relational {
         payload = Seq("o_orderkey", "o_totalprice"))
       .filter(col("user_id") % 10 === 3)
       .select(col("event_id"), col("user_id"), col("o_orderkey"))
-      .orderBy(col("event_id"))
   }
 
   /** Shared B9c/G16/G17 as-of frame: the custom-exec as-of join with
@@ -320,7 +309,6 @@ object Relational {
            min(col("ts")).as("session_start"),
            (max(unix_micros(col("ts"))) - min(unix_micros(col("ts")))).as("duration_us"),
            dec2(sum(col("value"))).as("sum_value"))
-      .orderBy(col("user_id"), col("session_seq"))
   }
 
   /** B12: range join — every error event opens a 1-hour incident window
@@ -342,7 +330,6 @@ object Relational {
         bucketUs = hourUs)
       .groupBy(col("incident_id"))
       .agg(count(lit(1)).as("n_events"), dec2(sum(col("value"))).as("sum_value"))
-      .orderBy(col("incident_id"))
   }
 
   /** B13: semi/anti join — customers who ever ordered (EXISTS) but not
@@ -361,7 +348,6 @@ object Relational {
       .join(broadcast(recent), col("c_custkey") === recent("o_custkey"), "left_anti")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_lapsed"), dec2(sum(col("c_acctbal"))).as("sum_acctbal"))
-      .orderBy(col("c_mktsegment"))
   }
 
   /** B14: set operations — customer cohorts by year compared with
@@ -381,7 +367,6 @@ object Relational {
     counted("acquired", c98.except(c97))
       .unionAll(counted("churned", c97.except(c98)))
       .unionAll(counted("retained", c97.intersect(c98)))
-      .orderBy(col("cohort"))
   }
 
   /** B15: CUBE aggregation — all grouping-set combinations of
@@ -395,7 +380,6 @@ object Relational {
         coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
         coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
         col("n"), col("sum_price"))
-      .orderBy(col("returnflag"), col("linestatus"))
   }
 
   /** B16: exact percentiles per group — `percentile` is Spark's exact
@@ -412,7 +396,6 @@ object Relational {
         dec4(expr("percentile(l_extendedprice, 0.5)")).as("p50_price"),
         dec4(expr("percentile(l_extendedprice, 0.9)")).as("p90_price"),
         dec4(expr("percentile(l_quantity, 0.5)")).as("p50_qty"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B17: correlation / covariance / spread statistics per group —
@@ -426,7 +409,6 @@ object Relational {
         dec4(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qty_price"),
         dec2(covar_samp(col("l_quantity"), col("l_extendedprice"))).as("covar_qty_price"),
         dec4(stddev_samp(col("l_discount"))).as("std_discount"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B18: nation-pair trade volume (TPC-H Q7 shape) — fact table joined
@@ -456,7 +438,6 @@ object Relational {
       .agg((sum(round(col("l_extendedprice") * 100, 0).cast("long") *
                 (lit(100L) - round(col("l_discount") * 100, 0).cast("long")))
               .cast("double") / 10000.0).as("revenue"))
-      .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
 
   /** B19: sequential window functions — per-customer order timeline with
@@ -473,7 +454,6 @@ object Relational {
           .cast("long").as("gap_days"),
         ntile(4).over(Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_totalprice"), col("o_orderkey"))).cast("long").as("spend_quartile"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** B20: as-of join with staleness tolerance — the matched order's
@@ -502,7 +482,6 @@ object Relational {
       .select(col("event_id"), col("user_id"),
               when(fresh, col("o_orderkey")).as("o_orderkey"),
               when(fresh, dec2(col("o_totalprice"))).as("o_totalprice"))
-      .orderBy(col("event_id"))
   }
 
   /** B21: salted aggregation on a skewed key (Skew.saltedSumCount) —
@@ -516,7 +495,6 @@ object Relational {
         events(s, dir).select(col("event_type"), col("value")),
         keys = Seq("event_type"), valueCol = "value")
       .select(col("event_type"), dec2(col("sum_value")).as("sum_value"), col("n"))
-      .orderBy(col("event_type"))
 
   /** B22: ordered string aggregation — the top-5 account balances per
     * market segment as a comma-joined custkey list (LISTAGG/string_agg
@@ -534,7 +512,6 @@ object Relational {
           sort_array(collect_list(struct(col("rn"), col("c_custkey")))),
           x => x.getField("c_custkey").cast("string")),
         ",").as("top5_custkeys"))
-      .orderBy(col("c_mktsegment"))
   }
 
   /** B23: full outer join — per-nation customer vs supplier presence,
@@ -550,7 +527,6 @@ object Relational {
       .select(col("nk").as("nationkey"),
               coalesce(col("n_customers"), lit(0L)).as("n_customers"),
               coalesce(col("n_suppliers"), lit(0L)).as("n_suppliers"))
-      .orderBy(col("nationkey"))
   }
 
   /** B24: unpivot/melt — the per-user event-type counts turned back
@@ -568,7 +544,6 @@ object Relational {
         expr(s"stack(${types.length}, " +
           types.map(t => s"'$t', `$t`").mkString(", ") + ") AS (event_type, n)"))
       .filter(col("n") > 0)
-      .orderBy(col("user_id"), col("event_type"))
   }
 
   /** B25: deterministic sampling — an md5-keyed 5% sample (the
@@ -582,7 +557,6 @@ object Relational {
           col("l_suppkey"))) % 100 < 5)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), dec2(sum(col("l_extendedprice"))).as("sum_price"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B26: histogram — fixed-width binning of order totals (width 50k),
@@ -593,7 +567,6 @@ object Relational {
       .groupBy(floor(col("o_totalprice") / 50000.0).cast("long").as("bin"))
       .agg(count(lit(1)).as("n"), dec2(min(col("o_totalprice"))).as("lo"),
            dec2(max(col("o_totalprice"))).as("hi"))
-      .orderBy(col("bin"))
   }
 
   /** B27: customer order-count distribution (TPC-H Q13 shape) — LEFT
@@ -608,7 +581,6 @@ object Relational {
       .agg(count(col("o_orderkey")).as("c_count"))
     perCust.groupBy(col("c_count"))
       .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
   }
 
   /** B28: large-volume orders (TPC-H Q18 shape) — a HAVING aggregate
@@ -627,7 +599,6 @@ object Relational {
       .select(col("o_orderkey"), col("o_custkey"),
               dec2(col("o_totalprice")).as("o_totalprice"),
               dec2(col("sum_qty")).as("sum_qty"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** B29: exact distinct users per event type through the SALTED dedup
@@ -640,7 +611,6 @@ object Relational {
         events(s, dir).select(col("event_type"), col("user_id")),
         keys = Seq("event_type"), valueCol = "user_id")
       .select(col("event_type"), col("n_distinct_user_id"))
-      .orderBy(col("event_type"))
 
   /** Row count for the B57/B58 Zipf fixture — bounded by the DuckDB
     * oracle's md5 replay cost at the gate, not by Spark.
@@ -663,7 +633,6 @@ object Relational {
         graft.sources.Synthetic.zipfEventsPinned(s, zipfRows),
         keys = Seq("user_id"), valueCol = "v")
       .select(col("user_id"), col("n_distinct_v"))
-      .orderBy(col("user_id"))
 
   /** B58: the direct COUNT(DISTINCT) twin of [[qZipfDistinct]] on the
     * same Zipf fixture — Catalyst's planAggregateWithOneDistinct keys
@@ -674,7 +643,6 @@ object Relational {
     graft.sources.Synthetic.zipfEventsPinned(s, zipfRows)
       .groupBy(col("user_id"))
       .agg(countDistinct(col("v")).as("n_distinct_v"))
-      .orderBy(col("user_id"))
 
   /** Per-user digest of a running-sum frame that PROVES every
     * intermediate prefix value: `total` = last running (values are
@@ -688,7 +656,6 @@ object Relational {
     df.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), max(col("running")).as("total"),
            sum(col("running")).as("sum_running"))
-      .orderBy(col("user_id"))
 
   /** B59: skew-proof RUNNING aggregate (two-phase distributed scan,
     * Skew.rangePartitionedRunningSum) on the Zipf fixture — the plan
@@ -788,7 +755,6 @@ object Relational {
       .withColumn("n", sum(col("cnt")).over(whole))
       .filter(col("cum") >= rank && col("cum") - col("cnt") < rank)
       .select(col("user_id"), col("v").as("median_v"), col("n"))
-      .orderBy(col("user_id"))
   }
 
   /** B62: heavy-hitters CONTRACT on the Zipf fixture — the B51/B56
@@ -815,7 +781,6 @@ object Relational {
         map_contains_key(col("mg"), col("user_id")).cast("int").as("found"),
         (est <= col("true_cnt") && est >= col("true_cnt") - lit(bound))
           .cast("int").as("bounds_ok"))
-      .orderBy(col("user_id"))
   }
 
   /** B71: Count-Min frequency estimates under the B51/B62
@@ -846,7 +811,6 @@ object Relational {
       .select(col("user_id"), col("true_cnt"),
         (est >= col("true_cnt")).cast("int").as("over_ok"),
         (est <= col("true_cnt") + lit(slack)).cast("int").as("bound_ok"))
-      .orderBy(col("user_id"))
   }
 
   /** B63: the ranking-function window family — percent_rank,
@@ -870,7 +834,6 @@ object Relational {
         dec6(percent_rank().over(w)).as("pct_rank"),
         dec6(cume_dist().over(w)).as("cume"),
         dec2(nth_value(col("value"), 3).over(w)).as("third_low"))
-      .orderBy(col("event_type"), col("event_id"))
   }
 
   /** B30: RANGE-frame window — each order's trailing 30-day same-
@@ -887,7 +850,6 @@ object Relational {
               count(lit(1)).over(w).as("n_30d"),
               dec2(sum(col("o_totalprice")).over(w)).as("spend_30d"))
       .select(col("o_custkey"), col("o_orderkey"), col("n_30d"), col("spend_30d"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** B31: time-series resample — 15-minute OHLC bars per event type
@@ -914,7 +876,6 @@ object Relational {
         dec2(min(col("value"))).as("low"),
         dec2(max(when(col("rnd") === 1, col("value")))).as("close"),
         count(lit(1)).as("n"))
-      .orderBy(col("bucket"), col("event_type"))
   }
 
   /** B11: tumbling 1-hour window aggregate over the event stream (batch twin of F1). */
@@ -922,7 +883,6 @@ object Relational {
     events(s, dir)
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), dec2(sum(col("value"))).as("sum_value"))
-      .orderBy(col("hour"), col("event_type"))
   }
 
   /** B32: revenue-change forecast (TPC-H Q6 shape) — THE pushdown
@@ -992,7 +952,6 @@ object Relational {
       .join(parts, col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_type"), col("p_size"))
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
   }
 
   /** B35: disjunctive predicate join (TPC-H Q19 shape) — three OR'd
@@ -1057,7 +1016,6 @@ object Relational {
       quartile.cast("long").as("quartile"),
       dec4(r0.cast("double") / lit((n - 1).toDouble)).as("pct_rank"),
       dec4(r1.cast("double") / lit(n.toDouble)).as("cume"))
-      .orderBy(col("o_custkey"))
   }
 
   /** B38: explicit GROUPING SETS — the arbitrary-combination form that
@@ -1074,8 +1032,7 @@ object Relational {
         |  CAST(ROUND(SUM(l_quantity), 2) AS DECIMAL(18,2)) AS sum_qty,
         |  COUNT(*) AS n
         |FROM graft_li_gs
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin)
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin)
       .selectExpr("l_returnflag", "l_linestatus", "gid",
         "CAST(sum_qty AS DOUBLE) AS sum_qty", "n")
   }
@@ -1102,7 +1059,6 @@ object Relational {
         col("user_id"), col("day"),
         last(col("day_sum"), ignoreNulls = true).over(w).as("filled_sum"),
         col("day_sum").isNull.cast("int").as("is_gap"))
-      .orderBy(col("user_id"), col("day"))
   }
 
   /** B40: rows-frame moving average — 3-order trailing mean per
@@ -1127,7 +1083,6 @@ object Relational {
       .select(
         col("o_custkey"), col("o_orderkey"),
         dec2(meanCents / lit(100.0)).as("ma3"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** Exact per-line revenue in 10^-4-dollar units: money columns carry
@@ -1155,7 +1110,6 @@ object Relational {
              "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("order_count"))
-      .orderBy(col("o_orderpriority"))
   }
 
   /** B42: priority line counts (TPC-H Q12 shape, adapted: no shipmode
@@ -1173,7 +1127,6 @@ object Relational {
       .groupBy(col("l_returnflag"))
       .agg(sum(when(hi, 1L).otherwise(0L)).as("high_line_count"),
            sum(when(hi, 0L).otherwise(1L)).as("low_line_count"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B43: small-quantity revenue (TPC-H Q17 shape). The correlated
@@ -1221,7 +1174,6 @@ object Relational {
             col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("numcust"), dec2(sum(col("c_acctbal"))).as("totacctbal"))
-      .orderBy(col("c_nationkey"))
   }
 
   /** B45: top supplier by quarterly revenue (TPC-H Q15 shape). Revenue
@@ -1242,7 +1194,6 @@ object Relational {
             col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
               dec2(round(col("rev_e4").cast("double") / 100.0, 0) / 100.0).as("total_revenue"))
-      .orderBy(col("s_suppkey"))
   }
 
   /** B46: national market share (TPC-H Q8 shape): NATION_3's share of
@@ -1275,7 +1226,6 @@ object Relational {
            sum(revE4).as("total_e4"))
       .select(col("o_year"),
               dec4(col("nation_e4").cast("double") / col("total_e4")).as("mkt_share"))
-      .orderBy(col("o_year"))
   }
 
   /** B47: suppliers who kept orders waiting (TPC-H Q21 shape, adapted
@@ -1329,7 +1279,6 @@ object Relational {
       .select(col("o_orderpriority"),
               dec2(col("cents").cast("double") / 100.0).as("revenue"),
               dec4(col("cents").cast("double") / col("total")).as("share"))
-      .orderBy(col("o_orderpriority"))
   }
 
   /** B49: cohort retention matrix — users bucketed by first-active
@@ -1347,7 +1296,6 @@ object Relational {
     m.join(c, "user_id")
       .groupBy(col("cohort"), col("m").as("active_day"))
       .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("cohort"), col("active_day"))
   }
 
   /** B50: conversion funnel (view → click → purchase, order enforced by
@@ -1415,7 +1363,6 @@ object Relational {
     lastAgg.unionByName(firstAgg)
       .select(col("model"), col("touch_type"), col("n_purchases"),
               col("sum_gap_us"))
-      .orderBy(col("model"), col("touch_type"))
   }
 
   /** B107: TIME-CONSTRAINED funnel (the deadline form of B50 —
@@ -1498,7 +1445,6 @@ object Relational {
         close()
         out.iterator
       }(org.apache.spark.sql.Encoders.row(outSchema))
-      .orderBy(col("partkey"))
   }
 
   /** B105: first-order Markov transition matrix over the event stream
@@ -1526,7 +1472,6 @@ object Relational {
     pairs.join(broadcast(fromTot), "from_type")
       .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
         expr("CAST((n * 1000000) div n_from AS BIGINT)").as("p_ppm"))
-      .orderBy(col("from_type"), col("to_type"))
   }
 
   /** B156: Markov REMOVAL-EFFECT attribution (Anderl et al. 2016 —
@@ -1616,7 +1561,6 @@ object Relational {
       StructField("removal_e6", LongType, nullable = false),
       StructField("share_permille", LongType, nullable = true)))
     s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
-      .orderBy(col("channel"))
   }
 
   /** B106: Kaplan–Meier survival estimate of time-to-purchase after
@@ -1675,7 +1619,6 @@ object Relational {
           Row(t, d, n, sE6)
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
-      .orderBy(col("dur_days"))
   }
 
   /** B51: sketch-vs-exact quantile contract — the scale path for
@@ -1717,7 +1660,6 @@ object Relational {
         (col("lt95") * acc <= col("n") * (acc * 95 / 100) + col("n") * 2 &&
          col("le95") * acc >= col("n") * (acc * 95 / 100) - col("n") * 2)
           .cast("int").as("p95_in_bounds"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B56: sketch-vs-exact DISTINCT contract (the B51 idiom for
@@ -1745,7 +1687,6 @@ object Relational {
         (abs(col("n_approx") - col("n_exact")).cast("double") <=
           lit(5 * rsd) * col("n_exact").cast("double"))
           .cast("int").as("distinct_in_bounds"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B52: truncated exponential moving average (half-life weights
@@ -1770,7 +1711,6 @@ object Relational {
     orders(s, dir)
       .select(col("o_custkey"), col("o_orderkey"),
               dec2(num / den / 100.0).as("ewma"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** B53: table profiling — the data-quality audit primitive every
@@ -1831,7 +1771,6 @@ object Relational {
       .select(col("column_name"), col("n_rows"), col("n_null"),
               coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
               col("min_str"), col("max_str"))
-      .orderBy(col("column_name"))
   }
 
   /** B54: Z-order (Morton) clustering key — the write-layout primitive
@@ -1851,7 +1790,6 @@ object Relational {
     }
     orders(s, dir)
       .select(col("o_orderkey"), b1.as("price_bin"), b2.as("cust_bin"), z.as("zkey"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** B55: table-version diff (data reconciliation): two deterministic
@@ -1880,7 +1818,6 @@ object Relational {
           .otherwise("same").as("status"))
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("status"))
   }
 
   /** B64: gaps-and-islands — per user, maximal runs of CONSECUTIVE
@@ -1905,7 +1842,6 @@ object Relational {
            count(lit(1)).as("n_days"))
       .select(col("user_id"), col("island_start"), col("island_end"),
         col("n_days"))
-      .orderBy(col("user_id"), col("island_start"))
   }
 
   /** B65: peak concurrency via the sweep line — "how many sessions are
@@ -2023,7 +1959,6 @@ object Relational {
            sum(col("cnt")).as("n_rows"))
       .select(col("o_orderstatus"), col("m.o_orderpriority").as("mode_priority"),
               col("m.cnt").as("mode_count"), col("n_rows"))
-      .orderBy(col("o_orderstatus"))
   }
 
   /** B74: Gini impurity of the order-status mix per priority class —
@@ -2046,7 +1981,6 @@ object Relational {
       .select(col("o_orderpriority"), col("n").cast("long").as("n_rows"),
               col("n_classes"),
               expr("CAST(((n*n - ss) * 1000000) div (n*n) AS BIGINT)").as("gini_ppm"))
-      .orderBy(col("o_orderpriority"))
   }
 
   /** B75: exact ROC AUC via the Mann–Whitney U statistic — the
@@ -2119,7 +2053,6 @@ object Relational {
     val wBest = Window.orderBy(col("f1_ppm").desc, col("threshold"))
     curve.withColumn("is_best",
         (row_number().over(wBest) === 1).cast("int"))
-      .orderBy(col("threshold"))
   }
 
   /** A53: decile lift & cumulative-gains chart for the B75 score —
@@ -2162,7 +2095,6 @@ object Relational {
         expr("CAST((posd * n * 1000000) div (rows * np) AS BIGINT)")
           .as("lift_ppm"),
         expr("CAST((cum_pos * 1000000) div np AS BIGINT)").as("cum_gain_ppm"))
-      .orderBy(col("decile"))
   }
 
   /** B67: min-cost supplier per part (TPC-H Q2 shape, adapted: no
@@ -2229,7 +2161,6 @@ object Relational {
                col("l_quantity").cast("long")).as("profit_e4"))
       .select(col("n_name"), col("o_year"),
               dec2(round(col("profit_e4").cast("double") / 100.0, 0) / 100.0).as("profit"))
-      .orderBy(col("n_name"), col("o_year"))
   }
 
   /** B69: important stock value (TPC-H Q11 shape, adapted: a part's
@@ -2256,7 +2187,6 @@ object Relational {
       .filter(col("value_e4") * col("nparts") > col("total_e4") * 2)
       .select(col("l_partkey"),
               dec2(round(col("value_e4").cast("double") / 100.0, 0) / 100.0).as("part_value"))
-      .orderBy(col("value_e4").desc, col("l_partkey"))
   }
 
   /** B70: dominant suppliers (TPC-H Q20 shape, adapted: "excess
@@ -2283,7 +2213,6 @@ object Relational {
             col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_suppkey"), col("s_name"))
       .agg(count(lit(1)).as("n_dominated"))
-      .orderBy(col("s_suppkey"))
   }
 
   /** B72: Bloom-pre-filtered fact join — the runtime-filter technique
@@ -2327,7 +2256,6 @@ object Relational {
       .agg(count(lit(1)).as("n_lines"), sum(revE4).as("rev_e4"))
       .select(col("month"), col("n_lines"),
               dec2(round(col("rev_e4").cast("double") / 100.0, 0) / 100.0).as("revenue"))
-      .orderBy(col("month"))
   }
 
   /** B77: KMV (bottom-k minimum values) distinct-count sketch — the
@@ -2364,7 +2292,6 @@ object Relational {
           .otherwise(expr(s"${(k - 1).toLong * (1L << 52)} div kth")))
       .withColumn("err_bp", expr("abs(kmv_est - n_exact) * 10000 div n_exact"))
       .select(col("l_returnflag"), col("n_exact"), col("kmv_est"), col("err_bp"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** B78: one-way ANOVA F statistic, exact to the last integer — the
@@ -2472,7 +2399,6 @@ object Relational {
            max_by(col("event_type"), ver).as("last_type"),
            dec2(max_by(col("value"), ver)).as("last_value"),
            count(lit(1)).as("n_versions"))
-      .orderBy(col("user_id"))
   }
 
   /** B84 shared formula text (the A32/A33 rule): every float step of the
@@ -2857,7 +2783,6 @@ object Relational {
       .select(col("digit"), col("n_d"),
         expr("(n_d * 1000000) div n").as("p_obs_ppm"),
         col("p_ben_e6"))
-      .orderBy(col("digit"))
   }
 
   /** B138: order↔lineitem financial reconciliation — the books-audit
@@ -2906,8 +2831,7 @@ object Relational {
       clsP.crossJoin(tot)
         .select(col("bucket"), col("n_orders"),
           expr("CAST((n_orders * 1000000) div n_total AS BIGINT)")
-            .as("share_ppm"))
-        .orderBy(col("bucket")))
+            .as("share_ppm")))
     graft.core.Materialize.release(clsP)
     out
   }
@@ -2946,7 +2870,6 @@ object Relational {
         col("age_months"), col("n_customers"), col("n_orders"),
         col("rev_cents"), col("cum_rev_cents"),
         expr("cum_rev_cents div n_customers").as("ltv_per_cust_cents"))
-      .orderBy(col("cohort_ym"), col("age_months"))
   }
 
   /** B137: directed association rules over order baskets — the
@@ -3027,7 +2950,6 @@ object Relational {
     h.crossJoin(t)
       .select(col("dow"), col("hour"), col("n"),
         expr("CAST((n * 1000000) div tot AS BIGINT)").as("share_ppm"))
-      .orderBy(col("dow"), col("hour"))
   }
 
   /** B135: inter-arrival burstiness (CV²) per event type — the
@@ -3066,7 +2988,6 @@ object Relational {
         expr("CAST(CASE WHEN sg = 0 THEN NULL " +
           "ELSE ((n * qg - sg * sg) * 1000000) div (sg * sg) END AS BIGINT)")
           .as("cv2_e6"))
-      .orderBy(col("event_type"))
   }
 
   /** B134: error-burst detection per day — the SRE incident screen
@@ -3099,7 +3020,6 @@ object Relational {
            countDistinct(col("user_id")).as("n_users"),
            sum(col("n")).as("n_errors_in_bursts"),
            max(col("n")).as("worst_burst"))
-      .orderBy(col("day_idx"))
   }
 
   /** B133: round-number bias audit — the forensic companion to the
@@ -3156,7 +3076,6 @@ object Relational {
              "((cents - py_cents) * 1000000) div py_cents " +
              "ELSE -(((py_cents - cents) * 1000000) div py_cents) " +
              "END AS BIGINT)").as("yoy_ppm"))
-      .orderBy(col("y"), col("m"))
   }
 
   /** B131 expectation table: second-digit Benford probabilities
@@ -3206,7 +3125,6 @@ object Relational {
       .select(col("digit"), col("n_d"),
         expr("(n_d * 1000000) div n").as("p_obs_ppm"),
         col("p_ben_e6"))
-      .orderBy(col("digit"))
   }
 
   /** B90: day-of-week seasonality index of order revenue — the
@@ -3229,7 +3147,6 @@ object Relational {
       .select(col("dow"), col("n_d"),
         expr("(CAST(s_d AS DECIMAL(38,0)) * n * 1000000) div " +
              "(CAST(n_d AS DECIMAL(38,0)) * st)").as("index_ppm"))
-      .orderBy(col("dow"))
   }
 
   /** B85 helper: signed integral-division PPM ratio. Spark `div`
@@ -3427,7 +3344,6 @@ object Relational {
               col("s4"), dec6(col("skew")).as("skew"),
               dec6(col("kurt")).as("kurt"),
               dec4(expr(jbStatSql)).as("jb_stat"))
-      .orderBy(col("flag"))
   }
 
   /** B143 shared formula: McNemar χ² with Edwards' continuity
@@ -3974,7 +3890,6 @@ object Relational {
       .select(row_number().over(
           Window.orderBy(col("h"), col("o_orderkey"))).cast("long").as("rank"),
         col("o_orderkey"), col("cents"))
-      .orderBy(col("rank"))
   }
 
   /** B141: exact median absolute deviation (MAD) + robust-outlier
@@ -4179,7 +4094,6 @@ object Relational {
   def qSprt(s: SparkSession, dir: String): DataFrame =
     sprtArm(s, dir, "purchase_uplift", "purchase", sprtC1, sprtC0)
       .union(sprtArm(s, dir, "error_drift", "error", sprtC1e, sprtC0e))
-      .orderBy(col("metric"))
 
   /** A49 thresholds: the Poisson(1) CDF at k = 0..6, scaled to the
     * 52-bit md5 domain and generated ONCE here — embedded as literals
@@ -4385,7 +4299,6 @@ object Relational {
       .select(col("dow"), col("n_days").cast("long").as("n_days"),
         col("s6").cast("long").as("seasonal_e6"),
         expr("sar div n_days").cast("long").as("mean_abs_resid_e6"))
-      .orderBy(col("dow"))
   }
 
   /** B99 per-row correlation — shared float text over the exact
@@ -4426,7 +4339,6 @@ object Relational {
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("wn").cast("long").as("n_win"),
         dec6(expr(rollCorrSql)).as("roll_corr"))
-      .orderBy(col("day"))
   }
 
   /** B98: market-basket association mining — brand-pair LIFT over
@@ -4859,7 +4771,6 @@ object Relational {
         close()
         out.iterator
       }(org.apache.spark.sql.Encoders.row(outSchema))
-      .orderBy(col("partkey"))
   }
 
   /** B130: order/line status reconciliation — the referential
@@ -4896,7 +4807,6 @@ object Relational {
     cells.crossJoin(broadcast(tot))
       .select(col("cls"), col("n_orders"),
         expr("CAST((n_orders * 1000000) div n AS BIGINT)").as("share_ppm"))
-      .orderBy(col("cls"))
   }
 
   /** B129: semi-structured property extraction — the JSON side-channel
@@ -4925,7 +4835,6 @@ object Relational {
            min(col("k")).as("min_k"),
            max(col("k")).as("max_k"),
            countDistinct(col("k")).as("n_distinct_k"))
-      .orderBy(col("event_type"))
   }
 
   /** B128: seasonally-normalized peak days — "which days were big
@@ -4980,7 +4889,6 @@ object Relational {
              "WHEN cents >= prev THEN ((cents - prev) * 1000000) div prev " +
              "ELSE -(((prev - cents) * 1000000) div prev) END AS BIGINT)")
           .as("growth_ppm"))
-      .orderBy(col("week"))
   }
 
   /** B126: weekly engagement — DAU/WAU stickiness per epoch week (the
@@ -5010,7 +4918,6 @@ object Relational {
       .select(col("week"), col("n_days"), col("sum_dau"), col("wau"),
         expr("CAST((sum_dau * 1000000) div (n_days * wau) AS BIGINT)")
           .as("stickiness_ppm"))
-      .orderBy(col("week"))
   }
 
   /** B125: same-day repeat-order audit — the double-submission /
@@ -5074,7 +4981,6 @@ object Relational {
     ext.join(med, "priority").join(p90, "priority")
       .select(col("priority"), col("n_lines"), col("median_lag_days"),
         col("p90_lag_days"), col("max_lag_days"))
-      .orderBy(col("priority"))
   }
 
   /** B123: robust anomaly days by median/MAD fences — the outlier
@@ -5153,7 +5059,6 @@ object Relational {
         col("price_eff").cast("long").as("price_eff_cents"),
         (col("r1") - col("r0") - col("price_eff")).cast("long")
           .as("volume_eff_cents"))
-      .orderBy(col("brand"))
   }
 
   /** B121: open-order aging buckets per priority — the operations
@@ -5193,7 +5098,6 @@ object Relational {
         col("value").cast("long").as("value_cents"),
         expr("CAST((value * 1000000) div prio_total AS BIGINT)")
           .as("share_ppm"))
-      .orderBy(col("priority"), col("bucket"))
   }
 
   /** B120: churn-risk detection per nation — the dormancy screen of
@@ -5243,7 +5147,6 @@ object Relational {
       .select(col("nation"), col("n_customers"), col("n_at_risk"),
         expr("CAST((n_at_risk * 1000000) div n_customers AS BIGINT)")
           .as("risk_ppm"))
-      .orderBy(col("nation"))
   }
 
   /** B119: Herfindahl–Hirschman market-concentration index per region
@@ -5279,7 +5182,6 @@ object Relational {
            sum(col("share_ppm") * col("share_ppm")).as("sq"))
       .select(col("region"), col("n_suppliers"), col("revenue_cents"),
         expr("CAST(sq div 100000000 AS BIGINT)").as("hhi_x1e4"))
-      .orderBy(col("region"))
   }
 
   /** B118: RFM customer segmentation — THE classic marketing
@@ -5312,7 +5214,6 @@ object Relational {
       .groupBy(col("r_q"), col("f_q"), col("m_q"))
       .agg(count(lit(1)).as("n_customers"),
            sum(col("cents")).cast("long").as("revenue_cents"))
-      .orderBy(col("r_q"), col("f_q"), col("m_q"))
   }
 
   /** B116: ABC (Pareto) classification of parts by revenue — the
@@ -5349,7 +5250,6 @@ object Relational {
       .select(col("cls"), col("n_parts"),
         col("revd").cast("long").as("revenue_cents"),
         expr("CAST((revd * 1000000) div totd AS BIGINT)").as("share_ppm"))
-      .orderBy(col("cls"))
   }
 
   /** B115: session entry/exit/bounce analysis — the product-analytics
@@ -5384,7 +5284,6 @@ object Relational {
         col("n_bounces"),
         expr("CAST((n_bounces * 1000000) div n_entry AS BIGINT)")
           .as("bounce_ppm_of_entry"))
-      .orderBy(col("entry_type"), col("exit_type"))
   }
 
   /** B113 statistic — ONE shared float text over the exact integer

@@ -185,7 +185,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("vec_id"), col("rank").cast("long").as("rank"),
               dec4(col("sim")).as("sim"))
-      .orderBy(col("q_id"), col("rank"))
   }
 
   /** D1: brute-force cosine top-k of every corpus vector against each
@@ -310,7 +309,6 @@ object Similarity {
         col("sim"),
         when(col("u_v").isNull, 0L).otherwise(1L).as("in_unfiltered"),
         col("n_label"))
-      .orderBy(col("q_id"), col("rank"))
   }
 
   /** D13: the ANN recall CONTRACT (B51's sketch-vs-exact idiom for
@@ -499,45 +497,6 @@ object Similarity {
       .limit(20)
   }
 
-  /** The D1 exact-top-k kernel generalized to a DIMENSION PREFIX:
-    * cosine over the first `dims` components only (query and corpus
-    * norms both recomputed over the prefix). dims = 64 is exactly
-    * [[qCosineTopK]]'s computation. */
-  private def exactTopKPrefix(s: SparkSession, dir: String, dims: Int,
-                              k: Int): DataFrame = {
-    val e = emb(s, dir)
-    val st = collectQueries(e)
-    val bc = s.sparkContext.broadcast(st)
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val q = bc.value
-        val nq = q.qids.length
-        val qn = q.qv.map { a =>
-          var s2 = 0.0; var i = 0
-          while (i < dims) { s2 += a(i) * a(i); i += 1 }
-          math.sqrt(s2)
-        }
-        val heaps = new TopKHeaps(nq, k)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          var n2 = 0.0; var i = 0
-          while (i < dims) { n2 += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(n2)
-          var qi = 0
-          while (qi < nq) {
-            val qv = q.qv(qi)
-            var d = 0.0; var j = 0
-            while (j < dims) { d += qv(j) * v(j); j += 1 }
-            heaps.insert(qi, d / (qn(qi) * nrm), vid)
-            qi += 1
-          }
-        }
-        heaps.emit(q.qids)
-      }(Encoders.row(localTopKSchema))
-    globalTopK(locals, k)
-  }
-
   /** D22: matryoshka dimension-truncation evaluation (Kusupati
     * NeurIPS'22 — the "how few leading dimensions can we keep"
     * question behind every modern embedding-cost tradeoff): exact
@@ -628,7 +587,7 @@ object Similarity {
         .select(lit(d.toLong).as("dims"), col("hits"), col("n_exact"),
                 expr("CAST((hits * 1000000) div n_exact AS BIGINT)")
                   .as("recall_ppm"))
-    }.reduce(_ unionAll _).orderBy(col("dims"))
+    }.reduce(_ unionAll _)
     val pinned = graft.core.Materialize.pin(out)
     graft.core.Materialize.release(topk)
     pinned
@@ -688,8 +647,7 @@ object Similarity {
       picks.toDF("vec_id", "pick_round", "md_e6_at_pick")
         .crossJoin(broadcast(radius))
         .select(col("vec_id"), col("pick_round").cast("long").as("pick_round"),
-                col("md_e6_at_pick"), col("radius_e6"))
-        .orderBy(col("pick_round")))
+                col("md_e6_at_pick"), col("radius_e6")))
     graft.core.Materialize.release(md)
     graft.core.Materialize.release(e)
     out
@@ -739,8 +697,7 @@ object Similarity {
     val out = graft.core.Materialize.pin(
       after.join(broadcast(before), Seq("vec_id"), "left_outer")
         .select(col("vec_id"), col("rank_after"), col("rank_before"),
-                col("sim").as("sim_after"))
-        .orderBy(col("rank_after")))
+                col("sim").as("sim_after")))
     graft.core.Materialize.release(before)
     graft.core.Materialize.release(e)
     out
@@ -796,7 +753,6 @@ object Similarity {
       .agg(dec4(max(col("sim"))).as("max_eval_sim"))
       .select(col("vec_id"), col("max_eval_sim"),
         (col("max_eval_sim") >= 0.4).cast("int").as("contaminated"))
-      .orderBy(col("vec_id"))
   }
 
   /** D2: exact embedding near-dup PAIRS (cosine ≥ τ) over the
@@ -857,7 +813,6 @@ object Similarity {
       .toDF("a_id", "b_id", "sim")
     pairs
       .select(col("a_id"), col("b_id"), dec4(col("sim")).as("cosine"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** D12: k-nearest-neighbor GRAPH (top-3 cosine neighbors per vector)
@@ -877,7 +832,6 @@ object Similarity {
     knnGraphTopK(s, dir, 3)
       .select(col("vec_id"), col("rank"), col("nb_id"),
               dec4(col("simd")).as("sim"))
-      .orderBy(col("vec_id"), col("rank"))
 
   /** Shared D12 kernel: the exact top-k cosine graph as
     * (vec_id, rank, nb_id, simd-double) — D12 formats it, D33 mutual-NN
@@ -962,7 +916,6 @@ object Similarity {
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), col("rank_ab"), col("rank_ba"),
               dec4(col("simd")).as("sim"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** D4: nearest-centroid classification — per-label mean vectors via a
@@ -989,7 +942,6 @@ object Similarity {
       col("vec_id") +: (0 until dim).map(i => element_at(col("v"), i + 1).as(s"f$i")): _*)
     model.predict(FeatureFrame(input, Seq("vec_id"), (0 until dim).map(i => s"f$i")))
       .select(col("vec_id"), col("prediction").cast("int").as("prediction"))
-      .orderBy(col("vec_id"))
   }
 
   /** D3: random-hyperplane LSH-bucketed approximate nearest neighbors —
@@ -1069,6 +1021,7 @@ object Similarity {
         val cnt = new Array[Long](nc)
         val sums = Array.fill(nc)(new Array[Double](nDims))
         it.foreach { row =>
+          require(!row.isNullAt(0), "non-null embeddings.v violated in k-means assignment")
           val v = row.getSeq[Double](0).toArray
           var best = 0; var bestD = Double.PositiveInfinity
           var ci = 0
@@ -1123,7 +1076,6 @@ object Similarity {
       .select(col("cluster"), col("n"),
         dec4(col("s0") / col("n")).as("c0"),
         dec4(col("s1") / col("n")).as("c1"))
-      .orderBy(col("cluster"))
   }
 
   /** D6: IVF-style partitioned ANN — the production path when the
@@ -1465,7 +1417,7 @@ object Similarity {
         def offer(i: Int, arm: Int, sim: Double, nb: Long): Unit = {
           val sims = hSim(i); val nbs = hNb(i)
           val base = arm * k
-          var c = hCnt(i)(arm)
+          val c = hCnt(i)(arm)
           // find insertion point among the kept (sim DESC, nb ASC) run
           var pos = 0
           while (pos < c && (sims(base + pos) > sim ||
@@ -1559,7 +1511,6 @@ object Similarity {
         col("n_exact").cast("long").as("n_exact"),
         expr("CAST((n_hits * 1000000) div n_exact AS BIGINT)")
           .as("recall_ppm"))
-      .orderBy(col("quantizer"), col("assign_width"))
   }
 
   /** The D35/D36/D37 edge kernel: top-`assignWidth` cell
@@ -1673,7 +1624,7 @@ object Similarity {
     require(nExact > 0 && hits.toDouble / nExact >= recallFloor,
       s"ANN-join recall ${hits.toDouble / nExact} below floor $recallFloor " +
         s"($hits/$nExact exact edges recovered)")
-    flagged.orderBy(col("vec_id"), col("rank"))
+    flagged
   }
 
   def qAnnIvfMulti(s: SparkSession, dir: String): DataFrame = {
@@ -1939,7 +1890,7 @@ object Similarity {
           col("n_exact").cast("long").as("n_exact"),
           expr("CAST((hits * 1000000) div n_exact AS BIGINT)")
             .as("recall_ppm"))
-    }.reduce(_ unionAll _).orderBy(col("n_probe"))
+    }.reduce(_ unionAll _)
     val pinned = graft.core.Materialize.pin(out)
     graft.core.Materialize.release(topk)
     pinned
@@ -2379,6 +2330,7 @@ object Similarity {
     val k = 10
     val e = emb(s, dir)
     val nCand = scaledCand(e, 50)
+    // order kept: mins/maxs are indexed by dimension d
     val stats = e.select(posexplode(col("v")).as(Seq("d", "xv")))
       .groupBy(col("d")).agg(min(col("xv")).as("mn"), max(col("xv")).as("mx"))
       .orderBy(col("d")).collect()
@@ -2453,7 +2405,6 @@ object Similarity {
       .crossJoin(broadcast(tot))
       .select(col("bucket"), col("n_vectors"),
         expr("CAST((n_vectors * 1000000) div n AS BIGINT)").as("share_ppm"))
-      .orderBy(col("bucket"))
   }
 
   /** D28: IVF index-health audit — cell-size imbalance for the D6
@@ -2572,7 +2523,6 @@ object Similarity {
              "ELSE -(abs(sv) div n) END AS BIGINT)").as("mean_e6"),
         col("ss").cast("long").as("energy_e12"),
         expr("CAST((cum * 1000) div tot AS BIGINT)").as("cum_energy_permille"))
-      .orderBy(col("d"))
   }
 
   /** D24 code: the 64-dim sign mask packed into ONE long (bit j set ⟺
@@ -2746,7 +2696,7 @@ object Similarity {
           col("n_exact").cast("long").as("n_exact"),
           expr("CAST((hits * 1000000) div n_exact AS BIGINT)")
             .as("recall_ppm"))
-    }.reduce(_ unionAll _).orderBy(col("n_cand"))
+    }.reduce(_ unionAll _)
     val pinned = graft.core.Materialize.pin(out)
     graft.core.Materialize.release(rerank)
     graft.core.Materialize.release(ranked)
@@ -3268,7 +3218,6 @@ object Similarity {
     }(Encoders.row(outSchema))
       .select(col("q_id"), col("pick"), col("vec_id"),
               dec4(col("score")).as("mmr_score"))
-      .orderBy(col("q_id"), col("pick"))
   }
 
   /** D10: cluster-balanced sampling — the curation counterpart of IVF:
@@ -3298,7 +3247,6 @@ object Similarity {
       .filter(graft.functions.TextFunctions.hexPrefix52(
         concat(lit("cs|"), col("vec_id"))) % col("n_cell") < quota)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
-      .orderBy(col("vec_id"))
   }
 
   /** Cell-count sizing rule for [[semDedup]]: nCells grows linearly
@@ -3406,7 +3354,6 @@ object Similarity {
       }
     dups.toDF("vec_id", "cell", "dup_of", "sim")
       .select(col("vec_id"), col("cell"), col("dup_of"), dec4(col("sim")).as("cosine"))
-      .orderBy(col("vec_id"))
   }
 
   /** The ORACLED query pins nCells = 16 — the value the static DuckDB
@@ -3528,7 +3475,6 @@ object Similarity {
         }
       }
     out.toDF("vec_id", "cell", "n_neighbors", "is_core", "cluster")
-      .orderBy(col("vec_id"))
   }
 
   /** The D9/D23 shared cell-assignment CTE chain (16 "sem|" unit-norm
@@ -3651,7 +3597,6 @@ object Similarity {
       .agg(count(lit(1)).as("n"), sum(col("s_ppm")).as("ppm"))
       .select(col("label"), col("n"),
               dec4(col("ppm").cast("double") / col("n") / lit(1000000.0)).as("mean_sil"))
-      .orderBy(col("label"))
   }
 
   val oracles: Map[String, String] = Map(

@@ -137,7 +137,6 @@ object Spatial {
     points(s, dir).select(col("event_id"))
       .join(nn, col("event_id") === col("id_a"), "left")
       .select(col("event_id"), col("nn_id"), col("nn_d2"))
-      .orderBy(col("event_id"))
   }
 
   val oracles: Map[String, String] = Map(

@@ -91,7 +91,6 @@ object StreamingGates {
       .select(col("user_id"), col("true_cnt"),
         col("found").cast("int").as("found"),
         col("bounds_ok").cast("int").as("bounds_ok"))
-      .orderBy(col("user_id"))
   }
 
   /** F21 (query-backed): STREAMING COUNT-MIN — the B71 grid maintained
@@ -138,7 +137,6 @@ object StreamingGates {
       .select(col("user_id"), col("true_cnt"),
         col("over_ok").cast("int").as("over_ok"),
         col("bound_ok").cast("int").as("bound_ok"))
-      .orderBy(col("user_id"))
   }
 
   /** The fact-fed arrival cap (F24/F46/F47 gates): a COUNT bound (not
@@ -212,7 +210,6 @@ object StreamingGates {
       val est = latest.getOrElse(g, 0L)
       (g, nEx, est, math.abs(est - nEx) * 10000L / nEx)
     }.toDF("l_returnflag", "n_exact", "kmv_est", "err_bp")
-      .orderBy(col("l_returnflag"))
   }
 
   /** F15 (query-backed): STREAMING RUNNING SUMS — the B59/B60 per-key
@@ -240,7 +237,6 @@ object StreamingGates {
     }.toSeq
     finals.sortBy { case (u, _, tot) => (-tot, u) }.take(5)
       .toDF("user_id", "n_events", "total_v")
-      .orderBy(col("user_id"))
   }
 
   /** F47 (query-backed): STREAMING BOTTOM-K UNIFORM SAMPLE — the B147
@@ -271,7 +267,6 @@ object StreamingGates {
     lastWins(rows)(_ => (), _.version).sortBy(_.rank)
       .map(o => (o.rank, o.key, o.cents))
       .toDF("rank", "o_orderkey", "cents")
-      .orderBy(col("rank"))
   }
 
   /** F46 (query-backed): STREAMING POWER-SUM MOMENTS — the B142
@@ -320,7 +315,6 @@ object StreamingGates {
         col("s4"), graft.functions.dec6(col("skew")).as("skew"),
         graft.functions.dec6(col("kurt")).as("kurt"),
         graft.functions.dec4(expr(R.jbStatSql)).as("jb_stat"))
-      .orderBy(col("flag"))
   }
 
   /** F48 (query-backed): STREAMING KMV MERGE — the distributed face of
@@ -389,7 +383,6 @@ object StreamingGates {
         sb.map(_.n_kept.toLong).getOrElse(0L))
     }.toDF("l_returnflag", "n_exact", "kmv_est", "err_bp",
       "n_kept_even", "n_kept_odd")
-      .orderBy(col("l_returnflag"))
   }
 
   /** F43 (query-backed): STREAMING PAGE–HINKLEY drift detection — the
@@ -627,7 +620,6 @@ object StreamingGates {
       .toDF("vec_id", "cell", "dup_of", "sim")
       .select(col("vec_id"), col("cell"), col("dup_of"),
         graft.functions.dec4(col("sim")).as("cosine"))
-      .orderBy(col("vec_id"))
   }
 
   /** F18 (query-backed): STREAMING END-TO-END CURATION — the C31
@@ -660,7 +652,6 @@ object StreamingGates {
         o.split, o.selected))
       .toDF("doc_id", "is_keeper", "keep_quality", "contaminated",
         "split", "selected")
-      .orderBy(col("doc_id"))
   }
 
   /** F22 (query-backed): sessionization via the BUILT-IN
@@ -709,7 +700,6 @@ object StreamingGates {
       .toDF("user_id", "session_start", "session_end", "n_events", "sv")
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), graft.functions.dec2(col("sv")).as("sum_value"))
-      .orderBy(col("user_id"), col("session_start"))
   }
 
   /** F8 arrival shape: the C20 PII-injected document (doc_id, t). */
@@ -742,7 +732,6 @@ object StreamingGates {
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4)))
       .toDF("doc_id", "n_email", "n_phone", "n_ip", "redacted_md5")
-      .orderBy(col("doc_id"))
   }
 
   /** F12 (query-backed): STREAMING GOPHER QUALITY GATE — the C15
@@ -767,7 +756,6 @@ object StreamingGates {
         r.getInt(4), r.getInt(5), r.getInt(6)))
       .toDF("doc_id", "n_words", "f_wordcount", "f_wordlen", "f_alpha",
         "f_stop", "keep")
-      .orderBy(col("doc_id"))
   }
 
   /** F23 (query-backed): STREAMING ZONAL STATISTICS — the raster
@@ -795,7 +783,6 @@ object StreamingGates {
         r.getLong(4), r.getLong(5), r.getDouble(6)))
       .toDF("zone", "n_cells", "n_valid", "vsum", "vmin", "vmax",
         "zonal_mean")
-      .orderBy(col("zone"))
   }
 
   /** F13 (query-backed): STREAMING CHUNKER — the C28 context-window
@@ -820,7 +807,6 @@ object StreamingGates {
       .collect().toSeq
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toDF("doc_id", "chunk_idx", "n_tokens", "chunk_md5")
-      .orderBy(col("doc_id"), col("chunk_idx"))
   }
 
   /** F9 (query-backed): STREAMING VOCABULARY COUNTS — the C23
@@ -919,7 +905,6 @@ object StreamingGates {
           rs.map(_._3).sum)
       }
       .toDF("event_type", "n_events", "n_users", "value_cents")
-      .orderBy(col("event_type"))
   }
 
   /** F4's arrival cap: half of F22's — the stream-stream join's cost is
@@ -964,7 +949,6 @@ object StreamingGates {
       .toDF("incident_id", "n_events", "sv")
       .select(col("incident_id"), col("n_events"),
         graft.functions.dec2(col("sv")).as("sum_value"))
-      .orderBy(col("incident_id"))
   }
 
   /** F5 (query-backed): STREAMING AS-OF JOIN — each event enriched with
@@ -1011,7 +995,6 @@ object StreamingGates {
       .toDF("event_id", "user_id", "o_orderkey", "tp")
       .select(col("event_id"), col("user_id"), col("o_orderkey"),
         graft.functions.dec2(col("tp")).as("o_totalprice"))
-      .orderBy(col("event_id"))
   }
 
   /** F7 (query-backed): STREAMING PER-KEY TOP-N — bounded O(N)-per-key
@@ -1038,7 +1021,6 @@ object StreamingGates {
       .toDF("user_id", "rn", "event_id", "v")
       .select(col("user_id"), col("rn"), col("event_id"),
         graft.functions.dec2(col("v")).as("value"))
-      .orderBy(col("user_id"), col("rn"))
   }
 
   /** F10 (query-backed): STREAMING CONVERSION FUNNEL — each user's
@@ -1101,7 +1083,6 @@ object StreamingGates {
         (d, gs.size.toLong, gs.count(g => evSet(g._2)).toLong)
       }
       .toDF("doc_id", "n_maybe", "n_true")
-      .orderBy(col("doc_id"))
   }
 
   /** F19 (query-backed): STREAMING CANONICALIZING DEDUP — the C36
@@ -1127,7 +1108,6 @@ object StreamingGates {
       .collect().toSeq
     keepers.map(r => (r.getLong(0), r.getString(1)))
       .toDF("keeper_id", "canon_md5")
-      .orderBy(col("keeper_id"))
   }
 
   /** F14's count-bounded arrival cap: every gate-scale vector passes
@@ -1205,7 +1185,6 @@ object StreamingGates {
       val fin = rs.maxBy(_.event_id)
       (u, rs.size.toLong, fin.s_pos, fin.s_neg, fin.max_pos, fin.max_neg)
     }.toDF("user_id", "n_events", "s_pos", "s_neg", "max_pos", "max_neg")
-      .orderBy(col("user_id"))
   }
 
   /** The F29/F34 gate feed: the B96/B111 daily-revenue series (the
@@ -1214,6 +1193,7 @@ object StreamingGates {
     * the day index as the event id.
     */
   private def dailySeriesArrivals(s: SparkSession, dir: String): Seq[KeyedVal] =
+    // order kept: zipWithIndex numbers the days in calendar order
     Relational.dailyRevenue(s, dir).orderBy(col("day"))
       .select(col("x").cast("long"))
       .collect()
@@ -1298,7 +1278,6 @@ object StreamingGates {
         expr(s"(n_d * 1000000) div $n").as("p_obs_ppm"),
         col("p_ben_e6"),
         lit(mad).as("mad_e6"))
-      .orderBy(col("digit"))
   }
 
   /** The F30/F31/F35/F36 journey feed: the capped events scan as typed
@@ -1341,7 +1320,6 @@ object StreamingGates {
     }
     (lastAgg ++ firstAgg)
       .toDF("model", "touch_type", "n_purchases", "sum_gap_us")
-      .orderBy(col("model"), col("touch_type"))
   }
 
   /** F31 (query-backed): STREAMING JOURNEY TRANSITIONS — the B105 lag
@@ -1366,7 +1344,6 @@ object StreamingGates {
     counts.map { case (f, t, n) =>
       (f, t, n, fromTot(f), n * 1000000L / fromTot(f))
     }.toDF("from_type", "to_type", "n", "n_from", "p_ppm")
-      .orderBy(col("from_type"), col("to_type"))
   }
 
   /** F35 (query-backed): STREAMING WITHIN-SESSION PATHS — each arrival
@@ -1391,7 +1368,6 @@ object StreamingGates {
     counts.sortBy { case (t1, t2, t3, n) => (-n, t1, t2, t3) }.take(20)
       .map { case (t1, t2, t3, n) => (t1, t2, t3, n, n * 1000000L / nt) }
       .toDF("t1", "t2", "t3", "n", "share_ppm")
-      .orderBy(col("n").desc, col("t1"), col("t2"), col("t3"))
   }
 
   /** The F33/F37 ledger feed: the capped lineitem scan as per-part
@@ -1442,7 +1418,6 @@ object StreamingGates {
       .toSeq
     latest.map(o => (o.user_id, o.n, o.bal, o.mx, o.clamps))
       .toDF("partkey", "n_events", "final_bal", "max_bal", "n_clamps")
-      .orderBy(col("partkey"))
   }
 
   /** F37 (query-backed): STREAMING CROSTON SMOOTHER — the B117
@@ -1470,7 +1445,6 @@ object StreamingGates {
       .toSeq
     latest.map(o => (o.user_id, o.n, o.z_e6, o.p_e6, o.forecast_e6))
       .toDF("partkey", "n_demands", "z_e6", "p_e6", "forecast_e6")
-      .orderBy(col("partkey"))
   }
 
   /** F39's wider fact cap: same-day same-customer order pairs are rare
@@ -1517,7 +1491,6 @@ object StreamingGates {
         o.spread_cents))
       .toDF("ck", "day_ed", "n_orders", "total_cents", "last_orderkey",
         "spread_cents")
-      .orderBy(col("n_orders").desc, col("ck"), col("day_ed"))
   }
 
   /** F41 (query-backed): STREAMING ERROR-BURST DETECTOR — error
@@ -1589,7 +1562,6 @@ object StreamingGates {
       .toSeq
     latest.map(o => (o.source, o.n_docs, o.major_lang, o.n_major, o.purity_ppm))
       .toDF("source", "n_docs", "major_lang", "n_major", "purity_ppm")
-      .orderBy(col("source"))
   }
 
   /** F32 (query-backed): STREAMING DOMAIN CLASSIFICATION — the A46
@@ -1621,7 +1593,6 @@ object StreamingGates {
     preds.groupBy(identity).toSeq
       .map { case ((a, p), xs) => (a, p, xs.size.toLong) }
       .toDF("actual", "predicted", "n")
-      .orderBy(col("actual"), col("predicted"))
   }
 
   /** F20 (query-backed): STREAMING SEGMENT-DEDUP STATS — the C37
@@ -1655,7 +1626,6 @@ object StreamingGates {
     latest.toDF("seg", "n_occ", "keeper_doc", "keeper_idx")
       .select(md5(col("seg")).as("seg_md5"), col("n_occ"),
         col("keeper_doc"), col("keeper_idx"))
-      .orderBy(col("seg_md5"))
   }
 
   /** F42 (query-backed): STREAMING SEQUENCE PACKER — each arriving
@@ -1725,7 +1695,6 @@ object StreamingGates {
       .toDF("user_id", "last_event_id", "last_type", "lv", "n_versions")
       .select(col("user_id"), col("last_event_id"), col("last_type"),
         graft.functions.dec2(col("lv")).as("last_value"), col("n_versions"))
-      .orderBy(col("user_id"))
   }
 
   /** F26 (query-backed): STREAMING DRIFT MONITOR — the B88 PSI shape
@@ -1760,7 +1729,6 @@ object StreamingGates {
     (baseHist.keySet ++ curHist.keySet).toSeq.sorted
       .map(b => (b, baseHist.getOrElse(b, 0L), curHist.getOrElse(b, 0L), psi))
       .toDF("bucket", "n_base", "n_cur", "psi_e6")
-      .orderBy(col("bucket"))
   }
 
   /** F38 (query-backed): STREAMING EMBEDDING DRIFT, keyed BY DIMENSION
@@ -1795,7 +1763,6 @@ object StreamingGates {
     lastWins(rows.zipWithIndex)(_._1.d, _._2).map(_._1)
       .map(o => (o.d, o.n0, o.n1, o.m0_e6, o.m1_e6, o.drift_e6))
       .toDF("d", "n0", "n1", "m0_e6", "m1_e6", "drift_e6")
-      .orderBy(col("d"))
   }
 
   /** F44 (query-backed): STREAMING COHORT ASSIGNMENT — each order is
@@ -1843,7 +1810,6 @@ object StreamingGates {
     }.toSeq
     cums.toDF("cohort_ym", "age_months", "n_customers", "n_orders",
         "rev_cents", "cum_rev_cents", "ltv_per_cust_cents")
-      .orderBy(col("cohort_ym"), col("age_months"))
   }
 
   /** F6 (query-backed): STREAMING IVF INDEX UPSERTS — incoming vectors
@@ -1888,7 +1854,6 @@ object StreamingGates {
         (cell.toLong, ids.size.toLong, ids.sum, ids.map(i => i * i).sum)
       }
       .toDF("cell", "n_vecs", "id_sum", "id_sq_sum")
-      .orderBy(col("cell"))
   }
 
   /** F16 (query-backed): STREAMING LM QUALITY SCORING — lmFit's count
@@ -1932,7 +1897,6 @@ object StreamingGates {
       }
       .toSeq
     latest.toDF("doc_id", "n_bigrams", "avg_logprob")
-      .orderBy(col("doc_id"))
   }
 
   /** F36 (query-backed): STREAMING SESSION ENTRY/EXIT — the F2
@@ -1964,7 +1928,6 @@ object StreamingGates {
       (en, ex, ns, nb, nb * 1000000L / byEntry(en))
     }.toDF("entry_type", "exit_type", "n_sessions", "n_bounces",
         "bounce_ppm_of_entry")
-      .orderBy(col("entry_type"), col("exit_type"))
   }
 
   val oracles: Map[String, String] = Map(

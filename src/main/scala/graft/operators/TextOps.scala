@@ -26,6 +26,15 @@ import graft.sources.Tables._
   */
 object TextOps {
 
+  /** The words of a `(doc_id, text)` row for the Row kernels. Null policy:
+    * `documents.text` is non-null by contract, and a null fails loudly
+    * with the doc id instead of an NPE deep in a kernel. */
+  private def docWords(row: Row): Array[String] = {
+    require(!row.isNullAt(1),
+      s"non-null documents.text violated at doc_id ${row.get(0)}")
+    row.getString(1).split(" ", -1)
+  }
+
   /** The graph-gate contract slice (C16 clusters / C24 PageRank): a
     * doc_id cap INACTIVE at gate scales (sf0.1 ids stop at 4,999;
     * ScaleData replica ids start at 10,000) so gate output is the full
@@ -44,7 +53,6 @@ object TextOps {
     documents(s, dir)
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_dups"))
-      .orderBy(col("keeper_id"))
 
   /** C2: token counting — whitespace + BPE-ish regex tokenization. */
   def qTokenCount(s: SparkSession, dir: String): DataFrame =
@@ -54,7 +62,6 @@ object TextOps {
       size(T.words(col("text"))).cast("long").as("n_ws_tokens"),
       size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
         .cast("long").as("n_re_tokens"))
-      .orderBy(col("doc_id"))
 
   /** C3: quality scoring — length, mean word length, stopword ratio,
     * duplicate-word ratio. All exact integer arithmetic until the final
@@ -69,7 +76,6 @@ object TextOps {
       dec4(T.sumWordLen(ws).cast("double") / n).as("avg_word_len"),
       dec4(T.markerCount(ws, stopwords).cast("double") / n).as("stop_ratio"),
       dec4(lit(1.0) - size(array_distinct(ws)).cast("double") / n).as("dup_ratio"))
-      .orderBy(col("doc_id"))
   }
 
   /** Language-ID marker lexicons (stopword heuristic). */
@@ -100,7 +106,6 @@ object TextOps {
   def qLangId(s: SparkSession, dir: String): DataFrame =
     documents(s, dir)
       .select(col("doc_id"), langPred(T.words(col("text"))).as("pred_lang"))
-      .orderBy(col("doc_id"))
 
   /** C53: language-ID confidence MARGIN census — the calibration
     * table behind C48's re-detect routing threshold ("when is the C4
@@ -129,7 +134,6 @@ object TextOps {
         sum(when(col("margin") >= 3, 1L).otherwise(0L)).as("n_confident"),
         sum(col("margin")).as("sum_margin"),
         max(col("margin")).as("max_margin"))
-      .orderBy(col("pred_lang"))
   }
 
   /** C52: corpus quality-score DRIFT between even/odd doc cohorts —
@@ -192,7 +196,6 @@ object TextOps {
         col("n_ws_tokens"), col("n_re_tokens"),
         expr("(n_re_tokens * 1000) div n_ws_tokens").as("frag_permille"),
         expr("(n_chars * 1000) div n_re_tokens").as("chars_per_tok_permille"))
-      .orderBy(col("pred_lang"))
 
   /** Word 3-shingles per doc via a compiled kernel (the Column
     * higher-order-function formulation is interpreted — fine for one-off
@@ -207,7 +210,7 @@ object TextOps {
     fanOut(documents(s, dir).select(col("doc_id"), col("text")))
       .mapPartitions { it =>
         it.map { row =>
-          val words = row.getString(1).split(" ", -1)
+          val words = docWords(row)
           val out = new scala.collection.mutable.ArrayBuffer[String](
             math.max(words.length - n + 1, 0))
           var i = 0
@@ -243,7 +246,7 @@ object TextOps {
         val as = perms.map(_._1)
         val bs = perms.map(_._2)
         it.map { row =>
-          val words = row.getString(1).split(" ", -1)
+          val words = docWords(row)
           val mins = Array.fill(nPerms)(Long.MaxValue)
           var any = false
           var i = 0
@@ -274,7 +277,7 @@ object TextOps {
     * computed entirely inside a Column expression (no explode/shuffle).
     */
   def qMinHash(s: SparkSession, dir: String): DataFrame =
-    signatures(s, dir).orderBy(col("doc_id"))
+    signatures(s, dir)
 
   /** THE bucket→candidate-pair cascade shared by every blocking scheme
     * (MinHash-LSH bands, rare-shingle inverted index, SimHash bands):
@@ -364,7 +367,6 @@ object TextOps {
         col("inter") / (size(col("sa")) + size(col("sb")) - col("inter")))
       .filter(col("jaccard") >= tau)
       .select(col("a_id"), col("b_id"), dec4(col("jaccard")).as("jaccard"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** C6: MinHash-LSH banding (4 bands × 2 rows) → candidate pairs →
@@ -499,7 +501,6 @@ object TextOps {
            countDistinct(col("id")).as("n_docs"))
       .select(col("split_a"), col("split_b"), col("n_pairs"), col("n_docs"),
         (col("split_a") =!= col("split_b")).cast("int").as("is_leak"))
-      .orderBy(col("split_a"), col("split_b"))
   }
 
   /** C45: INCREMENTAL dedup against a registry — the "dedup the new
@@ -589,7 +590,6 @@ object TextOps {
         expr("sj div n_pairs").as("avg_jac_permille"),
         col("min_jac_permille"), col("max_jac_permille"),
         expr("se div n_pairs").as("mean_abs_err_permille"))
-      .orderBy(col("est_eighths"))
   }
 
   /** C55: per-document CHARACTER-ENTROPY census — the gibberish /
@@ -621,7 +621,6 @@ object TextOps {
         size(col("cnts")).cast("long").as("n_distinct"),
         dec4(log(col("n").cast("double")) - col("hsum") / col("n").cast("double"))
           .as("entropy_nats"))
-      .orderBy(col("doc_id"))
 
   /** C7: n-gram Jaccard similarity join — inverted index over shingles,
     * blocked on rare shingles (df ≤ 5) to cap join fanout, then exact
@@ -675,7 +674,6 @@ object TextOps {
       .filter(greatest(col("cont_ab_ppm"), col("cont_ba_ppm")) >= 600000L)
       .select(col("a_id"), col("b_id"), col("na"), col("nb"), col("inter"),
               col("cont_ab_ppm"), col("cont_ba_ppm"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** C8: 64-bit SimHash fingerprints. Per distinct word: 64-bit hash =
@@ -695,7 +693,7 @@ object TextOps {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { row =>
-          val words = row.getString(1).split(" ", -1)
+          val words = docWords(row)
           val tf = new java.util.HashMap[String, Int]()
           words.foreach(w => tf.merge(w, 1, Integer.sum _))
           val lanes = new Array[Long](64)
@@ -717,7 +715,6 @@ object TextOps {
           Row(row.getLong(0), fp, java.lang.Long.bitCount(fp))
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("doc_id"))
   }
 
   /** C9: winnowing document fingerprints (Schleimer et al., MOSS):
@@ -741,7 +738,6 @@ object TextOps {
           else Row(row.getLong(0), fps.length, fps.min, fps.max)
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("doc_id"))
   }
 
   /** C8b: SimHash hamming near-dup PAIRS as a distributed join — each
@@ -766,7 +762,6 @@ object TextOps {
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
               bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
     cand.filter(col("hamming") <= maxHamming)
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** C16: near-dup CLUSTERS — the LSH pairs grouped into connected
@@ -787,7 +782,6 @@ object TextOps {
       .select(col("a_id").as("a"), col("b_id").as("b"))
     Graphs.connectedComponents(pairs)
       .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-      .orderBy(col("doc_id"))
   }
 
   /** C10: end-to-end corpus curation — the composite filter every LLM
@@ -815,7 +809,6 @@ object TextOps {
         col("n_words") >= 20 && col("distinct_ratio") >= 0.3 &&
         col("pred_lang").isin("en", "de"))
       .select(col("doc_id"), col("n_words"), col("pred_lang"))
-      .orderBy(col("doc_id"))
   }
 
   /** C11: repetition quality filters (the Gopher-rules family): the
@@ -850,7 +843,6 @@ object TextOps {
           lit(1.0) - col("n_g2_distinct").cast("double") / col("n_g2"))
           .otherwise(lit(0.0))).as("dup_2gram_frac"),
         dec4(col("top_c").cast("double") / col("n_words")).as("top_word_ratio"))
-      .orderBy(col("doc_id"))
   }
 
   /** C12: character-class composition — alpha/digit/space/other ratios
@@ -870,7 +862,6 @@ object TextOps {
       dec4(nDigit.cast("double") / n).as("digit_ratio"),
       dec4(nSpace.cast("double") / n).as("space_ratio"),
       dec4((n - nAlpha - nDigit - nSpace).cast("double") / n).as("other_ratio"))
-      .orderBy(col("doc_id"))
   }
 
   /** C13: TF-IDF top term per document — classic IR scoring over the
@@ -898,7 +889,6 @@ object TextOps {
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("w").as("top_term"),
               dec4(col("tfidf")).as("top_tfidf"))
-      .orderBy(col("doc_id"))
   }
 
   /** C14: feature-hashing text vectorizer (the hashing trick,
@@ -920,7 +910,7 @@ object TextOps {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { row =>
           val acc = new Array[Long](nBuckets)
-          row.getString(1).split(" ", -1).foreach { w =>
+          docWords(row).foreach { w =>
             val h = TextKernels.md5Prefix52(md, w)
             val b = (h % nBuckets).toInt
             val sgn = if (((h / nBuckets) % 2) == 1) 1L else -1L
@@ -932,7 +922,6 @@ object TextOps {
             .map(b => Row(id, b, acc(b)))
         }
       }(Encoders.row(outSchema))
-      .orderBy(col("doc_id"), col("bucket"))
   }
 
   /** C15: Gopher-style quality gate (Rae et al., the rule family every
@@ -979,7 +968,7 @@ object TextOps {
   }
 
   def qGopher(s: SparkSession, dir: String): DataFrame =
-    gopherOn(documents(s, dir)).orderBy(col("doc_id"))
+    gopherOn(documents(s, dir))
 
   /** C17: exact n-gram eval-set decontamination (the GPT-3/Pile
     * training-hygiene step: drop training docs that share a long
@@ -1007,7 +996,6 @@ object TextOps {
       // DISTINCT: the corpus has degenerate duplicate doc_ids, whose
       // repeated (doc_id, gram) rows must not double-count
       .agg(countDistinct(col("g")).as("n_shared"))
-      .orderBy(col("doc_id"))
   }
 
   /** C18: deterministic Bloom-filter pre-screen for decontamination —
@@ -1127,7 +1115,6 @@ object TextOps {
         sum(col("mh")).as("n_maybe"),
         sum(coalesce(col("__t"), lit(0))).as("n_true"))
       .filter(col("n_maybe") > 0)
-      .orderBy(col("doc_id"))
   }
 
   /** C19: URL canonicalization dedup — the web-corpus hygiene step that
@@ -1174,7 +1161,6 @@ object TextOps {
       .select(col("doc_id"), canon.as("canonical_url"))
       .groupBy(col("canonical_url"))
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_dups"))
-      .orderBy(col("keeper_id"))
   }
 
   /** C20: PII detection + redaction — the corpus-hygiene pass every
@@ -1217,7 +1203,7 @@ object TextOps {
   }
 
   def qPii(s: SparkSession, dir: String): DataFrame =
-    piiOn(piiInput(documents(s, dir))).orderBy(col("doc_id"))
+    piiOn(piiInput(documents(s, dir)))
 
   /** C21: stratified (language-balanced) sampling — ~60 docs per
     * language via a deterministic hash-threshold: keep iff
@@ -1236,7 +1222,6 @@ object TextOps {
       .join(broadcast(counts), "lang")
       .filter(T.hexPrefix52(concat(lit("strat|"), col("doc_id"))) % col("n_lang") < quota)
       .select(col("doc_id"), col("lang"))
-      .orderBy(col("doc_id"))
   }
 
   /** C22: cross-document substring-duplication candidates — pairs of
@@ -1277,7 +1262,6 @@ object TextOps {
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2)
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** C28: training-data chunking — split every document into 32-word
@@ -1310,7 +1294,7 @@ object TextOps {
   }
 
   def qChunks(s: SparkSession, dir: String): DataFrame =
-    chunksOn(documents(s, dir)).orderBy(col("doc_id"), col("chunk_idx"))
+    chunksOn(documents(s, dir))
 
   /** C31: the END-TO-END corpus pipeline — the flagship composition
     * every piece above exists for: per training document (eval slice
@@ -1349,7 +1333,6 @@ object TextOps {
       .withColumn("selected",
         (col("is_keeper") === 1 && col("keep_quality") === 1 &&
          col("contaminated") === 0 && col("split") === "train").cast("int"))
-      .orderBy(col("doc_id"))
   }
 
   /** C30: deterministic train/val/test split (90/5/5) — hash-range
@@ -1364,7 +1347,6 @@ object TextOps {
     documents(s, dir)
       .select(col("doc_id"),
         when(h < 90, "train").when(h < 95, "val").otherwise("test").as("split"))
-      .orderBy(col("doc_id"))
   }
 
   /** The C36 canonical form: lowercase, punctuation stripped,
@@ -1387,7 +1369,6 @@ object TextOps {
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_members"),
            countDistinct(md5(col("text"))).as("n_raw_forms"))
       .select(col("keeper_id"), col("n_members"), col("n_raw_forms"))
-      .orderBy(col("keeper_id"))
 
   /** C49: dedup-cascade yield report — the corpus-curation summary
     * every pipeline owner reads before anything else ("how much does
@@ -1421,7 +1402,6 @@ object TextOps {
         expr("CAST(CASE WHEN n_removed IS NULL THEN NULL " +
              "ELSE (n_removed * 1000000) div raw END AS BIGINT)")
           .as("removed_ppm_of_raw"))
-      .orderBy(col("stage"))
   }
 
   /** C32: cross-document duplicated n-gram fraction — the RefinedWeb/
@@ -1459,7 +1439,6 @@ object TextOps {
            sum(when(col("ndocs") > 1, col("cnt")).otherwise(0L)).as("n_dup"))
       .select(col("doc_id"), col("n_grams"),
         dec4(col("n_dup").cast("double") / col("n_grams")).as("dup_3gram_frac"))
-      .orderBy(col("doc_id"))
   }
 
   /** C33: corpus-trained bigram language-model score — the CCNet-style
@@ -1562,7 +1541,7 @@ object TextOps {
       fanOut(docs).mapPartitions { it =>
         it.flatMap { row =>
           val id = row.getLong(0)
-          val w = row.getString(1).split(" ", -1)
+          val w = docWords(row)
           (0 until w.length - 1).iterator
             .map(i => Row(id, w(i), w(i) + " " + w(i + 1)))
         }
@@ -1581,7 +1560,6 @@ object TextOps {
       .agg(sum(col("cnt")).as("n_bigrams"), sum(col("lp") * col("cnt")).as("sum_lp"))
       .select(col("doc_id"), col("n_bigrams"),
         dec4(col("sum_lp").cast("double") / col("n_bigrams")).as("avg_logprob"))
-      .orderBy(col("doc_id"))
   }
 
   /** C34: token-budget domain mixing — the pre-training sampler that
@@ -1616,7 +1594,6 @@ object TextOps {
       .groupBy(col("source"), col("n_docs"), col("dom_toks"), col("thr"))
       .agg(sum(col("kept")).as("n_kept"),
            sum(col("kept") * col("toks")).as("kept_toks"))
-      .orderBy(col("source"))
   }
 
   /** C35: BM25 relevance scoring — the retrieval primitive for corpus
@@ -1662,7 +1639,6 @@ object TextOps {
         (perTerm.map(t => coalesce(t._1, lit(0).cast("decimal(18,6)")))
           .reduce(_ + _).cast("double") + lit(0.0)).as("bm25"))
       .filter(col("n_hit") > 0)
-      .orderBy(col("doc_id"))
   }
 
   /** C29: BPE-merge pair statistics — the tokenizer-TRAINING inner
@@ -1764,7 +1740,6 @@ object TextOps {
       java.util.Arrays.asList(merges.zipWithIndex.map { case ((a, b, n), i) =>
         Row(i + 1, a, b, a + b, n)
       }: _*), schema)
-      .orderBy(col("round"))
   }
 
   /** C57: BPE ENCODING + compression curve — the consumer side of the
@@ -1816,7 +1791,6 @@ object TextOps {
         col("e.n_tokens").as("n_tokens"), col("n0"))
       .select(col("round"), col("merged"), col("n_tokens"),
         expr("(n0 - n_tokens) * 1000 div n0").as("saved_permille"))
-      .orderBy(col("round"))
   }
 
   def qBpePairs(s: SparkSession, dir: String): DataFrame = {
@@ -1856,7 +1830,6 @@ object TextOps {
         fpOverlapFrom(documents(s, dir).filter(col("doc_id") < ScaleSliceMaxDoc))
           .select(col("a_id").as("a"), col("b_id").as("b")))
       .select(col("id").as("doc_id"), col("r").as("rank_e9"))
-      .orderBy(col("doc_id"))
 
   /** C46: TextRank keyword extraction (Mihalcea & Tarau 2004 — the
     * UNSUPERVISED corpus-keyword step next to C43's RAKE: RAKE scores
@@ -1912,7 +1885,6 @@ object TextOps {
         col("tokens_total"), col("tokens_lost"),
         expr("CAST((tokens_lost * 1000000) div tokens_total AS BIGINT)")
           .as("loss_ppm"))
-      .orderBy(col("k"))
   }
 
   /** C25: edit-distance near-dup verify — the character-level
@@ -1935,7 +1907,6 @@ object TextOps {
     cand.filter(col("lev") <= 40)
       .select(col("a_id"), col("b_id"), col("lev"),
               dec4(lit(1.0) - col("lev").cast("double") / col("mxlen")).as("sim"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** C23: corpus vocabulary build — the tokenizer-training primitive:
@@ -2136,8 +2107,7 @@ object TextOps {
     val out = graft.core.Materialize.pin(
       docs.join(pred, "doc_id")
         .groupBy(col("source").as("actual"), col("predicted"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("actual"), col("predicted")))
+        .agg(count(lit(1)).as("n")))
     graft.core.Materialize.release(cw)
     graft.core.Materialize.release(rawPinned)
     out
@@ -2336,7 +2306,7 @@ object TextOps {
       .mapPartitions { it =>
         it.flatMap { row =>
           val id = row.getLong(0)
-          val w = row.getString(1).split(" ", -1)
+          val w = docWords(row)
           (0 until w.length - 1).iterator.map(i => Row(id, w(i) + "_" + w(i + 1)))
         }
       }(Encoders.row(bigramSchema))
@@ -2572,7 +2542,6 @@ object TextOps {
              "(abs(nn*stp - sab) * 1000000) div (nn*nn - sab) " +
              "ELSE -((abs(nn*stp - sab) * 1000000) div (nn*nn - sab)) " +
              "END AS BIGINT)").as("kappa_ppm"))
-      .orderBy(col("lang"))
   }
 
   /** A54 statistic — ONE shared float text over the exact DECIMAL
@@ -2658,7 +2627,6 @@ object TextOps {
           .as("purity_ppm"),
         expr("CAST((n_agree * 1000000) div n_docs AS BIGINT)")
           .as("gold_agree_ppm"))
-      .orderBy(col("source"))
   }
 
   /** C26: language-ID confusion matrix — the evaluation primitive for
@@ -2670,7 +2638,6 @@ object TextOps {
       .select(col("lang").as("gold_lang"), langPred(T.words(col("text"))).as("pred_lang"))
       .groupBy(col("gold_lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("gold_lang"), col("pred_lang"))
 
   /** A55: Cohen's kappa between the C4 language detector and the
     * gold labels — the chance-corrected agreement coefficient (the
@@ -2718,7 +2685,6 @@ object TextOps {
       .select(col("doc_id"), col("n_chars"),
         (x < col("q1") - lit(1.5) * (col("q3") - col("q1")) ||
          x > col("q3") + lit(1.5) * (col("q3") - col("q1"))).cast("int").as("is_outlier"))
-      .orderBy(col("doc_id"))
   }
 
   /** Language-prediction CTE (`pred`) shared by the C4 oracle and the
@@ -2955,7 +2921,6 @@ object TextOps {
              struct(col("seg_idx"), col("seg"))))).as("ks"))
       .select(col("doc_id"), col("n_segs"), col("n_kept"),
         md5(array_join(transform(col("ks"), x => x("seg")), " ")).as("kept_md5"))
-      .orderBy(col("doc_id"))
   }
 
   /** C38: PMI collocation statistics — the corpus-linguistics step a
@@ -3056,7 +3021,6 @@ object TextOps {
       .withColumn("spw_e6", expr("n_syllables * 1000000 div n_words"))
       .withColumn("flesch_e3",
         expr("206835 - (1015 * wps_e6 div 1000000) - (84600 * spw_e6 div 1000000)"))
-      .orderBy(col("doc_id"))
   }
 
   val oracles: Map[String, String] = Map(

@@ -1388,14 +1388,15 @@ object GeoTiff {
 
   /** One scratch fixture dir per (JVM, sf, kind): written once, reused
     * by every re-run of the gate in the same session (bench runs each
-    * query 4×) — content is deterministic, so reuse is sound.
+    * query 4×) — content is deterministic, so reuse is sound — and
+    * deleted when the JVM exits.
     */
   private val fixtureDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
   private def fixtureDir(key: String, n: Int, shaped: Boolean): java.nio.file.Path =
     fixtureDirs.computeIfAbsent(key, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_geotiff")
+      val d = graft.core.TempDir.forJvm("graft_geotiff")
       writeFixture(d, n, shaped)
       d
     })
@@ -1466,7 +1467,6 @@ object GeoTiff {
       .join(broadcast(ids), perFile("band_id") === ids("doc_id"))
       .drop("doc_id")
       .crossJoin(broadcast(promoted))
-      .orderBy(col("band_id"))
   }
 
   /** E17 gate: write 48 real GeoTIFF FILES (mixed uint8/float32, one
@@ -1589,7 +1589,7 @@ object GeoTiff {
       val sharded = loadRasterSharded(s, shardDir)
       val both = stats("sharded", sharded).unionAll(stats("single", single))
       s.createDataFrame(both.collectAsList(), both.schema)
-    }.orderBy(col("kind"), col("zone"))
+    }
   }
 
   /** The streaming ingest publishes the batch gate's frame exactly, so

@@ -3,7 +3,6 @@ package graft.sources.v2
 import java.util
 
 import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
@@ -314,7 +313,7 @@ final class MemTableSnapshot(baseKey: String, snap: MemStore.Snapshot)
           override def planInputPartitions(): Array[InputPartition] =
             Array(MemPartition(snap.rows))
           override def createReaderFactory(): PartitionReaderFactory =
-            new MemReaderFactory(snap.schema)
+            new MemReaderFactory
         }
       }
     }
@@ -343,7 +342,7 @@ class MemTable(protected val storeKey: String,
             Array(MemPartition(snap))
           }
           override def createReaderFactory(): PartitionReaderFactory =
-            new MemReaderFactory(tableSchema)
+            new MemReaderFactory
         }
       }
     }
@@ -500,7 +499,7 @@ final class MemTableRowLevel(k: String, s0: StructType)
 
 final case class MemPartition(rows: Array[Array[Any]]) extends InputPartition
 
-final class MemReaderFactory(schema: StructType)
+final class MemReaderFactory
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {

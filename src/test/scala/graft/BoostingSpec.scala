@@ -48,7 +48,6 @@ class BoostingSpec extends AnyFunSuite {
 
   test("two-stage model's F1 part equals the stage-1 model on every row") {
     val t = train
-    val frame = FeatureFrame(t, Seq("id"), Seq("x1", "x2"))
     val m1 = GradientBoostStage1(learningRate = 0.5, targetScale = 1.0,
       orderBy = Seq("id")).fit(t, Seq("x1", "x2"), Seq("y"))
     val m2 = GradientBoostTwoStage(targetScale = 1.0,

@@ -328,7 +328,6 @@ class DataSourceV2Spec extends AnyFunSuite {
   }
 
   test("G7: a selective join on y dynamically prunes the raster scan end to end") {
-    import spark.implicits._
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // DPP requires a SELECTIVE predicate on the build side — a bare
     // literal relation does not qualify (pruningHasBenefit = false)
@@ -443,7 +442,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val key = "g6-stream-" + java.util.UUID.randomUUID()
     val input = MemoryStream[Long]
-    val ckpt = java.nio.file.Files.createTempDirectory("g6ckpt").toString
+    val ckpt = graft.core.TempDir.forJvm("g6ckpt").toString
     val q = input.toDS().toDF("v")
       .writeStream.format("graft.sources.v2.StatsSink").option("key", key)
       .option("checkpointLocation", ckpt)

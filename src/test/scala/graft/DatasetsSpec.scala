@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.FeatureFrame
 import graft.estimators.KNeighborsRegressor
 import graft.sources.Datasets
 

@@ -46,7 +46,7 @@ class EcoplotParitySpec extends AnyFunSuite {
     ("TPI450.tif", 51444.0, -92.0, 80.0))
 
   private lazy val dir: java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory("ecoplot")
+    val d = graft.core.TempDir.forJvm("ecoplot")
     val zis = new java.util.zip.ZipInputStream(
       new java.io.FileInputStream(zipPath))
     try {

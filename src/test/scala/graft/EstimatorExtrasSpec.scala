@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.core.{FeatureFrame, NoData, PredictOptions}
+import graft.core.{FeatureFrame, PredictOptions}
 import graft.estimators.{GBTRegression, PCA, RandomForestRegression}
 import graft.sources.Synthetic
 

@@ -135,7 +135,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet sink enables partition pruning on read") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val tmp = graft.core.TempDir.forJvm("graft_part").toString
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
     graft.sources.Sinks.parquet(events, tmp, partitionBy = Seq("event_type"))
     val back = spark.read.parquet(tmp).filter(col("event_type") === "error")
@@ -148,7 +148,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("csv loader round-trips with explicit schema") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = graft.core.TempDir.forJvm("graft_csv").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "x")
     df.write.mode("overwrite").option("header", "true").csv(tmp)
     val back = Datasets.csv(spark, tmp, df.schema)

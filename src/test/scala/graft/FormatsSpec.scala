@@ -15,7 +15,7 @@ class FormatsSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("ORC roundtrips the events table bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = graft.core.TempDir.forJvm("graft_orc").toString
     val src = Tables.events(spark, sfDir)
     Sinks.orc(src, dir)
     val back = Datasets.orc(spark, dir)
@@ -29,7 +29,7 @@ class FormatsSpec extends AnyFunSuite {
     // Multimodal.ingestBlobs = binaryFile source (one file per blob) +
     // media_id from the file name + the SAME decode kernel
     import graft.operators.Multimodal
-    val dir = java.nio.file.Files.createTempDirectory("graft_media").toString
+    val dir = graft.core.TempDir.forJvm("graft_media").toString
     val media = Multimodal.synthesizeMedia(spark, sfDir)
       .select(col("media_id"), col("payload")).collect()
     media.foreach { r =>
@@ -47,7 +47,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("ingestBlobs over real encoded BMP files: ImageIO decode matches the in-memory path") {
     import graft.operators.Multimodal
-    val dir = java.nio.file.Files.createTempDirectory("graft_bmp").toString
+    val dir = graft.core.TempDir.forJvm("graft_bmp").toString
     val media = Multimodal.synthesizeBmp(spark, sfDir)
       .select(col("media_id"), col("payload")).collect()
     media.foreach { r =>
@@ -69,7 +69,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("partitioned write + partition-pruned read: predicate becomes a PartitionFilter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = graft.core.TempDir.forJvm("graft_part").toString
     Sinks.parquet(Tables.events(spark, sfDir), dir, partitionBy = Seq("event_type"))
     val one = spark.read.parquet(dir).filter(col("event_type") === "click")
     val plan = one.queryExecution.executedPlan.toString

@@ -15,7 +15,7 @@ class GeoTiffSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("geotiff_spec")
+    graft.core.TempDir.forJvm("geotiff_spec")
 
   test("uint8 roundtrip: encoded bytes decode to the formula pixels and tags") {
     val i = GeoTiff.decodeStats(GeoTiff.encode(0L)) // band 0: uint8
@@ -205,7 +205,7 @@ class GeoTiffSpec extends AnyFunSuite {
     // rasterio parity: the load APIs must not care which container a
     // band arrived in — write an aligned pair (one classic, one
     // BigTIFF, same grid) and stack them
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigtiff_mix")
+    val dir = graft.core.TempDir.forJvm("graft_bigtiff_mix")
     val w = 20; val h = 14
     val classic = GeoTiff.buildTiff(w, h, "uint8",
       (x, y) => ((3 * x + 5 * y) % 256).toDouble, 32610, 500000.0, 4200000.0,

@@ -64,7 +64,7 @@ class GraphsSpec extends AnyFunSuite {
     // has no unset); later suites then exercise the reliable-checkpoint
     // branch of Materialize.pin too, which is exactly the coverage we
     // want — so the temp dir is left in place for the JVM's lifetime
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = graft.core.TempDir.forJvm("graft-ckpt").toString
     s.sparkContext.setCheckpointDir(dir)
     assert(run() === expected)
   }

@@ -160,9 +160,8 @@ class PlanAuditSpec extends AnyFunSuite {
     q.collect() // materialize (pins run; plan contains reused stages)
     val p = plan(q)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-    // 3 iterations x (1 join-side + 1 agg partial->final) + the final
-    // orderBy's range exchange lives separately; allow the pinned edge
-    // prep but fail if the per-iteration pair count doubles
+    // 3 iterations x (1 join-side + 1 agg partial->final); allow the
+    // pinned edge prep but fail if the per-iteration pair count doubles
     assert(exchanges <= 9, s"q_pagerank shuffle count blew up ($exchanges):\n$p")
   }
 
@@ -354,6 +353,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!flagged(fact.withColumn("rn", row_number().over(
       Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_linenumber"), col("l_partkey"))))))
+  }
+
+  test("RootSort flags a trailing global sort, not TopN or a window") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val fact = graft.sources.Tables.lineitem(spark, sfDir)
+    def flagged(df: DataFrame): Boolean =
+      ExplainAudit.rootSort(df.queryExecution.optimizedPlan)
+    assert(flagged(fact.orderBy(col("l_orderkey"))))
+    // looks through a trailing projection
+    assert(flagged(fact.orderBy(col("l_orderkey")).select(col("l_partkey"))))
+    // TopN: the limit picks rows by the order, so the order is the result
+    assert(!flagged(fact.orderBy(col("l_orderkey")).limit(5)))
+    // a window's ordering is not a global sort
+    assert(!flagged(fact.withColumn("rn", row_number().over(
+      Window.partitionBy(col("l_orderkey")).orderBy(col("l_linenumber"))))))
+    assert(!flagged(fact.groupBy(col("l_returnflag")).count()))
   }
 
   test("scans prune to the projected columns") {

@@ -36,7 +36,7 @@ class RocksDbRestartSpec extends AnyFunSuite {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("rocksdb_ckpt").toString
+    val ckpt = graft.core.TempDir.forJvm("rocksdb_ckpt").toString
     try f(ckpt)
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -63,7 +63,7 @@ class RocksDbRestartSpec extends AnyFunSuite {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("rocksdb_ckpt").toString
+    val ckpt = graft.core.TempDir.forJvm("rocksdb_ckpt").toString
     try {
       val k = 16
       // deterministic arrivals: 3 groups, values colliding across groups

@@ -13,7 +13,7 @@ class ScaleDataSpec extends AnyFunSuite {
   private val src = "/root/testdata/sf0.001"
 
   private lazy val dst = {
-    val d = java.nio.file.Files.createTempDirectory("scalespec").toString
+    val d = graft.core.TempDir.forJvm("scalespec").toString
     ScaleData.main(Array(src, d, "2"))
     d
   }

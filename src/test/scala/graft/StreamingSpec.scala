@@ -667,7 +667,7 @@ class StreamingSpec extends AnyFunSuite {
     // the production crawl-landing shape: archives arrive as FILES in
     // a watched directory; the stream is the ingest census (E7's
     // batch binaryFile path, made continuous)
-    val dir = java.nio.file.Files.createTempDirectory("f51blobs")
+    val dir = graft.core.TempDir.forJvm("f51blobs")
     val ids = (60L to 95L) // spans the id%89 bit-rot arm (89)
     ids.foreach { id =>
       java.nio.file.Files.write(dir.resolve(f"blob-$id%03d.zip"),
@@ -790,8 +790,10 @@ class StreamingSpec extends AnyFunSuite {
       val maxVer = all.map(_.version).max
       val fin = all.filter(_.version == maxVer).sortBy(_.rank)
         .map(o => (o.rank, o.key, o.cents)).toSeq
+      // a registry query returns a row set: compare in rank order
       val batch = graft.operators.Relational.qBottomkSample(spark, sfDir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        .sortBy(_._1)
       assert(batch.length == 100)
       assert(fin == batch)
     } finally q.stop()

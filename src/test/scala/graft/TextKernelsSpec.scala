@@ -90,9 +90,23 @@ class TextKernelsSpec extends AnyFunSuite {
   }
 
   test("fingerprint query emits stable per-doc aggregates") {
+    // a registry query returns a row set: compare sorted rows
     val r1 = TextOps.qFingerprint(spark, sfDir).collect()
     val r2 = TextOps.qFingerprint(spark, sfDir).collect()
-    assert(r1.toSeq == r2.toSeq)
+    assert(r1.map(_.toString).sorted.toSeq == r2.map(_.toString).sorted.toSeq)
     assert(r1.forall(_.getInt(1) > 0))
+  }
+
+  test("a null documents.text fails the Row kernels with the invariant, not an NPE") {
+    import spark.implicits._
+    val dir = graft.core.TempDir.forJvm("graft_nulltext")
+    Seq((1L, Option("a b c d")), (2L, Option.empty[String])).toDF("doc_id", "text")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    val e = intercept[Exception](TextOps.qSimHash(spark, dir.toString).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("non-null documents.text violated at doc_id 2")),
+      chain.mkString("\n"))
+    assert(!chain.exists(_.isInstanceOf[NullPointerException]))
   }
 }

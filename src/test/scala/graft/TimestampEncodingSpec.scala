@@ -34,7 +34,7 @@ class TimestampEncodingSpec extends AnyFunSuite {
   }
 
   private def writeFixture(ts: DataFrame => DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsenc").toString
+    val dir = graft.core.TempDir.forJvm("graft_tsenc").toString
     ts(base()).select(col("event_id"), col("ts"), col("user_id"),
                       col("event_type"), col("value"), col("props"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -73,7 +73,7 @@ class TimestampEncodingSpec extends AnyFunSuite {
     import s.implicits._
     // o_orderdate as a nanos long — the silently-catastrophic encoding:
     // unguarded, `o_orderdate >= '1995-01-01'` compares strings to nanos
-    val dir = java.nio.file.Files.createTempDirectory("graft_odate").toString
+    val dir = graft.core.TempDir.forJvm("graft_odate").toString
     Seq((1L, 1L, "O", 100.0, 1704067200000000L * 1000L),
         (2L, 2L, "F", 200.0, 1735689600000000L * 1000L))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")

@@ -17,7 +17,7 @@ class UpsertBoundsSpec extends AnyFunSuite {
 
   private def writeEvents(rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = graft.core.TempDir.forJvm("graft_upsert").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("us")))
       .withColumn("props", lit("{}"))

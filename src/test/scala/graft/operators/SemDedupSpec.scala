@@ -54,8 +54,10 @@ class SemDedupSpec extends AnyFunSuite {
   }
 
   private def check(nCells: Int): Unit = {
+    // a registry query returns a row set: compare in vec_id order
     val got = Similarity.semDedup(spark, sfDir, nCells, tau).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(_._1)
     val want = reference(nCells)
     assert(got.map(t => (t._1, t._2, t._3)).toSeq ==
            want.map(t => (t._1, t._2, t._3)),
