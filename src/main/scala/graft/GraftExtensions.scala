@@ -12,29 +12,30 @@ import graft.functions.expressions.{CosineSimilarity, CountMin, MisraGries}
   * not UDFs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  /** Usage-only function docs: no arguments, examples, group or source. */
+  private def info(cls: Class[_], name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo(cls.getName, null, name, usage, "", "", "", "", "", "", "")
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(
-        classOf[CosineSimilarity].getName, null, "graft_cosine",
-        "graft_cosine(a, b) - cosine similarity of two double arrays", ""),
+      info(classOf[CosineSimilarity], "graft_cosine",
+        "graft_cosine(a, b) - cosine similarity of two double arrays"),
       (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
     ext.injectFunction((
       new FunctionIdentifier("graft_mg"),
-      new ExpressionInfo(
-        classOf[MisraGries].getName, null, "graft_mg",
+      info(classOf[MisraGries], "graft_mg",
         "graft_mg(col, k) - Misra-Gries heavy-hitters summary (map of key -> " +
-          "estimated count, at most k entries, est within N/(k+1) of truth)", ""),
+          "estimated count, at most k entries, est within N/(k+1) of truth)"),
       (children: Seq[Expression]) => MisraGries(
         children(0),
         children(1).eval().asInstanceOf[Number].intValue())))
     ext.injectFunction((
       new FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(
-        classOf[CountMin].getName, null, "graft_cms",
+      info(classOf[CountMin], "graft_cms",
         "graft_cms(col, depth, width) - Count-Min sketch (flat row-major " +
           "array<bigint>; probe row d with pmod(xxhash64(col, CAST(d AS " +
-          "BIGINT)), width); est >= true always)", ""),
+          "BIGINT)), width); est >= true always)"),
       (children: Seq[Expression]) => CountMin(
         children(0),
         children(1).eval().asInstanceOf[Number].intValue(),

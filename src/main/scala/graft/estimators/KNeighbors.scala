@@ -34,11 +34,34 @@ private[estimators] final class KnnState(
     val d: Int
 ) extends Serializable
 
+/** The brute-force kNN scan shared by every kNN estimator: one blocked
+  * distance loop ([[KnnKernel.score4]], four training rows per pass) that
+  * feeds both the top-k buffer ([[KnnKernel.topK]]) and the radius ball
+  * ([[KnnScanExpr]]).
+  *
+  * Blocking changes no bit of any result. Each row keeps its own
+  * accumulator, summed from 0.0 in band order and multiplied by its
+  * query's d/n_obs factor, exactly as a one-row loop sums it (the JVM
+  * neither reassociates nor fuses double arithmetic). Rows are offered
+  * to the (dist², id) buffer in training order, and the buffer's order
+  * is total over distinct ids, so ties break on the lower id as before.
+  * `KernelProps` checks ids and d² bit for bit against the one-row loop.
+  */
 private[estimators] object KnnKernel {
 
   /** Fill `outIdx` with the k training-row indices nearest to `q`,
     * ordered by (dist², id) ascending; `outD` gets the squared distances.
     * Returns the neighbor count (min(k, m)).
+    *
+    * nan_euclidean (sklearn KNNImputer distance): missing (NaN) query
+    * dims are skipped and the sum scales by d/n_obs. Fully-observed
+    * rows get factor 1.0 and x*1.0 is the identity for every double,
+    * so the classic paths are bit-unchanged. Fully-missing rows are
+    * the caller's responsibility (mask + fill).
+    *
+    * The observed dims are listed once per query, so the m·d loop tests
+    * no NaN; [[score4]] scores four training rows per pass, whose four
+    * independent add chains overlap instead of waiting on one another.
     */
   def topK(
       q: Array[Double],
@@ -47,56 +70,90 @@ private[estimators] object KnnKernel {
       outIdx: Array[Int],
       outD: Array[Double]
   ): Int = {
-    val m = st.m; val d = st.d
+    val m = st.m
     val n = math.min(k, m)
-    // nan_euclidean (sklearn KNNImputer distance): missing (NaN) query
-    // dims are skipped and the sum scales by d/n_obs. Fully-observed
-    // rows get factor 1.0 and x*1.0 is the identity for every double,
-    // so the classic paths are bit-unchanged. Fully-missing rows are
-    // the caller's responsibility (mask + fill).
-    var nobs = 0
-    var jj = 0
-    while (jj < d) { if (!q(jj).isNaN) nobs += 1; jj += 1 }
-    val factor = d.toDouble / nobs
+    val dims = observedDims(q)
+    val factor = st.d.toDouble / dims.length
+    val acc = new Array[Double](4)
     var filled = 0
     var i = 0
     while (i < m) {
-      val base = i * d
-      var d2 = 0.0
-      var j = 0
-      while (j < d) {
-        val qj = q(j)
-        if (qj == qj) { // not NaN
-          val diff = qj - st.x(base + j)
-          d2 += diff * diff
-        }
-        j += 1
+      val r = score4(q, dims, factor, st, i, acc)
+      var b = 0
+      while (b < r) {
+        filled = offer(acc(b), i + b, st.ids, n, filled, outIdx, outD)
+        b += 1
       }
-      d2 *= factor
-      val id = st.ids(i)
-      if (filled < n) {
-        // insertion sort into the not-yet-full buffer
-        var p = filled
-        while (p > 0 && (outD(p - 1) > d2 ||
-               (outD(p - 1) == d2 && st.ids(outIdx(p - 1)) > id))) {
-          outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
-        }
-        outD(p) = d2; outIdx(p) = i
-        filled += 1
-      } else {
-        val lastD = outD(n - 1)
-        if (d2 < lastD || (d2 == lastD && id < st.ids(outIdx(n - 1)))) {
-          var p = n - 1
-          while (p > 0 && (outD(p - 1) > d2 ||
-                 (outD(p - 1) == d2 && st.ids(outIdx(p - 1)) > id))) {
-            outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
-          }
-          outD(p) = d2; outIdx(p) = i
-        }
-      }
-      i += 1
+      i += r
     }
     n
+  }
+
+  /** Indices of the observed (non-NaN) dims of `q`, in band order. */
+  private def observedDims(q: Array[Double]): Array[Int] = {
+    var nobs = 0
+    var j = 0
+    while (j < q.length) { if (!q(j).isNaN) nobs += 1; j += 1 }
+    val dims = new Array[Int](nobs)
+    nobs = 0; j = 0
+    while (j < q.length) { if (!q(j).isNaN) { dims(nobs) = j; nobs += 1 }; j += 1 }
+    dims
+  }
+
+  /** The one distance loop: squared distances from `q` over `dims` to
+    * training rows i, i+1, i+2, i+3, each summed in `dims` order from
+    * 0.0 and then multiplied by `factor`, into `acc(0..3)`. Returns how
+    * many of the four rows exist (min(4, m − i)); slots past the last
+    * row re-score that row and are not read.
+    */
+  def score4(q: Array[Double], dims: Array[Int], factor: Double, st: KnnState,
+             i: Int, acc: Array[Double]): Int = {
+    val x = st.x; val d = st.d; val last = st.m - 1
+    val b0 = i * d
+    val b1 = math.min(i + 1, last) * d
+    val b2 = math.min(i + 2, last) * d
+    val b3 = math.min(i + 3, last) * d
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var j = 0
+    while (j < dims.length) {
+      val c = dims(j)
+      val qc = q(c)
+      val e0 = qc - x(b0 + c); val e1 = qc - x(b1 + c)
+      val e2 = qc - x(b2 + c); val e3 = qc - x(b3 + c)
+      s0 += e0 * e0; s1 += e1 * e1; s2 += e2 * e2; s3 += e3 * e3
+      j += 1
+    }
+    acc(0) = s0 * factor; acc(1) = s1 * factor
+    acc(2) = s2 * factor; acc(3) = s3 * factor
+    math.min(4, st.m - i)
+  }
+
+  /** Offer training row `i` at squared distance `d2` to the (dist², id)
+    * ascending buffer of capacity `n` holding `filled` entries; returns
+    * the new fill.
+    */
+  private def offer(d2: Double, i: Int, ids: Array[Long], n: Int, filled: Int,
+                    outIdx: Array[Int], outD: Array[Double]): Int =
+    if (filled < n) {
+      insert(d2, i, filled, ids, outIdx, outD)
+      filled + 1
+    } else {
+      val lastD = outD(n - 1)
+      if (d2 < lastD || (d2 == lastD && ids(i) < ids(outIdx(n - 1))))
+        insert(d2, i, n - 1, ids, outIdx, outD)
+      filled
+    }
+
+  /** Insertion sort of row `i` into the buffer, starting at slot `from`. */
+  private def insert(d2: Double, i: Int, from: Int, ids: Array[Long],
+                     outIdx: Array[Int], outD: Array[Double]): Unit = {
+    val id = ids(i)
+    var p = from
+    while (p > 0 && (outD(p - 1) > d2 ||
+           (outD(p - 1) == d2 && ids(outIdx(p - 1)) > id))) {
+      outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
+    }
+    outD(p) = d2; outIdx(p) = i
   }
 
   /** Project the validated frame to (ids ++ mask ++ knn-scan output):

@@ -1,8 +1,8 @@
 package graft.estimators
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Catalyst expression form of the kNN scan: evaluates directly on
@@ -21,6 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *  - [[KnnScanExpr.ModeCounts]]:   classCount neighbor class counts
   *  - [[KnnScanExpr.ModeNN]]:       k neighbor ids then k distances
   *                                  (ids are exact ≤ 2^53 doubles)
+  *  - [[KnnScanExpr.ModeRadius]]:   in-ball count then t ball means
+  *
+  * The output is an `UnsafeArrayData` over the primitive doubles, which
+  * the projection copies as one block (no per-element boxing).
   *
   * The fitted state ships inside the expression → serialized once into
   * the stage's task binary (the fit side is small by construction).
@@ -63,23 +67,29 @@ case class KnnScanExpr(
       // training-id order — identical to the oracle for integer-valued
       // targets (exact) and within round-off for continuous ones.
       val o = new Array[Double](1 + t)
+      // the ball is plain Euclidean over every dim (factor 1.0) through
+      // the same blocked loop as topK; noDataMask keeps NaN rows out
+      val dims = Array.range(0, d)
+      val acc = new Array[Double](4)
       var cnt = 0
       var i = 0
       while (i < st.m) {
-        val base = i * d
-        var dd = 0.0; var jj = 0
-        while (jj < d) { val diff = q(jj) - st.x(base + jj); dd += diff * diff; jj += 1 }
-        if (dd <= radius2) {
-          cnt += 1
-          var ti = 0
-          while (ti < t) { o(1 + ti) += st.y(i * t + ti); ti += 1 }
+        val r = KnnKernel.score4(q, dims, 1.0, st, i, acc)
+        var b = 0
+        while (b < r) {
+          if (acc(b) <= radius2) {
+            cnt += 1
+            var ti = 0
+            while (ti < t) { o(1 + ti) += st.y((i + b) * t + ti); ti += 1 }
+          }
+          b += 1
         }
-        i += 1
+        i += r
       }
       o(0) = cnt.toDouble
       var ti = 0
       while (ti < t) { o(1 + ti) = if (cnt > 0) o(1 + ti) / cnt else Double.NaN; ti += 1 }
-      return new GenericArrayData(o)
+      return UnsafeArrayData.fromPrimitiveArray(o)
     }
     val idx = new Array[Int](math.min(k, st.m))
     val d2 = new Array[Double](idx.length)
@@ -149,7 +159,7 @@ case class KnnScanExpr(
         }
         o
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): KnnScanExpr =

@@ -46,7 +46,7 @@ final case class PCA(k: Int) extends FeatureEstimator[PCAModel] {
       if (v(m) < 0) v.map(-_) else v
     }
     val variances = order.map(es.eigenvalues(_))
-    PCAModel(featureCols, means, components.toIndexedSeq, variances.toIndexedSeq)
+    PCAModel(featureCols, means.toIndexedSeq, components.toIndexedSeq, variances.toIndexedSeq)
   }
 }
 

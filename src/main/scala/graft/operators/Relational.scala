@@ -1530,7 +1530,7 @@ object Relational {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val states = "start" +: ppm.map(_._1).filter(_ != "start").distinct.sorted
     def converge(removed: Option[String]): Long = {
-      val p = scala.collection.mutable.Map(states.map(_ -> 0L): _*)
+      val p = scala.collection.mutable.Map.from(states.map(_ -> 0L))
       for (_ <- 1 to 8) {
         val nw = states.map { st =>
           val base = ppm.filter(e => e._1 == st && e._2 == "conv").map(_._3).sum
@@ -1560,7 +1560,7 @@ object Relational {
       StructField("p_wo_e6", LongType, nullable = false),
       StructField("removal_e6", LongType, nullable = false),
       StructField("share_permille", LongType, nullable = true)))
-    s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+    s.createDataFrame(s.sparkContext.parallelize(out.toIndexedSeq, 1), schema)
   }
 
   /** B106: Kaplan–Meier survival estimate of time-to-purchase after
@@ -4515,7 +4515,7 @@ object Relational {
           s"Holt-Winters(7) needs >= 14 days, got ${xs.length}")
         val (l0, b0, s0) = hwInit(xs.take(14))
         var lq = l0; var bq = b0
-        val q = scala.collection.mutable.Queue(s0: _*)
+        val q = scala.collection.mutable.Queue.from(s0)
         var t = 7
         while (t < xs.length) {
           val (nl, nb, ns) = hwStep(lq, bq, q.dequeue(), xs(t) * 1000000L)

@@ -31,7 +31,7 @@ object Skew {
     // rows (the SPARK-23207 class of bug). Hash every column — spreads
     // the hot key unless rows are full duplicates.
     val salted = df.withColumn("__salt",
-      pmod(hash(df.columns.map(col): _*), lit(salt)))
+      pmod(hash(df.columns.toSeq.map(col): _*), lit(salt)))
     val partial = salted
       .groupBy((keys.map(col) :+ col("__salt")): _*)
       .agg(sum(col(valueCol)).as("__psum"), count(lit(1)).as("__pcnt"))

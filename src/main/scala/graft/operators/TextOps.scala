@@ -2099,7 +2099,7 @@ object TextOps {
       .select(col("doc_id"), scoreArr.as("sc"))
       .select(col("doc_id"),
         element_at(
-          array(classNames.map(lit(_)): _*),
+          array(classNames.toSeq.map(lit(_)): _*),
           array_position(col("sc"), array_max(col("sc"))).cast("int"))
           .as("predicted"))
     // pin the ≤|classes|² confusion frame so the token checkpoint can

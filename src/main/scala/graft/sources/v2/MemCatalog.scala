@@ -146,8 +146,8 @@ class MemCatalog extends TableCatalog with ProcedureCatalog {
       .getOrElse(throw new IllegalArgumentException(
         s"table ${key(ident)} has no snapshot $v (log: " +
           st.synchronized(
-            st.snapshots.headOption.map(_.version).getOrElse(0L) + ".." +
-            st.snapshots.lastOption.map(_.version).getOrElse(0L)) + ")"))
+            s"${st.snapshots.headOption.map(_.version).getOrElse(0L)}.." +
+            s"${st.snapshots.lastOption.map(_.version).getOrElse(0L)}") + ")"))
     new MemTableSnapshot(key(ident), snap)
   }
 

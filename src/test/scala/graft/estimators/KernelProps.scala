@@ -29,6 +29,10 @@ import graft.functions.expressions.MisraGries
   *  - md5Prefix52: equals an independent BigInteger-derived reference
   *    and stays in [0, 2⁵²) — the cross-engine hash every md5-formula
   *    oracle depends on.
+  *  - kNN scan: the blocked `KnnKernel.topK` returns the same neighbour
+  *    ids and bit-identical d² as the one-row loop it replaced, for any
+  *    m (below 4, not a multiple of 4, below k), NaN query dims and
+  *    duplicate training rows.
   */
 object KernelProps extends Properties("graft.kernels") {
 
@@ -285,5 +289,94 @@ object KernelProps extends Properties("graft.kernels") {
         }
         val expected = outRef.map(t => s"|$t|").mkString
         Prop(replaced == expected) :| s"toks=$toks pair=($x,$y) got=$replaced want=$expected"
+    }
+
+  // ---- kNN scan: blocked loop vs the one-row reference ----
+
+  /** The one-row-at-a-time scan `KnnKernel.topK` replaced, kept verbatim
+    * as the reference: one accumulator, a NaN test per dim inside the
+    * m·d loop, (dist², id) insertion per row. */
+  private def scalarTopK(q: Array[Double], st: KnnState, k: Int,
+                         outIdx: Array[Int], outD: Array[Double]): Int = {
+    val m = st.m; val d = st.d
+    val n = math.min(k, m)
+    var nobs = 0
+    var jj = 0
+    while (jj < d) { if (!q(jj).isNaN) nobs += 1; jj += 1 }
+    val factor = d.toDouble / nobs
+    var filled = 0
+    var i = 0
+    while (i < m) {
+      val base = i * d
+      var d2 = 0.0
+      var j = 0
+      while (j < d) {
+        val qj = q(j)
+        if (qj == qj) { val diff = qj - st.x(base + j); d2 += diff * diff }
+        j += 1
+      }
+      d2 *= factor
+      val id = st.ids(i)
+      if (filled < n) {
+        var p = filled
+        while (p > 0 && (outD(p - 1) > d2 ||
+               (outD(p - 1) == d2 && st.ids(outIdx(p - 1)) > id))) {
+          outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
+        }
+        outD(p) = d2; outIdx(p) = i
+        filled += 1
+      } else {
+        val lastD = outD(n - 1)
+        if (d2 < lastD || (d2 == lastD && id < st.ids(outIdx(n - 1)))) {
+          var p = n - 1
+          while (p > 0 && (outD(p - 1) > d2 ||
+                 (outD(p - 1) == d2 && st.ids(outIdx(p - 1)) > id))) {
+            outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
+          }
+          outD(p) = d2; outIdx(p) = i
+        }
+      }
+      i += 1
+    }
+    n
+  }
+
+  // small integers force exact distance ties; wide doubles exercise
+  // the rounding order of each row's sum
+  private val cellGen: Gen[Double] =
+    Gen.oneOf(Gen.choose(0, 3).map(_.toDouble), Gen.choose(-1e3, 1e3))
+
+  private val knnGen = for {
+    d <- Gen.choose(1, 12)
+    distinct <- Gen.choose(0, 13)
+    base <- Gen.listOfN(distinct, Gen.listOfN(d, cellGen))
+    // duplicate training rows: equal distances that break on id
+    dups <- Gen.listOf(Gen.choose(0, math.max(distinct - 1, 0)))
+    rows = if (distinct == 0) Nil else base ++ dups.take(10).map(base)
+    picked <- Gen.pick(rows.length, 0L until 1000L)
+    order <- Gen.long
+    ids = new scala.util.Random(order).shuffle(picked.toSeq).toArray
+    k <- Gen.choose(1, 8)
+    q <- Gen.listOfN(d, cellGen)
+    nanDims <- Gen.choose(0, d - 1).flatMap(c => Gen.pick(c, 0 until d))
+  } yield {
+    val st = new KnnState(ids = ids, x = rows.flatten.toArray, y = Array.empty,
+      yCls = Array.empty, m = rows.length, d = d)
+    val qa = q.toArray
+    nanDims.foreach(j => qa(j) = Double.NaN)
+    (st, k, qa)
+  }
+
+  property("blocked topK == the one-row scan: same ids, bit-identical d²") =
+    forAll(knnGen) { case (st, k, q) =>
+      val n = math.min(k, st.m)
+      val (gotI, gotD) = (new Array[Int](n), new Array[Double](n))
+      val (refI, refD) = (new Array[Int](n), new Array[Double](n))
+      val got = KnnKernel.topK(q, st, k, gotI, gotD)
+      val ref = scalarTopK(q, st, k, refI, refD)
+      val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToRawLongBits).toSeq
+      Prop(got == ref && gotI.sameElements(refI) && bits(gotD) == bits(refD)) :|
+        s"m=${st.m} d=${st.d} k=$k q=${q.toSeq} got=${gotI.toSeq}/${gotD.toSeq} " +
+        s"want=${refI.toSeq}/${refD.toSeq}"
     }
 }
