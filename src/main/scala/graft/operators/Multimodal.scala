@@ -542,24 +542,32 @@ object Multimodal {
     * query must recover them from the BYTES, proving the pack/parse
     * roundtrip the way E3 proves the header roundtrip.
     */
-  def synthesizeAudio(s: SparkSession, dir: String): DataFrame = {
+  def synthesizeAudio(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeAudio)
+
+  private def encodeAudio(id: Long): Array[Byte] = {
+    val n = (64 + id % 64).toInt
+    val bb = java.nio.ByteBuffer.allocate(2 * n)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    var t = 0
+    while (t < n) {
+      bb.putShort((((id * 31 + t.toLong * t * 7) % 4096) - 2048).toShort)
+      t += 1
+    }
+    bb.array()
+  }
+
+  /** The synthesized-media frame shared by every single-payload
+    * fixture: one (media_id, payload) row per document, the payload
+    * `encode(doc_id)`. */
+  private def synthesizeBy(s: SparkSession, dir: String)(
+      encode: Long => Array[Byte]): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = false)))
     fanOut(documents(s, dir).select(col("doc_id")))
       .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val n = (64 + id % 64).toInt
-          val bb = java.nio.ByteBuffer.allocate(2 * n)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          var t = 0
-          while (t < n) {
-            bb.putShort((((id * 31 + t.toLong * t * 7) % 4096) - 2048).toShort)
-            t += 1
-          }
-          Row(id, bb.array())
-        }
+        it.map { row => val id = row.getLong(0); Row(id, encode(id)) }
       }(Encoders.row(outSchema))
   }
 
@@ -618,15 +626,8 @@ object Multimodal {
     * formula and length from E6's raw-PCM fixture so the two audio
     * gates cannot mask each other.
     */
-  def synthesizeWav(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row => val id = row.getLong(0); Row(id, encodeWav(id)) }
-      }(Encoders.row(outSchema))
-  }
+  def synthesizeWav(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeWav)
 
   private[graft] def encodeWav(id: Long): Array[Byte] = {
     val n = (48 + id % 96).toInt
@@ -650,6 +651,24 @@ object Multimodal {
       t += 1
     }
     bb.array()
+  }
+
+  /** Decode a WAV payload through the JRE's `AudioSystem` (the E9 RIFF
+    * walker — one opener for every WAV consumer): (sample rate, the
+    * samples as a buffer in the stream's byte order, sample count).
+    * Only mono 16-bit PCM is accepted.
+    */
+  private def openWav(id: Long, payload: Array[Byte]): (Long, java.nio.ByteBuffer, Int) = {
+    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    val fmt = ais.getFormat
+    require(fmt.getChannels == 1 && fmt.getSampleSizeInBits == 16,
+            s"unexpected wav format for media $id")
+    val raw = ais.readAllBytes()
+    val bb = java.nio.ByteBuffer.wrap(raw).order(
+      if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
+      else java.nio.ByteOrder.LITTLE_ENDIAN)
+    (fmt.getSampleRate.toLong, bb, raw.length / 2)
   }
 
   /** E9: REAL audio container codec — the WAV payloads are decoded by
@@ -678,17 +697,7 @@ object Multimodal {
       .mapPartitions { it =>
         it.map { row =>
           val id = row.getLong(0)
-          val in = new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](1))
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(in)
-          val fmt = ais.getFormat
-          require(fmt.getChannels == 1 && fmt.getSampleSizeInBits == 16,
-                  s"unexpected wav format for media $id")
-          val rate = fmt.getSampleRate.toLong
-          val raw = ais.readAllBytes()
-          val bb = java.nio.ByteBuffer.wrap(raw).order(
-            if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-            else java.nio.ByteOrder.LITTLE_ENDIAN)
-          val n = raw.length / 2
+          val (rate, bb, n) = openWav(id, row.getAs[Array[Byte]](1))
           var peak = 0L; var zc = 0L; var sumsq = 0L
           var prev = 0L; var t = 0
           while (t < n) {
@@ -776,15 +785,8 @@ object Multimodal {
     bb.array()
   }
 
-  private[graft] def synthesizeAvi(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row => val id = row.getLong(0); Row(id, encodeAvi(id)) }
-      }(Encoders.row(outSchema))
-  }
+  private[graft] def synthesizeAvi(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeAvi)
 
   /** E18: video frame sampling THROUGH THE CONTAINER INDEX — the
     * production pattern for video at 100 TB: the consumer never scans
@@ -920,15 +922,8 @@ object Multimodal {
     bb.array()
   }
 
-  private[graft] def synthesizeMp3(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row => val id = row.getLong(0); Row(id, encodeMp3(id)) }
-      }(Encoders.row(outSchema))
-  }
+  private[graft] def synthesizeMp3(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeMp3)
 
   /** E19: MP3 stream census by FRAME-SYNC WALK — the third real audio
     * byte path (E9 decodes RIFF/WAV through AudioSystem, E16 QCs it;
@@ -1061,15 +1056,8 @@ object Multimodal {
     bb.array()
   }
 
-  private[graft] def synthesizeZip(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row => val id = row.getLong(0); Row(id, encodeZip(id)) }
-      }(Encoders.row(outSchema))
-  }
+  private[graft] def synthesizeZip(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeZip)
 
   /** E20: ZIP archive ingest census — the crawl-side "blob of blobs"
     * walk (WARC/zip bundles land before any per-document pass; the
@@ -1192,15 +1180,8 @@ object Multimodal {
     out.toByteArray
   }
 
-  private[graft] def synthesizeWarc(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row => val id = row.getLong(0); Row(id, encodeWarc(id)) }
-      }(Encoders.row(outSchema))
-  }
+  private[graft] def synthesizeWarc(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeWarc)
 
   /** E21: WARC crawl-archive census — the FIRST pass of every
     * web-scale corpus pipeline (Common Crawl lands as WARC; the
@@ -1373,16 +1354,7 @@ object Multimodal {
       .mapPartitions { it =>
         it.map { row =>
           val id = row.getLong(0)
-          val in = new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](1))
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(in)
-          val fmt = ais.getFormat
-          require(fmt.getChannels == 1 && fmt.getSampleSizeInBits == 16,
-                  s"unexpected wav format for media $id")
-          val raw = ais.readAllBytes()
-          val bb = java.nio.ByteBuffer.wrap(raw).order(
-            if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-            else java.nio.ByteOrder.LITTLE_ENDIAN)
-          val n = raw.length / 2
+          val (_, bb, n) = openWav(id, row.getAs[Array[Byte]](1))
           var nSil = 0L; var nRail = 0L; var lead = -1L
           var t = 0
           while (t < n) {
@@ -1429,17 +1401,7 @@ object Multimodal {
       .mapPartitions { it =>
         it.map { row =>
           val id = row.getLong(0)
-          val in = new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](1))
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(in)
-          val fmt = ais.getFormat
-          require(fmt.getChannels == 1 && fmt.getSampleSizeInBits == 16,
-                  s"unexpected wav format for media $id")
-          val rate = fmt.getSampleRate.toLong
-          val raw = ais.readAllBytes()
-          val bb = java.nio.ByteBuffer.wrap(raw).order(
-            if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-            else java.nio.ByteOrder.LITTLE_ENDIAN)
-          val n = raw.length / 2
+          val (rate, bb, n) = openWav(id, row.getAs[Array[Byte]](1))
           val outRate = rate / 2
           var peak = 0L; var sumsq = 0L; var wsum = 0L; var k = 0L
           var t = 0
@@ -1577,18 +1539,8 @@ object Multimodal {
     * computed ground truth (any codec, layout, or channel-order bug
     * hash-mismatches).
     */
-  def synthesizeBmp(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          Row(id, encodeBmp(id))
-        }
-      }(Encoders.row(outSchema))
-  }
+  def synthesizeBmp(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodeBmp)
 
   /** Build the deterministic image for `id` and encode it as a real BMP. */
   /** The E12 shared pixel formula: one content id → one deterministic
@@ -2041,18 +1993,8 @@ object Multimodal {
       }(Encoders.row(outSchema))
   }
 
-  def synthesizePng(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          Row(id, encodePng(id))
-        }
-      }(Encoders.row(outSchema))
-  }
+  def synthesizePng(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir)(encodePng)
 
   /** Build the E8 deterministic image for `id` — w = 8 + id%12,
     * h = 8 + id%6, r = (3·id + 5x + 7y) % 256, g = (5·id + 3x + y)

@@ -663,8 +663,9 @@ object Relational {
     * every hot-key row to one reducer for a single-threaded sort+scan,
     * and neither WindowGroupLimit (all rows are output) nor salting
     * (prefix sums are order-defined) applies. HONEST cost accounting
-    * (r11 SkewBench, 8M and 64M rows): charged its full cost the
-    * two-phase form LOSES to the direct window at both decades on
+    * (the r11 crossover at 8M and 64M rows recorded in SURVEY §6):
+    * charged its full cost the two-phase form LOSES to the direct
+    * window at both decades on
     * local[32] — it is the structural answer ONLY when one key's rows
     * exceed a single task, which no single machine can demonstrate.
     * That structural property is therefore machine-checked by

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,11 +13,24 @@ import graft.sources.Tables._
 /** Similarity search over the embeddings table (SURVEY.md §2 D1/D2/D4).
   *
   * Scale posture:
-  * - D1 cosine top-k: the query set is SMALL (it's the "probe" side), so
-  *   it is broadcast; each corpus partition keeps a bounded per-query
-  *   heap and emits only partitions×queries×k candidate rows — the final
-  *   global top-k reduction shuffles a few thousand rows, never the
-  *   corpus. Corpus side is embarrassingly parallel.
+  * - Every probe search, exact or approximate (D1, D3/D5 LSH, D6/D17/
+  *   D31/D32 IVF, D8 PQ, D16 SQ, D22 matryoshka, D24/D27 binary, the
+  *   D11/D18–D20 first passes), is ONE pipeline: [[heapScan]] →
+  *   optionally [[exactRerank]] → [[globalTopK]]. The probe set is
+  *   SMALL and broadcast; `heapScan` streams the corpus once, each
+  *   partition keeping a bounded heap set per arm that the caller's
+  *   scorer fills (cosine, cell-routed cosine, PQ/SQ/binary codes), and
+  *   emits only partitions×probes×depth candidate rows. `exactRerank`
+  *   cuts a budgeted search's candidates, looks their raw vectors up
+  *   through a broadcast join and scores exact cosine; `globalTopK`
+  *   merges per (arm,) probe. Only a few thousand rows ever shuffle,
+  *   never the corpus. The callers own only their algorithm's scoring.
+  * - The helpers own the rules every oracle depends on: dots and norms
+  *   accumulate index-ascending ([[dot]]); every heap, cut and merge
+  *   orders by (sim DESC, vec_id) ([[TopKHeaps]], [[rankCut]]); and
+  *   `embeddings.embedding` is non-null by contract — a null fails with
+  *   `non-null embeddings.embedding violated at vec_id N` ([[vectorAt]])
+  *   instead of an NPE, and an empty partition emits no rows.
   * - D2 exact near-dup runs all-pairs via broadcast nested-loop (exact
   *   by construction); it is the small-corpus exact baseline — the
   *   LSH-bucketed ANN (D3, SURVEY) is the 100 TB path.
@@ -47,6 +60,19 @@ object Similarity {
     }
   }
 
+  /** Index-ascending dot product over `v`'s length: THE accumulation
+    * order of every cosine, norm and cell score here (the oracles'
+    * list functions sum in the same order; a reordered sum is a
+    * different double).
+    */
+  private def dot(a: Array[Double], v: Array[Double]): Double = {
+    var d = 0.0; var j = 0
+    while (j < v.length) { d += a(j) * v(j); j += 1 }
+    d
+  }
+
+  private def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
+
   /** Sign signature over the hyperplane set — the ONE implementation
     * used for both query (driver) and corpus (executor) vectors; any
     * divergence would silently collapse recall.
@@ -54,10 +80,7 @@ object Similarity {
   private def planeSig(planes: Array[Array[Double]], v: Array[Double]): Int = {
     var sig = 0; var p = 0
     while (p < planes.length) {
-      val pl = planes(p)
-      var d = 0.0; var j = 0
-      while (j < v.length) { d += pl(j) * v(j); j += 1 }
-      if (d > 0) sig |= (1 << p)
+      if (dot(planes(p), v) > 0) sig |= (1 << p)
       p += 1
     }
     sig
@@ -67,14 +90,28 @@ object Similarity {
     embeddings(s, dir).select(
       col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
 
-  /** Broadcast state for the top-k kernel: query ids (sorted), vectors,
-    * and precomputed norms.
+  /** A kernel row's corpus vector (column `at`). Null policy:
+    * `embeddings.embedding` is non-null by contract, and a null fails
+    * loudly with its vec_id instead of an NPE deep in a kernel.
+    */
+  private def vectorAt(row: Row, at: Int, vid: Long): Array[Double] = {
+    require(!row.isNullAt(at), s"non-null embeddings.embedding violated at vec_id $vid")
+    row.getSeq[Double](at).toArray
+  }
+
+  /** Broadcast state for the top-k kernels: query ids (sorted), vectors,
+    * and their norms (computed once, driver-side).
     */
   private final class QueryState(
       val qids: Array[Long],
-      val qv: Array[Array[Double]],
-      val qnorm: Array[Double]
-  ) extends Serializable
+      val qv: Array[Array[Double]]
+  ) extends Serializable {
+    val qnorm: Array[Double] = qv.map(norm)
+
+    /** Cosine of probe `qi` against a corpus vector of norm `vNorm`. */
+    def cosine(qi: Int, v: Array[Double], vNorm: Double): Double =
+      dot(qv(qi), v) / (qnorm(qi) * vNorm)
+  }
 
   /** Probe-set contract: the query side is a BOUNDED explicit table —
     * every 50th vec_id, capped at [[MaxProbes]] probes — so the driver
@@ -130,15 +167,7 @@ object Similarity {
       .filter(col("vec_id") % ProbeEvery === 0 &&
               col("vec_id") < ProbeEvery.toLong * MaxProbes)
       .select(col("vec_id"), col("v")).collect().sortBy(_.getLong(0))
-    val qv = qRows.map(_.getSeq[Double](1).toArray)
-    new QueryState(
-      qids = qRows.map(_.getLong(0)),
-      qv = qv,
-      qnorm = qv.map { a =>
-        var s2 = 0.0; var i = 0
-        while (i < a.length) { s2 += a(i) * a(i); i += 1 }
-        math.sqrt(s2)
-      })
+    new QueryState(qRows.map(_.getLong(0)), qRows.map(_.getSeq[Double](1).toArray))
   }
 
   /** Per-partition bounded top-k buffers, one per query: keeps the k
@@ -146,7 +175,7 @@ object Similarity {
     * Shared by the exact and ANN kernels so tie-break fixes apply to
     * both.
     */
-  private final class TopKHeaps(nq: Int, k: Int) {
+  private[graft] final class TopKHeaps(nq: Int, k: Int) {
     val sim = Array.fill(nq)(new Array[Double](k))
     val vid = Array.fill(nq)(new Array[Long](k))
     val cnt = new Array[Int](nq)
@@ -166,25 +195,127 @@ object Similarity {
       }
     }
 
-    def emit(qids: Array[Long]): Iterator[Row] =
+    /** The kept entries as local top-k rows (arm, q_id, vec_id, sim),
+      * query by query, best first. */
+    def emit(arm: Int, qids: Array[Long]): Iterator[Row] =
       (0 until nq).iterator.flatMap { qi =>
-        (0 until cnt(qi)).map(p => Row(qids(qi), vid(qi)(p), sim(qi)(p)))
+        (0 until cnt(qi)).map(p => Row(arm, qids(qi), vid(qi)(p), sim(qi)(p)))
       }
   }
 
+  /** The one local top-k row shape. A search with a single heap set
+    * emits arm 0; multi-arm searches (prefixes, probe widths, budgets)
+    * number their arms from 0.
+    */
   private val localTopKSchema = StructType(Seq(
+    StructField("arm", IntegerType, nullable = false),
     StructField("q_id", LongType, nullable = false),
     StructField("vec_id", LongType, nullable = false),
     StructField("sim", DoubleType, nullable = false)))
 
-  /** Merge per-partition candidates into the global per-query top-k. */
-  private def globalTopK(locals: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    locals
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("rank").cast("long").as("rank"),
-              dec4(col("sim")).as("sim"))
+  /** Run a per-partition kernel that emits local top-k rows. */
+  private def topKRows(df: DataFrame)(kernel: Iterator[Row] => Iterator[Row]): DataFrame =
+    df.mapPartitions(kernel)(Encoders.row(localTopKSchema))
+
+  /** Phase 1 of every probe search: ONE pass over the corpus
+    * (vec_id, v). Each partition keeps one bounded heap set per arm —
+    * arm a keeps `depths(a)` entries per probe — filled by the caller's
+    * scorer, and emits them as local top-k rows. `scorer` runs once per
+    * non-empty partition (read broadcasts and allocate buffers there)
+    * and returns the per-vector step; an empty partition emits no rows
+    * and reads no broadcast.
+    */
+  private[operators] def heapScan(e: DataFrame, qids: Array[Long], depths: Seq[Int])(
+      scorer: Array[TopKHeaps] => (Long, Array[Double]) => Unit): DataFrame =
+    topKRows(fanOut(e.select(col("vec_id"), col("v")))) { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val heaps = depths.map(new TopKHeaps(qids.length, _)).toArray
+        val score = scorer(heaps)
+        it.foreach { row =>
+          val vid = row.getLong(0)
+          score(vid, vectorAt(row, 1, vid))
+        }
+        heaps.indices.iterator.flatMap(a => heaps(a).emit(a, qids))
+      }
+    }
+
+  /** The D1 exact scorer: every corpus vector's cosine against every
+    * probe into one depth-`k` heap set. */
+  private def cosineScan(e: DataFrame, qs: QueryState, k: Int): DataFrame = {
+    val bc = e.sparkSession.sparkContext.broadcast(qs)
+    heapScan(e, qs.qids, Seq(k)) { heaps =>
+      val q = bc.value
+      (vid, v) => {
+        val nrm = norm(v)
+        var qi = 0
+        while (qi < q.qids.length) {
+          heaps(0).insert(qi, q.cosine(qi, v, nrm), vid)
+          qi += 1
+        }
+      }
+    }
+  }
+
+  /** The merge key: the query, or with `byArm` the (arm, query). */
+  private def queryKey(byArm: Boolean): Seq[Column] =
+    (if (byArm) Seq(col("arm")) else Nil) :+ col("q_id")
+
+  /** Each key's best `n` local rows by (sim DESC, vec_id), numbered
+    * `rank`. */
+  private def rankCut(locals: DataFrame, n: Int, byArm: Boolean): DataFrame = {
+    val w = Window.partitionBy(queryKey(byArm): _*).orderBy(col("sim").desc, col("vec_id"))
+    locals.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
+  }
+
+  /** Merge local top-k rows into the global per-query top-k
+    * (q_id, vec_id, rank, sim); with `byArm` per (arm, query), the arm
+    * kept as the first column. */
+  private[operators] def globalTopK(locals: DataFrame, k: Int, byArm: Boolean = false): DataFrame =
+    rankCut(locals, k, byArm).select(queryKey(byArm) ++ Seq(col("vec_id"),
+      col("rank").cast("long").as("rank"), dec4(col("sim")).as("sim")): _*)
+
+  /** Phase 2 of the budgeted ANN searches: cut each (arm,) query's
+    * candidates to its best `nCand`, look their raw vectors up through
+    * a broadcast join of the small candidate set (the corpus side is a
+    * point lookup, never shuffled), score exact cosine and keep the
+    * global top `k`.
+    */
+  private def exactRerank(e: DataFrame, qs: QueryState, locals: DataFrame,
+                          nCand: Int, k: Int, byArm: Boolean = false): DataFrame = {
+    val bc = e.sparkSession.sparkContext.broadcast(qs)
+    val cands = rankCut(locals, nCand, byArm)
+      .select(col("arm"), col("q_id"), col("vec_id"))
+    val joined = e.select(col("vec_id"), col("v")).join(broadcast(cands), "vec_id")
+      .select(col("arm"), col("q_id"), col("vec_id"), col("v"))
+    val scored = topKRows(joined) { it =>
+      val q = bc.value
+      val qIdx = q.qids.zipWithIndex.toMap
+      it.map { row =>
+        val vid = row.getLong(2)
+        val v = vectorAt(row, 3, vid)
+        Row(row.getInt(0), row.getLong(1), vid,
+          q.cosine(qIdx(row.getLong(1)), v, norm(v)))
+      }
+    }
+    globalTopK(scored, k, byArm)
+  }
+
+  /** The recall block of the D13 contracts: per arm, the hits of its
+    * top-k (q_id, vec_id) rows in the exact top-k over the exact row
+    * count, as exact integers — (arm, n_hits, n_exact, recall_ppm),
+    * one row per arm.
+    */
+  private def recallRows(exact: DataFrame, arms: Seq[(Column, DataFrame)]): DataFrame = {
+    val total = broadcast(exact.agg(count(lit(1)).as("n_exact")))
+    arms.map { case (arm, top) =>
+      top.select(col("q_id"), col("vec_id"))
+        .join(exact, Seq("q_id", "vec_id"), "left_semi")
+        .agg(count(lit(1)).as("n_hits"))
+        .crossJoin(total)
+        .select(arm.as("arm"), col("n_hits"), col("n_exact"),
+          expr("CAST((n_hits * 1000000) div n_exact AS BIGINT)").as("recall_ppm"))
+    }.reduce(_ unionAll _)
   }
 
   /** D1: brute-force cosine top-k of every corpus vector against each
@@ -194,33 +325,7 @@ object Similarity {
   def qCosineTopK(s: SparkSession, dir: String): DataFrame = {
     val k = 10
     val e = emb(s, dir)
-    val st = collectQueries(e)
-    val bc = s.sparkContext.broadcast(st)
-
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val q = bc.value
-        val nq = q.qids.length
-        val heaps = new TopKHeaps(nq, k)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          var n2 = 0.0; var i = 0
-          while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(n2)
-          var qi = 0
-          while (qi < nq) {
-            val qvv = q.qv(qi)
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += qvv(j) * v(j); j += 1 }
-            heaps.insert(qi, d / (q.qnorm(qi) * nrm), vid)
-            qi += 1
-          }
-        }
-        heaps.emit(q.qids)
-      }(Encoders.row(localTopKSchema))
-
-    globalTopK(locals, k)
+    globalTopK(cosineScan(e, collectQueries(e), k), k)
   }
 
   /** D30: FILTERED vector search + the post-filter-loss census — the
@@ -249,47 +354,29 @@ object Similarity {
       .select(col("vec_id"), col("label")).collect()
       .sortBy(_.getLong(0)).map(_.getInt(1))
     val bc = s.sparkContext.broadcast((st, qLabels))
-    val armSchema = StructType(Seq(
-      StructField("arm", IntegerType, nullable = false),
-      StructField("q_id", LongType, nullable = false),
-      StructField("vec_id", LongType, nullable = false),
-      StructField("sim", DoubleType, nullable = false)))
-    val locals = fanOut(e.select(col("vec_id"), col("v"), col("label")))
-      .mapPartitions { it =>
-        val (q, ql) = bc.value
-        val nq = q.qids.length
-        val hu = new TopKHeaps(nq, k) // unfiltered arm
-        val hf = new TopKHeaps(nq, k) // label-filtered arm
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          val lab = row.getInt(2)
-          var n2 = 0.0; var i = 0
-          while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(n2)
-          var qi = 0
-          while (qi < nq) {
-            val qvv = q.qv(qi)
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += qvv(j) * v(j); j += 1 }
-            val sim = d / (q.qnorm(qi) * nrm)
-            hu.insert(qi, sim, vid)
-            if (lab == ql(qi)) hf.insert(qi, sim, vid)
-            qi += 1
-          }
+    // the label predicate runs INSIDE the scan, so this kernel reads its
+    // own (vec_id, v, label) rows instead of heapScan's (vec_id, v)
+    val locals = topKRows(fanOut(e.select(col("vec_id"), col("v"), col("label")))) { it =>
+      val (q, ql) = bc.value
+      val nq = q.qids.length
+      val heaps = Array.fill(2)(new TopKHeaps(nq, k)) // arm 0 unfiltered, 1 label-filtered
+      it.foreach { row =>
+        val vid = row.getLong(0)
+        val v = vectorAt(row, 1, vid)
+        val lab = row.getInt(2)
+        val nrm = norm(v)
+        var qi = 0
+        while (qi < nq) {
+          val sim = q.cosine(qi, v, nrm)
+          heaps(0).insert(qi, sim, vid)
+          if (lab == ql(qi)) heaps(1).insert(qi, sim, vid)
+          qi += 1
         }
-        hu.emit(q.qids).map(r =>
-          Row(0, r.getLong(0), r.getLong(1), r.getDouble(2))) ++
-          hf.emit(q.qids).map(r =>
-            Row(1, r.getLong(0), r.getLong(1), r.getDouble(2)))
-      }(Encoders.row(armSchema))
-    val w = Window.partitionBy(col("arm"), col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val ranked = graft.core.Materialize.pin(
-      locals.withColumn("rank", row_number().over(w)).filter(col("rank") <= k))
-    val filteredTop = ranked.filter(col("arm") === 1)
-      .select(col("q_id"), col("vec_id"),
-              col("rank").cast("long").as("rank"), dec4(col("sim")).as("sim"))
+      }
+      heaps.indices.iterator.flatMap(a => heaps(a).emit(a, q.qids))
+    }
+    val ranked = graft.core.Materialize.pin(globalTopK(locals, k, byArm = true))
+    val filteredTop = ranked.filter(col("arm") === 1).drop("arm")
     val unfTop = ranked.filter(col("arm") === 0)
       .select(col("q_id").as("u_q"), col("vec_id").as("u_v"))
     import scala.jdk.CollectionConverters._
@@ -351,23 +438,14 @@ object Similarity {
     // denominator agg — unpinned it would brute-force the corpus twice
     val exact = graft.core.Materialize.pin(
       qCosineTopK(s, dir).select(col("q_id"), col("vec_id")))
-    val total = broadcast(exact.agg(count(lit(1)).as("n_exact")))
-    val joined = ann.select(col("q_id"), col("vec_id"))
-      .join(exact, Seq("q_id", "vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .crossJoin(total)
+    val row = recallRows(exact, Seq(lit(name) -> ann))
+    val ok = (col("n_hits").cast("double") / col("n_exact") >= lit(floor))
+      .cast("int").as("recall_ok")
     if (pinValues)
-      joined.select(lit(name).as("method"),
-        col("n_hits").cast("long").as("n_hits"),
-        col("n_exact").cast("long").as("n_exact"),
-        expr("CAST((n_hits * 1000000) div n_exact AS BIGINT)")
-          .as("recall_ppm"),
-        (col("n_hits").cast("double") / col("n_exact") >= lit(floor))
-          .cast("int").as("recall_ok"))
+      row.select(col("arm").as("method"), col("n_hits"), col("n_exact"),
+        col("recall_ppm"), ok)
     else
-      joined.select(lit(name).as("method"),
-        (col("n_hits").cast("double") / col("n_exact") >= lit(floor))
-          .cast("int").as("recall_ok"))
+      row.select(col("arm").as("method"), ok)
   }
 
   /** D13 (split): per-family recall contracts — floors are the r11
@@ -421,27 +499,8 @@ object Similarity {
     * semantic arm and D20's two retrieval passes.
     */
   private def singleProbeTopK(e: DataFrame, probe: Array[Double],
-                              k: Int): DataFrame = {
-    var qn2 = 0.0
-    var i = 0
-    while (i < probe.length) { qn2 += probe(i) * probe(i); i += 1 }
-    val bc = e.sparkSession.sparkContext.broadcast((probe, math.sqrt(qn2)))
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (qv, qn) = bc.value
-        val heaps = new TopKHeaps(1, k)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          var n2 = 0.0; var j = 0
-          while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-          var d = 0.0; j = 0
-          while (j < v.length) { d += qv(j) * v(j); j += 1 }
-          heaps.insert(0, d / (qn * math.sqrt(n2)), row.getLong(0))
-        }
-        heaps.emit(Array(0L))
-      }(Encoders.row(localTopKSchema))
-    globalTopK(locals, k)
-  }
+                              k: Int): DataFrame =
+    globalTopK(cosineScan(e, new QueryState(Array(0L), Array(probe)), k), k)
 
   /** The D18–D20 probe: vector 0, an O(d) driver collect. */
   private def probe0(e: DataFrame): Array[Double] =
@@ -524,71 +583,52 @@ object Similarity {
     val e = emb(s, dir)
     val st = collectQueries(e)
     val bc = s.sparkContext.broadcast(st)
-    val prefixSchema = StructType(StructField("dims", LongType, nullable = false)
-      +: localTopKSchema.fields.toSeq)
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val q = bc.value
-        val nq = q.qids.length
-        // per-prefix query norms: ascending accumulation == fresh loop
-        val qn = dimsList.map { d =>
-          q.qv.map { a =>
-            var s2 = 0.0; var i = 0
-            while (i < d) { s2 += a(i) * a(i); i += 1 }
-            math.sqrt(s2)
+    // arm a is the prefix dimsList(a)
+    val locals = heapScan(e, st.qids, dimsList.toSeq.map(_ => k)) { heaps =>
+      val q = bc.value
+      val nq = q.qids.length
+      // per-prefix query norms: ascending accumulation == fresh loop
+      val qn = dimsList.map { d =>
+        q.qv.map { a =>
+          var s2 = 0.0; var i = 0
+          while (i < d) { s2 += a(i) * a(i); i += 1 }
+          math.sqrt(s2)
+        }
+      }
+      val nrm = new Array[Double](dimsList.length)
+      (vid, v) => {
+        var n2 = 0.0; var i = 0; var ci = 0
+        while (i < 64) {
+          n2 += v(i) * v(i); i += 1
+          if (ci < dimsList.length && i == dimsList(ci)) {
+            nrm(ci) = math.sqrt(n2); ci += 1
           }
         }
-        val heaps = dimsList.map(_ => new TopKHeaps(nq, k))
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          val nrm = new Array[Double](dimsList.length)
-          var n2 = 0.0; var i = 0; var ci = 0
-          while (i < 64) {
-            n2 += v(i) * v(i); i += 1
-            if (ci < dimsList.length && i == dimsList(ci)) {
-              nrm(ci) = math.sqrt(n2); ci += 1
+        var qi = 0
+        while (qi < nq) {
+          val qvv = q.qv(qi)
+          var d = 0.0; var j = 0; var cj = 0
+          while (j < 64) {
+            d += qvv(j) * v(j); j += 1
+            if (cj < dimsList.length && j == dimsList(cj)) {
+              heaps(cj).insert(qi, d / (qn(cj)(qi) * nrm(cj)), vid)
+              cj += 1
             }
           }
-          var qi = 0
-          while (qi < nq) {
-            val qvv = q.qv(qi)
-            var d = 0.0; var j = 0; var cj = 0
-            while (j < 64) {
-              d += qvv(j) * v(j); j += 1
-              if (cj < dimsList.length && j == dimsList(cj)) {
-                heaps(cj).insert(qi, d / (qn(cj)(qi) * nrm(cj)), vid)
-                cj += 1
-              }
-            }
-            qi += 1
-          }
+          qi += 1
         }
-        dimsList.indices.iterator.flatMap { ci =>
-          heaps(ci).emit(q.qids).map(r =>
-            Row(dimsList(ci).toLong, r.getLong(0), r.getLong(1), r.getDouble(2)))
-        }
-      }(Encoders.row(prefixSchema))
-    // global per-(dims, q_id) top-k merge — the globalTopK shape with
-    // dims in the partition key; only (dims, q_id, vec_id) survive
-    val w = Window.partitionBy(col("dims"), col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
+      }
+    }
+    // global per-(prefix, q_id) top-k; only (arm, q_id, vec_id) survive
     val topk = graft.core.Materialize.pin(
-      locals.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("dims"), col("q_id"), col("vec_id")))
-    val exact = topk.filter(col("dims") === 64L).select(col("q_id"), col("vec_id"))
-    val total = exact.agg(count(lit(1)).as("n_exact"))
-    val out = Seq(8, 16, 32).map { d =>
-      topk.filter(col("dims") === d.toLong).select(col("q_id"), col("vec_id"))
-        .join(exact, Seq("q_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(total))
-        .select(lit(d.toLong).as("dims"), col("hits"), col("n_exact"),
-                expr("CAST((hits * 1000000) div n_exact AS BIGINT)")
-                  .as("recall_ppm"))
-    }.reduce(_ unionAll _)
-    val pinned = graft.core.Materialize.pin(out)
+      globalTopK(locals, k, byArm = true).select(col("arm"), col("q_id"), col("vec_id")))
+    val exact = topk.filter(col("arm") === dimsList.length - 1)
+      .select(col("q_id"), col("vec_id"))
+    val arms = (0 until dimsList.length - 1).map(a =>
+      lit(dimsList(a).toLong) -> topk.filter(col("arm") === a))
+    val pinned = graft.core.Materialize.pin(recallRows(exact, arms)
+      .select(col("arm").as("dims"), col("n_hits").as("hits"), col("n_exact"),
+        col("recall_ppm")))
     graft.core.Materialize.release(topk)
     pinned
   }
@@ -1015,14 +1055,13 @@ object Similarity {
         StructField("pcnt", LongType, nullable = false),
         StructField("psum", ArrayType(DoubleType, containsNull = false),
           nullable = false)))
-      fanOut(e.select(col("v"))).mapPartitions { it =>
+      fanOut(e.select(col("vec_id"), col("v"))).mapPartitions { it =>
         val cs = bc.value
         val nc = cs.length
         val cnt = new Array[Long](nc)
         val sums = Array.fill(nc)(new Array[Double](nDims))
         it.foreach { row =>
-          require(!row.isNullAt(0), "non-null embeddings.v violated in k-means assignment")
-          val v = row.getSeq[Double](0).toArray
+          val v = vectorAt(row, 1, row.getLong(0))
           var best = 0; var bestD = Double.PositiveInfinity
           var ci = 0
           while (ci < nc) {
@@ -1098,9 +1137,7 @@ object Similarity {
     */
   def ivfCentroids(nCells: Int = 16, dim: Int = 64): Array[Array[Double]] =
     gaussianPlanes(nCells, dim, tag = "ivf|").map { c =>
-      var n2 = 0.0; var j = 0
-      while (j < dim) { n2 += c(j) * c(j); j += 1 }
-      val nrm = math.sqrt(n2)
+      val nrm = norm(c)
       c.map(_ / nrm)
     }
 
@@ -1111,13 +1148,81 @@ object Similarity {
     var best = 0; var bestD = Double.NegativeInfinity
     var ci = 0
     while (ci < cents.length) {
-      val cv = cents(ci)
-      var d = 0.0; var j = 0
-      while (j < v.length) { d += cv(j) * v(j); j += 1 }
+      val d = dot(cents(ci), v)
       if (d > bestD) { bestD = d; best = ci }
       ci += 1
     }
     best
+  }
+
+  /** A vector's `n` nearest cells by (dot DESC, cell id) — the D6 probe
+    * rule, and the D35 multi-assignment rule. */
+  private def topCells(cents: Array[Array[Double]], v: Array[Double], n: Int): Array[Int] = {
+    val dots = cents.map(dot(_, v))
+    cents.indices.sortBy(ci => (-dots(ci), ci)).take(n).toArray
+  }
+
+  /** IVF probing: cell -> the probes (query indexes, ascending) whose
+    * `nProbe` nearest cells include it. */
+  private def cellProbes(cents: Array[Array[Double]], qv: Array[Array[Double]],
+                         nProbe: Int): Array[Array[Int]] = {
+    val probing = Array.fill(cents.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
+    qv.zipWithIndex.foreach { case (v, qi) =>
+      topCells(cents, v, nProbe).foreach(c => probing(c) += qi)
+    }
+    probing.map(_.toArray)
+  }
+
+  /** PQ layout (D8/D8b/D17): 8 subspaces of 8 dims, 16 codes each. */
+  private val PqSub = 8
+  private val PqSubDim = 8
+  private val PqCodes = 16
+
+  /** The code of `x`'s subspace `sIdx`: the nearest of its 16 codes by
+    * squared distance, strict < so ties keep the LOWEST code index —
+    * mirrors the oracle's ROW_NUMBER (ORDER BY d, ci); ranking by d²
+    * equals ranking by the oracle's sqrt (monotone).
+    */
+  private def pqCode(cb: Array[Array[Double]], x: Array[Double], sIdx: Int): Int = {
+    var best = 0; var bestD = Double.PositiveInfinity
+    var ci = 0
+    while (ci < PqCodes) {
+      val cv = cb(sIdx * PqCodes + ci)
+      var d2 = 0.0; var j = 0
+      while (j < PqSubDim) {
+        val diff = x(sIdx * PqSubDim + j) - cv(j)
+        d2 += diff * diff
+        j += 1
+      }
+      if (d2 < bestD) { bestD = d2; best = ci }
+      ci += 1
+    }
+    best
+  }
+
+  /** PQ encode + reconstruct: `recon` becomes x's codes' centroids. */
+  private def pqReconstruct(cb: Array[Array[Double]], x: Array[Double],
+                            recon: Array[Double]): Unit = {
+    var sIdx = 0
+    while (sIdx < PqSub) {
+      System.arraycopy(cb(sIdx * PqCodes + pqCode(cb, x, sIdx)), 0, recon,
+        sIdx * PqSubDim, PqSubDim)
+      sIdx += 1
+    }
+  }
+
+  /** ADC score: minus the Euclidean distance of a query (or query
+    * residual) to a reconstruction, index-ascending — TopKHeaps orders
+    * sim DESC, so desc(-d) == asc(d) with ties still to the lower
+    * vec_id; the sqrt is list_distance parity with the oracle. */
+  private def adcSim(q: Array[Double], recon: Array[Double]): Double = {
+    var d2 = 0.0; var j = 0
+    while (j < recon.length) {
+      val diff = q(j) - recon(j)
+      d2 += diff * diff
+      j += 1
+    }
+    -math.sqrt(d2)
   }
 
   /** D17: IVF-PQ composite ANN (IVFADC, Jégou et al. TPAMI'11 §IV) —
@@ -1137,111 +1242,34 @@ object Similarity {
     */
   def qAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val k = 10
-    val nCells = 16
     val nProbe = 2
     val dim = 64
-    val nSub = 8
-    val subDim = 8
-    val nCodes = 16
     val e = emb(s, dir)
     val nCand = scaledCand(e, 50)
-    val cents = ivfCentroids(nCells, dim)
-    val cb = gaussianPlanes(nSub * nCodes, subDim, tag = "pq|")
+    val cents = ivfCentroids(16, dim)
+    val cb = gaussianPlanes(PqSub * PqCodes, PqSubDim, tag = "pq|")
     val qs = collectQueries(e)
-    def topCells(v: Array[Double], n: Int): Array[Int] = {
-      val dots = Array.tabulate(nCells) { ci =>
-        val cv = cents(ci)
-        var d = 0.0; var j = 0
-        while (j < v.length) { d += cv(j) * v(j); j += 1 }
-        d
-      }
-      (0 until nCells).sortBy(ci => (-dots(ci), ci)).take(n).toArray
-    }
     // cell -> (query index, query residual vs THAT cell's centroid)
-    val probing = Array.fill(nCells)(
-      scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Double])])
-    qs.qv.zipWithIndex.foreach { case (v, qi) =>
-      topCells(v, nProbe).foreach { c =>
-        probing(c) += ((qi, Array.tabulate(dim)(j => v(j) - cents(c)(j))))
+    val probing = cellProbes(cents, qs.qv, nProbe).zipWithIndex.map { case (qis, c) =>
+      qis.map(qi => (qi, Array.tabulate(dim)(j => qs.qv(qi)(j) - cents(c)(j))))
+    }
+    val bc = s.sparkContext.broadcast((cents, cb, probing))
+    val locals = heapScan(e, qs.qids, Seq(nCand)) { heaps =>
+      val (bCents, bCb, bProbing) = bc.value
+      val res   = new Array[Double](dim)
+      val recon = new Array[Double](dim)
+      (vid, v) => {
+        val cell = ivfCell(bCents, v)
+        val plist = bProbing(cell)
+        if (plist.nonEmpty) {
+          var j = 0
+          while (j < dim) { res(j) = v(j) - bCents(cell)(j); j += 1 }
+          pqReconstruct(bCb, res, recon) // the D8 kernel on the residual
+          plist.foreach { case (qi, qres) => heaps(0).insert(qi, adcSim(qres, recon), vid) }
+        }
       }
     }
-    val probingArr = probing.map(_.toArray)
-    val bc = s.sparkContext.broadcast(
-      (qs.qids, qs.qv, qs.qnorm, cents, cb, probingArr))
-
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, _, _, bCents, bCb, bProbing) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, nCand)
-        val res   = new Array[Double](dim)
-        val recon = new Array[Double](dim)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          val cell = ivfCell(bCents, v)
-          val plist = bProbing(cell)
-          if (plist.nonEmpty) {
-            var j = 0
-            while (j < dim) { res(j) = v(j) - bCents(cell)(j); j += 1 }
-            // residual PQ encode + reconstruct (the D8 kernel on res)
-            var sIdx = 0
-            while (sIdx < nSub) {
-              var best = 0; var bestD = Double.PositiveInfinity
-              var ci = 0
-              while (ci < nCodes) {
-                val cv = bCb(sIdx * nCodes + ci)
-                var d2 = 0.0; var jj = 0
-                while (jj < subDim) {
-                  val diff = res(sIdx * subDim + jj) - cv(jj)
-                  d2 += diff * diff
-                  jj += 1
-                }
-                if (d2 < bestD) { bestD = d2; best = ci }
-                ci += 1
-              }
-              System.arraycopy(bCb(sIdx * nCodes + best), 0, recon,
-                sIdx * subDim, subDim)
-              sIdx += 1
-            }
-            plist.foreach { case (qi, qres) =>
-              var d2 = 0.0; var jj = 0
-              while (jj < dim) {
-                val diff = qres(jj) - recon(jj)
-                d2 += diff * diff
-                jj += 1
-              }
-              heaps.insert(qi, -math.sqrt(d2), vid) // sqrt: list_distance parity
-            }
-          }
-        }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val cands = locals
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= nCand)
-      .select(col("q_id"), col("vec_id"))
-
-    val joined = e.select(col("vec_id"), col("v"))
-      .join(broadcast(cands), "vec_id")
-    val rerank = joined.select(col("q_id"), col("vec_id"), col("v"))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm, _, _, _) = bc.value
-        val qIdx = bQids.zipWithIndex.toMap
-        it.map { row =>
-          val qi = qIdx(row.getLong(0))
-          val v = row.getSeq[Double](2).toArray
-          val qvv = bQv(qi)
-          var d = 0.0; var n2 = 0.0; var j = 0
-          while (j < v.length) { d += qvv(j) * v(j); n2 += v(j) * v(j); j += 1 }
-          Row(row.getLong(0), row.getLong(1), d / (bQnorm(qi) * math.sqrt(n2)))
-        }
-      }(Encoders.row(localTopKSchema))
-
-    globalTopK(rerank, k)
+    exactRerank(e, qs, locals, nCand, k)
   }
 
   /** D31: IVF with MULTI-ASSIGNMENT (spilled assignment — the modern
@@ -1539,15 +1567,8 @@ object Similarity {
     // + global window make the published edges IDENTICAL.
     val nB = 4
     val assigned = ds.flatMap { case (id, v) =>
-      val cs = bcC.value
-      val dots = Array.tabulate(cs.length) { ci =>
-        val cv = cs(ci)
-        var d = 0.0; var j = 0
-        while (j < v.length) { d += cv(j) * v(j); j += 1 }
-        d
-      }
       val home = (id % nB).toInt
-      (0 until cs.length).sortBy(ci => (-dots(ci), ci)).take(assignWidth)
+      topCells(bcC.value, v, assignWidth).toSeq
         .flatMap(c => (0 until nB).map(o =>
           ((c, math.min(home, o), math.max(home, o)), id, v)))
     }
@@ -1587,7 +1608,7 @@ object Similarity {
           }
           p += 1
         }
-        heaps.emit(ids).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        heaps.emit(0, ids).map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
       }
       .toDF("q_id", "nb_id", "sim")
     // a pair sharing several assigned cells appears once per shared
@@ -1629,142 +1650,64 @@ object Similarity {
 
   def qAnnIvfMulti(s: SparkSession, dir: String): DataFrame = {
     val k = 10
-    val nCells = 16
-    val nProbe = 2
-    val dim = 64
     val e = emb(s, dir)
-    val cents = ivfCentroids(nCells, dim)
-    def topCells(v: Array[Double], n: Int): Array[Int] = {
-      val dots = Array.tabulate(nCells) { ci =>
-        val cv = cents(ci)
-        var d = 0.0; var j = 0
-        while (j < v.length) { d += cv(j) * v(j); j += 1 }
-        d
-      }
-      (0 until nCells).sortBy(ci => (-dots(ci), ci)).take(n).toArray
-    }
+    val cents = ivfCentroids()
     val qs = collectQueries(e)
-    val (qids, qv, qnorm) = (qs.qids, qs.qv, qs.qnorm)
-    val probing = Array.fill(nCells)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    qv.zipWithIndex.foreach { case (v, qi) =>
-      topCells(v, nProbe).foreach(c => probing(c) += qi)
-    }
-    val probingArr = probing.map(_.toArray) // qi-ascending by construction
-    val bc = s.sparkContext.broadcast((qids, qv, qnorm, cents, probingArr))
-
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm, bCents, bProbing) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, k)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          // corpus top-2 cells: (dot DESC, cell id) — the D6 tie rule
-          var c1 = -1; var d1 = Double.NegativeInfinity
-          var c2 = -1; var d2 = Double.NegativeInfinity
-          var ci = 0
-          while (ci < bCents.length) {
-            val cv = bCents(ci)
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += cv(j) * v(j); j += 1 }
-            if (d > d1) { d2 = d1; c2 = c1; d1 = d; c1 = ci }
-            else if (d > d2) { d2 = d; c2 = ci }
-            ci += 1
-          }
-          val q1 = bProbing(c1)
-          val q2 = if (c2 >= 0) bProbing(c2) else Array.empty[Int]
-          if (q1.nonEmpty || q2.nonEmpty) {
-            var n2 = 0.0; var j = 0
-            while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-            val nrm = math.sqrt(n2)
-            // merge the two qi-sorted probe lists, deduping queries
-            // that probe BOTH cells (a double insert would duplicate
-            // the vector in that query's heap)
-            var i1 = 0; var i2 = 0
-            while (i1 < q1.length || i2 < q2.length) {
-              val qi =
-                if (i2 >= q2.length || (i1 < q1.length && q1(i1) <= q2(i2))) {
-                  val x = q1(i1); i1 += 1
-                  if (i2 < q2.length && q2(i2) == x) i2 += 1
-                  x
-                } else { val x = q2(i2); i2 += 1; x }
-              val qvv = bQv(qi)
-              var d = 0.0; var jj = 0
-              while (jj < v.length) { d += qvv(jj) * v(jj); jj += 1 }
-              heaps.insert(qi, d / (bQnorm(qi) * nrm), vid)
-            }
+    val bc = s.sparkContext.broadcast((qs, cents, cellProbes(cents, qs.qv, 2)))
+    val locals = heapScan(e, qs.qids, Seq(k)) { heaps =>
+      val (q, bCents, bProbing) = bc.value
+      (vid, v) => {
+        // corpus top-2 cells: (dot DESC, cell id) — the D6 tie rule
+        var c1 = -1; var d1 = Double.NegativeInfinity
+        var c2 = -1; var d2 = Double.NegativeInfinity
+        var ci = 0
+        while (ci < bCents.length) {
+          val d = dot(bCents(ci), v)
+          if (d > d1) { d2 = d1; c2 = c1; d1 = d; c1 = ci }
+          else if (d > d2) { d2 = d; c2 = ci }
+          ci += 1
+        }
+        val q1 = bProbing(c1)
+        val q2 = if (c2 >= 0) bProbing(c2) else Array.empty[Int]
+        if (q1.nonEmpty || q2.nonEmpty) {
+          val nrm = norm(v)
+          // merge the two qi-sorted probe lists, deduping queries
+          // that probe BOTH cells (a double insert would duplicate
+          // the vector in that query's heap)
+          var i1 = 0; var i2 = 0
+          while (i1 < q1.length || i2 < q2.length) {
+            val qi =
+              if (i2 >= q2.length || (i1 < q1.length && q1(i1) <= q2(i2))) {
+                val x = q1(i1); i1 += 1
+                if (i2 < q2.length && q2(i2) == x) i2 += 1
+                x
+              } else { val x = q2(i2); i2 += 1; x }
+            heaps(0).insert(qi, q.cosine(qi, v, nrm), vid)
           }
         }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-
+      }
+    }
     globalTopK(locals, k)
   }
 
-  def qAnnIvf(s: SparkSession, dir: String): DataFrame = annIvf(s, dir, 2)
-
-  /** The D6 IVF kernel with a caller-chosen probe width (D32 sweeps
-    * it; D6 publishes the production nProbe=2 point). */
-  private def annIvf(s: SparkSession, dir: String, nProbe: Int): DataFrame = {
+  /** D6 at the production probe width nProbe = 2 (D32 sweeps it). */
+  def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
     val k = 10
-    val nCells = 16
-    val dim = 64
     val e = emb(s, dir)
-    val cents = ivfCentroids(nCells, dim)
-    def topCells(v: Array[Double], n: Int): Array[Int] = {
-      val dots = Array.tabulate(nCells) { ci =>
-        val cv = cents(ci)
-        var d = 0.0; var j = 0
-        while (j < v.length) { d += cv(j) * v(j); j += 1 }
-        d
-      }
-      (0 until nCells).sortBy(ci => (-dots(ci), ci)).take(n).toArray
-    }
+    val cents = ivfCentroids()
     val qs = collectQueries(e)
-    val (qids, qv, qnorm) = (qs.qids, qs.qv, qs.qnorm)
     // cell -> query indexes probing it
-    val probing = Array.fill(nCells)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    qv.zipWithIndex.foreach { case (v, qi) =>
-      topCells(v, nProbe).foreach(c => probing(c) += qi)
-    }
-    val probingArr = probing.map(_.toArray)
-    val bc = s.sparkContext.broadcast((qids, qv, qnorm, cents, probingArr))
-
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm, bCents, bProbing) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, k)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          // corpus cell = argmax centroid dot (tie -> lowest cell id)
-          var best = 0; var bestD = Double.NegativeInfinity
-          var ci = 0
-          while (ci < bCents.length) {
-            val cv = bCents(ci)
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += cv(j) * v(j); j += 1 }
-            if (d > bestD) { bestD = d; best = ci }
-            ci += 1
-          }
-          val qs = bProbing(best)
-          if (qs.nonEmpty) {
-            var n2 = 0.0; var j = 0
-            while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-            val nrm = math.sqrt(n2)
-            qs.foreach { qi =>
-              val qvv = bQv(qi)
-              var d = 0.0; var jj = 0
-              while (jj < v.length) { d += qvv(jj) * v(jj); jj += 1 }
-              heaps.insert(qi, d / (bQnorm(qi) * nrm), vid)
-            }
-          }
+    val bc = s.sparkContext.broadcast((qs, cents, cellProbes(cents, qs.qv, 2)))
+    val locals = heapScan(e, qs.qids, Seq(k)) { heaps =>
+      val (q, bCents, bProbing) = bc.value
+      (vid, v) => {
+        val qis = bProbing(ivfCell(bCents, v))
+        if (qis.nonEmpty) {
+          val nrm = norm(v)
+          qis.foreach(qi => heaps(0).insert(qi, q.cosine(qi, v, nrm), vid))
         }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-
+      }
+    }
     globalTopK(locals, k)
   }
 
@@ -1784,7 +1727,7 @@ object Similarity {
     */
   def qIvfProbeSweep(s: SparkSession, dir: String): DataFrame = {
     // r15 optimization (guide §1.2 "remove unnecessary passes"): the
-    // exact baseline + three annIvf arms were FOUR full corpus passes;
+    // exact baseline + three IVF arms were FOUR full corpus passes;
     // probe sets are nested and the exact arm computes every
     // query·vector dot anyway, so one pass maintains all four heap
     // sets — the exact arm's dot products are computed once and the
@@ -1792,106 +1735,55 @@ object Similarity {
     // ascending dot/norm sequences as the per-arm kernels, same
     // (sim DESC, vec_id) heap comparator).
     val k = 10
-    val nCells = 16
-    val dim = 64
     val probeWidths = Array(1, 2, 4)
     val e = emb(s, dir)
-    val cents = ivfCentroids(nCells, dim)
-    def topCells(v: Array[Double], n: Int): Array[Int] = {
-      val dots = Array.tabulate(nCells) { ci =>
-        val cv = cents(ci)
-        var d = 0.0; var j = 0
-        while (j < v.length) { d += cv(j) * v(j); j += 1 }
-        d
-      }
-      (0 until nCells).sortBy(ci => (-dots(ci), ci)).take(n).toArray
-    }
+    val cents = ivfCentroids()
     val qs = collectQueries(e)
     val nq = qs.qids.length
     // per cell: qi-ascending (query, armMask) lists — bit a set when
     // arm a's probe set (width probeWidths(a)) contains the cell
-    val maskByCell = Array.fill(nCells)(new Array[Int](nq))
-    for ((v, qi) <- qs.qv.zipWithIndex; ai <- probeWidths.indices;
-         c <- topCells(v, probeWidths(ai)))
+    val maskByCell = Array.fill(cents.length)(new Array[Int](nq))
+    for (ai <- probeWidths.indices;
+         (qis, c) <- cellProbes(cents, qs.qv, probeWidths(ai)).zipWithIndex; qi <- qis)
       maskByCell(c)(qi) |= (1 << ai)
     val cellLists: Array[(Array[Int], Array[Int])] = maskByCell.map { m =>
       val qis = (0 until nq).filter(m(_) != 0).toArray
       (qis, qis.map(m))
     }
-    val bc = s.sparkContext.broadcast(
-      (qs.qids, qs.qv, qs.qnorm, cents, cellLists))
+    val bc = s.sparkContext.broadcast((qs, cents, cellLists))
     val ExactArm = probeWidths.length
-    val armSchema = StructType(StructField("arm", LongType, nullable = false)
-      +: localTopKSchema.fields.toSeq)
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm, bCents, bCellLists) = bc.value
-        val heaps = Array.fill(probeWidths.length + 1)(new TopKHeaps(bQids.length, k))
-        val dBuf = new Array[Double](bQids.length)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          // corpus cell = argmax centroid dot (tie -> lowest cell id)
-          var best = 0; var bestD = Double.NegativeInfinity
-          var ci = 0
-          while (ci < bCents.length) {
-            val cv = bCents(ci)
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += cv(j) * v(j); j += 1 }
-            if (d > bestD) { bestD = d; best = ci }
-            ci += 1
-          }
-          var n2 = 0.0; var j = 0
-          while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-          val nrm = math.sqrt(n2)
-          // exact arm: every query, dots cached for the probe arms
-          var qi = 0
-          while (qi < bQids.length) {
-            val qvv = bQv(qi)
-            var d = 0.0; var jj = 0
-            while (jj < v.length) { d += qvv(jj) * v(jj); jj += 1 }
-            dBuf(qi) = d / (bQnorm(qi) * nrm)
-            heaps(ExactArm).insert(qi, dBuf(qi), vid)
-            qi += 1
-          }
-          val (qis, masks) = bCellLists(best)
-          var p = 0
-          while (p < qis.length) {
-            val q = qis(p); val m = masks(p)
-            var ai = 0
-            while (ai < probeWidths.length) {
-              if ((m & (1 << ai)) != 0) heaps(ai).insert(q, dBuf(q), vid)
-              ai += 1
-            }
-            p += 1
-          }
+    val locals = heapScan(e, qs.qids, Seq.fill(ExactArm + 1)(k)) { heaps =>
+      val (q, bCents, bCellLists) = bc.value
+      val dBuf = new Array[Double](nq)
+      (vid, v) => {
+        val nrm = norm(v)
+        // exact arm: every query, cosines cached for the probe arms
+        var qi = 0
+        while (qi < nq) {
+          dBuf(qi) = q.cosine(qi, v, nrm)
+          heaps(ExactArm).insert(qi, dBuf(qi), vid)
+          qi += 1
         }
-        heaps.indices.iterator.flatMap { ai =>
-          heaps(ai).emit(bQids).map(r =>
-            Row(ai.toLong, r.getLong(0), r.getLong(1), r.getDouble(2)))
+        val (qis, masks) = bCellLists(ivfCell(bCents, v))
+        var p = 0
+        while (p < qis.length) {
+          val qj = qis(p); val m = masks(p)
+          var ai = 0
+          while (ai < ExactArm) {
+            if ((m & (1 << ai)) != 0) heaps(ai).insert(qj, dBuf(qj), vid)
+            ai += 1
+          }
+          p += 1
         }
-      }(Encoders.row(armSchema))
-    val w = Window.partitionBy(col("arm"), col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
+      }
+    }
     val topk = graft.core.Materialize.pin(
-      locals.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("arm"), col("q_id"), col("vec_id")))
-    val exact = topk.filter(col("arm") === ExactArm.toLong)
-      .select(col("q_id"), col("vec_id"))
-    val total = broadcast(exact.agg(count(lit(1)).as("n_exact")))
-    val out = probeWidths.indices.map { ai =>
-      topk.filter(col("arm") === ai.toLong).select(col("q_id"), col("vec_id"))
-        .join(exact, Seq("q_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(total)
-        .select(lit(probeWidths(ai).toLong).as("n_probe"),
-          col("hits").cast("long").as("n_hits"),
-          col("n_exact").cast("long").as("n_exact"),
-          expr("CAST((hits * 1000000) div n_exact AS BIGINT)")
-            .as("recall_ppm"))
-    }.reduce(_ unionAll _)
-    val pinned = graft.core.Materialize.pin(out)
+      globalTopK(locals, k, byArm = true).select(col("arm"), col("q_id"), col("vec_id")))
+    val exact = topk.filter(col("arm") === ExactArm).select(col("q_id"), col("vec_id"))
+    val arms = probeWidths.indices.map(ai =>
+      lit(probeWidths(ai).toLong) -> topk.filter(col("arm") === ai))
+    val pinned = graft.core.Materialize.pin(recallRows(exact, arms)
+      .select(col("arm").as("n_probe"), col("n_hits"), col("n_exact"), col("recall_ppm")))
     graft.core.Materialize.release(topk)
     pinned
   }
@@ -1911,7 +1803,7 @@ object Similarity {
     * rerank (Jégou et al., TPAMI'11).
     */
   def qAnnPq(s: SparkSession, dir: String): DataFrame =
-    annPqWith(s, dir, gaussianPlanes(8 * 16, 8, tag = "pq|"),
+    annPqWith(s, dir, gaussianPlanes(PqSub * PqCodes, PqSubDim, tag = "pq|"),
       nCand = scaledCand(emb(s, dir), 50))
 
   /** D8b: PQ with TRAINED codebooks — the production form of D8
@@ -2152,8 +2044,7 @@ object Similarity {
 
   /** One-Lloyd-iteration PQ codebook training (see [[qAnnPqTrained]]). */
   def trainPqCodebook(e: DataFrame): Array[Array[Double]] = {
-    val nSub = 8; val subDim = 8; val nCodes = 16
-    val cb0 = gaussianPlanes(nSub * nCodes, subDim, tag = "pq|")
+    val cb0 = gaussianPlanes(PqSub * PqCodes, PqSubDim, tag = "pq|")
     val sess = e.sparkSession
     val bc = sess.sparkContext.broadcast(cb0)
     val assignSchema = StructType(Seq(
@@ -2164,26 +2055,13 @@ object Similarity {
         val cb = bc.value
         it.flatMap { row =>
           val v = row.getSeq[Double](1).toArray
-          (0 until nSub).map { sIdx =>
-            var best = 0; var bestD = Double.PositiveInfinity
-            var ci = 0
-            while (ci < nCodes) {
-              val cv = cb(sIdx * nCodes + ci)
-              var d2 = 0.0; var j = 0
-              while (j < subDim) {
-                val diff = v(sIdx * subDim + j) - cv(j)
-                d2 += diff * diff
-                j += 1
-              }
-              if (d2 < bestD) { bestD = d2; best = ci }
-              ci += 1
-            }
-            Row(sIdx * nCodes + best,
-              java.util.Arrays.copyOfRange(v, sIdx * subDim, (sIdx + 1) * subDim).toSeq)
+          (0 until PqSub).map { sIdx =>
+            Row(sIdx * PqCodes + pqCode(cb, v, sIdx),
+              java.util.Arrays.copyOfRange(v, sIdx * PqSubDim, (sIdx + 1) * PqSubDim).toSeq)
           }
         }
       }(Encoders.row(assignSchema))
-    // (code, component) means: ≤ nSub·nCodes·subDim = 1024 rows — a
+    // (code, component) means: ≤ PqSub·PqCodes·PqSubDim = 1024 rows — a
     // bounded fit collect, the scale posture of every other estimator
     val means = assigns.select(col("p"), posexplode(col("sub")))
       .groupBy(col("p"), col("pos"))
@@ -2212,88 +2090,25 @@ object Similarity {
   private def annPqWith(s: SparkSession, dir: String, cb: Array[Array[Double]],
                         nCand: Int): DataFrame = {
     val k = 10
-    val nSub = 8
-    val subDim = 8
-    val nCodes = 16
     val e = emb(s, dir)
     val qs = collectQueries(e)
-    val bc = s.sparkContext.broadcast((qs.qids, qs.qv, qs.qnorm, cb))
-
+    val bc = s.sparkContext.broadcast((qs, cb))
     // phase 1: encode + reconstruct + ADC per query, bounded heaps of
-    // the nCand best (smallest ADC). TopKHeaps orders sim DESC, so feed
-    // -distance: desc(-d) == asc(d), ties still to the lower vec_id.
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bQv, _, bCb) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, nCand)
-        val recon = new Array[Double](nSub * subDim)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          var sIdx = 0
-          while (sIdx < nSub) {
-            var best = 0; var bestD = Double.PositiveInfinity
-            var ci = 0
-            while (ci < nCodes) {
-              val cv = bCb(sIdx * nCodes + ci)
-              var d2 = 0.0; var j = 0
-              while (j < subDim) {
-                val diff = v(sIdx * subDim + j) - cv(j)
-                d2 += diff * diff
-                j += 1
-              }
-              // strict < keeps the LOWEST code index on ties — mirrors
-              // the oracle's ROW_NUMBER (ORDER BY d, ci); ranking by d²
-              // equals ranking by the oracle's sqrt (monotone)
-              if (d2 < bestD) { bestD = d2; best = ci }
-              ci += 1
-            }
-            val cv = bCb(sIdx * nCodes + best)
-            System.arraycopy(cv, 0, recon, sIdx * subDim, subDim)
-            sIdx += 1
-          }
-          var qi = 0
-          while (qi < nq) {
-            val qvv = bQv(qi)
-            var d2 = 0.0; var j = 0
-            while (j < recon.length) {
-              val diff = qvv(j) - recon(j)
-              d2 += diff * diff
-              j += 1
-            }
-            heaps.insert(qi, -math.sqrt(d2), vid) // sqrt: list_distance parity
-            qi += 1
-          }
+    // the nCand best (smallest ADC); phase 2: the exact-cosine rerank
+    // of candidate rows only
+    val locals = heapScan(e, qs.qids, Seq(nCand)) { heaps =>
+      val (q, bCb) = bc.value
+      val recon = new Array[Double](PqSub * PqSubDim)
+      (vid, v) => {
+        pqReconstruct(bCb, v, recon)
+        var qi = 0
+        while (qi < q.qids.length) {
+          heaps(0).insert(qi, adcSim(q.qv(qi), recon), vid)
+          qi += 1
         }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val cands = locals
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= nCand)
-      .select(col("q_id"), col("vec_id"))
-
-    // phase 2: exact-cosine rerank of candidate rows only (broadcast
-    // the tiny candidate set; the corpus side is a semi-join lookup)
-    val joined = e.select(col("vec_id"), col("v"))
-      .join(broadcast(cands), "vec_id")
-    val rerank = joined.select(col("q_id"), col("vec_id"), col("v"))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm, _) = bc.value
-        val qIdx = bQids.zipWithIndex.toMap
-        it.map { row =>
-          val qi = qIdx(row.getLong(0))
-          val v = row.getSeq[Double](2).toArray
-          val qvv = bQv(qi)
-          var d = 0.0; var n2 = 0.0; var j = 0
-          while (j < v.length) { d += qvv(j) * v(j); n2 += v(j) * v(j); j += 1 }
-          Row(row.getLong(0), row.getLong(1), d / (bQnorm(qi) * math.sqrt(n2)))
-        }
-      }(Encoders.row(localTopKSchema))
-
-    globalTopK(rerank, k)
+      }
+    }
+    exactRerank(e, qs, locals, nCand, k)
   }
 
   /** D16 quantizer — ONE shared derivation for probes (driver) and
@@ -2338,47 +2153,23 @@ object Similarity {
     val maxs = stats.map(_.getDouble(2))
     val qs = collectQueries(e)
     val pCodes = qs.qv.map(sqQuantize(mins, maxs, _))
-    val bc = s.sparkContext.broadcast((qs.qids, pCodes, mins, maxs))
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bPc, bMn, bMx) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, nCand)
-        it.foreach { row =>
-          val vid = row.getLong(0)
-          val cv = sqQuantize(bMn, bMx, row.getSeq[Double](1).toArray)
-          var qi = 0
-          while (qi < nq) {
-            val pc = bPc(qi)
-            var sc = 0L
-            var j = 0
-            while (j < cv.length) { sc += pc(j).toLong * cv(j); j += 1 }
-            heaps.insert(qi, sc.toDouble, vid)
-            qi += 1
-          }
+    val bc = s.sparkContext.broadcast((pCodes, mins, maxs))
+    val locals = heapScan(e, qs.qids, Seq(nCand)) { heaps =>
+      val (bPc, bMn, bMx) = bc.value
+      (vid, v) => {
+        val cv = sqQuantize(bMn, bMx, v)
+        var qi = 0
+        while (qi < bPc.length) {
+          val pc = bPc(qi)
+          var sc = 0L
+          var j = 0
+          while (j < cv.length) { sc += pc(j).toLong * cv(j); j += 1 }
+          heaps(0).insert(qi, sc.toDouble, vid)
+          qi += 1
         }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-    val wSq = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val cands = locals.withColumn("rn", row_number().over(wSq))
-      .filter(col("rn") <= nCand).select(col("q_id"), col("vec_id"))
-    val bcQ = s.sparkContext.broadcast((qs.qids, qs.qv, qs.qnorm))
-    val rerank = e.select(col("vec_id"), col("v"))
-      .join(broadcast(cands), "vec_id")
-      .select(col("q_id"), col("vec_id"), col("v"))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm) = bcQ.value
-        val qIdx = bQids.zipWithIndex.toMap
-        it.map { row =>
-          val qi = qIdx(row.getLong(0))
-          val v = row.getSeq[Double](2).toArray
-          val qvv = bQv(qi)
-          var d = 0.0; var n2 = 0.0; var j = 0
-          while (j < v.length) { d += qvv(j) * v(j); n2 += v(j) * v(j); j += 1 }
-          Row(row.getLong(0), row.getLong(1), d / (bQnorm(qi) * math.sqrt(n2)))
-        }
-      }(Encoders.row(localTopKSchema))
-    globalTopK(rerank, k)
+      }
+    }
+    exactRerank(e, qs, locals, nCand, k)
   }
 
   /** D26: nearest-neighbor similarity histogram — the τ-CALIBRATION
@@ -2554,44 +2345,19 @@ object Similarity {
     val k = 10
     val e = emb(s, dir)
     val qs = collectQueries(e)
-    val pCodes = qs.qv.map(signCode)
-    val bc = s.sparkContext.broadcast((qs.qids, pCodes))
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bPc) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, nCand)
-        it.foreach { row =>
-          val vid = row.getLong(0)
-          val cv = signCode(row.getSeq[Double](1).toArray)
-          var qi = 0
-          while (qi < nq) {
-            heaps.insert(qi, -java.lang.Long.bitCount(bPc(qi) ^ cv).toDouble, vid)
-            qi += 1
-          }
+    val bc = s.sparkContext.broadcast(qs.qv.map(signCode))
+    val locals = heapScan(e, qs.qids, Seq(nCand)) { heaps =>
+      val bPc = bc.value
+      (vid, v) => {
+        val cv = signCode(v)
+        var qi = 0
+        while (qi < bPc.length) {
+          heaps(0).insert(qi, -java.lang.Long.bitCount(bPc(qi) ^ cv).toDouble, vid)
+          qi += 1
         }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-    val wB = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val cands = locals.withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= nCand).select(col("q_id"), col("vec_id"))
-    val bcQ = s.sparkContext.broadcast((qs.qids, qs.qv, qs.qnorm))
-    val rerank = e.select(col("vec_id"), col("v"))
-      .join(broadcast(cands), "vec_id")
-      .select(col("q_id"), col("vec_id"), col("v"))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm) = bcQ.value
-        val qIdx = bQids.zipWithIndex.toMap
-        it.map { row =>
-          val qi = qIdx(row.getLong(0))
-          val v = row.getSeq[Double](2).toArray
-          val qvv = bQv(qi)
-          var d = 0.0; var n2 = 0.0; var j = 0
-          while (j < v.length) { d += qvv(j) * v(j); n2 += v(j) * v(j); j += 1 }
-          Row(row.getLong(0), row.getLong(1), d / (bQnorm(qi) * math.sqrt(n2)))
-        }
-      }(Encoders.row(localTopKSchema))
-    globalTopK(rerank, k)
+      }
+    }
+    exactRerank(e, qs, locals, nCand, k)
   }
 
   /** D27: candidate-budget recall sweep for the D24 binary index —
@@ -2619,86 +2385,36 @@ object Similarity {
     val ncMax = budgets.max
     val e = emb(s, dir)
     val qs = collectQueries(e)
-    val pCodes = qs.qv.map(signCode)
-    val bc = s.sparkContext.broadcast((qs.qids, pCodes, qs.qv, qs.qnorm))
-    val armSchema = StructType(StructField("arm", LongType, nullable = false)
-      +: localTopKSchema.fields.toSeq)
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bPc, bQv, bQnorm) = bc.value
-        val nq = bQids.length
-        val hamHeaps = new TopKHeaps(nq, ncMax)
-        val exHeaps = new TopKHeaps(nq, k)
-        it.foreach { row =>
-          val vid = row.getLong(0)
-          val v = row.getSeq[Double](1).toArray
-          val cv = signCode(v)
-          var n2 = 0.0; var j = 0
-          while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-          val nrm = math.sqrt(n2)
-          var qi = 0
-          while (qi < nq) {
-            hamHeaps.insert(qi, -java.lang.Long.bitCount(bPc(qi) ^ cv).toDouble, vid)
-            val qvv = bQv(qi)
-            var d = 0.0; var jj = 0
-            while (jj < v.length) { d += qvv(jj) * v(jj); jj += 1 }
-            exHeaps.insert(qi, d / (bQnorm(qi) * nrm), vid)
-            qi += 1
-          }
+    val bc = s.sparkContext.broadcast((qs, qs.qv.map(signCode)))
+    // arm 0: hamming candidates, arm 1: the exact cosine baseline
+    val locals = heapScan(e, qs.qids, Seq(ncMax, k)) { heaps =>
+      val (q, bPc) = bc.value
+      (vid, v) => {
+        val cv = signCode(v)
+        val nrm = norm(v)
+        var qi = 0
+        while (qi < bPc.length) {
+          heaps(0).insert(qi, -java.lang.Long.bitCount(bPc(qi) ^ cv).toDouble, vid)
+          heaps(1).insert(qi, q.cosine(qi, v, nrm), vid)
+          qi += 1
         }
-        hamHeaps.emit(bQids).map(r =>
-          Row(0L, r.getLong(0), r.getLong(1), r.getDouble(2))) ++
-          exHeaps.emit(bQids).map(r =>
-            Row(1L, r.getLong(0), r.getLong(1), r.getDouble(2)))
-      }(Encoders.row(armSchema))
-    val wA = Window.partitionBy(col("arm"), col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val ranked = graft.core.Materialize.pin(
-      locals.withColumn("rn", row_number().over(wA))
-        .filter((col("arm") === 0L && col("rn") <= ncMax) ||
-                (col("arm") === 1L && col("rn") <= k))
-        .select(col("arm"), col("q_id"), col("vec_id"),
-          col("rn").cast("long").as("rn")))
-    val exact = ranked.filter(col("arm") === 1L).select(col("q_id"), col("vec_id"))
-    val cands = ranked.filter(col("arm") === 0L)
-      .select(col("q_id"), col("vec_id"), col("rn"))
-    // one shared exact-cosine rerank of the hamming top-50 candidates
-    val bcQ = s.sparkContext.broadcast((qs.qids, qs.qv, qs.qnorm))
-    val rerankSchema = StructType(localTopKSchema.fields.toSeq
-      :+ StructField("rn", LongType, nullable = false))
-    val rerank = graft.core.Materialize.pin(
-      e.select(col("vec_id"), col("v"))
-        .join(broadcast(cands), "vec_id")
-        .select(col("q_id"), col("vec_id"), col("v"), col("rn"))
-        .mapPartitions { it =>
-          val (bQids, bQv, bQnorm) = bcQ.value
-          val qIdx = bQids.zipWithIndex.toMap
-          it.map { row =>
-            val qi = qIdx(row.getLong(0))
-            val v = row.getSeq[Double](2).toArray
-            val qvv = bQv(qi)
-            var d = 0.0; var n2 = 0.0; var j = 0
-            while (j < v.length) { d += qvv(j) * v(j); n2 += v(j) * v(j); j += 1 }
-            Row(row.getLong(0), row.getLong(1), d / (bQnorm(qi) * math.sqrt(n2)),
-              row.getLong(3))
-          }
-        }(Encoders.row(rerankSchema)))
-    val total = broadcast(exact.agg(count(lit(1)).as("n_exact")))
-    val out = budgets.map { nc =>
-      globalTopK(rerank.filter(col("rn") <= nc.toLong)
-          .select(col("q_id"), col("vec_id"), col("sim")), k)
-        .select(col("q_id"), col("vec_id"))
-        .join(exact, Seq("q_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(total)
-        .select(lit(nc.toLong).as("n_cand"),
-          col("hits").cast("long").as("n_hits"),
-          col("n_exact").cast("long").as("n_exact"),
-          expr("CAST((hits * 1000000) div n_exact AS BIGINT)")
-            .as("recall_ppm"))
-    }.reduce(_ unionAll _)
-    val pinned = graft.core.Materialize.pin(out)
-    graft.core.Materialize.release(rerank)
+      }
+    }
+    val ranked = graft.core.Materialize.pin(globalTopK(locals, ncMax, byArm = true))
+    val exact = ranked.filter(col("arm") === 1 && col("rank") <= k)
+      .select(col("q_id"), col("vec_id"))
+    // budget nc reranks the hamming rank-≤nc slice: one candidate row
+    // per budget it falls in, the budget as its arm
+    val cands = ranked.filter(col("arm") === 0)
+      .withColumn("arm", explode(array(budgets.map(lit(_)): _*)))
+      .filter(col("rank") <= col("arm"))
+      .select(col("arm"), col("q_id"), col("vec_id"), col("sim"))
+    val top = graft.core.Materialize.pin(
+      exactRerank(e, qs, cands, ncMax, k, byArm = true))
+    val arms = budgets.map(nc => lit(nc.toLong) -> top.filter(col("arm") === nc))
+    val pinned = graft.core.Materialize.pin(recallRows(exact, arms)
+      .select(col("arm").as("n_cand"), col("n_hits"), col("n_exact"), col("recall_ppm")))
+    graft.core.Materialize.release(top)
     graft.core.Materialize.release(ranked)
     pinned
   }
@@ -2717,10 +2433,9 @@ object Similarity {
       (0 until nBands).map(b => (b << 16) | ((sig >>> (b * bandBits)) & ((1 << bandBits) - 1)))
 
     val qs = collectQueries(e)
-    val (qids, qv, qnorm) = (qs.qids, qs.qv, qs.qnorm)
     // band-key -> query indexes sharing that band
     val buckets = new java.util.HashMap[Int, Array[Int]]()
-    qv.zipWithIndex.foreach { case (v, qi) =>
+    qs.qv.zipWithIndex.foreach { case (v, qi) =>
       bandKeys(planeSig(planes, v)).foreach { key =>
         val probes =
           if (!multiProbe) Seq(key)
@@ -2731,46 +2446,32 @@ object Similarity {
         }
       }
     }
-    val bc = s.sparkContext.broadcast((qids, qv, qnorm, buckets, planes))
-
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val (bQids, bQv, bQnorm, bBuckets, bPlanes) = bc.value
-        val nq = bQids.length
-        val heaps = new TopKHeaps(nq, k)
-        val cand = new Array[Boolean](nq)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          val sig = planeSig(bPlanes, v)
-          java.util.Arrays.fill(cand, false)
-          var any = false
-          var b = 0
-          while (b < nBands) {
-            val key = (b << 16) | ((sig >>> (b * bandBits)) & ((1 << bandBits) - 1))
-            val qs = bBuckets.get(key)
-            if (qs != null) { qs.foreach(cand(_) = true); any = true }
-            b += 1
-          }
-          if (any) {
-            var n2 = 0.0; var j = 0
-            while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-            val nrm = math.sqrt(n2)
-            var qi = 0
-            while (qi < nq) {
-              if (cand(qi)) {
-                val qvv = bQv(qi)
-                var d = 0.0; var jj = 0
-                while (jj < v.length) { d += qvv(jj) * v(jj); jj += 1 }
-                heaps.insert(qi, d / (bQnorm(qi) * nrm), vid)
-              }
-              qi += 1
-            }
+    val bc = s.sparkContext.broadcast((qs, buckets, planes))
+    val locals = heapScan(e, qs.qids, Seq(k)) { heaps =>
+      val (q, bBuckets, bPlanes) = bc.value
+      val nq = q.qids.length
+      val cand = new Array[Boolean](nq)
+      (vid, v) => {
+        val sig = planeSig(bPlanes, v)
+        java.util.Arrays.fill(cand, false)
+        var any = false
+        var b = 0
+        while (b < nBands) {
+          val key = (b << 16) | ((sig >>> (b * bandBits)) & ((1 << bandBits) - 1))
+          val qis = bBuckets.get(key)
+          if (qis != null) { qis.foreach(cand(_) = true); any = true }
+          b += 1
+        }
+        if (any) {
+          val nrm = norm(v)
+          var qi = 0
+          while (qi < nq) {
+            if (cand(qi)) heaps(0).insert(qi, q.cosine(qi, v, nrm), vid)
+            qi += 1
           }
         }
-        heaps.emit(bQids)
-      }(Encoders.row(localTopKSchema))
-
+      }
+    }
     globalTopK(locals, k)
   }
 
@@ -3129,31 +2830,7 @@ object Similarity {
     val e = emb(s, dir)
     val st = collectQueries(e)
     val bc = s.sparkContext.broadcast(st)
-    val locals = fanOut(e.select(col("vec_id"), col("v")))
-      .mapPartitions { it =>
-        val q = bc.value
-        val nq = q.qids.length
-        val heaps = new TopKHeaps(nq, kCand)
-        it.foreach { row =>
-          val v = row.getSeq[Double](1).toArray
-          val vid = row.getLong(0)
-          var n2 = 0.0; var i = 0
-          while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(n2)
-          var qi = 0
-          while (qi < nq) {
-            val qvv = q.qv(qi)
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += qvv(j) * v(j); j += 1 }
-            heaps.insert(qi, d / (q.qnorm(qi) * nrm), vid)
-            qi += 1
-          }
-        }
-        heaps.emit(q.qids)
-      }(Encoders.row(localTopKSchema))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val cand = locals.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kCand)
+    val cand = rankCut(cosineScan(e, st, kCand), kCand, byArm = false)
       .select(col("q_id"), col("vec_id"))
     val grouped = cand
       .join(e.select(col("vec_id"), col("v")), "vec_id")
@@ -3177,16 +2854,7 @@ object Similarity {
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
           .sortBy(_._1).toArray
         val m = cands.length
-        def dot(a: Array[Double], b: Array[Double]): Double = {
-          var d = 0.0; var j = 0
-          while (j < a.length) { d += a(j) * b(j); j += 1 }
-          d
-        }
-        val norms = cands.map { case (_, v) =>
-          var n2 = 0.0; var j = 0
-          while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-          math.sqrt(n2)
-        }
+        val norms = cands.map { case (_, v) => norm(v) }
         val qsim = Array.tabulate(m)(i => dot(qv, cands(i)._2) / (qn * norms(i)))
         val selected = scala.collection.mutable.ArrayBuffer.empty[Int]
         (1 to math.min(kPick, m)).map { pick =>

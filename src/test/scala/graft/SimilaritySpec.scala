@@ -30,6 +30,29 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("a null embeddings.embedding fails the vector kernels with the invariant, not an NPE") {
+    import spark.implicits._
+    val dir = graft.core.TempDir.forJvm("graft_nullemb")
+    // vec_id 7 is not a probe (probes are every 50th id), so only the
+    // corpus pass can meet its null
+    (0L until 60L).map { id =>
+      val emb = if (id == 7L) None
+                else Some(Array.tabulate(64)(j => math.sin(id * 64.0 + j + 1.0).toFloat))
+      (id, emb, (id % 10).toInt)
+    }.toDF("vec_id", "embedding", "label")
+      .write.parquet(dir.resolve("embeddings.parquet").toString)
+    for ((name, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+           org.apache.spark.sql.DataFrame)](
+           "q_cosine_topk" -> Similarity.qCosineTopK, "q_ann_sq" -> Similarity.qAnnSq)) {
+      val e = intercept[Exception](q(spark, dir.toString).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("non-null embeddings.embedding violated at vec_id 7")),
+        s"$name: ${chain.mkString("\n")}")
+      assert(!chain.exists(_.isInstanceOf[NullPointerException]), name)
+    }
+  }
+
   test("ANN-LSH reaches useful recall vs brute force and stays approximate-cheap") {
     val exact = Similarity.qCosineTopK(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap

@@ -33,6 +33,10 @@ import graft.functions.expressions.MisraGries
   *    ids and bit-identical d² as the one-row loop it replaced, for any
   *    m (below 4, not a multiple of 4, below k), NaN query dims and
   *    duplicate training rows.
+  *  - `Similarity.TopKHeaps`, the bounded heap behind every vector
+  *    search: over any insert sequence (tied sims, repeated ids, fewer
+  *    rows than k) it emits exactly each query's brute-force
+  *    (sim DESC, vec_id ASC) top k, bit for bit.
   */
 object KernelProps extends Properties("graft.kernels") {
 
@@ -378,5 +382,37 @@ object KernelProps extends Properties("graft.kernels") {
       Prop(got == ref && gotI.sameElements(refI) && bits(gotD) == bits(refD)) :|
         s"m=${st.m} d=${st.d} k=$k q=${q.toSeq} got=${gotI.toSeq}/${gotD.toSeq} " +
         s"want=${refI.toSeq}/${refD.toSeq}"
+    }
+
+  // ---- TopKHeaps vs a brute-force sort ----
+
+  // a handful of sim values and ids: ties on sim (and repeated
+  // (sim, id) inserts) are common; up to 40 inserts over 1–4 queries
+  // leaves many queries with fewer rows than k
+  private val heapGen = for {
+    nq <- Gen.choose(1, 4)
+    k <- Gen.choose(1, 8)
+    n <- Gen.choose(0, 40)
+    ins <- Gen.listOfN(n, for {
+      qi <- Gen.choose(0, nq - 1)
+      sim <- Gen.oneOf(Gen.choose(-3, 3).map(_ / 2.0), Gen.choose(-1.0, 1.0))
+      id <- Gen.choose(0L, 30L)
+    } yield (qi, sim, id))
+  } yield (nq, k, ins)
+
+  property("TopKHeaps emits each query's (sim DESC, vec_id ASC) top k") =
+    forAll(heapGen) { case (nq, k, ins) =>
+      val heaps = new graft.operators.Similarity.TopKHeaps(nq, k)
+      ins.foreach { case (qi, sim, id) => heaps.insert(qi, sim, id) }
+      val qids = Array.tabulate(nq)(qi => 100L + qi)
+      val bits = (x: Double) => java.lang.Double.doubleToRawLongBits(x)
+      val got = heaps.emit(2, qids)
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), bits(r.getDouble(3)))).toList
+      val want = (0 until nq).toList.flatMap { qi =>
+        ins.filter(_._1 == qi)
+          .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._3 < b._3))
+          .take(k).map { case (_, sim, id) => (2, qids(qi), id, bits(sim)) }
+      }
+      Prop(got == want) :| s"nq=$nq k=$k inserts=$ins got=$got want=$want"
     }
 }
