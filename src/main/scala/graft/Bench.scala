@@ -214,11 +214,13 @@ object Bench {
     // line — whatever stdout tail the driver keeps, the chunks nearest
     // the end parse, so per-query data is recoverable without the file.
     val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
-    // The canonical bench_out.json is ALSO rewritten on every run, so
-    // the file a reader of the default name opens is always this run's.
+    // A full-registry run also rewrites the canonical bench_out.json, so
+    // the file a reader of the default name opens is the latest full
+    // run's; a subset run (ONLY/SKIP) writes only its own file.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_out.c$cpus.$sfBase.json")
-    Seq(out, "bench_out.json").distinct.foreach { f =>
+    val canonical = if (sched.size == SparkEntry.queries.size) Seq("bench_out.json") else Nil
+    (out +: canonical).distinct.foreach { f =>
       java.nio.file.Files.write(java.nio.file.Paths.get(f),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }

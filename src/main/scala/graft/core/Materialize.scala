@@ -1,6 +1,9 @@
 package graft.core
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage-truncating materialization for iterative / multi-consumer
@@ -24,6 +27,13 @@ import org.apache.spark.storage.StorageLevel
   * ContextCleaner deletes them as the checkpointed RDDs are GC'd);
   * set it on any long-running application using a checkpoint dir, or
   * the directory grows by one rdd-N per `pin` for the app lifetime.
+  *
+  * Row counts: on the `localCheckpoint` path, the one job that
+  * materializes the frame also counts the rows of each partition, and
+  * `pin` keeps them ([[rowCounts]]) so `Tables.fanOut` can spread a frame
+  * whose rows sit in a few of its partitions without a shuffle. They sit
+  * in a weak map keyed by the pinned RDD, so they go when it does;
+  * [[release]] drops them at once. A reliable checkpoint records none.
   */
 object Materialize {
 
@@ -38,16 +48,44 @@ object Materialize {
     */
   @volatile private[graft] var planSink: Option[String => Unit] = None
 
-  /** Materialize `df` eagerly and truncate its lineage. */
+  private val counted = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], Array[Long]]())
+
+  /** Materialize `df` eagerly and truncate its lineage. A local
+    * checkpoint is marked lazily, then materialized by one job that
+    * counts each partition's rows: `runJob`'s trailing `doCheckpoint`
+    * finds every block stored and starts none. (The eager
+    * `localCheckpoint()` runs its own job, so counting after it would
+    * add a second.) A frame with no partitions runs no job either way.
+    */
   def pin(df: DataFrame): DataFrame = {
     planSink.foreach(_(df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)))
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
+    val sc = df.sparkSession.sparkContext
+    if (sc.getCheckpointDir.isDefined) {
       df.persist(StorageLevel.MEMORY_AND_DISK)
       try df.checkpoint()
       finally df.unpersist(blocking = false)
-    } else df.localCheckpoint()
+    } else {
+      val pinned = df.localCheckpoint(eager = false)
+      pinnedRdds(pinned).filter(_.partitions.nonEmpty).foreach { rdd =>
+        counted.put(rdd, sc.runJob(rdd, (rows: Iterator[InternalRow]) => {
+          var n = 0L
+          while (rows.hasNext) { rows.next(); n += 1 }
+          n
+        }))
+      }
+      pinned
+    }
   }
+
+  /** The rows in each partition of `rdd`, if a local [[pin]] made it and
+    * it has not been released.
+    */
+  private[graft] def rowCounts(rdd: RDD[_]): Option[Array[Long]] = Option(counted.get(rdd))
+
+  private def pinnedRdds(df: DataFrame): Seq[RDD[InternalRow]] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
 
   /** Release the storage behind a frame previously returned by [[pin]],
     * once no live frame depends on it: frees the executor blocks
@@ -56,13 +94,13 @@ object Materialize {
     * every round grows storage linearly with rounds for the application
     * lifetime (the ContextCleaner only reclaims checkpoint dirs when
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` AND the
-    * RDD is GC'd). The released frame must not be read again. No-op on
-    * frames that were never pinned.
+    * RDD is GC'd). It also drops the frame's row counts. The released
+    * frame must not be read again. No-op on frames that were never
+    * pinned.
     */
   def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach { rdd =>
+    pinnedRdds(df).foreach { rdd =>
+      counted.remove(rdd)
       rdd.unpersist(blocking = false)
       rdd.getCheckpointFile.foreach { p =>
         val path = new org.apache.hadoop.fs.Path(p)

@@ -159,7 +159,9 @@ private[estimators] object KnnKernel {
   /** Project the validated frame to (ids ++ mask ++ knn-scan output):
     * the narrow input is fanned out BEFORE the scan expression so the
     * O(m·d) per-row work runs on all cores even when the source arrives
-    * as a single partition; masked rows skip the scan entirely.
+    * as a single partition, or pinned with its rows in one of its
+    * partitions (a raster tile: `fanOut` slices it by rows, no shuffle);
+    * masked rows skip the scan entirely.
     */
   def scanned(ff: FeatureFrame, st: KnnState, k: Int, mode: Int, classCount: Int,
               radius2: Double = 0.0, maskOverride: Option[Column] = None): DataFrame = {

@@ -1978,7 +1978,7 @@ object Similarity {
     e.select(col("vec_id"), col("v"))
       .repartition(HnswShards, pmod(col("vec_id"), lit(HnswShards.toLong)))
       .mapPartitions { it =>
-        val rows = it.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        val rows = it.map { r => val vid = r.getLong(0); (vid, vectorAt(r, 1, vid)) }
           .toArray.sortBy(_._1)
         if (rows.isEmpty) Iterator.empty
         else {
@@ -2054,7 +2054,7 @@ object Similarity {
       .mapPartitions { it =>
         val cb = bc.value
         it.flatMap { row =>
-          val v = row.getSeq[Double](1).toArray
+          val v = vectorAt(row, 1, row.getLong(0))
           (0 until PqSub).map { sIdx =>
             Row(sIdx * PqCodes + pqCode(cb, v, sIdx),
               java.util.Arrays.copyOfRange(v, sIdx * PqSubDim, (sIdx + 1) * PqSubDim).toSeq)
@@ -2851,7 +2851,7 @@ object Similarity {
         // vec_id-ascending candidate order makes "first strict max" the
         // lowest-id tie-break, mirroring the oracle's (score DESC, vec_id)
         val cands = row.getSeq[Row](1)
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+          .map { r => val vid = r.getLong(0); (vid, vectorAt(r, 1, vid)) }
           .sortBy(_._1).toArray
         val m = cands.length
         val norms = cands.map { case (_, v) => norm(v) }
@@ -2908,7 +2908,7 @@ object Similarity {
     val cells = fanOut(emb(s, dir).select(col("vec_id"), col("v")))
       .mapPartitions { it =>
         val c = bc.value
-        it.map(row => Row(row.getLong(0), ivfCell(c, row.getSeq[Double](1).toArray)))
+        it.map { row => val vid = row.getLong(0); Row(vid, ivfCell(c, vectorAt(row, 1, vid))) }
       }(Encoders.row(cellSchema))
     val counts = cells.groupBy(col("cell")).agg(count(lit(1)).as("n_cell"))
     cells.join(broadcast(counts), "cell")

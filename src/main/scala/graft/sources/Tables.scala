@@ -1,14 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct,
-  GlobalLimit, LocalRelation, LogicalPlan, Range, Repartition, RepartitionByExpression, Sort,
-  Tail, Union, Window}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct, Filter,
+  GlobalLimit, LocalRelation, LogicalPlan, Project, Range, Repartition, RepartitionByExpression,
+  Sort, SubqueryAlias, Tail, Union, Window}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD, PartitionedFileUtil}
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+
+import graft.core.{Materialize, RowSlices}
 
 /** Parquet table loaders for the driver-generated star schema.
   *
@@ -86,19 +89,60 @@ object Tables {
     * narrow shuffle of the projected columns for full parallelism in the
     * kernel stage.
     *
-    * The count is read off the frame's analyzed logical plan
-    * ([[partitionsOf]]), which the frame already holds: deciding runs no
-    * job, plans nothing physically, generates no code and builds no Row
-    * encoder. (`df.rdd.getNumPartitions` planned, code-generated and
-    * encoded the frame, ~11 ms per call on a pinned 4,096-row tile, for
-    * a frame the caller then discards.)
+    * A pinned frame is spread by its rows, with no shuffle. Where the
+    * plan reads a [[Materialize.pin]]ned leaf through projections and
+    * filters of deterministic expressions only, and the pin's row counts
+    * show fewer non-empty partitions than the target (a raster tile cut
+    * from a pinned raster keeps its partitions, with all its rows in one),
+    * the leaf is swapped for one over a narrow RDD whose partitions each
+    * read a contiguous row range of one pinned block ([[RowSlices]]). The
+    * rows and their order within each block stay, the leaf's partitioning
+    * becomes unknown, and the plan above it is unchanged; no stage, task
+    * or job is added. Every other frame keeps the partition-count rule:
+    * parquet and unknown leaves, anything under an exchange, and a pinned
+    * frame without counts.
+    *
+    * The decision is read off the frame's analyzed logical plan
+    * ([[partitionsOf]], [[narrowLeafRdd]]), which the frame already
+    * holds: deciding runs no job, plans nothing physically, generates no
+    * code and builds no Row encoder. (`df.rdd.getNumPartitions` planned,
+    * code-generated and encoded the frame, ~11 ms per call on a pinned
+    * 4,096-row tile, for a frame the caller then discards.)
     */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val leafParallelism = df.sparkSession.conf
-      .getOption(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM.key).fold(target)(_.toInt)
-    if (partitionsOf(df.queryExecution.analyzed, leafParallelism) >= target) df
-    else df.repartition(target)
+    val plan = df.queryExecution.analyzed
+    val skewed = for {
+      leaf <- narrowLeafRdd(plan)
+      counts <- Materialize.rowCounts(leaf.rdd)
+      filled = counts.count(_ > 0)
+      if filled > 0 && filled < target
+    } yield (leaf, counts)
+    skewed match {
+      case Some((leaf, counts)) =>
+        val slices = RowSlices.plan(counts, target)
+        val sliced = leaf.makeCopy(Array(leaf.output, new RowSlices.SlicedRDD(leaf.rdd, slices),
+          UnknownPartitioning(slices.length), leaf.outputOrdering,
+          Boolean.box(leaf.isStreaming), leaf.stream))
+        GraftSqlBridge.ofRows(df.sparkSession,
+          plan.transformUp { case r: LogicalRDD if r eq leaf => sliced })
+      case None =>
+        val leafParallelism = df.sparkSession.conf
+          .getOption(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM.key).fold(target)(_.toInt)
+        if (partitionsOf(plan, leafParallelism) >= target) df
+        else df.repartition(target)
+    }
+  }
+
+  /** The existing-RDD leaf a plan reads through projections, filters and
+    * aliases alone, none with a nondeterministic expression (a `rand` or
+    * a partition id would change with the split).
+    */
+  private def narrowLeafRdd(plan: LogicalPlan): Option[LogicalRDD] = plan match {
+    case r: LogicalRDD => Some(r)
+    case p @ (_: Project | _: Filter | _: SubqueryAlias) if p.expressions.forall(_.deterministic) =>
+      narrowLeafRdd(p.children.head)
+    case _ => None
   }
 
   /** The partitions a plan's physical scan will produce, the way Spark

@@ -43,7 +43,8 @@ class SimilaritySpec extends AnyFunSuite {
       .write.parquet(dir.resolve("embeddings.parquet").toString)
     for ((name, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
            org.apache.spark.sql.DataFrame)](
-           "q_cosine_topk" -> Similarity.qCosineTopK, "q_ann_sq" -> Similarity.qAnnSq)) {
+           "q_cosine_topk" -> Similarity.qCosineTopK, "q_ann_sq" -> Similarity.qAnnSq,
+           "q_cluster_sample" -> Similarity.qClusterSample)) {
       val e = intercept[Exception](q(spark, dir.toString).collect())
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&

@@ -37,6 +37,11 @@ import graft.functions.expressions.MisraGries
   *    search: over any insert sequence (tied sims, repeated ids, fewer
   *    rows than k) it emits exactly each query's brute-force
   *    (sim DESC, vec_id ASC) top k, bit for bit.
+  *  - `RowSlices.plan`, the row split behind `Tables.fanOut` on a pinned
+  *    frame: over any partition counts (empty partitions, totals below
+  *    the target, one huge partition) every parent row lands in exactly
+  *    one non-empty slice, in partition and row order, and there are as
+  *    many slices as the target allows.
   */
 object KernelProps extends Properties("graft.kernels") {
 
@@ -414,5 +419,33 @@ object KernelProps extends Properties("graft.kernels") {
           .take(k).map { case (_, sim, id) => (2, qids(qi), id, bits(sim)) }
       }
       Prop(got == want) :| s"nq=$nq k=$k inserts=$ins got=$got want=$want"
+    }
+
+  // ---- RowSlices.plan vs the parent rows ----
+
+  // mostly empty or small partitions, now and then one huge one; targets
+  // from 1 to 16 put totals both above and below the target
+  private val sliceGen = for {
+    n <- Gen.choose(0, 12)
+    counts <- Gen.listOfN(n, Gen.frequency(
+      3 -> Gen.const(0L), 3 -> Gen.choose(1L, 5L), 1 -> Gen.choose(1000L, 1000000L)))
+    target <- Gen.choose(1, 16)
+  } yield (counts.toArray, target)
+
+  property("RowSlices.plan keeps every parent row once, in order, in non-empty slices") =
+    forAll(sliceGen) { case (counts, target) =>
+      val slices = graft.core.RowSlices.plan(counts, target)
+      // each partition's slices, in order, must tile [0, count) exactly
+      val tiled = counts.indices.forall { p =>
+        val ends = slices.filter(_.parent == p).flatMap(s => Seq(s.from, s.until))
+        if (counts(p) == 0) ends.isEmpty
+        else ends.head == 0 && ends.last == counts(p) &&
+          ends.drop(1).dropRight(1).grouped(2).forall(e => e(0) == e(1))
+      }
+      val ordered = slices.map(_.parent) == slices.map(_.parent).sorted
+      val filled = counts.count(_ > 0).toLong
+      val expected = math.max(filled, math.min(target.toLong, counts.sum))
+      Prop(tiled && ordered && slices.forall(s => s.until > s.from) &&
+        slices.length == expected) :| s"counts=${counts.toSeq} target=$target slices=$slices"
     }
 }
