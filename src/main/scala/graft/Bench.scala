@@ -1,4 +1,7 @@
 package graft
+
+import graft.core.StreamScope
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -157,12 +160,17 @@ object Bench {
     }
     val passTimes = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // each timed pass's stream-gate batches, per query, read from each
+    // gate's query after it stops
+    val passStreams = scala.collection.mutable.Map.empty[String, Vector[Seq[StreamScope.BatchStats]]]
+      .withDefaultValue(Vector.empty)
     for (_ <- 0 until nRuns; (name, fn) <- sched if !failures.contains(name)) {
       reap()
       val t0 = System.nanoTime()
       try {
-        run(fn(spark, sfDir))
+        val (_, streams) = StreamScope.recorded(run(fn(spark, sfDir)))
         passTimes(name) = passTimes(name) :+ (System.nanoTime() - t0) / 1e9
+        passStreams(name) = passStreams(name) :+ streams
       } catch { case e: Throwable => failures(name) = e }
     }
     val results = sched.map { case (name, _) =>
@@ -191,12 +199,25 @@ object Bench {
       s""""ref_mt_sec_before":$refMtBefore,"ref_mt_sec_after":$refMtAfter,""" +
       s""""loadavg1_before":$loadBefore,"loadavg1_after":$loadAfter,""" +
       s""""quiet":$quiet}"""
+    // per streaming query, the batches of the pass whose time is nearest
+    // its median, so the numbers sit next to the published time
+    val streamsJson = results.collect {
+      case (k, ts) if !failures.contains(k) && passStreams(k).exists(_.nonEmpty) =>
+        val pass = ts.indices.minBy(i => math.abs(ts(i) - med(ts)))
+        Verify.jsonString(k) + ":" + passStreams(k)(pass).map { b =>
+          s"""{"gate":${Verify.jsonString(b.name)},"batches":${b.batches},""" +
+            s""""trigger_ms":${b.triggerMs},"wal_ms":${b.walMs},""" +
+            s""""commit_offsets_ms":${b.commitOffsetsMs},"state_commit_ms":${b.stateCommitMs},""" +
+            s""""state_rows":${b.stateRows},"state_bytes":${b.stateBytes}}"""
+        }.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val failuresJson = failures.map { case (k, e) =>
       Verify.jsonString(k) + ":{\"class\":" + Verify.jsonString(e.getClass.getName) +
         ",\"message\":" + Verify.jsonString(String.valueOf(e.getMessage)) + "}"
     }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""runs":$nRuns,"spread":$spread,"load":$load,"action":"$actionName",""" +
+      s""""runs":$nRuns,"spread":$spread,"streams":$streamsJson,"load":$load,""" +
+      s""""action":"$actionName",""" +
       s""""n_failed":${failures.size},"failures":$failuresJson,""" +
       s""""sf":"$sfDir"}"""
     println(line)

@@ -2,6 +2,9 @@ package graft.core
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.DynamicVariable
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -31,11 +34,19 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * state-store open/commit/maintenance PER PARTITION — at the session's
   * 32 that overhead is a multiple of the useful work (q_stream_session
   * measured 17.3s at 32 partitions vs the gate budget; the state itself
-  * is a few thousand keys). 8 partitions keep the operators genuinely
+  * is a few thousand keys). Each partition's commit writes its state
+  * files through the session's checkpoint-file manager: the perfbench
+  * stream's commit over 4 partitions took 100–120 ms a batch under
+  * Spark's default `FileContext` manager and takes about 5 ms under
+  * [[CheckpointFiles]]. 8 partitions keep the operators genuinely
   * parallel while the state machinery stays proportional to the state.
   * Results are partition-count-independent (keyed state semantics).
   * A gate may add or override session conf for its stream through
   * `conf`; it is scoped the same way.
+  *
+  * Inside [[recorded]], each scope that ends also leaves its query's
+  * per-batch numbers ([[BatchStats]], from `recentProgress`); outside it
+  * nothing is kept.
   */
 object StreamScope {
 
@@ -44,6 +55,29 @@ object StreamScope {
 
   /** Sessions with an open scope, and the thread that opened each. */
   private val holders = new ConcurrentHashMap[SparkSession, Thread]()
+
+  /** One scope's executed micro-batches, from its query's
+    * `recentProgress` (Spark keeps the last
+    * `spark.sql.streaming.numRecentProgressUpdates` entries, 100 by
+    * default): how many ran, the summed `triggerExecution`, `walCommit`
+    * and `commitOffsets` durations and state-store `commitTimeMs` (over
+    * every stateful operator and partition), and the last batch's state
+    * rows and bytes.
+    */
+  final case class BatchStats(name: String, batches: Int, triggerMs: Long,
+                              walMs: Long, commitOffsetsMs: Long,
+                              stateCommitMs: Long, stateRows: Long, stateBytes: Long)
+
+  private val recorder = new DynamicVariable[Option[ArrayBuffer[BatchStats]]](None)
+
+  /** Run `f` and return, with its result, the [[BatchStats]] of every
+    * scope that ended on this thread meanwhile, in order.
+    */
+  def recorded[A](f: => A): (A, Seq[BatchStats]) = {
+    val log = ArrayBuffer.empty[BatchStats]
+    val a = recorder.withValue(Some(log))(f)
+    (a, log.toSeq)
+  }
 
   /** Run `build` over a MemoryStream fed one micro-batch per element of
     * `batches`; returns the memory sink's rows as a local frame.
@@ -99,12 +133,23 @@ object StreamScope {
       val out = s.table(name)
       s.createDataFrame(out.collectAsList(), out.schema)
     } finally {
-      try query.foreach(_.stop())
+      try query.foreach { q => q.stop(); recorder.value.foreach(_ += stats(name, q)) }
       finally {
         s.catalog.dropTempView(name)
         prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
         holders.remove(s)
       }
     }
+  }
+
+  private def stats(name: String, q: StreamingQuery): BatchStats = {
+    // an idle trigger also reports progress (the first one at once); only
+    // an executed batch times `addBatch`
+    val ps = q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+    def ms(key: String) = ps.map(p => Option(p.durationMs.get(key)).fold(0L)(_.longValue)).sum
+    val last = ps.lastOption.toSeq.flatMap(_.stateOperators)
+    BatchStats(name, ps.size, ms("triggerExecution"), ms("walCommit"), ms("commitOffsets"),
+      ps.flatMap(_.stateOperators).map(_.commitTimeMs).sum,
+      last.map(_.numRowsTotal).sum, last.map(_.memoryUsedBytes).sum)
   }
 }

@@ -53,6 +53,26 @@ class StreamScopeSpec extends AnyFunSuite {
     assert(spark.conf.get(partitionsKey) == "4")
   }
 
+  test("recorded returns each ended scope's per-batch numbers; nothing is kept outside it") {
+    import spark.implicits._
+    def feed(name: String) = StreamScope.gate(spark, name, "update",
+        Seq(Seq(("a", 1L), ("b", 2L)), Seq(("a", 5L))))(
+        _.toDF("k", "v").groupBy(col("k")).agg(sum(col("v")).as("total"))).count()
+    val (n, stats) = StreamScope.recorded {
+      feed("gate_scope_stats1")
+      feed("gate_scope_stats2")
+    }
+    assert(n == 3)
+    assert(stats.map(_.name) == Seq("gate_scope_stats1", "gate_scope_stats2"))
+    stats.foreach { b =>
+      assert(b.batches == 2, b) // no watermark, so no no-data batch
+      assert(b.stateRows == 2, b) // keys a and b after the last batch
+      assert(b.stateBytes > 0 && b.triggerMs > 0, b)
+    }
+    feed("gate_scope_unrecorded")
+    assert(StreamScope.recorded(())._2.isEmpty)
+  }
+
   test("lastWins keeps every row of a key's greatest version") {
     val changelog = Seq(("s0", 1L, "x"), ("s0", 2L, "y"), ("s1", 1L, "w"),
       ("s0", 2L, "z"))
