@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -95,8 +95,20 @@ object Similarity {
     * loudly with its vec_id instead of an NPE deep in a kernel.
     */
   private def vectorAt(row: Row, at: Int, vid: Long): Array[Double] = {
-    require(!row.isNullAt(at), s"non-null embeddings.embedding violated at vec_id $vid")
+    requireVector(!row.isNullAt(at), vid)
     row.getSeq[Double](at).toArray
+  }
+
+  private def requireVector(present: Boolean, vid: Long): Unit =
+    require(present, s"non-null embeddings.embedding violated at vec_id $vid")
+
+  /** `(vec_id, v)` of a frame from [[emb]] as a typed Dataset, under
+    * [[vectorAt]]'s null policy.
+    */
+  private def idVectors(e: DataFrame): Dataset[(Long, Array[Double])] = {
+    import e.sparkSession.implicits._
+    e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+      .map { case (id, v) => requireVector(v != null, id); (id, v) }
   }
 
   /** Broadcast state for the top-k kernels: query ids (sorted), vectors,
@@ -807,8 +819,7 @@ object Similarity {
     import s.implicits._
     val tau = 0.4
     val nBlocks = 16 // at 100 TB: ~ sliceBytes / per-task block budget
-    val ds = emb(s, dir).filter(col("vec_id") < ExactSliceMax)
-      .select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    val ds = idVectors(emb(s, dir).filter(col("vec_id") < ExactSliceMax))
     val repl = ds.flatMap { case (id, v) =>
       val b = (id % nBlocks).toInt
       (0 until nBlocks).map(o => (math.min(b, o), math.max(b, o), id, v))
@@ -881,8 +892,7 @@ object Similarity {
                            slice: Long = ExactSliceMax): DataFrame = {
     import s.implicits._
     val nBlocks = 16
-    val ds = emb(s, dir).filter(col("vec_id") < slice)
-      .select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    val ds = idVectors(emb(s, dir).filter(col("vec_id") < slice))
     val repl = ds.flatMap { case (id, v) =>
       val b = (id % nBlocks).toInt
       (0 until nBlocks).map(o => (math.min(b, o), math.max(b, o), id, v))
@@ -1345,8 +1355,7 @@ object Similarity {
     val dim = 64
     val rand = ivfCentroids(nCells, dim)
     val bcR = s.sparkContext.broadcast(rand)
-    val means = emb(s, dir)
-      .select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    val means = idVectors(emb(s, dir))
       .map { case (_, v) => (ivfCell(bcR.value, v), v) }
       .toDF("cell", "v")
       .select(col("cell"), posexplode(col("v")))
@@ -1400,8 +1409,7 @@ object Similarity {
     // rank serves every swept arm for both quantizers — the r11 shape
     // (8 arms × [edge pass + cost pass] = 16 slice scans) collapses to
     // two scans and one cell-local pair kernel.
-    def assigned = emb(s, dir).filter(col("vec_id") < SweepSliceMax)
-      .select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    def assigned = idVectors(emb(s, dir).filter(col("vec_id") < SweepSliceMax))
       .flatMap { case (id, v) =>
         bcQ.value.iterator.flatMap { case (qn, cs) =>
           val dots = Array.tabulate(cs.length) { ci =>
@@ -1554,8 +1562,7 @@ object Similarity {
                            assignWidth: Int, k: Int): DataFrame = {
     import s.implicits._
     val bcC = s.sparkContext.broadcast(cents)
-    val ds = emb(s, dir).filter(col("vec_id") < ExactSliceMax)
-      .select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    val ds = idVectors(emb(s, dir).filter(col("vec_id") < ExactSliceMax))
     // each cell's member triangle is block-partitioned (the D2/D12
     // decomposition applied INSIDE the cell): every unordered member
     // pair is computed in exactly one (cell, block-pair) group, so 16
@@ -2213,8 +2220,7 @@ object Similarity {
     val nCells = 16
     val cents = ivfCentroids(nCells)
     val bc = s.sparkContext.broadcast(cents)
-    val cellsDf = emb(s, dir).select(col("vec_id"), col("v"))
-      .as[(Long, Array[Double])]
+    val cellsDf = idVectors(emb(s, dir))
       .map { case (_, v) => ivfCell(bc.value, v).toLong }
       .toDF("cell")
       .groupBy(col("cell")).agg(count(lit(1)).as("c"))
@@ -2997,7 +3003,7 @@ object Similarity {
     val dim = 64
     val cents = semCentroids(nCells, dim)
     val bc = s.sparkContext.broadcast(cents)
-    val ds = emb(s, dir).select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    val ds = idVectors(emb(s, dir))
     val byCell = ds.map { case (id, v) =>
       val cs = bc.value
       var best = 0; var bestD = Double.NegativeInfinity
@@ -3061,8 +3067,7 @@ object Similarity {
     val nCells = 16; val dim = 64; val tau = 0.3; val minPts = 3
     val cents = semCentroids(nCells, dim)
     val bc = s.sparkContext.broadcast(cents)
-    val ds = emb(s, dir).filter(col("vec_id") < DbscanSliceMaxVec)
-      .select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+    val ds = idVectors(emb(s, dir).filter(col("vec_id") < DbscanSliceMaxVec))
     val byCell = ds.map { case (id, v) =>
       val cs = bc.value
       var best = 0; var bestD = Double.NegativeInfinity

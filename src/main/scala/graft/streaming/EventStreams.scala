@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
 
@@ -301,59 +301,94 @@ object EventStreams {
   /** F6 state: O(1) per vec_id — version + cell, never the vector. */
   final case class VecVersion(ts: Long, cell: Int)
 
-  /** F6: streaming IVF index maintenance — incoming vectors are
-    * assigned to their coarse cell with the IDENTICAL deterministic
-    * quantizer as the batch D6 query (`Similarity.ivfCentroids` /
-    * `ivfCell`), and a LATER ts for an already-indexed vec_id
-    * re-assigns it (upsert; stale versions are dropped). Output is an
-    * Update-mode changelog: one row per key per batch when its newest
-    * version was accepted — exactly what a downstream cell-partitioned
-    * index needs to apply (vec_id → cell) moves incrementally.
+  /** The replay-safe keyed fold: the one `flatMapGroupsWithState` body
+    * of every per-key online operator below that keeps a high-water
+    * mark. The operator gives its key, its mark (the arrival's position
+    * in the source's per-key order), its initial state and its
+    * per-arrival `step`, which returns the next state and at most one
+    * row; an operator that reports from the final state also gives
+    * `perBatch`, one row per batch that folded anything. This owns the
+    * rest, once ([[foldBatch]] is the per-batch rule):
     *
-    * Scale posture: state is O(1) per vec_id (ts + cell — vectors are
-    * NOT buffered), keyed state shards across executors by vec_id
-    * hash, and the centroid matrix rides inside the closure (it is
-    * KB-scale by construction). At 100 TB the changelog sink is the
-    * same cell-partitioned layout D6 prunes at query time.
+    *  - each micro-batch is stably sorted by the mark;
+    *  - an arrival folds only if its mark is greater than the greatest
+    *    mark folded so far for its key, counting arrivals earlier in
+    *    the same batch — a redelivery (an at-least-once replay of an
+    *    earlier batch, or a retry inside this one) is dropped, and of
+    *    two copies in one batch the first folds;
+    *  - the rows are drained before the state is updated;
+    *  - a batch that folds nothing leaves the state alone and emits
+    *    nothing.
+    *
+    * The mark is kept beside the operator's state, so that state holds
+    * only what its step reads. Across batches the source contract is
+    * per-key monotone: a key's new arrivals carry greater marks than
+    * any it delivered before, so the emitted rows equal one sequential
+    * fold over the distinct arrivals in mark order, however the stream
+    * is cut into batches. Update mode, no timeout.
     */
+  def replayFold[V, K, M, S, O](in: Dataset[V])(key: V => K, mark: V => M, init: S)(
+      step: (S, V) => (S, Option[O]),
+      perBatch: (K, S) => Option[O] = (_: K, _: S) => None)(
+      implicit ord: Ordering[M], kEnc: Encoder[K], sEnc: Encoder[(M, S)],
+      oEnc: Encoder[O]): Dataset[O] =
+    in.groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
+        (k: K, batch: Iterator[V], state: GroupState[(M, S)]) =>
+          foldBatch(state.getOption, batch, mark, init, step) match {
+            case Some((next, rows)) =>
+              state.update(next)
+              (rows ++ perBatch(k, next._2)).iterator
+            case None => Iterator.empty
+          })
+
+  /** One micro-batch of [[replayFold]] for one key, without Spark:
+    * `prev` is the stored (mark, state). Returns the next (mark, state)
+    * and the rows in fold order, or None when no arrival folds.
+    */
+  def foldBatch[V, M, S, O](prev: Option[(M, S)], batch: Iterator[V], mark: V => M,
+                            init: S, step: (S, V) => (S, Option[O]))(
+      implicit ord: Ordering[M]): Option[((M, S), Vector[O])] = {
+    // each mark computed once; the sort is stable, so of two copies of
+    // one arrival the first folds
+    val arrivals = batch.map(v => (mark(v), v)).toArray.sortBy(_._1)
+    var cur = prev
+    var folded = false
+    val rows = Vector.newBuilder[O]
+    var i = 0
+    while (i < arrivals.length) {
+      val (m, v) = arrivals(i)
+      if (cur.isEmpty || ord.gt(m, cur.get._1)) {
+        val (st, row) = step(if (cur.isEmpty) init else cur.get._2, v)
+        cur = Some((m, st)); folded = true
+        if (row.isDefined) rows += row.get
+      }
+      i += 1
+    }
+    if (folded) Some((cur.get, rows.result())) else None
+  }
+
   /** F15 input: one keyed value in arrival-order position `event_id`. */
   final case class KeyedVal(user_id: Long, event_id: Long, v: Long)
 
   /** F15 output: the running per-key prefix sum at this event. */
   final case class RunningOut(user_id: Long, event_id: Long, v: Long, running: Long)
 
-  /** F15 state: O(1) per key — the running total and the high-water
-    * event id (vectors of past events are never buffered).
-    */
-  final case class RunState(total: Long, lastEvent: Long)
-
   /** F15: streaming per-key RUNNING sums — the stream twin of the B59/
     * B60 running aggregate: exact Long prefix sums keyed by user, O(1)
-    * state per key, Update-mode one-row-per-event changelog. In-batch
-    * arrivals are applied in event_id order and an arrival at or below
-    * the key's high-water mark is DROPPED (the monotone-source
-    * contract: a replayed offset must not double-count) — so across
-    * batches that respect per-key order the emitted rows equal the
-    * batch window exactly. Skew posture: state shards by key hash and
-    * per-event work is O(1), so a hot key costs its row count spread
-    * over arrivals — there is no per-key sort task at all (the stream
-    * beats BOTH batch layouts by doing the scan incrementally).
+    * state per key (the total), Update-mode one-row-per-event
+    * changelog; the mark is `event_id`. Across batches that respect
+    * per-key order the emitted rows equal the batch window exactly.
+    * Skew posture: state shards by key hash and per-event work is O(1),
+    * so a hot key costs its row count spread over arrivals — there is
+    * no per-key sort task at all (the stream beats BOTH batch layouts
+    * by doing the scan incrementally).
     */
   def runningSumStream(in: Dataset[KeyedVal]): Dataset[RunningOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[KeyedVal], state: GroupState[RunState]) => {
-          var st = state.getOption.getOrElse(RunState(0L, Long.MinValue))
-          val out = batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .map { e =>
-              st = RunState(st.total + e.v, e.event_id)
-              RunningOut(uid, e.event_id, e.v, st.total)
-            }.toArray // drain before update: st must hold the final total
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, _.event_id, 0L) { (total, e) =>
+      (total + e.v, Some(RunningOut(e.user_id, e.event_id, e.v, total + e.v)))
+    }
   }
 
   /** F17 output: one summary entry of shard `shard` at version `ver`. */
@@ -670,6 +705,21 @@ object EventStreams {
         })
   }
 
+  /** F6: streaming IVF index maintenance — incoming vectors are
+    * assigned to their coarse cell with the IDENTICAL deterministic
+    * quantizer as the batch D6 query (`Similarity.ivfCentroids` /
+    * `ivfCell`), and a LATER ts for an already-indexed vec_id
+    * re-assigns it (upsert; stale versions are dropped). Output is an
+    * Update-mode changelog: one row per key per batch when its newest
+    * version was accepted — exactly what a downstream cell-partitioned
+    * index needs to apply (vec_id → cell) moves incrementally.
+    *
+    * Scale posture: state is O(1) per vec_id (ts + cell — vectors are
+    * NOT buffered), keyed state shards across executors by vec_id
+    * hash, and the centroid matrix rides inside the closure (it is
+    * KB-scale by construction). At 100 TB the changelog sink is the
+    * same cell-partitioned layout D6 prunes at query time.
+    */
   def ivfUpsertStream(in: Dataset[VecUpsert],
                       cents: Array[Array[Double]]): Dataset[CellAssign] = {
     import in.sparkSession.implicits._
@@ -750,9 +800,8 @@ object EventStreams {
         .as("bucket")).count()
 
   /** F28 state: two one-sided CUSUM accumulators plus their running
-    * maxima and the dedup watermark. All exact integer cents. */
-  final case class CusumState(sPos: Long, sNeg: Long, maxPos: Long,
-                              maxNeg: Long, lastEvent: Long)
+    * maxima. All exact integer cents. */
+  final case class CusumState(sPos: Long, sNeg: Long, maxPos: Long, maxNeg: Long)
   final case class CusumOut(user_id: Long, event_id: Long, s_pos: Long,
                             s_neg: Long, max_pos: Long, max_neg: Long)
 
@@ -768,94 +817,73 @@ object EventStreams {
      math.max(0L, sNeg + (mu0 - x - slack)))
 
   /** F28: streaming per-key CUSUM level-shift monitor (online twin of
-    * B94): flatMapGroupsWithState with O(1) exact-integer state per
-    * key — two one-sided accumulators, their running maxima, and the
-    * event-id watermark (same dedup/order discipline as F13's running
-    * sums). Emits the post-event state per arrival in Update mode; an
-    * alert is `max_pos` or `max_neg` crossing the deployment's h
-    * threshold. State never grows with the stream.
+    * B94): O(1) exact-integer state per key — two one-sided
+    * accumulators and their running maxima, folded by [[replayFold]]
+    * with `event_id` as the mark. Emits the post-event state per
+    * arrival in Update mode; an alert is `max_pos` or `max_neg`
+    * crossing the deployment's h threshold. State never grows with the
+    * stream.
     */
   def cusumStream(in: Dataset[KeyedVal], mu0: Long, slack: Long): Dataset[CusumOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[KeyedVal], state: GroupState[CusumState]) => {
-          var st = state.getOption.getOrElse(CusumState(0L, 0L, 0L, 0L, Long.MinValue))
-          val out = batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .map { e =>
-              val (p, n) = cusumStep(st.sPos, st.sNeg, e.v, mu0, slack)
-              st = CusumState(p, n, math.max(st.maxPos, p),
-                math.max(st.maxNeg, n), e.event_id)
-              CusumOut(uid, e.event_id, p, n, st.maxPos, st.maxNeg)
-            }.toArray // drain before update: st must hold the final state
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, _.event_id, CusumState(0L, 0L, 0L, 0L)) { (st, e) =>
+      val (p, n) = cusumStep(st.sPos, st.sNeg, e.v, mu0, slack)
+      val next = CusumState(p, n, math.max(st.maxPos, p), math.max(st.maxNeg, n))
+      (next, Some(CusumOut(e.user_id, e.event_id, p, n, next.maxPos, next.maxNeg)))
+    }
   }
 
   /** F29 state: the Holt recursion's two e6-quantized integers plus
-    * the init phase (0 = empty, 1 = one observation seen, 2 = running)
-    * and the event-id watermark. `x1` is the first observation, held
-    * only through phase 1 for the classical b₁ = x₂ − x₁ init. */
-  final case class HoltState(phase: Int, x1: Long, lq: Long, bq: Long,
-                             n: Long, lastEvent: Long)
+    * the init phase (0 = empty, 1 = one observation seen, 2 = running).
+    * `x1` is the first observation, held only through phase 1 for the
+    * classical b₁ = x₂ − x₁ init. */
+  final case class HoltState(phase: Int, x1: Long, lq: Long, bq: Long, n: Long)
   final case class HoltOut(user_id: Long, event_id: Long, n: Long,
                            level_e6: Long, trend_e6: Long, f1_e6: Long)
 
   /** F29: streaming per-key Holt double-exponential smoother (online
     * twin of B96, SAME [[graft.operators.Relational.holtStep]]
-    * kernel): flatMapGroupsWithState with O(1) exact-integer state per
-    * key — the recursion's (level, trend) pair is e6-quantized every
-    * step exactly as the batch query's, so the stream CANNOT drift
-    * from a batch replay of the same arrivals (StreamingSpec pins
-    * stream == sequential fold across batches incl. replay). Init
-    * follows B96's classical convention (l₁ = x₁, b₁ = x₂ − x₁, with
-    * x₂ then processed through the step). Emits the post-event state
-    * and 1-step forecast per arrival in Update mode; state never grows
-    * with the stream.
+    * kernel): O(1) exact-integer state per key, folded by
+    * [[replayFold]] with `event_id` as the mark — the recursion's
+    * (level, trend) pair is e6-quantized every step exactly as the
+    * batch query's, so the stream CANNOT drift from a batch replay of
+    * the same arrivals (StreamingSpec pins stream == sequential fold
+    * across batches incl. replay). Init follows B96's classical
+    * convention (l₁ = x₁, b₁ = x₂ − x₁, with x₂ then processed through
+    * the step). Emits the post-event state and 1-step forecast per
+    * arrival in Update mode; state never grows with the stream.
     */
   def holtStream(in: Dataset[KeyedVal]): Dataset[HoltOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[KeyedVal], state: GroupState[HoltState]) => {
-          var st = state.getOption.getOrElse(
-            HoltState(0, 0L, 0L, 0L, 0L, Long.MinValue))
-          val out = batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .map { e =>
-              st = st.phase match {
-                case 0 =>
-                  HoltState(1, e.v, e.v * 1000000L, 0L, 1L, e.event_id)
-                case 1 =>
-                  val lq0 = st.x1 * 1000000L
-                  val bq0 = e.v * 1000000L - lq0
-                  val (nl, nb) = graft.operators.Relational.holtStep(lq0, bq0, e.v)
-                  HoltState(2, 0L, nl, nb, 2L, e.event_id)
-                case _ =>
-                  val (nl, nb) = graft.operators.Relational.holtStep(st.lq, st.bq, e.v)
-                  HoltState(2, 0L, nl, nb, st.n + 1, e.event_id)
-              }
-              HoltOut(uid, e.event_id, st.n, st.lq, st.bq, st.lq + st.bq)
-            }.toArray // drain before update: st must hold the final state
-          state.update(st)
-          out.iterator
-        })
+    import graft.operators.Relational.holtStep
+    replayFold(in)(_.user_id, _.event_id, HoltState(0, 0L, 0L, 0L, 0L)) { (st, e) =>
+      val next = st.phase match {
+        case 0 => HoltState(1, e.v, e.v * 1000000L, 0L, 1L)
+        case 1 =>
+          val lq0 = st.x1 * 1000000L
+          val (nl, nb) = holtStep(lq0, e.v * 1000000L - lq0, e.v)
+          HoltState(2, 0L, nl, nb, 2L)
+        case _ =>
+          val (nl, nb) = holtStep(st.lq, st.bq, e.v)
+          HoltState(2, 0L, nl, nb, st.n + 1)
+      }
+      (next, Some(HoltOut(e.user_id, e.event_id, next.n, next.lq, next.bq,
+        next.lq + next.bq)))
+    }
   }
 
   /** F34 state: the init buffer (≤14 observations — bounded, so still
     * O(1)) then the B111 integral state: (level, trend, 7-slot
-    * seasonal queue), all exact integers; event-id watermark for
-    * replay safety. */
+    * seasonal queue), all exact integers. */
   final case class HwState(buf: Seq[Long], lq: Long, bq: Long,
-                           seas: Seq[Long], n: Long, lastEvent: Long)
+                           seas: Seq[Long], n: Long)
   final case class HwOut(user_id: Long, event_id: Long, n: Long,
                          level_e6: Long, trend_e6: Long, f1_e6: Long)
 
   /** F34: streaming per-key Holt–Winters additive smoother (online
     * twin of B111, SAME [[graft.operators.Relational.hwInit]] /
-    * [[graft.operators.Relational.hwStep]] kernels): the first 14
+    * [[graft.operators.Relational.hwStep]] kernels), folded by
+    * [[replayFold]] with `event_id` as the mark: the first 14
     * arrivals per key buffer for the classical two-week init; on the
     * 14th, init runs and arrivals 8–14 replay through the step exactly
     * as the batch recursion processes them, emitting the first output
@@ -867,48 +895,35 @@ object EventStreams {
     */
   def holtWintersStream(in: Dataset[KeyedVal]): Dataset[HwOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[KeyedVal], state: GroupState[HwState]) => {
-          var st = state.getOption.getOrElse(
-            HwState(Nil, 0L, 0L, Nil, 0L, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[HwOut]
-          batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .foreach { e =>
-              if (st.seas.isEmpty) {
-                val buf = st.buf :+ e.v
-                if (buf.length < 14)
-                  st = HwState(buf, 0L, 0L, Nil, buf.length.toLong, e.event_id)
-                else {
-                  val (l0, b0, s0) = graft.operators.Relational.hwInit(buf.toArray)
-                  var lq = l0; var bq = b0
-                  val q = scala.collection.mutable.Queue(s0.toSeq: _*)
-                  buf.drop(7).foreach { x =>
-                    val (nl, nb, ns) = graft.operators.Relational.hwStep(lq, bq, q.dequeue(), x * 1000000L)
-                    lq = nl; bq = nb; q.enqueue(ns)
-                  }
-                  st = HwState(Nil, lq, bq, q.toSeq, 14L, e.event_id)
-                  out += HwOut(uid, e.event_id, 14L, lq, bq, lq + bq + q.head)
-                }
-              } else {
-                val q = scala.collection.mutable.Queue(st.seas: _*)
-                val (nl, nb, ns) =
-                  graft.operators.Relational.hwStep(st.lq, st.bq, q.dequeue(), e.v * 1000000L)
-                q.enqueue(ns)
-                st = HwState(Nil, nl, nb, q.toSeq, st.n + 1, e.event_id)
-                out += HwOut(uid, e.event_id, st.n, nl, nb, nl + nb + q.head)
-              }
-            }
-          state.update(st)
-          out.iterator
-        })
+    import graft.operators.Relational.{hwInit, hwStep}
+    replayFold(in)(_.user_id, _.event_id, HwState(Nil, 0L, 0L, Nil, 0L)) { (st, e) =>
+      if (st.seas.isEmpty) {
+        val buf = st.buf :+ e.v
+        if (buf.length < 14) (HwState(buf, 0L, 0L, Nil, buf.length.toLong), None)
+        else {
+          val (l0, b0, s0) = hwInit(buf.toArray)
+          var lq = l0; var bq = b0
+          val q = scala.collection.mutable.Queue(s0.toSeq: _*)
+          buf.drop(7).foreach { x =>
+            val (nl, nb, ns) = hwStep(lq, bq, q.dequeue(), x * 1000000L)
+            lq = nl; bq = nb; q.enqueue(ns)
+          }
+          (HwState(Nil, lq, bq, q.toSeq, 14L),
+           Some(HwOut(e.user_id, e.event_id, 14L, lq, bq, lq + bq + q.head)))
+        }
+      } else {
+        val q = scala.collection.mutable.Queue(st.seas: _*)
+        val (nl, nb, ns) = hwStep(st.lq, st.bq, q.dequeue(), e.v * 1000000L)
+        q.enqueue(ns)
+        (HwState(Nil, nl, nb, q.toSeq, st.n + 1),
+         Some(HwOut(e.user_id, e.event_id, st.n + 1, nl, nb, nl + nb + q.head)))
+      }
+    }
   }
 
   /** F35 state: the last two event types of the OPEN session plus the
-    * last event time and the event-id watermark — O(1) per user. */
-  final case class PathState(t1: String, t2: String, lastTs: Long,
-                             lastEvent: Long)
+    * last event time — O(1) per user. */
+  final case class PathState(t1: String, t2: String, lastTs: Long)
   final case class PathOut(user_id: Long, event_id: Long, t1: String,
                            t2: String, t3: String)
 
@@ -918,41 +933,30 @@ object EventStreams {
     * emits it immediately; a gap reset clears the pair state, so
     * trigrams never span sessions, exactly as the batch query's
     * per-(user, session) windows. O(1) state per key (two strings +
-    * two longs); replay-safe via the event-id watermark. Downstream,
-    * the B112 aggregate (count per trigram, ppm shares) is one
-    * groupBy over this stream's output. StreamingSpec pins stream ==
-    * sequential fold across batches incl. replay.
+    * one long), folded by [[replayFold]] with `(ts_us, event_id)` as
+    * the mark. Downstream, the B112 aggregate (count per trigram, ppm
+    * shares) is one groupBy over this stream's output. StreamingSpec
+    * pins stream == sequential fold across batches incl. replay.
     */
   def eventPathsStream(in: Dataset[AttrEvent]): Dataset[PathOut] = {
     val gapUs = 1800L * 1000000L
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[AttrEvent], state: GroupState[PathState]) => {
-          var st = state.getOption.getOrElse(
-            PathState(null, null, Long.MinValue, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[PathOut]
-          batch.toArray.sortBy(e => (e.ts_us, e.event_id)).iterator
-            .filter(_.event_id > st.lastEvent)
-            .foreach { e =>
-              val newSession =
-                st.lastTs == Long.MinValue || e.ts_us - st.lastTs > gapUs
-              val (t1, t2) =
-                if (newSession) (null: String, null: String)
-                else (st.t1, st.t2)
-              if (t1 != null && t2 != null)
-                out += PathOut(uid, e.event_id, t1, t2, e.event_type)
-              st = PathState(t2, e.event_type, e.ts_us, e.event_id)
-            }
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, e => (e.ts_us, e.event_id),
+                   PathState(null, null, Long.MinValue)) { (st, e) =>
+      val sameSession = st.lastTs != Long.MinValue && e.ts_us - st.lastTs <= gapUs
+      val row =
+        if (sameSession && st.t1 != null && st.t2 != null)
+          Some(PathOut(e.user_id, e.event_id, st.t1, st.t2, e.event_type))
+        else None
+      (PathState(if (sameSession) st.t2 else null, e.event_type, e.ts_us), row)
+    }
   }
 
-  /** F36 state: the open session's aggregate — seq, bounds, count,
-    * entry/exit types — plus the event-id watermark; O(1) per user. */
+  /** F36 state: the open session's aggregate — seq (0 before the
+    * first session), last time, count, entry/exit types; O(1) per
+    * user. */
   final case class SessPathState(seq: Long, lastTs: Long, n: Long,
-                                 entry: String, exit: String, lastEvent: Long)
+                                 entry: String, exit: String)
   final case class SessPathOut(user_id: Long, session_seq: Long,
                                entry_type: String, exit_type: String,
                                n_events: Long)
@@ -960,46 +964,33 @@ object EventStreams {
   /** F36: streaming session entry/exit tracking (online twin of
     * B115's per-session frame): the F2 sessionizer pattern carrying
     * entry/exit types — closed sessions are final on first emission,
-    * the open session re-emits (same session_seq) as arrivals extend
-    * it; readers keep the last row per (user_id, session_seq) and the
-    * B115 bounce rollup is one groupBy over that compacted stream.
-    * O(1) state per key, replay-safe via the event-id watermark.
-    * StreamingSpec pins the compacted stream == a sequential batch
-    * fold across batches incl. replay.
+    * the open session re-emits (same session_seq) once per batch that
+    * extends it; readers keep the last row per (user_id, session_seq)
+    * and the B115 bounce rollup is one groupBy over that compacted
+    * stream. O(1) state per key, folded by [[replayFold]] with
+    * `(ts_us, event_id)` as the mark. StreamingSpec pins the compacted
+    * stream == a sequential batch fold across batches incl. replay.
     */
   def sessionPathsStream(in: Dataset[AttrEvent]): Dataset[SessPathOut] = {
     val gapUs = 1800L * 1000000L
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[AttrEvent], state: GroupState[SessPathState]) => {
-          var open = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessPathOut]
-          def emit(s: SessPathState): Unit =
-            out += SessPathOut(uid, s.seq, s.entry, s.exit, s.n)
-          val fresh = batch.toArray.sortBy(e => (e.ts_us, e.event_id))
-            .filter(e => open == null || e.event_id > open.lastEvent)
-          fresh.foreach { e =>
-            if (open != null && e.ts_us - open.lastTs <= gapUs)
-              open = open.copy(lastTs = e.ts_us, n = open.n + 1,
-                exit = e.event_type, lastEvent = e.event_id)
-            else {
-              val next = if (open == null) 1L else { emit(open); open.seq + 1 }
-              open = SessPathState(next, e.ts_us, 1L,
-                e.event_type, e.event_type, e.event_id)
-            }
-          }
-          if (open != null && fresh.nonEmpty) { emit(open); state.update(open) }
-          out.iterator
-        })
+    def row(uid: Long, s: SessPathState) = SessPathOut(uid, s.seq, s.entry, s.exit, s.n)
+    replayFold(in)(_.user_id, e => (e.ts_us, e.event_id),
+                   SessPathState(0L, 0L, 0L, null, null))(
+      (open, e) =>
+        if (open.seq > 0L && e.ts_us - open.lastTs <= gapUs)
+          (open.copy(lastTs = e.ts_us, n = open.n + 1, exit = e.event_type), None)
+        else
+          (SessPathState(open.seq + 1, e.ts_us, 1L, e.event_type, e.event_type),
+           if (open.seq > 0L) Some(row(e.user_id, open)) else None),
+      (uid, open) => Some(row(uid, open)))
   }
 
-  /** F37 shapes: demand arrival (size in cents), the two Croston
-    * states + watermark — O(1) per key. */
+  /** F37 shapes: demand arrival (size in cents) and the two Croston
+    * states — O(1) per key. */
   final case class CrostonEvent(user_id: Long, event_id: Long, ts_us: Long,
                                 z: Long)
-  final case class CrostonState(zq: Long, pq: Long, n: Long, lastTsUs: Long,
-                                lastEvent: Long)
+  final case class CrostonState(zq: Long, pq: Long, n: Long, lastTsUs: Long)
   final case class CrostonOut(user_id: Long, event_id: Long, n: Long,
                               z_e6: Long, p_e6: Long, forecast_e6: Long)
 
@@ -1009,43 +1000,31 @@ object EventStreams {
     * exact-integer state — gap = whole days since the previous demand,
     * floored at 1, exactly the batch convention — and emits the
     * post-event state + integral demand-rate forecast. Float-free
-    * kernel ⇒ stream and batch cannot drift; replay-safe via the
-    * event-id watermark. StreamingSpec pins stream == sequential fold.
+    * kernel ⇒ stream and batch cannot drift; folded by [[replayFold]]
+    * with `(ts_us, event_id)` as the mark. StreamingSpec pins stream ==
+    * sequential fold.
     */
   def crostonStream(in: Dataset[CrostonEvent]): Dataset[CrostonOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[CrostonEvent], state: GroupState[CrostonState]) => {
-          var st = state.getOption.getOrElse(
-            CrostonState(0L, 0L, 0L, Long.MinValue, Long.MinValue))
-          val out = batch.toArray.sortBy(e => (e.ts_us, e.event_id)).iterator
-            .filter(_.event_id > st.lastEvent)
-            .map { e =>
-              st =
-                if (st.n == 0L)
-                  CrostonState(e.z * 1000000L, 1000000L, 1L, e.ts_us, e.event_id)
-                else {
-                  val gap = math.max(1L,
-                    Math.floorDiv(e.ts_us - st.lastTsUs, 86400000000L))
-                  val (nz, np) = graft.operators.Relational
-                    .crostonStep(st.zq, st.pq, e.z, gap)
-                  CrostonState(nz, np, st.n + 1, e.ts_us, e.event_id)
-                }
-              CrostonOut(uid, e.event_id, st.n, st.zq, st.pq,
-                Math.floorDiv(st.zq * 1000000L, st.pq))
-            }.toArray // drain before update
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, e => (e.ts_us, e.event_id),
+                   CrostonState(0L, 0L, 0L, Long.MinValue)) { (st, e) =>
+      val next =
+        if (st.n == 0L) CrostonState(e.z * 1000000L, 1000000L, 1L, e.ts_us)
+        else {
+          val gap = math.max(1L, Math.floorDiv(e.ts_us - st.lastTsUs, 86400000000L))
+          val (nz, np) = graft.operators.Relational.crostonStep(st.zq, st.pq, e.z, gap)
+          CrostonState(nz, np, st.n + 1, e.ts_us)
+        }
+      (next, Some(CrostonOut(e.user_id, e.event_id, next.n, next.zq, next.pq,
+        Math.floorDiv(next.zq * 1000000L, next.pq))))
+    }
   }
 
   /** F38 shapes: one quantized component observation; per-DIMENSION
-    * state (cohort counts + exact sums + vec watermark) — O(1) per
-    * key, 64 keys total. */
+    * state (cohort counts + exact sums) — O(1) per key, 64 keys
+    * total. */
   final case class DimEvent(d: Long, vec_id: Long, ev: Boolean, q: Long)
-  final case class DimState(n0: Long, s0: Long, n1: Long, s1: Long,
-                            lastVec: Long)
+  final case class DimState(n0: Long, s0: Long, n1: Long, s1: Long)
   final case class DimDriftOut(d: Long, n0: Long, n1: Long, m0_e6: Long,
                                m1_e6: Long, drift_e6: Long)
 
@@ -1056,46 +1035,32 @@ object EventStreams {
     * DIMENSION, not a global key, is what keeps the monitor parallel
     * — a single-key design would serialize the whole stream), and
     * each batch re-emits the post-batch means (sign-split integral,
-    * the D25 formula) and drift per dimension. Replay-safe via the
-    * vec_id watermark; state never grows with the stream.
-    * StreamingSpec pins the final per-dim frame == a sequential fold
-    * == the batch D25 derivation.
+    * the D25 formula) and drift per dimension. Folded by
+    * [[replayFold]] with `vec_id` as the mark; state never grows with
+    * the stream. StreamingSpec pins the final per-dim frame == a
+    * sequential fold == the batch D25 derivation.
     */
   def embedDriftStream(in: Dataset[DimEvent]): Dataset[DimDriftOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.d)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (d: Long, batch: Iterator[DimEvent], state: GroupState[DimState]) => {
-          var st = state.getOption.getOrElse(DimState(0L, 0L, 0L, 0L, Long.MinValue))
-          val fresh = batch.toArray.sortBy(_.vec_id)
-            .filter(_.vec_id > st.lastVec)
-          fresh.foreach { e =>
-            st =
-              if (e.ev) st.copy(n0 = st.n0 + 1, s0 = st.s0 + e.q,
-                lastVec = e.vec_id)
-              else st.copy(n1 = st.n1 + 1, s1 = st.s1 + e.q,
-                lastVec = e.vec_id)
-          }
-          state.update(st)
-          if (fresh.isEmpty) Iterator.empty
-          else {
-            // toward-zero integral mean == the batch abs-div CASE
-            def m(sm: Long, n: Long): Long = if (n == 0L) 0L else sm / n
-            val m0 = m(st.s0, st.n0); val m1 = m(st.s1, st.n1)
-            Iterator.single(
-              DimDriftOut(d, st.n0, st.n1, m0, m1, math.abs(m1 - m0)))
-          }
-        })
+    replayFold(in)(_.d, _.vec_id, DimState(0L, 0L, 0L, 0L))(
+      (st, e) =>
+        (if (e.ev) st.copy(n0 = st.n0 + 1, s0 = st.s0 + e.q)
+         else st.copy(n1 = st.n1 + 1, s1 = st.s1 + e.q), None),
+      (d, st) => {
+        // toward-zero integral mean == the batch abs-div CASE
+        def m(sm: Long, n: Long): Long = if (n == 0L) 0L else sm / n
+        val m0 = m(st.s0, st.n0); val m1 = m(st.s1, st.n1)
+        Some(DimDriftOut(d, st.n0, st.n1, m0, m1, math.abs(m1 - m0)))
+      })
   }
 
   /** F39 shapes: one order arrival; per-customer state = the CURRENT
-    * day's burst aggregate only (count, cents, first key, min/max
-    * cents) + the order-key watermark — O(1), day rollover resets. */
+    * day's burst aggregate only (count, cents, min/max cents) — O(1),
+    * day rollover resets. */
   final case class OrderEvent(ck: Long, order_key: Long, day_ed: Long,
                               cents: Long)
   final case class BurstState(day: Long, n: Long, cents: Long,
-                              firstKey: Long, minC: Long, maxC: Long,
-                              lastKey: Long)
+                              minC: Long, maxC: Long)
   final case class BurstOut(ck: Long, order_key: Long, day_ed: Long,
                             n_today: Long, total_cents: Long,
                             spread_cents: Long)
@@ -1108,50 +1073,31 @@ object EventStreams {
     * today's count ≥ 2 emits the burst's running count, combined
     * cents, and max−min spread (spread 0 = the resubmission
     * signature, flagged the MOMENT the duplicate lands rather than in
-    * tomorrow's batch audit). O(1) state per customer; replay-safe
-    * via the lexicographic (day, order-key) watermark — orderkeys are
-    * NOT day-monotone, so a bare key watermark would drop genuine
-    * later-day arrivals. Requires (day, key)-ordered arrival per key,
-    * the F2 sessionizer's discipline. StreamingSpec pins stream ==
-    * sequential fold incl. replay.
+    * tomorrow's batch audit). O(1) state per customer, folded by
+    * [[replayFold]] with the lexicographic `(day_ed, order_key)` as
+    * the mark — orderkeys are NOT day-monotone, so a bare key mark
+    * would drop genuine later-day arrivals. StreamingSpec pins stream
+    * == sequential fold incl. replay.
     */
   def sameDayBurstStream(in: Dataset[OrderEvent]): Dataset[BurstOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.ck)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (ck: Long, batch: Iterator[OrderEvent], state: GroupState[BurstState]) => {
-          var st = state.getOption.getOrElse(
-            BurstState(Long.MinValue, 0L, 0L, 0L, 0L, 0L, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[BurstOut]
-          // watermark is the LEXICOGRAPHIC (day, key) pair: orderkeys are
-          // not day-monotone, so a bare key watermark would drop genuine
-          // later-day arrivals with smaller keys
-          batch.toArray.sortBy(e => (e.day_ed, e.order_key)).iterator
-            .filter(e => e.day_ed > st.day ||
-              (e.day_ed == st.day && e.order_key > st.lastKey))
-            .foreach { e =>
-              st =
-                if (e.day_ed != st.day)
-                  BurstState(e.day_ed, 1L, e.cents, e.order_key,
-                    e.cents, e.cents, e.order_key)
-                else
-                  BurstState(st.day, st.n + 1, st.cents + e.cents,
-                    st.firstKey, math.min(st.minC, e.cents),
-                    math.max(st.maxC, e.cents), e.order_key)
-              if (st.n >= 2)
-                out += BurstOut(ck, e.order_key, st.day, st.n, st.cents,
-                  st.maxC - st.minC)
-            }
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.ck, e => (e.day_ed, e.order_key),
+                   BurstState(Long.MinValue, 0L, 0L, 0L, 0L)) { (st, e) =>
+      val next =
+        if (e.day_ed != st.day) BurstState(e.day_ed, 1L, e.cents, e.cents, e.cents)
+        else BurstState(st.day, st.n + 1, st.cents + e.cents,
+          math.min(st.minC, e.cents), math.max(st.maxC, e.cents))
+      (next,
+       if (next.n >= 2) Some(BurstOut(e.ck, e.order_key, next.day, next.n,
+         next.cents, next.maxC - next.minC))
+       else None)
+    }
   }
 
   /** F40 shapes: one classified document arrival; per-SOURCE state =
     * the language count map (bounded by the language domain, ≤ a
-    * handful of keys — O(langs), not O(stream)) + doc watermark. */
+    * handful of keys — O(langs), not O(stream)). */
   final case class DocLangEvent(source: String, doc_id: Long, pred: String)
-  final case class PurityState(counts: Map[String, Long], lastDoc: Long)
   final case class PurityOut(source: String, n_docs: Long,
                              major_lang: String, n_major: Long,
                              purity_ppm: Long)
@@ -1163,42 +1109,26 @@ object EventStreams {
     * and EXACT integral-ppm purity. The feed-routing decision ("this
     * source started streaming the wrong language") fires while the
     * feed is live instead of in tomorrow's batch audit. State is
-    * O(|langs|) per source; replay-safe via the doc-id watermark.
-    * StreamingSpec pins the final per-source frame == the batch C48
-    * derivation.
+    * O(|langs|) per source, folded by [[replayFold]] with `doc_id` as
+    * the mark. StreamingSpec pins the final per-source frame == the
+    * batch C48 derivation.
     */
   def sourcePurityStream(in: Dataset[DocLangEvent]): Dataset[PurityOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (src: String, batch: Iterator[DocLangEvent], state: GroupState[PurityState]) => {
-          var st = state.getOption.getOrElse(
-            PurityState(Map.empty, Long.MinValue))
-          val fresh = batch.toArray.sortBy(_.doc_id)
-            .filter(_.doc_id > st.lastDoc)
-          fresh.foreach { e =>
-            st = PurityState(
-              st.counts.updated(e.pred, st.counts.getOrElse(e.pred, 0L) + 1L),
-              e.doc_id)
-          }
-          state.update(st)
-          if (fresh.isEmpty) Iterator.empty
-          else {
-            val n = st.counts.values.sum
-            // (count DESC, lang ASC) — the C48 deterministic rank
-            val (lang, c) = st.counts.toSeq
-              .sortBy { case (l, cnt) => (-cnt, l) }.head
-            Iterator.single(PurityOut(src, n, lang, c, c * 1000000L / n))
-          }
-        })
+    replayFold(in)(_.source, _.doc_id, Map.empty[String, Long])(
+      (counts, e) => (counts.updated(e.pred, counts.getOrElse(e.pred, 0L) + 1L), None),
+      (src, counts) => {
+        val n = counts.values.sum
+        // (count DESC, lang ASC) — the C48 deterministic rank
+        val (lang, c) = counts.toSeq.sortBy { case (l, cnt) => (-cnt, l) }.head
+        Some(PurityOut(src, n, lang, c, c * 1000000L / n))
+      })
   }
 
   /** F41 shapes: one error arrival; per-user state = the OPEN error
-    * session's aggregate (seq, count, first/last µs) + event
-    * watermark — O(1). */
+    * session's aggregate (seq, count, first/last µs) — O(1). */
   final case class ErrEvent(user_id: Long, event_id: Long, ts_us: Long)
-  final case class ErrBurstState(seq: Long, n: Long, firstUs: Long,
-                                 lastUs: Long, lastEvent: Long)
+  final case class ErrBurstState(seq: Long, n: Long, firstUs: Long, lastUs: Long)
   final case class ErrBurstOut(user_id: Long, event_id: Long,
                                burst_seq: Long, n_errors: Long,
                                span_us: Long)
@@ -1208,44 +1138,31 @@ object EventStreams {
     * and every arrival that makes the open session's count ≥ 2 emits
     * the burst's running size and span — the retry-storm page fires
     * on the SECOND error, not in tomorrow's batch rollup. Gap
-    * rollover replaces the state (the F36 no-timer rule). Replay-safe
-    * via the event-id watermark (error event ids are ts-ordered per
-    * user in this stream's contract, the F29 discipline).
+    * rollover replaces the state (the F36 no-timer rule). Folded by
+    * [[replayFold]] with `(ts_us, event_id)` as the mark.
     * StreamingSpec pins stream == sequential fold incl. replay.
     */
   def errorBurstStream(in: Dataset[ErrEvent]): Dataset[ErrBurstOut] = {
     val gapUs = 3600L * 1000000L
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[ErrEvent], state: GroupState[ErrBurstState]) => {
-          var st = state.getOption.getOrElse(
-            ErrBurstState(0L, 0L, 0L, Long.MinValue, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ErrBurstOut]
-          batch.toArray.sortBy(e => (e.ts_us, e.event_id)).iterator
-            .filter(_.event_id > st.lastEvent)
-            .foreach { e =>
-              st =
-                if (st.n == 0L || e.ts_us - st.lastUs > gapUs)
-                  ErrBurstState(st.seq + 1, 1L, e.ts_us, e.ts_us, e.event_id)
-                else
-                  st.copy(n = st.n + 1, lastUs = e.ts_us, lastEvent = e.event_id)
-              if (st.n >= 2L)
-                out += ErrBurstOut(uid, e.event_id, st.seq, st.n,
-                  st.lastUs - st.firstUs)
-            }
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, e => (e.ts_us, e.event_id),
+                   ErrBurstState(0L, 0L, 0L, Long.MinValue)) { (st, e) =>
+      val next =
+        if (st.n == 0L || e.ts_us - st.lastUs > gapUs)
+          ErrBurstState(st.seq + 1, 1L, e.ts_us, e.ts_us)
+        else st.copy(n = st.n + 1, lastUs = e.ts_us)
+      (next,
+       if (next.n >= 2L) Some(ErrBurstOut(e.user_id, e.event_id, next.seq, next.n,
+         next.lastUs - next.firstUs))
+       else None)
+    }
   }
 
   /** F30 event/state/output shapes: O(1) exact state per user — the
-    * last touch's (ts, type), the first touch's type, and the
-    * event-id watermark. */
+    * last touch's (ts, type) and the first touch's type. */
   final case class AttrEvent(user_id: Long, event_id: Long, ts_us: Long,
                              event_type: String)
-  final case class AttrState(ltTs: Long, ltType: String, ftType: String,
-                             lastEvent: Long)
+  final case class AttrState(ltTs: Long, ltType: String, ftType: String)
   final case class AttrOut(user_id: Long, event_id: Long, last_type: String,
                            first_type: String, gap_us: Long)
 
@@ -1253,8 +1170,8 @@ object EventStreams {
     * purchase arrival is credited IMMEDIATELY from O(1) per-user state
     * — last-touch (7-day lookback, 'none' outside it) and first-touch
     * — instead of B104's full-history window; click/view arrivals
-    * update the state, everything else only advances the event-id
-    * watermark (the F13 dedup/order discipline). gap_us = −1 marks the
+    * update the state, everything else only advances the mark
+    * (`event_id`, folded by [[replayFold]]). gap_us = −1 marks the
     * 'none' bucket so downstream sums can exclude it exactly. State
     * never grows with the stream; StreamingSpec pins stream ==
     * sequential fold AND the per-model aggregate == the oracled batch
@@ -1263,35 +1180,21 @@ object EventStreams {
   def attributionStream(in: Dataset[AttrEvent]): Dataset[AttrOut] = {
     val lookbackUs = 7L * 24 * 3600 * 1000000L
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[AttrEvent], state: GroupState[AttrState]) => {
-          var st = state.getOption.getOrElse(
-            AttrState(Long.MinValue, null, null, Long.MinValue))
-          val out = batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .flatMap { e =>
-              val res =
-                if (e.event_type == "purchase") {
-                  val gap = if (st.ltType == null) -1L else e.ts_us - st.ltTs
-                  val lt =
-                    if (st.ltType == null || gap > lookbackUs) "none"
-                    else st.ltType
-                  val ft = if (st.ftType == null) "none" else st.ftType
-                  Some(AttrOut(uid, e.event_id, lt, ft,
-                    if (lt == "none") -1L else gap))
-                } else None
-              st =
-                if (e.event_type == "click" || e.event_type == "view")
-                  AttrState(e.ts_us, e.event_type,
-                    if (st.ftType == null) e.event_type else st.ftType,
-                    e.event_id)
-                else st.copy(lastEvent = e.event_id)
-              res
-            }.toArray // drain before update: st must hold the final state
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, _.event_id, AttrState(Long.MinValue, null, null)) { (st, e) =>
+      val row =
+        if (e.event_type == "purchase") {
+          val gap = if (st.ltType == null) -1L else e.ts_us - st.ltTs
+          val lt = if (st.ltType == null || gap > lookbackUs) "none" else st.ltType
+          val ft = if (st.ftType == null) "none" else st.ftType
+          Some(AttrOut(e.user_id, e.event_id, lt, ft, if (lt == "none") -1L else gap))
+        } else None
+      val next =
+        if (e.event_type == "click" || e.event_type == "view")
+          AttrState(e.ts_us, e.event_type,
+            if (st.ftType == null) e.event_type else st.ftType)
+        else st
+      (next, row)
+    }
   }
 
   /** F32: streaming domain classification (batch twin A46, the F16
@@ -1329,32 +1232,19 @@ object EventStreams {
     * cell — the cumulative token count — assigns each arriving
     * document its token interval [start, start + w) and its span over
     * B=512-token training sequences, exactly the batch census
-    * arithmetic. Requires doc_id-ordered arrival within the packer
-    * key (each micro-batch sorts; cross-batch order is the stream
-    * contract, like the sessionizer). At scale one packer per
-    * partition/shard is the production shape — each shard packs its
-    * own sub-stream; the single-key form here is the semantics
-    * contract the spec replays against the batch prefix sum.
-    * Replay-safe via the doc_id watermark in state: a redelivered
-    * document is ignored (its interval is already assigned and
-    * emitted) — the F41 at-least-once posture.
+    * arithmetic. Folded by [[replayFold]] with `doc_id` as the mark
+    * (cross-batch doc_id order is the stream contract, like the
+    * sessionizer). At scale one packer per partition/shard is the
+    * production shape — each shard packs its own sub-stream; the
+    * single-key form here is the semantics contract the spec replays
+    * against the batch prefix sum.
     */
   def seqPackStream(in: Dataset[PackIn], b: Long = 512L): Dataset[PackOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (_: Long, batch: Iterator[PackIn], state: GroupState[(Long, Long)]) => {
-          var (cum, last) = state.getOption.getOrElse((0L, Long.MinValue))
-          val fresh = batch.toArray.filter(_.doc_id > last).sortBy(_.doc_id)
-          val out = fresh.map { d =>
-            val start = cum
-            cum += d.w
-            last = d.doc_id
-            PackOut(d.doc_id, start, cum, (cum - 1) / b - start / b + 1)
-          }
-          state.update((cum, last))
-          out.iterator
-        })
+    replayFold(in)(_ => 0L, _.doc_id, 0L) { (start, d) =>
+      val end = start + d.w
+      (end, Some(PackOut(d.doc_id, start, end, (end - 1) / b - start / b + 1)))
+    }
   }
 
   /** F45 input/output: one event with its experiment cohort and
@@ -1366,44 +1256,32 @@ object EventStreams {
 
   /** F45: streaming A/B conversion monitor (online twin of B145's
     * two-proportion z-test — the live experiment dashboard): FOUR
-    * O(1) counter cells (n/x per cohort) plus the event-id replay
-    * watermark; every arrival emits the exact post-arrival counts
-    * and the ppm conversion rates (x·10⁶ div n — nonnegative, so /
-    * equals the batch div), from which the z statistic is a closed
-    * form downstream (the spec pins final counters == the oracled
-    * batch counters, so the published z follows bit-identically).
-    * Event-id-ordered arrival per the F13 discipline; a redelivered
-    * id is dropped — its counter update already happened. State
-    * never grows with the stream: five longs total.
+    * O(1) counter cells (n/x per cohort), folded by [[replayFold]]
+    * with `event_id` as the mark; every arrival emits the exact
+    * post-arrival counts and the ppm conversion rates (x·10⁶ div n —
+    * nonnegative, so / equals the batch div), from which the z
+    * statistic is a closed form downstream (the spec pins final
+    * counters == the oracled batch counters, so the published z
+    * follows bit-identically). State never grows with the stream.
     */
   def abMonitorStream(in: Dataset[AbIn]): Dataset[AbOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (_: Long, batch: Iterator[AbIn],
-         state: GroupState[(Long, Long, Long, Long, Long)]) => {
-          var (n1, x1, n2, x2, last) =
-            state.getOption.getOrElse((0L, 0L, 0L, 0L, Long.MinValue))
-          val fresh = batch.toArray.filter(_.event_id > last).sortBy(_.event_id)
-          val out = fresh.map { e =>
-            if (e.cohort == 0) { n1 += 1; if (e.purchase) x1 += 1 }
-            else { n2 += 1; if (e.purchase) x2 += 1 }
-            last = e.event_id
-            AbOut(e.event_id, n1, x1, n2, x2,
-              if (n1 == 0) 0L else x1 * 1000000L / n1,
-              if (n2 == 0) 0L else x2 * 1000000L / n2)
-          }
-          state.update((n1, x1, n2, x2, last))
-          out.iterator
-        })
+    def ppm(x: Long, n: Long): Long = if (n == 0) 0L else x * 1000000L / n
+    replayFold(in)(_ => 0L, _.event_id, (0L, 0L, 0L, 0L)) {
+      case ((n1, x1, n2, x2), e) =>
+        val hit = if (e.purchase) 1L else 0L
+        val next @ (m1, y1, m2, y2) =
+          if (e.cohort == 0) (n1 + 1, x1 + hit, n2, x2) else (n1, x1, n2 + 1, x2 + hit)
+        (next, Some(AbOut(e.event_id, m1, y1, m2, y2, ppm(y1, m1), ppm(y2, m2))))
+    }
   }
 
   /** F50 input/output: one observation with its cohort and its
     * domain-bounded value (quantity 1..50); output is the post-batch
-    * dominance census. */
+    * dominance census under version `ver` = the arrivals folded so
+    * far (n_a + n_b), which grows with every emission. */
   final case class CdIn(event_id: Long, cohort: Int, v: Int)
-  final case class CdState(ver: Long, ca: Array[Long], cb: Array[Long],
-                           last: Long)
+  final case class CdState(ca: Array[Long], cb: Array[Long])
   final case class CdOut(ver: Long, n_a: Long, n_b: Long,
                          n_gt: Long, n_lt: Long)
 
@@ -1414,44 +1292,37 @@ object EventStreams {
     * stream state O(|domain|) FOREVER — never O(stream)), and each
     * batch re-emits the exact dominance counts n_gt = Σ_v cA(v)·cumB(<v)
     * and the symmetric term via one O(|domain|) cumulative pass, from
-    * which δ is the batch's shared one-float-step closed form.
-    * Event-id replay watermark (F13 discipline); redelivered ids
-    * dropped. Histograms are mergeable by cell-wise sum — the F48
-    * combiner posture applies verbatim.
+    * which δ is the batch's shared one-float-step closed form. Folded
+    * by [[replayFold]] with `event_id` as the mark. Histograms are
+    * mergeable by cell-wise sum — the F48 combiner posture applies
+    * verbatim.
     */
   def dominanceStream(in: Dataset[CdIn], vMax: Int = 50): Dataset[CdOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (_: Long, batch: Iterator[CdIn], state: GroupState[CdState]) => {
-          val prev = state.getOption.getOrElse(
-            CdState(0L, new Array[Long](vMax + 1), new Array[Long](vMax + 1),
-              Long.MinValue))
-          val ca = prev.ca.clone(); val cb = prev.cb.clone()
-          var last = prev.last
-          batch.toArray.filter(_.event_id > last).sortBy(_.event_id)
-            .foreach { e =>
-              if (e.cohort == 0) ca(e.v) += 1 else cb(e.v) += 1
-              last = e.event_id
-            }
-          val ver = prev.ver + 1
-          state.update(CdState(ver, ca, cb, last))
-          var na = 0L; var nb = 0L; var gt = 0L; var lt = 0L; var cumB = 0L
-          var v = 0
-          while (v <= vMax) {
-            gt += ca(v) * cumB
-            cumB += cb(v)
-            na += ca(v); nb += cb(v); v += 1
-          }
-          // lt = Σ_v cA(v) · (nb − cumB(≤v)): second pass with totals known
-          var cumBle = 0L; v = 0
-          while (v <= vMax) {
-            cumBle += cb(v)
-            lt += ca(v) * (nb - cumBle)
-            v += 1
-          }
-          Iterator.single(CdOut(ver, na, nb, gt, lt))
-        })
+    def bump(c: Array[Long], v: Int): Array[Long] = { val a = c.clone(); a(v) += 1; a }
+    replayFold(in)(_ => 0L, _.event_id,
+                   CdState(new Array[Long](vMax + 1), new Array[Long](vMax + 1)))(
+      (st, e) =>
+        (if (e.cohort == 0) st.copy(ca = bump(st.ca, e.v))
+         else st.copy(cb = bump(st.cb, e.v)), None),
+      (_, st) => {
+        val ca = st.ca; val cb = st.cb
+        var na = 0L; var nb = 0L; var gt = 0L; var lt = 0L; var cumB = 0L
+        var v = 0
+        while (v <= vMax) {
+          gt += ca(v) * cumB
+          cumB += cb(v)
+          na += ca(v); nb += cb(v); v += 1
+        }
+        // lt = Σ_v cA(v) · (nb − cumB(≤v)): second pass with totals known
+        var cumBle = 0L; v = 0
+        while (v <= vMax) {
+          cumBle += cb(v)
+          lt += ca(v) * (nb - cumBle)
+          v += 1
+        }
+        Some(CdOut(na + nb, na, nb, gt, lt))
+      })
   }
 
   /** F49 input/output: one arrival with its ordered-arm score and
@@ -1464,32 +1335,22 @@ object EventStreams {
   /** F49: streaming ordered-arm trend monitor (online twin of B154's
     * Cochran–Armitage test — the live dose-response dashboard for
     * ordered experiment arms): FIVE O(1) counter cells — n, x,
-    * Σscore, Σscore·success, Σscore² — plus the event-id replay
-    * watermark; every arrival emits the exact post-arrival sums, and
-    * the trend z is the SAME one-float-step closed form the batch
-    * query renders ([[graft.operators.Relational.caZSql]]), so stream
-    * and batch agree bit-identically once the integer state does.
-    * Event-id-ordered arrival (F13 discipline), redelivered ids
-    * dropped. State never grows with the stream: six longs.
+    * Σscore, Σscore·success, Σscore² — folded by [[replayFold]] with
+    * `event_id` as the mark; every arrival emits the exact
+    * post-arrival sums, and the trend z is the SAME one-float-step
+    * closed form the batch query renders
+    * ([[graft.operators.Relational.caZSql]]), so stream and batch
+    * agree bit-identically once the integer state does. State never
+    * grows with the stream.
     */
   def caMonitorStream(in: Dataset[CaIn]): Dataset[CaOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (_: Long, batch: Iterator[CaIn],
-         state: GroupState[(Long, Long, Long, Long, Long, Long)]) => {
-          var (n, x, sx, sn, sn2, last) =
-            state.getOption.getOrElse((0L, 0L, 0L, 0L, 0L, Long.MinValue))
-          val fresh = batch.toArray.filter(_.event_id > last).sortBy(_.event_id)
-          val out = fresh.map { e =>
-            n += 1; sn += e.k; sn2 += e.k * e.k
-            if (e.succ) { x += 1; sx += e.k }
-            last = e.event_id
-            CaOut(e.event_id, n, x, sx, sn, sn2)
-          }
-          state.update((n, x, sx, sn, sn2, last))
-          out.iterator
-        })
+    replayFold(in)(_ => 0L, _.event_id, (0L, 0L, 0L, 0L, 0L)) {
+      case ((n, x, sx, sn, sn2), e) =>
+        val (dx, dsx) = if (e.succ) (1L, e.k) else (0L, 0L)
+        val o = CaOut(e.event_id, n + 1, x + dx, sx + dsx, sn + e.k, sn2 + e.k * e.k)
+        ((o.n, o.x, o.sx, o.sn, o.sn2), Some(o))
+    }
   }
 
   /** F46 input/output: one observation for a keyed moment
@@ -1502,33 +1363,22 @@ object EventStreams {
   /** F46: streaming power-sum accumulator (online twin of B142's
     * Jarque–Bera moments — the general "any moment statistic,
     * incrementally" kernel): per group key FIVE O(1) state cells
-    * (n, Σx, Σx², Σx³, Σx⁴ — all exact integers) plus the sequence
-    * replay watermark; skewness/kurtosis/JB are closed forms over
-    * the emitted state via the SAME shared formula text the batch
-    * query uses, so stream and batch publish bit-identical doubles
-    * once the sums agree (the spec pins that). Per-key
-    * sequence-ordered arrival, replay below the watermark dropped.
-    * This is the canonical fit-statistic streaming shape: the state
-    * is the sufficient statistic, never the data.
+    * (n, Σx, Σx², Σx³, Σx⁴ — all exact integers), folded by
+    * [[replayFold]] with the per-key `seq` as the mark;
+    * skewness/kurtosis/JB are closed forms over the emitted state via
+    * the SAME shared formula text the batch query uses, so stream and
+    * batch publish bit-identical doubles once the sums agree (the spec
+    * pins that). This is the canonical fit-statistic streaming shape:
+    * the state is the sufficient statistic, never the data.
     */
   def momentsStream(in: Dataset[MomIn]): Dataset[MomOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.flag)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (flag: String, batch: Iterator[MomIn],
-         state: GroupState[(Long, Long, Long, Long, Long, Long)]) => {
-          var (n, s1, s2, s3, s4, last) =
-            state.getOption.getOrElse((0L, 0L, 0L, 0L, 0L, Long.MinValue))
-          val fresh = batch.toArray.filter(_.seq > last).sortBy(_.seq)
-          val out = fresh.map { m =>
-            val x2 = m.x * m.x
-            n += 1; s1 += m.x; s2 += x2; s3 += x2 * m.x; s4 += x2 * x2
-            last = m.seq
-            MomOut(flag, m.seq, n, s1, s2, s3, s4)
-          }
-          state.update((n, s1, s2, s3, s4, last))
-          out.iterator
-        })
+    replayFold(in)(_.flag, _.seq, (0L, 0L, 0L, 0L, 0L)) {
+      case ((n, s1, s2, s3, s4), m) =>
+        val x2 = m.x * m.x
+        val o = MomOut(m.flag, m.seq, n + 1, s1 + m.x, s2 + x2, s3 + x2 * m.x, s4 + x2 * x2)
+        ((o.n, o.s1, o.s2, o.s3, o.s4), Some(o))
+    }
   }
 
   /** F47 input/output: one sampleable record (key, exact cents); the
@@ -1582,38 +1432,22 @@ object EventStreams {
                              age_months: Long, cents: Long)
 
   /** F44: streaming cohort assignment (online twin of B139's LTV
-    * matrix): TWO O(1) state cells per customer — the cohort month
-    * (frozen at first arrival) and a (month, order_key) lexicographic
-    * replay watermark. Each arriving order is stamped with its
-    * customer's cohort and age; the LTV matrix is then a downstream
-    * windowed aggregate of the stamped stream (the spec aggregates
-    * the emissions and matches the ORACLED batch cells exactly:
-    * n_orders, rev_cents, and distinct customers per cohort).
-    * Arrival contract: (month, order_key)-ordered per customer (the
-    * F39 posture); replay-safe — a redelivered order sorts at or
-    * below the watermark and is ignored, its stamp already emitted.
-    * At scale: state is two longs per customer key, the standard
+    * matrix): ONE O(1) state cell per customer — the cohort month
+    * (frozen at first arrival), folded by [[replayFold]] with the
+    * lexicographic `(m, order_key)` as the mark. Each arriving order is
+    * stamped with its customer's cohort and age; the LTV matrix is then
+    * a downstream windowed aggregate of the stamped stream (the spec
+    * aggregates the emissions and matches the ORACLED batch cells
+    * exactly: n_orders, rev_cents, and distinct customers per cohort).
+    * At scale: state is one long per customer key, the standard
     * keyed-state shape (F30 attribution), never a global structure.
     */
   def cohortLtvStream(in: Dataset[CohortIn]): Dataset[CohortOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.ck)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (ck: Long, batch: Iterator[CohortIn],
-         state: GroupState[(Long, Long, Long)]) => {
-          var (cohort, wm, wok) = state.getOption
-            .getOrElse((Long.MaxValue, Long.MinValue, Long.MinValue))
-          val fresh = batch.toArray
-            .filter(e => e.m > wm || (e.m == wm && e.order_key > wok))
-            .sortBy(e => (e.m, e.order_key))
-          val out = fresh.map { e =>
-            if (cohort == Long.MaxValue) cohort = e.m
-            wm = e.m; wok = e.order_key
-            CohortOut(ck, e.order_key, cohort, e.m - cohort, e.cents)
-          }
-          state.update((cohort, wm, wok))
-          out.iterator
-        })
+    replayFold(in)(_.ck, e => (e.m, e.order_key), Long.MaxValue) { (first, e) =>
+      val cohort = if (first == Long.MaxValue) e.m else first
+      (cohort, Some(CohortOut(e.ck, e.order_key, cohort, e.m - cohort, e.cents)))
+    }
   }
 
   /** F43 input/output: one daily aggregate point (epoch-day, exact
@@ -1630,106 +1464,67 @@ object EventStreams {
     * including the current point — the B140/B85 rule), m_t += x−x̄_i,
     * PH_t = m_t − min m_j, alarm when PH_t > λ (the batch query
     * calibrates λ = 10·global-mean; online, λ is the caller's
-    * parameter — a global mean does not exist mid-stream). Day-
-    * ordered arrival is the stream contract (daily aggregates arrive
-    * in day order by construction); replay-safe via the day
-    * watermark in state — a redelivered day is ignored, its
-    * statistic already emitted (the F41 at-least-once posture). At
-    * scale: the input is the ≤|days| daily-aggregate stream (a
-    * windowed upstream agg), not the raw fact — one detector key
-    * holds four longs.
+    * parameter — a global mean does not exist mid-stream). Folded by
+    * [[replayFold]] with `day_ed` as the mark (daily aggregates arrive
+    * in day order by construction). At scale: the input is the
+    * ≤|days| daily-aggregate stream (a windowed upstream agg), not the
+    * raw fact — one detector key holds four longs.
     */
   def pageHinkleyStream(in: Dataset[PhIn], lambda: Long): Dataset[PhOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (_: Long, batch: Iterator[PhIn],
-         state: GroupState[(Long, Long, Long, Long, Long)]) => {
-          var (i, cx, mt, mmin, last) =
-            state.getOption.getOrElse((0L, 0L, 0L, Long.MaxValue, Long.MinValue))
-          val fresh = batch.toArray.filter(_.day_ed > last).sortBy(_.day_ed)
-          val out = fresh.map { p =>
-            i += 1; cx += p.x
-            val mean = cx / i // cx ≥ 0: / equals the batch div here
-            mt += p.x - mean
-            mmin = math.min(mmin, mt)
-            last = p.day_ed
-            val ph = mt - mmin
-            PhOut(p.day_ed, mean, mt, ph, ph > lambda)
-          }
-          state.update((i, cx, mt, mmin, last))
-          out.iterator
-        })
+    replayFold(in)(_ => 0L, _.day_ed, (0L, 0L, 0L, Long.MaxValue)) {
+      case ((i0, cx0, mt0, mmin0), p) =>
+        val i = i0 + 1; val cx = cx0 + p.x
+        val mean = cx / i // cx ≥ 0: / equals the batch div here
+        val mt = mt0 + p.x - mean
+        val mmin = math.min(mmin0, mt)
+        val ph = mt - mmin
+        ((i, cx, mt, mmin), Some(PhOut(p.day_ed, mean, mt, ph, ph > lambda)))
+    }
   }
 
   /** F33 state/output: O(1) per key — balance, running max, clamp
-    * count, event-id watermark. */
-  final case class BalState(bal: Long, mx: Long, clamps: Long, n: Long,
-                            lastEvent: Long)
+    * count, arrivals. */
+  final case class BalState(bal: Long, mx: Long, clamps: Long, n: Long)
   final case class BalOut(user_id: Long, event_id: Long, bal: Long,
                           mx: Long, clamps: Long, n: Long)
 
   /** F33: streaming clamped balance (online twin of B108's inventory
     * replay): bal ← max(0, bal + Δ) per arrival from O(1) exact-integer
     * state — the non-linear recursion no streaming window expresses,
-    * incrementalized the only way it can be (a per-key fold, exactly
-    * what flatMapGroupsWithState is for); replay below the event-id
-    * watermark dropped (F13 discipline). Emits the post-event state per
-    * arrival in Update mode; state never grows with the stream.
+    * incrementalized the only way it can be (a per-key fold,
+    * [[replayFold]], with `event_id` as the mark). Emits the post-event
+    * state per arrival in Update mode; state never grows with the
+    * stream.
     */
   def clampedBalanceStream(in: Dataset[KeyedVal]): Dataset[BalOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[KeyedVal], state: GroupState[BalState]) => {
-          var st = state.getOption.getOrElse(BalState(0L, 0L, 0L, 0L, Long.MinValue))
-          val out = batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .map { e =>
-              val next = st.bal + e.v
-              val bal = if (next < 0) 0L else next
-              st = BalState(bal, math.max(st.mx, bal),
-                st.clamps + (if (next < 0) 1L else 0L), st.n + 1, e.event_id)
-              BalOut(uid, e.event_id, st.bal, st.mx, st.clamps, st.n)
-            }.toArray // drain before update: st must hold the final state
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, _.event_id, BalState(0L, 0L, 0L, 0L)) { (st, e) =>
+      val raw = st.bal + e.v
+      val bal = if (raw < 0) 0L else raw
+      val next = BalState(bal, math.max(st.mx, bal),
+        st.clamps + (if (raw < 0) 1L else 0L), st.n + 1)
+      (next, Some(BalOut(e.user_id, e.event_id, next.bal, next.mx, next.clamps, next.n)))
+    }
   }
 
-  /** F31 state/output: O(1) per user — the previous event type and the
-    * event-id watermark. */
-  final case class TransState(prevType: String, lastEvent: Long)
+  /** F31 output: one (predecessor type → type) pair per arrival. */
   final case class TransOut(user_id: Long, event_id: Long,
                             from_type: String, to_type: String)
 
   /** F31: streaming journey transitions (online twin of B105): each
-    * arrival pairs with its per-user PREDECESSOR type from O(1) state
+    * arrival pairs with its per-user PREDECESSOR type, the O(1) state
     * (the batch query's lag window, incrementalized; first event per
-    * user emits nothing, exactly like lag's null row), replay below
-    * the event-id watermark dropped (F13 discipline). Downstream the
-    * pairs feed the same ≤\|types\|² count aggregate as the batch
-    * matrix — StreamingSpec pins stream pairs == batch lag pairs
-    * exactly.
+    * user emits nothing, exactly like lag's null row), folded by
+    * [[replayFold]] with `event_id` as the mark. Downstream the pairs
+    * feed the same ≤\|types\|² count aggregate as the batch matrix —
+    * StreamingSpec pins stream pairs == batch lag pairs exactly.
     */
   def transitionStream(in: Dataset[AttrEvent]): Dataset[TransOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (uid: Long, batch: Iterator[AttrEvent], state: GroupState[TransState]) => {
-          var st = state.getOption.getOrElse(TransState(null, Long.MinValue))
-          val out = batch.toArray.sortBy(_.event_id).iterator
-            .filter(_.event_id > st.lastEvent)
-            .flatMap { e =>
-              val res =
-                if (st.prevType == null) None
-                else Some(TransOut(uid, e.event_id, st.prevType, e.event_type))
-              st = TransState(e.event_type, e.event_id)
-              res
-            }.toArray // drain before update: st must hold the final state
-          state.update(st)
-          out.iterator
-        })
+    replayFold(in)(_.user_id, _.event_id, null: String) { (prev, e) =>
+      (e.event_type, Option(prev).map(TransOut(e.user_id, e.event_id, _, e.event_type)))
+    }
   }
 
   /** F27: streaming first-digit audit (batch twin B89) — the Benford

@@ -34,7 +34,8 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val dir = graft.core.TempDir.forJvm("graft_nullemb")
     // vec_id 7 is not a probe (probes are every 50th id), so only the
-    // corpus pass can meet its null
+    // corpus pass can meet its null; q_ivf_balance reads the corpus as a
+    // typed (vec_id, v) Dataset
     (0L until 60L).map { id =>
       val emb = if (id == 7L) None
                 else Some(Array.tabulate(64)(j => math.sin(id * 64.0 + j + 1.0).toFloat))
@@ -44,7 +45,8 @@ class SimilaritySpec extends AnyFunSuite {
     for ((name, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
            org.apache.spark.sql.DataFrame)](
            "q_cosine_topk" -> Similarity.qCosineTopK, "q_ann_sq" -> Similarity.qAnnSq,
-           "q_cluster_sample" -> Similarity.qClusterSample)) {
+           "q_cluster_sample" -> Similarity.qClusterSample,
+           "q_ivf_balance" -> Similarity.qIvfBalance)) {
       val e = intercept[Exception](q(spark, dir.toString).collect())
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&

@@ -25,6 +25,13 @@ class StreamingSpec extends AnyFunSuite {
       .toSeq
   }
 
+  /** `batch` with one arrival delivered a second time inside the same
+    * micro-batch (an at-least-once retry): a replay-safe operator folds
+    * it once, so the sequential reference over the distinct arrivals
+    * still holds.
+    */
+  private def withRetry[A](batch: Seq[A]): Seq[A] = batch :+ batch(batch.length / 2)
+
   private case class TEv(ts: Long, event_type: String, value: Double)
 
   private case class Cell(x: Long, y: Long, v: Option[Long])
@@ -121,7 +128,7 @@ class StreamingSpec extends AnyFunSuite {
       // replay part of batch 1 — at/below each key's high-water mark,
       // must not double-count
       input.addData(b1.take(500)); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("run_out").as[RunningOut].collect()
         .map(r => (r.user_id, r.event_id, r.v, r.running)).toSet
       import org.apache.spark.sql.expressions.Window
@@ -150,7 +157,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b1); q.processAllAvailable()
       // replay below the high-water mark must not advance any state
       input.addData(b1.take(500)); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("cusum_out").as[CusumOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.s_pos, r.s_neg, r.max_pos, r.max_neg))
         .toMap
@@ -182,7 +189,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b1); q.processAllAvailable()
       // replay below the high-water mark must not advance the recursion
       input.addData(b1.take(500)); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("holt_out").as[HoltOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.n, r.level_e6, r.trend_e6, r.f1_e6))
         .toMap
@@ -219,7 +226,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b1); q.processAllAvailable()
       // replay below the high-water mark must not advance the recursion
       input.addData(b1.take(500)); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("hw_out").as[HwOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.n, r.level_e6, r.trend_e6, r.f1_e6))
         .toMap
@@ -266,7 +273,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b1); q.processAllAvailable()
       // replay below the high-water mark must not re-emit trigrams
       input.addData(b1.take(200)); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("paths_out").as[PathOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.t1, r.t2, r.t3)).toMap
       // batch twin: session-reset trigram fold per user in (ts, id) order
@@ -307,7 +314,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.partition(_.event_id < ev.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(200)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       // compact: re-emissions of an open session only grow n_events,
       // so last == max-n row per (user, session_seq)
       val got = spark.table("sesspath_out").as[SessPathOut].collect()
@@ -358,7 +365,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.partition(_.event_id < ev.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(200)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("croston_out").as[CrostonOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.n, r.z_e6, r.p_e6, r.forecast_e6))
         .toMap
@@ -401,7 +408,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.partition(_.vec_id < 250)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(1000)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       // final row per dim = the one with the largest observation count
       val got = spark.table("drift_out").as[DimDriftOut].collect()
         .groupBy(_.d)
@@ -441,7 +448,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = sorted.splitAt(sorted.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.takeRight(200)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("burst_out").as[BurstOut].collect()
         .map(r => (r.ck, r.order_key) ->
           (r.day_ed, r.n_today, r.total_cents, r.spread_cents)).toMap
@@ -486,7 +493,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.partition(_.doc_id < ev.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(100)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("purity_out").as[PurityOut].collect()
         .groupBy(_.source)
         .map { case (s, rs) =>
@@ -524,7 +531,7 @@ class StreamingSpec extends AnyFunSuite {
     // doc_id-ordered delivery split two ways + a replayed prefix:
     // the assignment must be identical (watermark drops redeliveries)
     val (a, b1) = docs.splitAt(docs.length / 2)
-    val r1 = run("pack_out_1", Seq(a, a.takeRight(40) ++ b1))
+    val r1 = run("pack_out_1", Seq(withRetry(a), a.takeRight(40) ++ b1))
     val (c, d1) = docs.splitAt(docs.length / 3)
     val r2 = run("pack_out_2", Seq(c, d1))
     assert(r1 == r2 && r1.nonEmpty)
@@ -555,7 +562,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.splitAt(ev.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.takeRight(100)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("cohort_out").as[CohortOut].collect()
       assert(got.length == ev.length, "exactly one stamp per order")
       // aggregate the stamped stream to the LTV cells and customers
@@ -598,7 +605,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = daily.splitAt(daily.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.takeRight(50)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("ph_out").as[PhOut].collect()
         .map(p => p.day_ed -> p).toMap
       // the reference is the batch recursion run sequentially
@@ -637,7 +644,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.splitAt(ev.length / 3)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.takeRight(40)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("ab_out").as[AbOut].collect()
         .map(o => o.event_id -> o).toMap
       // sequential reference fold over the ordered arrivals
@@ -712,11 +719,14 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Tables.lineitem(spark, sfDir)
       .filter(col("l_shipdate") >= lit("1997-01-01") &&
               col("l_shipdate") < lit("1999-01-01"))
-      .selectExpr("l_orderkey * 10 + l_linenumber AS event_id",
+      .selectExpr("l_orderkey * 10 + l_linenumber AS line",
         "CAST(l_shipdate >= TIMESTAMP '1998-01-01' AS INT) AS cohort",
         "CAST(l_quantity AS INT) AS v")
-      .collect().map(r => CdIn(r.getLong(0), r.getInt(1), r.getInt(2)))
-      .sortBy(_.event_id).toSeq
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      // ids must be unique: the fixture repeats (l_orderkey,
+      // l_linenumber), so number the sorted rows as the gate does
+      .sortBy(identity).zipWithIndex
+      .map { case ((_, cohort, v), i) => CdIn(i.toLong, cohort, v) }.toSeq
     val input = MemoryStream[CdIn]
     val q = EventStreams.dominanceStream(input.toDS())
       .writeStream.format("memory").queryName("cd_out").outputMode("update").start()
@@ -725,7 +735,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(ev.take(third)); q.processAllAvailable()
       input.addData(ev.slice(third, 2 * third) ++ ev.take(40)) // replay mixed in
       q.processAllAvailable()
-      input.addData(ev.drop(2 * third)); q.processAllAvailable()
+      input.addData(withRetry(ev.drop(2 * third))); q.processAllAvailable()
       val fin = spark.table("cd_out").as[CdOut].collect().maxBy(_.ver)
       val b = graft.operators.Relational.qCliffsDelta(spark, sfDir).collect()(0)
       assert(b.getAs[Long]("n_a") == fin.n_a && b.getAs[Long]("n_b") == fin.n_b)
@@ -751,7 +761,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(ev.take(third)); q.processAllAvailable()
       input.addData(ev.slice(third, 2 * third)); q.processAllAvailable()
       input.addData(ev.take(50)); q.processAllAvailable() // replay: all dropped
-      input.addData(ev.drop(2 * third)); q.processAllAvailable()
+      input.addData(withRetry(ev.drop(2 * third))); q.processAllAvailable()
       val rows = spark.table("ca_out").as[CaOut].collect()
       assert(rows.length == ev.length, "replayed ids must emit nothing")
       val fin = rows.maxBy(_.event_id)
@@ -820,7 +830,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b1); q.processAllAvailable()
       input.addData(b2.take(60)); q.processAllAvailable()
       input.addData(b2.take(60)); q.processAllAvailable() // replay
-      input.addData(b2.drop(60)); q.processAllAvailable()
+      input.addData(withRetry(b2.drop(60))); q.processAllAvailable()
       val got = spark.table("mom_out").as[MomOut].collect()
       assert(got.length == rows.length, "exactly one emission per arrival")
       val fin = got.groupBy(_.flag)
@@ -857,7 +867,7 @@ class StreamingSpec extends AnyFunSuite {
         .apply(ev.length / 2))
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(50)); q.processAllAvailable() // replay
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("errburst_out").as[ErrBurstOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.burst_seq, r.n_errors, r.span_us))
         .toMap
@@ -895,7 +905,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b1); q.processAllAvailable()
       // replay below the high-water mark must not re-credit purchases
       input.addData(b1.take(200)); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("attr_out").as[AttrOut].collect()
       // the streaming per-model aggregate must equal the oracled batch
       // query row for row (counts AND exact summed gaps)
@@ -928,7 +938,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.partition(_.event_id < ev.length / 2)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(300)); q.processAllAvailable() // replay: no dup pairs
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("trans_out").as[TransOut].collect()
         .map(t => (t.user_id, t.event_id, t.from_type, t.to_type)).toSet
       import org.apache.spark.sql.expressions.Window
@@ -990,7 +1000,7 @@ class StreamingSpec extends AnyFunSuite {
       val (b1, b2) = ev.partition(_.event_id < 2500)
       input.addData(b1); q.processAllAvailable()
       input.addData(b1.take(400)); q.processAllAvailable() // replay: no double-fold
-      input.addData(b2); q.processAllAvailable()
+      input.addData(withRetry(b2)); q.processAllAvailable()
       val got = spark.table("bal_out").as[BalOut].collect()
         .map(r => (r.user_id, r.event_id) -> (r.bal, r.mx, r.clamps, r.n)).toMap
       val expected = ev.groupBy(_.user_id).flatMap { case (uid, evs) =>

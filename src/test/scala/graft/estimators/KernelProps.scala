@@ -42,6 +42,12 @@ import graft.functions.expressions.MisraGries
   *    the target, one huge partition) every parent row lands in exactly
   *    one non-empty slice, in partition and row order, and there are as
   *    many slices as the target allows.
+  *  - `EventStreams.foldBatch`, the per-batch rule of every replay-safe
+  *    keyed stream: distinct ascending marks cut into contiguous
+  *    batches, each batch shuffled and carrying copies of its own and
+  *    earlier arrivals, fold batch by batch to exactly the rows and the
+  *    final state of one sequential fold over the distinct arrivals; a
+  *    batch with no new mark folds nothing.
   */
 object KernelProps extends Properties("graft.kernels") {
 
@@ -447,5 +453,52 @@ object KernelProps extends Properties("graft.kernels") {
       val expected = math.max(filled, math.min(target.toLong, counts.sum))
       Prop(tiled && ordered && slices.forall(s => s.until > s.from) &&
         slices.length == expected) :| s"counts=${counts.toSeq} target=$target slices=$slices"
+    }
+
+  // ---- EventStreams.foldBatch vs one sequential fold ----
+
+  // (mark, value) arrivals with distinct ascending marks, cut into
+  // contiguous (possibly empty) batches; each batch is shuffled and
+  // carries up to three copies of arrivals from itself or earlier batches
+  private val replayGen = for {
+    n <- Gen.choose(0, 40)
+    steps <- Gen.listOfN(n, Gen.choose(1L, 4L))
+    vals <- Gen.listOfN(n, Gen.choose(-9L, 9L))
+    nb <- Gen.choose(1, 6)
+    seed <- Gen.long
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val arrivals = steps.scanLeft(0L)(_ + _).tail.zip(vals).toVector
+    val bounds = (0 +: Vector.fill(nb - 1)(rnd.nextInt(n + 1)) :+ n).sorted
+    val batches = bounds.zip(bounds.tail).map { case (from, until) =>
+      val copies = if (until == 0) Vector.empty
+                   else Vector.fill(rnd.nextInt(4))(arrivals(rnd.nextInt(until)))
+      rnd.shuffle(arrivals.slice(from, until) ++ copies)
+    }
+    (arrivals, batches)
+  }
+
+  property("foldBatch over replayed, retried batches == one sequential fold") =
+    forAll(replayGen) { case (arrivals, batches) =>
+      // state (count, sum); a row (mark, sum) for each even value
+      val step = (st: (Long, Long), a: (Long, Long)) => {
+        val next = (st._1 + 1, st._2 + a._2)
+        (next, if (a._2 % 2 == 0) Some((a._1, next._2)) else None)
+      }
+      val mark = (a: (Long, Long)) => a._1
+      var stored = Option.empty[(Long, (Long, Long))]
+      var policyOk = true
+      val got = batches.flatMap { b =>
+        val fresh = b.exists(a => stored.forall(_._1 < a._1))
+        graft.streaming.EventStreams.foldBatch(stored, b.iterator, mark, (0L, 0L), step) match {
+          case Some((next, rows)) => policyOk &&= fresh; stored = Some(next); rows
+          case None => policyOk &&= !fresh; Vector.empty
+        }
+      }
+      var st = (0L, 0L)
+      val want = arrivals.flatMap { a => val (next, row) = step(st, a); st = next; row }
+      val wantStored = arrivals.lastOption.map(a => (a._1, st))
+      Prop(got == want && stored == wantStored && policyOk) :|
+        s"batches=$batches got=$got want=$want stored=$stored"
     }
 }
