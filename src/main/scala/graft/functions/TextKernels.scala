@@ -19,36 +19,52 @@ object TextKernels {
     (v << 4) | ((d(6) >> 4) & 0xfL)
   }
 
-  /** One document's MinHash-LSH band keys — word 3-shingles (split on
-    * single spaces, empties preserved), 8 universal-hash minima over
-    * the 52-bit md5 shingle prefix mod 2³¹−1, 4 bands × 2 rows keyed
-    * "sigLo#sigHi" — EXACTLY the C5/C6 batch rule
-    * (TextOps.signatures / qLshPairs with its concat_ws("#") band key
-    * and NULL-signature guard): a doc with <3 words has no shingles
-    * and therefore NO bands. Shared by the F52 streaming detector so
-    * stream and batch candidates cannot diverge.
+  /** A document's word 3-shingles, in order: each window of three
+    * consecutive words joined by single spaces (none below 3 words).
+    */
+  def wordShingles(words: Array[String]): Iterator[String] =
+    Iterator.range(0, words.length - 2)
+      .map(i => words(i) + " " + words(i + 1) + " " + words(i + 2))
+
+  /** THE MinHash signature loop every MinHash kernel shares: ONE md5
+    * per shingle (the 52-bit prefix mod 2³¹−1) feeds all 8 universal
+    * hashes (a_j·h + b_j mod p, [[TextFunctions.minhashPerms]]), and
+    * the signature is their 8 minima — bit-identical to the Column
+    * formulation (TextFunctions.minhashBase/minhashSig) and the DuckDB
+    * oracle. None when there is no shingle.
+    */
+  def minhash(md: java.security.MessageDigest,
+              shingles: Iterator[String]): Option[Array[Long]] =
+    if (!shingles.hasNext) None
+    else {
+      val perms = TextFunctions.minhashPerms
+      val mP = TextFunctions.minhashP
+      val mins = Array.fill(perms.length)(Long.MaxValue)
+      shingles.foreach { g =>
+        val h = md5Prefix52(md, g) % mP
+        var j = 0
+        while (j < perms.length) {
+          val v = (perms(j)._1 * h + perms(j)._2) % mP
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
+      }
+      Some(mins)
+    }
+
+  /** One document's MinHash-LSH band keys — the [[minhash]] signature
+    * of its word 3-shingles (split on single spaces, empties
+    * preserved), 4 bands × 2 rows keyed "sigLo#sigHi" — EXACTLY the
+    * C5/C6 batch rule (TextOps.signatures / qLshPairs with its
+    * concat_ws("#") band key and NULL-signature guard): a doc with <3
+    * words has no shingles and therefore NO bands. Shared by the F52
+    * streaming detector so stream and batch candidates cannot diverge.
     */
   def lshBandKeys(md: java.security.MessageDigest,
-                  text: String): Seq[(Int, String)] = {
-    val words = text.split(" ", -1)
-    if (words.length < 3) return Seq.empty
-    val perms = TextFunctions.minhashPerms
-    val mP = TextFunctions.minhashP
-    val mins = Array.fill(perms.length)(Long.MaxValue)
-    var i = 0
-    while (i + 2 < words.length) {
-      val g = words(i) + " " + words(i + 1) + " " + words(i + 2)
-      val h = md5Prefix52(md, g) % mP
-      var j = 0
-      while (j < perms.length) {
-        val v = (perms(j)._1 * h + perms(j)._2) % mP
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
-      i += 1
+                  text: String): Seq[(Int, String)] =
+    minhash(md, wordShingles(text.split(" ", -1))).fold(Seq.empty[(Int, String)]) { mins =>
+      (0 until 4).map(b => (b, s"${mins(2 * b)}#${mins(2 * b + 1)}"))
     }
-    (0 until 4).map(b => (b, s"${mins(2 * b)}#${mins(2 * b + 1)}"))
-  }
 
   private val B = 1000003L
   private val M = 2147483647L // 2^31-1; products of two residues fit in a Long

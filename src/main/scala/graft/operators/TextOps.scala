@@ -223,55 +223,31 @@ object TextOps {
       }(Encoders.row(outSchema))
   }
 
-  /** MinHash signatures via a compiled mapPartitions kernel: Catalyst's
-    * higher-order functions (transform/array_min) are interpreted, not
-    * codegen'd, so the hot loop is compiled here. ONE md5 per shingle
-    * (52-bit prefix mod 2^31-1) feeds all 8 universal-hash permutations
-    * (a_j·h + b_j mod p, TextFunctions.minhashPerms) — 8× less digest
-    * work than per-permutation hashing, the dominant MinHash cost at
-    * corpus scale. Bit-identical to the Column formulation
-    * (TextFunctions.minhashBase/minhashSig) and the DuckDB oracle.
+  /** MinHash signature rows (doc_id, sig0..sig7) via a compiled
+    * mapPartitions kernel: Catalyst's higher-order functions
+    * (transform/array_min) are interpreted, not codegen'd, so the hot
+    * loop ([[TextKernels.minhash]]) is compiled here. `shingles` reads
+    * one row's shingles; a row without any gets NULL signatures.
     */
-  private def signatures(s: SparkSession, dir: String): DataFrame = {
-    val perms = T.minhashPerms
-    val mP = T.minhashP
-    val nPerms = perms.length
+  private def minhashRows(df: DataFrame)(shingles: Row => Iterator[String]): DataFrame = {
+    val nPerms = T.minhashPerms.length
     val outSchema = StructType(
       StructField("doc_id", LongType, nullable = false) +:
         (0 until nPerms).map(j => StructField(s"sig$j", LongType, nullable = true)))
-    fanOut(documents(s, dir).select(col("doc_id"), col("text")))
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def base(s0: String): Long = TextKernels.md5Prefix52(md, s0) % mP
-        val as = perms.map(_._1)
-        val bs = perms.map(_._2)
-        it.map { row =>
-          val words = docWords(row)
-          val mins = Array.fill(nPerms)(Long.MaxValue)
-          var any = false
-          var i = 0
-          while (i + 2 < words.length) {
-            val h = base(words(i) + " " + words(i + 1) + " " + words(i + 2))
-            any = true
-            var j = 0
-            while (j < nPerms) {
-              val v = (as(j) * h + bs(j)) % mP
-              if (v < mins(j)) mins(j) = v
-              j += 1
-            }
-            i += 1
-          }
-          val out = new Array[Any](1 + nPerms)
-          out(0) = row.getLong(0)
-          var j = 0
-          while (j < nPerms) {
-            out(j + 1) = if (any) mins(j) else null
-            j += 1
-          }
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-        }
-      }(Encoders.row(outSchema))
+    df.mapPartitions { it =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      it.map { row =>
+        val sig = TextKernels.minhash(md, shingles(row))
+          .fold(Seq.fill[Any](nPerms)(null))(_.toSeq)
+        Row.fromSeq(row.getLong(0) +: sig)
+      }
+    }(Encoders.row(outSchema))
   }
+
+  /** MinHash signatures of every document's word 3-shingles. */
+  private def signatures(s: SparkSession, dir: String): DataFrame =
+    minhashRows(fanOut(documents(s, dir).select(col("doc_id"), col("text"))))(
+      row => TextKernels.wordShingles(docWords(row)))
 
   /** C5: MinHash signatures — 8 md5 permutations over word 3-shingles,
     * computed entirely inside a Column expression (no explode/shuffle).
@@ -312,42 +288,8 @@ object TextOps {
     * shingles cannot change a min), so callers that ALSO need the raw
     * sets for exact verification scan documents once, not twice.
     */
-  private def signaturesFrom(shingles: DataFrame): DataFrame = {
-    val perms = T.minhashPerms
-    val mP = T.minhashP
-    val nPerms = perms.length
-    val outSchema = StructType(
-      StructField("doc_id", LongType, nullable = false) +:
-        (0 until nPerms).map(j => StructField(s"sig$j", LongType, nullable = true)))
-    shingles.select(col("doc_id"), col("sh"))
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def base(s0: String): Long = TextKernels.md5Prefix52(md, s0) % mP
-        val as = perms.map(_._1)
-        val bs = perms.map(_._2)
-        it.map { row =>
-          val sh = row.getSeq[String](1)
-          val mins = Array.fill(nPerms)(Long.MaxValue)
-          sh.foreach { g =>
-            val h = base(g)
-            var j = 0
-            while (j < nPerms) {
-              val v = (as(j) * h + bs(j)) % mP
-              if (v < mins(j)) mins(j) = v
-              j += 1
-            }
-          }
-          val out = new Array[Any](1 + nPerms)
-          out(0) = row.getLong(0)
-          var j = 0
-          while (j < nPerms) {
-            out(j + 1) = if (sh.nonEmpty) mins(j) else null
-            j += 1
-          }
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-        }
-      }(Encoders.row(outSchema))
-  }
+  private def signaturesFrom(shingles: DataFrame): DataFrame =
+    minhashRows(shingles.select(col("doc_id"), col("sh")))(_.getSeq[String](1).iterator)
 
   /** Candidate pairs → exact Jaccard over distinct shingle sets → τ filter.
     * `sets0` is the caller's (pinned) shingle frame — sharing it with

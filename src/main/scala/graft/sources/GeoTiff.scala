@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.nio.{ByteBuffer, ByteOrder}
+
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,31 +16,38 @@ import graft.core.{GridMeta, RasterFrame}
   * from user input). This module is the Spark-first counterpart under
   * the E2/E8/E9 real-codec discipline:
   *
-  *  - WRITE real GeoTIFF files with a hand-built encoder — the
-  *    canonical baseline (single uncompressed LE strip) plus the
-  *    layout shapes rasterio/GDAL actually emit: multi-strip,
-  *    LZW (with and without horizontal predictor), Deflate, tiled,
-  *    and big-endian `MM` — deterministic integer/quarter pixel
-  *    formulas so the oracle can rebuild every pixel AND every header
-  *    field without ever seeing a TIFF byte;
-  *  - READ the actual FILES back through two independent public JDK
-  *    paths: pixel data via the JDK ImageIO TIFF plugin (ships since
-  *    Java 9 — strip/tile layout, LZW/Deflate codecs, per-sample-format
-  *    decode, both byte orders), and the georeference via
-  *    `javax.imageio.plugins.tiff.TIFFDirectory` over the reader's
-  *    metadata (tag tree → GeoKey walk → EPSG code, pixel scale +
-  *    tiepoint → the GDAL-order affine in [[GridMeta]]).
+  *  - WRITE real GeoTIFF files with ONE hand-built container writer
+  *    for both classic TIFF and BigTIFF — the canonical baseline
+  *    (single uncompressed LE strip) plus the layout shapes
+  *    rasterio/GDAL actually emit: multi-strip, LZW (with and without
+  *    horizontal predictor), Deflate, tiled, big-endian `MM` and the
+  *    BigTIFF container — deterministic integer/quarter pixel formulas
+  *    so the oracle can rebuild every pixel AND every header field
+  *    without ever seeing a TIFF byte;
+  *  - READ the georeference through ONE IFD tag walk for both
+  *    containers (tag map → GeoKey walk → EPSG code, pixel scale +
+  *    tiepoint → the GDAL-order affine in [[GridMeta]], GDAL_NODATA),
+  *    and the pixels of classic files through the JDK ImageIO TIFF
+  *    plugin (ships since Java 9 — strip/tile layout, every codec and
+  *    sample format it knows, both byte orders), an implementation
+  *    independent of the writer. The JDK plugin only sniffs magic 42,
+  *    so BigTIFF pixels go through the hand decoder here.
+  *
+  * The one thing the two containers disagree on — header size, entry
+  * count width, entry width, value/offset width — is one
+  * [[Container]] value that the writer picks from [[Layout.bigTiff]]
+  * and the walk picks from the file's magic number.
   *
   * Scale discipline (the round-13 judge's one scale-killer, fixed):
   * metadata derivation and pixel decode are SPLIT. [[decodeMeta]] is a
-  * header-only tag walk — no `ImageReader.read`, no pixel loop — and
-  * every load-API meta/alignment decision is made from header-derived
-  * rows computed IN EXECUTORS over the `binaryFile` scan; the driver
-  * never touches pixel bytes (or even file payloads). Pixel decode
-  * happens exactly once per file, inside `mapPartitions`, with the
-  * reader/stream lifecycle under try/finally. File listing goes through
-  * the `binaryFile` source (no `java.io.File`), so HDFS/S3 URIs work
-  * the same as local paths.
+  * header-only tag walk — no pixel loop, and an entry the meta never
+  * reads is never dereferenced — and every load-API meta/alignment
+  * decision is made from header-derived rows computed IN EXECUTORS over
+  * the `binaryFile` scan; the driver never touches pixel bytes (or even
+  * file payloads). Pixel decode happens exactly once per file, inside
+  * `mapPartitions`, with the reader/stream lifecycle under try/finally.
+  * File listing goes through the `binaryFile` source (no
+  * `java.io.File`), so HDFS/S3 URIs work the same as local paths.
   */
 object GeoTiff {
 
@@ -76,7 +85,7 @@ object GeoTiff {
   private def pxI16(b: Long, x: Int, y: Int): Int =
     ((17L * x + 23L * y + 29L * b) % 1201).toInt - 600
 
-  // ---- TIFF writer (canonical + real-world layout shapes) ----
+  // ---- the TIFF container: one layout value for classic and BigTIFF ----
 
   private final val TAscii = 2
   private final val TShort = 3
@@ -84,11 +93,61 @@ object GeoTiff {
   private final val TDouble = 12
   private final val TLong8 = 16
 
+  /** Bytes per value of every TIFF 6.0 field type (1–13) and the
+    * BigTIFF additions (16–18: LONG8, SLONG8, IFD8). The walk needs the
+    * size of every type to tell an inline value from an offset, even on
+    * entries it never reads; a type outside this table is skipped, as
+    * TIFF 6.0 asks of readers.
+    */
+  private val TypeSize: Map[Int, Int] = Map(
+    1 -> 1, 2 -> 1, 3 -> 2, 4 -> 4, 5 -> 8, 6 -> 1, 7 -> 1, 8 -> 2, 9 -> 4,
+    10 -> 8, 11 -> 4, 12 -> 8, 13 -> 4, 16 -> 8, 17 -> 8, 18 -> 8)
+
+  /** Everything classic TIFF (magic 42) and BigTIFF (magic 43 — what
+    * GDAL/rasterio switch to past classic's 4 GiB offset cap) disagree
+    * on: the header size, the width of the IFD's entry count, the
+    * width of one entry (tag 2, type 2, count, value-or-offset) and the
+    * width of an entry's count and value-or-offset field, which is also
+    * the width of every file offset. A value that fits the value field
+    * sits in it, left-justified; a larger one sits at the offset it
+    * holds.
+    */
+  private final case class Container(magic: Int, header: Int, countWidth: Int,
+                                     entryWidth: Int, valueWidth: Int) {
+    /** Field type of offset and byte-count arrays. */
+    def offsetType: Int = if (valueWidth == 8) TLong8 else TLong
+    /** Where the header keeps the first IFD's offset. */
+    def ifdSlot: Int = header - valueWidth
+  }
+  private val Classic = Container(42, header = 8, countWidth = 2, entryWidth = 12, valueWidth = 4)
+  private val Big = Container(43, header = 16, countWidth = 8, entryWidth = 20, valueWidth = 8)
+
+  /** Unsigned read of a 2/4/8-byte field at `at`. */
+  private def getU(bb: ByteBuffer, at: Int, width: Int): Long = width match {
+    case 2 => bb.getShort(at) & 0xFFFFL
+    case 4 => bb.getInt(at) & 0xFFFFFFFFL
+    case _ => bb.getLong(at)
+  }
+
+  /** Write `v` as a 2/4/8-byte field at the buffer's position. */
+  private def putU(bb: ByteBuffer, v: Long, width: Int): Unit = width match {
+    case 2 => bb.putShort(v.toShort)
+    case 4 => bb.putInt(v.toInt)
+    case _ => bb.putLong(v)
+  }
+
+  private def orderOf(bigEndian: Boolean): ByteOrder =
+    if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
+
+  // ---- TIFF writer (canonical + real-world layout shapes) ----
+
   /** TIFF-variant LZW encoder (Compression=5): 9→12-bit codes packed
     * MSB-first, ClearCode 256 / EOI 257, "early change" code-width
     * bumps, table reset at 4094 — the exact dialect the JDK plugin's
-    * TIFFLZWDecompressor expects. Encoder-side only; decode is always
-    * the JDK's, so a green roundtrip proves the READ path.
+    * TIFFLZWDecompressor expects. Classic files decode through that JDK
+    * decompressor and BigTIFF files through [[lzwDecode]], so green
+    * roundtrips in both containers check the encoder against two
+    * independent decoders.
     */
   private[graft] def lzwEncode(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
@@ -158,19 +217,17 @@ object GeoTiff {
       bigTiff: Boolean = false)
 
   /** Compressed pixel segments (strips or tiles) for one band — the
-    * container-independent half of the writer, shared by the classic
-    * and BigTIFF builders. Predictor applied per row.
+    * container-independent half of [[buildTiff]]. Predictor applied
+    * per row.
     */
   private def pixelSegments(w: Int, h: Int, dtype: String, bps: Int,
                             px: (Int, Int) => Double, layout: Layout): Vector[Array[Byte]] = {
-    val order =
-      if (layout.bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
+    val order = orderOf(layout.bigEndian)
     require(layout.predictor == 1 ||
       (layout.predictor == 2 && dtype == "uint8" && layout.compression != 1),
       "predictor=2 fixture is uint8 + compressed only (the JDK decoder's contract)")
     def rowBytes(y: Int, x0: Int, cols: Int): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(cols * bps).order(order)
+      val bb = ByteBuffer.allocate(cols * bps).order(order)
       var prev = 0
       var i = 0
       while (i < cols) {
@@ -215,43 +272,40 @@ object GeoTiff {
     }
   }
 
-  /** Build one complete GeoTIFF byte image: header, pixel segments
-    * (strips or tiles, each even-aligned per TIFF 6.0 word alignment),
-    * IFD with ascending tags, then out-of-line payloads. Works in both
-    * byte orders; every byte position is deterministic.
+  /** Build one complete GeoTIFF byte image — classic or BigTIFF, per
+    * `layout.bigTiff` — from a pixel formula: the fixture writer.
     */
   private[graft] def buildTiff(
       w: Int, h: Int, dtype: String, px: (Int, Int) => Double,
       epsg: Int, tieX: Double, tieY: Double, layout: Layout): Array[Byte] = {
-    val bps = dtype match {
-      case "uint8" => 1; case "int16" => 2; case "float32" => 4
+    val (bps, sampleFmt) = dtype match {
+      case "uint8" => (1, 1); case "int16" => (2, 2); case "float32" => (4, 3)
       case other   => throw new IllegalArgumentException(s"unsupported fixture dtype $other")
     }
-    val sampleFmt = dtype match {
-      case "uint8" => 1; case "int16" => 2; case "float32" => 3
-    }
-    require(!layout.bigTiff, "classic builder called with a BigTIFF layout")
-    val segs = pixelSegments(w, h, dtype, bps, px, layout)
-    classicContainer(w, h, bps, sampleFmt, segs, layout, epsg,
-      PixelScale, PixelScale, tieX, tieY, nodata = None)
+    writeContainer(w, h, bps, sampleFmt, pixelSegments(w, h, dtype, bps, px, layout),
+      layout, epsg, PixelScale, PixelScale, tieX, tieY, nodata = None)
   }
 
-  /** Assemble a classic-TIFF container around pre-encoded segments —
-    * the shared back half of [[buildTiff]] and the WRITE path (where
-    * strips arrive already compressed from executors). `nodata` emits
-    * the GDAL_NODATA ASCII tag (42113) rasterio/GDAL read back as the
-    * band fill value.
+  /** Assemble a TIFF container around pre-encoded segments — the one
+    * writer behind [[buildTiff]] and the WRITE path (where strips arrive
+    * already compressed from executors). Layout: header, pixel segments
+    * (each even-aligned per TIFF 6.0 word alignment), IFD with
+    * ascending tags, then out-of-line payloads; both byte orders, every
+    * byte position deterministic. Offsets and byte counts ride LONG
+    * (classic) or LONG8 (BigTIFF) fields, scalar enums stay SHORT/LONG
+    * — the mixed-type layout real writers produce. `nodata` emits the
+    * GDAL_NODATA ASCII tag (42113) rasterio/GDAL read back as the band
+    * fill value.
     */
-  private[graft] def classicContainer(
+  private[graft] def writeContainer(
       w: Int, h: Int, bps: Int, sampleFmt: Int, segs: Vector[Array[Byte]],
       layout: Layout, epsg: Int, scaleX: Double, scaleY: Double,
       tieX: Double, tieY: Double, nodata: Option[String]): Array[Byte] = {
-    val order =
-      if (layout.bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
+    val c = if (layout.bigTiff) Big else Classic
+    val vw = c.valueWidth
     // ---- offsets: header | segments (even-aligned) | IFD | payloads ----
-    val segOffsets = new Array[Int](segs.length)
-    var off = 8
+    val segOffsets = new Array[Long](segs.length)
+    var off = c.header.toLong
     segs.indices.foreach { i =>
       segOffsets(i) = off
       off += segs(i).length + (segs(i).length & 1) // pad to word boundary
@@ -271,193 +325,80 @@ object GeoTiff {
     val tags = (Seq(256, 257, 258, 259, 262, 277, 339) ++
       layoutTags ++ predTag ++ geoTags).sorted
     val ifdOff = off
-    var payloadOff = ifdOff + 2 + tags.length * 12 + 4
+    var payloadOff = ifdOff + c.countWidth + tags.length * c.entryWidth + vw
     // out-of-line payloads, assigned in tag order (all sizes even)
-    def reserve(bytes: Int): Int = { val o = payloadOff; payloadOff += bytes; o }
-    val segArrOff = if (n > 1) reserve(4 * n) else -1
-    val cntArrOff = if (n > 1) reserve(4 * n) else -1
-    val scaleOff = reserve(3 * 8)
-    val tieOff = reserve(6 * 8)
-    val geoKeyOff = reserve(12 * 2)
-    val ndOff = ndBytes.map(b => reserve(b.length)).getOrElse(-1)
-    val total = payloadOff
-
-    val bb = java.nio.ByteBuffer.allocate(total).order(order)
-    bb.put((if (layout.bigEndian) 'M' else 'I').toByte)
-    bb.put((if (layout.bigEndian) 'M' else 'I').toByte)
-    bb.putShort(42).putInt(ifdOff)
-    segs.indices.foreach { i =>
-      bb.position(segOffsets(i)); bb.put(segs(i))
-    }
-    bb.position(ifdOff)
-    // entry = tag(2) type(2) count(4) value-or-offset(4); inline values
-    // are left-justified in the 4-byte field (both byte orders)
-    def entry(tag: Int, tpe: Int, count: Int, v: Int): Unit = {
-      bb.putShort(tag.toShort).putShort(tpe.toShort).putInt(count)
-      if (tpe == TShort && count == 1) { bb.putShort(v.toShort); bb.putShort(0) }
-      else bb.putInt(v)
-    }
-    bb.putShort(tags.length.toShort)
-    tags.foreach {
-      case 256 => entry(256, TLong, 1, w)
-      case 257 => entry(257, TLong, 1, h)
-      case 258 => entry(258, TShort, 1, bps * 8)
-      case 259 => entry(259, TShort, 1, layout.compression)
-      case 262 => entry(262, TShort, 1, 1) // BlackIsZero
-      case 273 =>
-        if (n == 1) entry(273, TLong, 1, segOffsets(0))
-        else entry(273, TLong, n, segArrOff)
-      case 277 => entry(277, TShort, 1, 1)
-      case 278 => entry(278, TLong, 1, layout.rowsPerStrip)
-      case 279 =>
-        if (n == 1) entry(279, TLong, 1, segs(0).length)
-        else entry(279, TLong, n, cntArrOff)
-      case 317 => entry(317, TShort, 1, 2)
-      case 322 => entry(322, TLong, 1, layout.tile.get._1)
-      case 323 => entry(323, TLong, 1, layout.tile.get._2)
-      case 324 =>
-        if (n == 1) entry(324, TLong, 1, segOffsets(0))
-        else entry(324, TLong, n, segArrOff)
-      case 325 =>
-        if (n == 1) entry(325, TLong, 1, segs(0).length)
-        else entry(325, TLong, n, cntArrOff)
-      case 339 => entry(339, TShort, 1, sampleFmt)
-      case 33550 => entry(33550, TDouble, 3, scaleOff)
-      case 33922 => entry(33922, TDouble, 6, tieOff)
-      case 34735 => entry(34735, TShort, 12, geoKeyOff)
-      case 42113 => entry(42113, TAscii, ndBytes.get.length, ndOff)
-    }
-    bb.putInt(0) // next IFD: none
-    if (n > 1) {
-      bb.position(segArrOff); segOffsets.foreach(bb.putInt)
-      bb.position(cntArrOff); segs.foreach(s => bb.putInt(s.length))
-    }
-    bb.position(scaleOff)
-    bb.putDouble(scaleX).putDouble(scaleY).putDouble(0.0)
-    bb.position(tieOff)
-    bb.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-      .putDouble(tieX).putDouble(tieY).putDouble(0.0)
-    bb.position(geoKeyOff)
-    // GeoKeyDirectory: header (version 1, rev 1.0, 2 keys) then
-    // GTModelTypeGeoKey=1 (projected) and ProjectedCSTypeGeoKey=EPSG
-    Seq(1, 1, 0, 2, 1024, 0, 1, 1, 3072, 0, 1, epsg)
-      .foreach(v => bb.putShort((v & 0xFFFF).toShort))
-    ndBytes.foreach { b => bb.position(ndOff); bb.put(b) }
-    bb.array()
-  }
-
-  /** Build one complete BigTIFF byte image (magic 43, 8-byte offsets,
-    * 20-byte IFD entries — the container GDAL/rasterio write
-    * transparently past classic TIFF's 4 GiB cap): header, pixel
-    * segments (even-aligned), IFD with ascending tags, out-of-line
-    * payloads. Offsets/counts ride LONG8 fields (inline when a single
-    * segment fits the 8-byte value slot), scalar enums stay SHORT/LONG
-    * — the mixed-type layout real writers produce. Both byte orders.
-    */
-  private[graft] def buildBigTiff(
-      w: Int, h: Int, dtype: String, px: (Int, Int) => Double,
-      epsg: Int, tieX: Double, tieY: Double, layout: Layout): Array[Byte] = {
-    val bps = dtype match {
-      case "uint8" => 1; case "int16" => 2; case "float32" => 4
-      case other   => throw new IllegalArgumentException(s"unsupported fixture dtype $other")
-    }
-    val sampleFmt = dtype match {
-      case "uint8" => 1; case "int16" => 2; case "float32" => 3
-    }
-    val order =
-      if (layout.bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
-    val segs = pixelSegments(w, h, dtype, bps, px, layout)
-
-    // ---- offsets: 16-byte header | segments (even-aligned) | IFD |
-    // payloads ----
-    val segOffsets = new Array[Long](segs.length)
-    var off = 16L
-    segs.indices.foreach { i =>
-      segOffsets(i) = off
-      off += segs(i).length + (segs(i).length & 1)
-    }
-    val n = segs.length
-    val geoTags = Seq(33550, 33922, 34735)
-    val layoutTags = layout.tile match {
-      case Some(_) => Seq(322, 323, 324, 325)
-      case None    => Seq(273, 278, 279)
-    }
-    val predTag = if (layout.predictor == 2) Seq(317) else Nil
-    val tags = (Seq(256, 257, 258, 259, 262, 277, 339) ++
-      layoutTags ++ predTag ++ geoTags).sorted
-    val ifdOff = off
-    var payloadOff = ifdOff + 8 + tags.length * 20 + 8
     def reserve(bytes: Int): Long = { val o = payloadOff; payloadOff += bytes; o }
-    val segArrOff = if (n > 1) reserve(8 * n) else -1L
-    val cntArrOff = if (n > 1) reserve(8 * n) else -1L
+    val segArrOff = if (n > 1) reserve(vw * n) else -1L
+    val cntArrOff = if (n > 1) reserve(vw * n) else -1L
     val scaleOff = reserve(3 * 8)
     val tieOff = reserve(6 * 8)
     val geoKeyOff = reserve(12 * 2)
-    val total = payloadOff.toInt
+    val ndOff = ndBytes.filter(_.length > vw).map(b => reserve(b.length)).getOrElse(-1L)
 
-    val bb = java.nio.ByteBuffer.allocate(total).order(order)
-    bb.put((if (layout.bigEndian) 'M' else 'I').toByte)
-    bb.put((if (layout.bigEndian) 'M' else 'I').toByte)
-    bb.putShort(43).putShort(8).putShort(0).putLong(ifdOff)
+    val bb = ByteBuffer.allocate(payloadOff.toInt).order(orderOf(layout.bigEndian))
+    val bo = (if (layout.bigEndian) 'M' else 'I').toByte
+    bb.put(bo).put(bo).putShort(c.magic.toShort)
+    if (layout.bigTiff) bb.putShort(vw.toShort).putShort(0) // offset size, reserved
+    putU(bb, ifdOff, vw)
     segs.indices.foreach { i =>
       bb.position(segOffsets(i).toInt); bb.put(segs(i))
     }
     bb.position(ifdOff.toInt)
-    // entry = tag(2) type(2) count(8) value-or-offset(8); inline values
-    // left-justified in the 8-byte field (both byte orders)
+    // a SHORT/LONG scalar is written at its own width, anything else at
+    // the value-field width; the rest of the field stays zero
     def entry(tag: Int, tpe: Int, count: Long, v: Long): Unit = {
-      bb.putShort(tag.toShort).putShort(tpe.toShort).putLong(count)
-      tpe match {
-        case TShort if count == 1 =>
-          bb.putShort(v.toShort).putShort(0).putInt(0)
-        case TLong if count == 1 =>
-          bb.putInt(v.toInt).putInt(0)
-        case _ => bb.putLong(v) // LONG8 inline single, or offset
-      }
+      bb.putShort(tag.toShort).putShort(tpe.toShort)
+      putU(bb, count, vw)
+      val slot = bb.position()
+      if (count == 1 && tpe == TShort) bb.putShort(v.toShort)
+      else if (count == 1 && tpe == TLong) bb.putInt(v.toInt)
+      else putU(bb, v, vw)
+      bb.position(slot + vw)
     }
-    bb.putLong(tags.length.toLong)
+    def segEntry(tag: Int, single: Long, arrOff: Long): Unit =
+      if (n == 1) entry(tag, c.offsetType, 1, single) else entry(tag, c.offsetType, n, arrOff)
+    putU(bb, tags.length, c.countWidth)
     tags.foreach {
       case 256 => entry(256, TLong, 1, w)
       case 257 => entry(257, TLong, 1, h)
       case 258 => entry(258, TShort, 1, bps * 8)
       case 259 => entry(259, TShort, 1, layout.compression)
       case 262 => entry(262, TShort, 1, 1) // BlackIsZero
-      case 273 =>
-        if (n == 1) entry(273, TLong8, 1, segOffsets(0))
-        else entry(273, TLong8, n, segArrOff)
+      case t @ (273 | 324) => segEntry(t, segOffsets(0), segArrOff)
       case 277 => entry(277, TShort, 1, 1)
       case 278 => entry(278, TLong, 1, layout.rowsPerStrip)
-      case 279 =>
-        if (n == 1) entry(279, TLong8, 1, segs(0).length)
-        else entry(279, TLong8, n, cntArrOff)
+      case t @ (279 | 325) => segEntry(t, segs(0).length, cntArrOff)
       case 317 => entry(317, TShort, 1, 2)
       case 322 => entry(322, TLong, 1, layout.tile.get._1)
       case 323 => entry(323, TLong, 1, layout.tile.get._2)
-      case 324 =>
-        if (n == 1) entry(324, TLong8, 1, segOffsets(0))
-        else entry(324, TLong8, n, segArrOff)
-      case 325 =>
-        if (n == 1) entry(325, TLong8, 1, segs(0).length)
-        else entry(325, TLong8, n, cntArrOff)
       case 339 => entry(339, TShort, 1, sampleFmt)
       case 33550 => entry(33550, TDouble, 3, scaleOff)
       case 33922 => entry(33922, TDouble, 6, tieOff)
       case 34735 => entry(34735, TShort, 12, geoKeyOff)
+      case 42113 =>
+        val b = ndBytes.get
+        entry(42113, TAscii, b.length, math.max(ndOff, 0L))
+        if (ndOff < 0) { // short enough to sit in the value field itself
+          val end = bb.position()
+          bb.position(end - vw); bb.put(b); bb.position(end)
+        }
     }
-    bb.putLong(0L) // next IFD: none
+    putU(bb, 0L, vw) // next IFD: none
     if (n > 1) {
-      bb.position(segArrOff.toInt); segOffsets.foreach(bb.putLong)
-      bb.position(cntArrOff.toInt); segs.foreach(s => bb.putLong(s.length.toLong))
+      bb.position(segArrOff.toInt); segOffsets.foreach(putU(bb, _, vw))
+      bb.position(cntArrOff.toInt); segs.foreach(s => putU(bb, s.length.toLong, vw))
     }
     bb.position(scaleOff.toInt)
-    bb.putDouble(PixelScale).putDouble(PixelScale).putDouble(0.0)
+    bb.putDouble(scaleX).putDouble(scaleY).putDouble(0.0)
     bb.position(tieOff.toInt)
     bb.putDouble(0.0).putDouble(0.0).putDouble(0.0)
       .putDouble(tieX).putDouble(tieY).putDouble(0.0)
     bb.position(geoKeyOff.toInt)
+    // GeoKeyDirectory: header (version 1, rev 1.0, 2 keys) then
+    // GTModelTypeGeoKey=1 (projected) and ProjectedCSTypeGeoKey=EPSG
     Seq(1, 1, 0, 2, 1024, 0, 1, 1, 3072, 0, 1, epsg)
       .foreach(v => bb.putShort((v & 0xFFFF).toShort))
+    for (b <- ndBytes if ndOff >= 0) { bb.position(ndOff.toInt); bb.put(b) }
     bb.array()
   }
 
@@ -509,15 +450,13 @@ object GeoTiff {
   /** Encode band `b` in its shapes-gate layout variant. */
   private[graft] def encodeShaped(b: Long): Array[Byte] = {
     val dt = shapeDtype(b)
-    val lay = shapeLayout(b)
-    val build = if (lay.bigTiff) buildBigTiff _ else buildTiff _
-    build(widthOf(b), heightOf(b), dt,
+    buildTiff(widthOf(b), heightOf(b), dt,
       (x, y) => dt match {
         case "uint8"   => pxU8(b, x, y).toDouble
         case "float32" => pxF32(b, x, y).toDouble
         case _         => pxI16(b, x, y).toDouble
       },
-      epsgOf(b), tieXOf(b), tieYOf(b), lay)
+      epsgOf(b), tieXOf(b), tieYOf(b), shapeLayout(b))
   }
 
   /** A structurally valid header whose strip offset points past EOF —
@@ -526,32 +465,22 @@ object GeoTiff {
     * pixel data, it would throw instead of returning.
     */
   private[graft] def encodeHeaderOnly(b: Long): Array[Byte] = {
+    val c = Classic // `encode` writes classic files
+    val stripLen = widthOf(b) * heightOf(b) * (if (isFloat(b)) 4 else 1)
+    val shift = stripLen + (stripLen & 1)
+    // drop the strip: everything after it moves back by `shift`, the
+    // IFD now follows the header, and StripOffsets points past EOF
     val full = encode(b)
-    val w = widthOf(b); val h = heightOf(b)
-    val stripLen = w * h * (if (isFloat(b)) 4 else 1)
-    val pad = stripLen & 1
-    // drop the strip: shift everything after it forward by rewriting
-    // the file with a fresh buffer — offsets in the IFD move back by
-    // (stripLen + pad), and StripOffsets points past the new EOF
-    val rest = java.util.Arrays.copyOfRange(full, 8 + stripLen + pad, full.length)
-    val bb = java.nio.ByteBuffer.allocate(8 + rest.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put('I'.toByte).put('I'.toByte).putShort(42).putInt(8)
-    bb.put(rest)
-    val out = bb.array()
-    val ifd = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nE = ifd.getShort(8).toInt
-    var i = 0
-    while (i < nE) {
-      val base = 10 + i * 12
-      val tag = ifd.getShort(base).toInt & 0xFFFF
-      val old = ifd.getInt(base + 8)
-      tag match {
-        case 273 => ifd.putInt(base + 8, out.length + 4096) // past EOF
-        case 33550 | 33922 | 34735 => ifd.putInt(base + 8, old - stripLen - pad)
-        case _ => ()
+    val out = full.take(c.header) ++ full.drop(c.header + shift)
+    val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
+    bb.position(c.ifdSlot); putU(bb, c.header, c.valueWidth)
+    readIfd(out).fields.foreach { case (tag, f) =>
+      val moved = tag match {
+        case 273 => Some(out.length + 4096L)
+        case 33550 | 33922 | 34735 => Some(f.at - shift)
+        case _ => None
       }
-      i += 1
+      moved.foreach { v => bb.position(f.slot); putU(bb, v, c.valueWidth) }
     }
     out
   }
@@ -573,7 +502,7 @@ object GeoTiff {
 
   // ---- the WRITE path (reference `prediction.rio.to_raster`) ----
 
-  private def epsgOfMeta(m: graft.core.GridMeta): Int =
+  private def epsgOfMeta(m: GridMeta): Int =
     m.crs.collect { case c if c.startsWith("EPSG:") => c.drop(5).toInt }
       .getOrElse(32767) // GeoTIFF "user-defined" sentinel
 
@@ -585,10 +514,34 @@ object GeoTiff {
                         it: Iterator[(Long, Long, Double)]): Array[Byte] = {
     val vals = Array.fill(rows * w)(fill)
     it.foreach { case (x, y, v) => vals((y - y0).toInt * w + x.toInt) = v }
-    val bb = java.nio.ByteBuffer.allocate(rows * w * 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val bb = ByteBuffer.allocate(rows * w * 4).order(ByteOrder.LITTLE_ENDIAN)
     vals.foreach(v => bb.putFloat(v.toFloat))
     deflate(bb.array())
+  }
+
+  /** The band-grouping step both WRITE paths share: the cells group
+    * into horizontal bands of `rows` rows, and the executor holding a
+    * band encodes its strip and hands (band index, band height, strip)
+    * to `emit`; the driver collects only `emit`'s results. Refuses a
+    * raster with an empty band, whose strip would be missing.
+    */
+  private def bandStrips[T](rf: RasterFrame, rows: Int)(
+      emit: (Int, Int, Array[Byte]) => T)(implicit enc: Encoder[T]): Array[T] = {
+    val w = rf.width.toInt; val h = rf.height.toInt
+    val fill = rf.meta.fillValue.map(_.toDouble).getOrElse(0.0)
+    val out = rf.df
+      .select(col("x").cast("long"), col("y").cast("long"), col("v").cast("double"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
+      .groupByKey { case (_, y, _) => (y / rows).toInt }(Encoders.scalaInt)
+      .mapGroups { (band, it) =>
+        val y0 = band * rows
+        val hb = math.min(rows, h - y0)
+        emit(band, hb, bandStrip(w, hb, y0, fill, it))
+      }
+      .collect()
+    val n = (h + rows - 1) / rows
+    require(out.length == n, s"raster has empty row bands: got ${out.length} of $n")
+    out
   }
 
   /** WRITE one [[graft.core.RasterFrame]] to a single GeoTIFF file —
@@ -603,28 +556,13 @@ object GeoTiff {
     * single .tif is the wrong artifact at any engine: use
     * [[writeRasterSharded]].
     */
-  def writeRaster(rf: graft.core.RasterFrame, path: String,
-                  rowsPerStrip: Int = 64): Unit = {
-    val w = rf.width.toInt; val h = rf.height.toInt
+  def writeRaster(rf: RasterFrame, path: String, rowsPerStrip: Int = 64): Unit = {
+    val h = rf.height.toInt
     val rps = math.max(1, math.min(rowsPerStrip, h))
-    val nStrips = (h + rps - 1) / rps
-    val fill = rf.meta.fillValue.map(_.toDouble).getOrElse(0.0)
     val t = rf.meta.transform
-    val spark = rf.df.sparkSession
-    import spark.implicits._
-    val strips = rf.df
-      .select(col("x").cast("long"), col("y").cast("long"), col("v").cast("double"))
-      .as[(Long, Long, Double)]
-      .groupByKey { case (_, y, _) => (y / rps).toInt }
-      .mapGroups { (sid, it) =>
-        val y0 = sid * rps
-        (sid, bandStrip(w, math.min(rps, h - y0), y0, fill, it))
-      }
-      .collect()
-    require(strips.length == nStrips,
-      s"raster has empty row bands: got ${strips.length} strips of $nStrips")
-    val segs = strips.sortBy(_._1).map(_._2).toVector
-    val bytes = classicContainer(w, h, 4, 3, segs,
+    val strips = bandStrips(rf, rps)((band, _, strip) => (band, strip))(
+      Encoders.tuple(Encoders.scalaInt, Encoders.BINARY))
+    val bytes = writeContainer(rf.width.toInt, h, 4, 3, strips.sortBy(_._1).map(_._2).toVector,
       Layout(bigEndian = false, 8, 1, None, rps), epsgOfMeta(rf.meta),
       t(0), -t(4), t(2), t(5),
       nodata = rf.meta.fillValue.map(_.toString))
@@ -640,40 +578,24 @@ object GeoTiff {
     * lakes use. `dir` must be storage every executor can reach (shared
     * FS / object store; local-mode temp dirs qualify).
     */
-  def writeRasterSharded(rf: graft.core.RasterFrame, dir: String,
-                         bandRows: Int = 1024): Unit = {
+  def writeRasterSharded(rf: RasterFrame, dir: String, bandRows: Int = 1024): Unit = {
     val w = rf.width.toInt; val h = rf.height.toInt
     val rows = math.max(1, math.min(bandRows, h))
-    val nShards = (h + rows - 1) / rows
-    val fill = rf.meta.fillValue.map(_.toDouble).getOrElse(0.0)
     val epsg = epsgOfMeta(rf.meta)
     val t = rf.meta.transform
     val nd = rf.meta.fillValue.map(_.toString)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val spark = rf.df.sparkSession
-    import spark.implicits._
-    val written = rf.df
-      .select(col("x").cast("long"), col("y").cast("long"), col("v").cast("double"))
-      .as[(Long, Long, Double)]
-      .groupByKey { case (_, y, _) => (y / rows).toInt }
-      .mapGroups { (sid, it) =>
-        val y0 = sid * rows
-        val hs = math.min(rows, h - y0)
-        val seg = bandStrip(w, hs, y0, fill, it)
-        // shard tiepoint = global origin shifted to the band row:
-        // y_geo = e·row + f, so the shard's f' = f + e·y0
-        val bytes = classicContainer(w, hs, 4, 3, Vector(seg),
-          Layout(bigEndian = false, 8, 1, None, hs), epsg,
-          t(0), -t(4), t(2), t(5) + t(4) * y0, nodata = nd)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, f"shard_$sid%05d.tif"), bytes)
-        sid
-      }
-      .collect()
-    require(written.length == nShards,
-      s"raster has empty shard bands: wrote ${written.length} of $nShards")
+    val written = bandStrips(rf, rows) { (band, hb, strip) =>
+      // shard tiepoint = global origin shifted to the band row:
+      // y_geo = e·row + f, so the shard's f' = f + e·y0
+      val bytes = writeContainer(w, hb, 4, 3, Vector(strip),
+        Layout(bigEndian = false, 8, 1, None, hb), epsg,
+        t(0), -t(4), t(2), t(5) + t(4) * (band * rows), nodata = nd)
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, f"shard_$band%05d.tif"), bytes)
+      band
+    }(Encoders.scalaInt)
     val manifest =
-      s"width=$w\nheight=$h\nband_rows=$rows\nn_shards=$nShards\n" +
+      s"width=$w\nheight=$h\nband_rows=$rows\nn_shards=${written.length}\n" +
         s"crs=${rf.meta.crs.getOrElse("")}\n" +
         s"transform=${t.mkString(",")}\nfill=${nd.getOrElse("")}\n"
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_manifest.txt"),
@@ -688,8 +610,8 @@ object GeoTiff {
     * manifest is validation, not truth. Pixel decode stays in
     * executors, exactly like [[loadStack]].
     */
-  def loadRasterSharded(spark: SparkSession, dir: String): graft.core.RasterFrame = {
-    val metas = headerMetas(spark, Seq(dir), glob = Some("shard_*.tif"))
+  def loadRasterSharded(spark: SparkSession, dir: String): RasterFrame = {
+    val metas = headerMetas(spark, dir, glob = Some("shard_*.tif"))
     require(metas.nonEmpty, s"no shard_*.tif under $dir")
     val head = metas.head._2
     metas.foreach { case (name, m) =>
@@ -699,35 +621,17 @@ object GeoTiff {
     }
     val offsets = metas.map(_._2.height).scanLeft(0L)(_ + _)
     val yOff = metas.map(_._1).zip(offsets).toMap
-    val h = offsets.last
-    val cellSchema = StructType(Seq(
-      StructField("x", LongType, nullable = false),
-      StructField("y", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false)))
-    val cells = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "shard_*.tif")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .mapPartitions { it =>
-        it.flatMap { row =>
-          val name = row.getString(0).split('/').last
-          val off = yOff(name)
-          val (w, hs, vals) = decodeCells(row.getAs[Array[Byte]](1))
-          for (y <- 0 until hs; x <- 0 until w)
-            yield Row(x.toLong, off + y, vals(y * w + x))
-        }
-      }(org.apache.spark.sql.Encoders.row(cellSchema))
-    graft.core.RasterFrame(cells, head.width, h,
-      graft.core.GridMeta(head.crs, head.transform,
-        fillValue = fillOf(head)))
+    val cells = cellFrame(spark, dir, Some("shard_*.tif"))(name => (0L, yOff(name)))
+    RasterFrame(cells.drop("band_id"), head.width, offsets.last,
+      GridMeta(head.crs, head.transform, fillValue = fillOf(head)))
   }
 
   /** Parse a GDAL_NODATA string into the GridMeta integral fill. */
   private def fillOf(m: TiffMeta): Option[Long] =
     m.nodata.flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .flatMap(graft.core.GridMeta.integralFill)
+      .flatMap(GridMeta.integralFill)
 
-  // ---- decode: JDK ImageIO TIFF plugin + TIFFDirectory tag walk ----
+  // ---- decode: one tag walk, the JDK codec for classic pixels ----
 
   /** Header-derived facts about one GeoTIFF — everything the load APIs
     * need for meta, alignment, and dtype promotion. Produced by a tag
@@ -781,221 +685,121 @@ object GeoTiff {
     def transform: Vector[Double] = meta.transform
   }
 
-  /** Run `f` over an opened TIFF reader, disposing reader and stream
-    * under try/finally (a malformed payload must not leak the
-    * ImageInputStream).
+  /** One IFD entry: its type and count, the position of its value field
+    * (`slot`) and where its value bytes start (`at` — the slot itself
+    * when they fit, else the offset stored there). Values are read on
+    * demand and bounds-checked then, so an entry nobody reads is never
+    * dereferenced.
     */
-  private def withReader[T](payload: Array[Byte])(
-      f: javax.imageio.ImageReader => T): T = {
-    javax.imageio.ImageIO.setUseCache(false)
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(payload))
-    try {
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      require(readers.hasNext, "no JDK TIFF reader available")
-      val reader = readers.next()
-      try {
-        reader.setInput(iis, true, false)
-        f(reader)
-      } finally reader.dispose()
-    } finally iis.close()
-  }
-
-  /** GDAL_NODATA (tag 42113, ASCII): the JDK reader silently DROPS
-    * tags outside its built-in tag sets (verified: the ecoplot files'
-    * 42112/42113 never reach TIFFDirectory, with or without an
-    * allowed-tag-set read param) — so this one tag comes from a manual
-    * primary-IFD walk over the header bytes. Both byte orders; no
-    * pixel data touched.
-    */
-  private[graft] def gdalNodata(payload: Array[Byte]): Option[String] = {
-    if (payload.length < 8) return None
-    val order =
-      if (payload(0) == 'M') java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
-    val bb = java.nio.ByteBuffer.wrap(payload).order(order)
-    val ifdOff = bb.getInt(4)
-    if (ifdOff < 0 || ifdOff + 2 > payload.length) return None
-    val n = bb.getShort(ifdOff).toInt & 0xFFFF
-    var i = 0
-    while (i < n) {
-      val base = ifdOff + 2 + i * 12
-      if (base + 12 > payload.length) return None
-      val tag = bb.getShort(base).toInt & 0xFFFF
-      if (tag == 42113) {
-        val count = bb.getInt(base + 4)
-        val off = if (count <= 4) base + 8 else bb.getInt(base + 8)
-        if (off < 0 || off + count > payload.length || count <= 0) return None
-        val s = new String(payload, off, count,
-          java.nio.charset.StandardCharsets.US_ASCII)
-        val t = s.replace("\u0000", "").trim
-        return if (t.nonEmpty) Some(t) else None
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** Tag walk over an open reader — shared by [[decodeMeta]] and
-    * [[decodeStats]] so stats decode opens the payload exactly once.
-    */
-  private def metaOf(reader: javax.imageio.ImageReader,
-                     bigEndian: Boolean, nodata: Option[String]): TiffMeta = {
-    val dir = javax.imageio.plugins.tiff.TIFFDirectory
-      .createFromMetadata(reader.getImageMetadata(0))
-    def longTag(tag: Int): Long = {
-      val f = dir.getTIFFField(tag)
-      require(f != null, s"missing TIFF tag $tag")
-      f.getAsLong(0)
-    }
-    def longTagOr(tag: Int, dflt: Long): Long = {
-      val f = dir.getTIFFField(tag)
-      if (f == null) dflt else f.getAsLong(0)
-    }
-    val scaleF = dir.getTIFFField(33550)
-    val tieF = dir.getTIFFField(33922)
-    val geoF = dir.getTIFFField(34735)
-    require(scaleF != null && tieF != null && geoF != null,
-      "not a GeoTIFF: missing ModelPixelScale/ModelTiepoint/GeoKeyDirectory")
-    // GeoKey walk: 4-short header then (keyId, location, count, value)
-    // entries; ProjectedCSTypeGeoKey (3072) carries the EPSG
-    val nKeys = geoF.getAsInt(3)
-    var epsg = -1
-    var k = 0
-    while (k < nKeys) {
-      val off = 4 + 4 * k
-      if (geoF.getAsInt(off) == 3072 && geoF.getAsInt(off + 1) == 0)
-        epsg = geoF.getAsInt(off + 3)
-      k += 1
-    }
-    require(epsg > 0, "GeoKeyDirectory has no ProjectedCSTypeGeoKey")
-    TiffMeta(longTag(256), longTag(257), longTag(258), longTagOr(339, 1),
-      epsg, scaleF.getAsDouble(0), scaleF.getAsDouble(1),
-      tieF.getAsDouble(3), tieF.getAsDouble(4),
-      longTagOr(259, 1), longTagOr(317, 1),
-      tiled = dir.getTIFFField(322) != null, bigEndian = bigEndian,
-      nodata = nodata)
-  }
-
-  // ---- BigTIFF (magic 43): manual 8-byte tag walk + decode ----
-  // The JDK TIFF plugin only sniffs magic 42, so BigTIFF — what a real
-  // 100 TB raster lake ships, since classic TIFF's 32-bit offsets cap
-  // files at 4 GiB and GDAL/rasterio switch containers transparently —
-  // needs its own reader. Format: 16-byte header (order, 43,
-  // offsetSize=8, 0, first-IFD offset as 8 bytes), IFDs with an 8-byte
-  // entry count and 20-byte entries (tag 2, type 2, count 8,
-  // value-or-offset 8).
-
-  private[graft] def isBigTiff(p: Array[Byte]): Boolean =
-    p.length >= 16 && (p(0) == 'I' || p(0) == 'M') && p(0) == p(1) && {
-      val order =
-        if (p(0) == 'M') java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN
-      java.nio.ByteBuffer.wrap(p, 2, 2).order(order).getShort == 43
-    }
-
-  /** One BigTIFF IFD field: raw value bytes (already dereferenced when
-    * out-of-line) plus typed accessors honoring the file's byte order.
-    */
-  private final case class BigField(
-      tpe: Int, count: Long, data: Array[Byte], order: java.nio.ByteOrder) {
-    private def bb = java.nio.ByteBuffer.wrap(data).order(order)
-    private def elemSize: Int = tpe match {
-      case 1 | TAscii => 1
-      case TShort     => 2
-      case TLong      => 4
-      case TDouble | TLong8 | 17 => 8
-      case t => throw new IllegalArgumentException(s"unsupported BigTIFF field type $t")
+  private final case class Field(tpe: Int, count: Long, slot: Int, at: Long, bb: ByteBuffer) {
+    private def pos(i: Int): Int = {
+      val size = TypeSize(tpe)
+      val o = at + i.toLong * size
+      require(i < count && o >= 0 && o + size <= bb.limit(),
+        s"TIFF field value $i of $count out of range")
+      o.toInt
     }
     def longAt(i: Int): Long = tpe match {
-      case 1 | TAscii => data(i).toLong & 0xFF
-      case TShort     => bb.getShort(i * 2).toLong & 0xFFFF
-      case TLong      => bb.getInt(i * 4).toLong & 0xFFFFFFFFL
-      case TLong8 | 17 => bb.getLong(i * 8)
-      case t => throw new IllegalArgumentException(s"not an integer BigTIFF type $t")
+      case 1 | 2 | 7    => bb.get(pos(i)) & 0xFFL           // BYTE, ASCII, UNDEFINED
+      case 3            => bb.getShort(pos(i)) & 0xFFFFL     // SHORT
+      case 4 | 13       => bb.getInt(pos(i)) & 0xFFFFFFFFL   // LONG, IFD
+      case 6            => bb.get(pos(i)).toLong             // SBYTE
+      case 8            => bb.getShort(pos(i)).toLong        // SSHORT
+      case 9            => bb.getInt(pos(i)).toLong          // SLONG
+      case 16 | 17 | 18 => bb.getLong(pos(i))                // LONG8, SLONG8, IFD8
+      case t => throw new IllegalArgumentException(s"not an integer TIFF field type $t")
     }
     def longs: IndexedSeq[Long] = (0 until count.toInt).map(longAt)
-    def doubleAt(i: Int): Double = { require(tpe == TDouble); bb.getDouble(i * 8) }
-    def ascii: String = new String(data, java.nio.charset.StandardCharsets.US_ASCII)
-    require(data.length >= count * elemSize, "truncated BigTIFF field payload")
+    def doubleAt(i: Int): Double = {
+      require(tpe == TDouble, s"not a DOUBLE TIFF field: type $tpe")
+      bb.getDouble(pos(i))
+    }
+    def ascii: String = {
+      if (count > 0) pos(count.toInt - 1) // bounds check of the last byte
+      new String(bb.array(), at.toInt, count.toInt, java.nio.charset.StandardCharsets.US_ASCII)
+    }
   }
 
-  /** Primary-IFD tag walk of a BigTIFF payload — header-only, no pixel
-    * bytes touched. Refuses malformed headers loudly (offset size ≠ 8,
-    * out-of-range IFD) instead of garbage-parsing.
+  /** The primary IFD of a classic or BigTIFF payload, and the meta
+    * built from it.
     */
-  private def bigFields(p: Array[Byte]): Map[Int, BigField] = {
-    require(isBigTiff(p), "not a BigTIFF payload (magic 43 expected)")
-    val order =
-      if (p(0) == 'M') java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
-    val bb = java.nio.ByteBuffer.wrap(p).order(order)
-    require(bb.getShort(4) == 8 && bb.getShort(6) == 0,
-      s"malformed BigTIFF header: offset size ${bb.getShort(4)}, pad ${bb.getShort(6)}")
-    val ifdOff = bb.getLong(8)
-    require(ifdOff >= 16 && ifdOff + 8 <= p.length,
-      s"BigTIFF IFD offset $ifdOff out of range (${p.length} bytes)")
-    val n = bb.getLong(ifdOff.toInt)
-    require(n > 0 && n <= 4096, s"implausible BigTIFF entry count $n")
-    (0 until n.toInt).map { i =>
-      val base = ifdOff.toInt + 8 + i * 20
-      require(base + 20 <= p.length, "truncated BigTIFF IFD")
-      val tag = bb.getShort(base).toInt & 0xFFFF
-      val tpe = bb.getShort(base + 2).toInt & 0xFFFF
-      val count = bb.getLong(base + 4)
-      val elemSize = tpe match {
-        case 1 | TAscii => 1; case TShort => 2; case TLong => 4
-        case TDouble | TLong8 | 17 => 8
-        case t => throw new IllegalArgumentException(s"unsupported BigTIFF field type $t (tag $tag)")
+  private final case class Ifd(c: Container, order: ByteOrder, fields: Map[Int, Field]) {
+    def long(tag: Int): Long = fields.getOrElse(tag,
+      throw new IllegalArgumentException(s"missing TIFF tag $tag")).longAt(0)
+    def longOr(tag: Int, dflt: Long): Long = fields.get(tag).map(_.longAt(0)).getOrElse(dflt)
+
+    lazy val meta: TiffMeta = {
+      def geo(tag: Int, name: String): Field = fields.getOrElse(tag,
+        throw new IllegalArgumentException(s"not a GeoTIFF: missing $name"))
+      val scaleF = geo(33550, "ModelPixelScale")
+      val tieF = geo(33922, "ModelTiepoint")
+      val geoF = geo(34735, "GeoKeyDirectory")
+      // GeoKey walk: 4-short header then (keyId, location, count, value)
+      // entries; ProjectedCSTypeGeoKey (3072) carries the EPSG
+      val nKeys = geoF.longAt(3).toInt
+      var epsg = -1
+      var k = 0
+      while (k < nKeys) {
+        val off = 4 + 4 * k
+        if (geoF.longAt(off) == 3072 && geoF.longAt(off + 1) == 0)
+          epsg = geoF.longAt(off + 3).toInt
+        k += 1
       }
-      val total = count * elemSize
-      val data =
-        if (total <= 8) java.util.Arrays.copyOfRange(p, base + 12, base + 12 + total.toInt)
-        else {
-          val off = bb.getLong(base + 12)
-          require(off >= 0 && off + total <= p.length,
-            s"BigTIFF tag $tag payload out of range")
-          java.util.Arrays.copyOfRange(p, off.toInt, (off + total).toInt)
-        }
-      tag -> BigField(tpe, count, data, order)
-    }.toMap
+      require(epsg > 0, "GeoKeyDirectory has no ProjectedCSTypeGeoKey")
+      val nodata = fields.get(42113).map(_.ascii.replace("\u0000", "").trim).filter(_.nonEmpty)
+      TiffMeta(long(256), long(257), long(258), longOr(339, 1),
+        epsg, scaleF.doubleAt(0), scaleF.doubleAt(1),
+        tieF.doubleAt(3), tieF.doubleAt(4),
+        longOr(259, 1), longOr(317, 1),
+        tiled = fields.contains(322), bigEndian = order == ByteOrder.BIG_ENDIAN,
+        nodata = nodata, bigTiff = c == Big)
+    }
   }
 
-  /** Header-only BigTIFF meta — the magic-43 twin of the JDK-plugin tag
-    * walk, same GeoKey/nodata semantics.
+  /** The one primary-IFD tag walk, for both containers — header-only,
+    * no pixel byte touched. The magic number picks the [[Container]];
+    * malformed headers (BigTIFF offset size ≠ 8, out-of-range IFD,
+    * implausible entry count) are refused loudly instead of
+    * garbage-parsed.
     */
-  private[graft] def bigTiffMeta(p: Array[Byte]): TiffMeta = {
-    val f = bigFields(p)
-    def lng(tag: Int): Long = {
-      val fd = f.getOrElse(tag,
-        throw new IllegalArgumentException(s"missing TIFF tag $tag"))
-      fd.longAt(0)
+  private def readIfd(p: Array[Byte]): Ifd = {
+    require(p.length >= Classic.header && (p(0) == 'I' || p(0) == 'M') && p(0) == p(1),
+      "not a TIFF payload: no II/MM byte-order mark")
+    val order = orderOf(p(0) == 'M')
+    val bb = ByteBuffer.wrap(p).order(order)
+    val c = bb.getShort(2) match {
+      case 42 => Classic
+      case 43 =>
+        require(p.length >= Big.header && bb.getShort(4) == Big.valueWidth && bb.getShort(6) == 0,
+          s"malformed BigTIFF header (${p.length} bytes)")
+        Big
+      case m => throw new IllegalArgumentException(s"not a TIFF payload: magic $m")
     }
-    def lngOr(tag: Int, dflt: Long): Long = f.get(tag).map(_.longAt(0)).getOrElse(dflt)
-    val scaleF = f.getOrElse(33550, throw new IllegalArgumentException(
-      "not a GeoTIFF: missing ModelPixelScale"))
-    val tieF = f.getOrElse(33922, throw new IllegalArgumentException(
-      "not a GeoTIFF: missing ModelTiepoint"))
-    val geoF = f.getOrElse(34735, throw new IllegalArgumentException(
-      "not a GeoTIFF: missing GeoKeyDirectory"))
-    val nKeys = geoF.longAt(3).toInt
-    var epsg = -1
-    var k = 0
-    while (k < nKeys) {
-      val off = 4 + 4 * k
-      if (geoF.longAt(off) == 3072 && geoF.longAt(off + 1) == 0)
-        epsg = geoF.longAt(off + 3).toInt
-      k += 1
-    }
-    require(epsg > 0, "GeoKeyDirectory has no ProjectedCSTypeGeoKey")
-    val nodata = f.get(42113).map(_.ascii.replace("\u0000", "").trim).filter(_.nonEmpty)
-    TiffMeta(lng(256), lng(257), lng(258), lngOr(339, 1),
-      epsg, scaleF.doubleAt(0), scaleF.doubleAt(1),
-      tieF.doubleAt(3), tieF.doubleAt(4),
-      lngOr(259, 1), lngOr(317, 1),
-      tiled = f.contains(322), bigEndian = p(0) == 'M',
-      nodata = nodata, bigTiff = true)
+    val ifdOff = getU(bb, c.ifdSlot, c.valueWidth)
+    require(ifdOff >= c.header && ifdOff + c.countWidth <= p.length,
+      s"IFD offset $ifdOff out of range (${p.length} bytes)")
+    val n = getU(bb, ifdOff.toInt, c.countWidth)
+    require(n > 0 && n <= 4096, s"implausible IFD entry count $n")
+    val fields = (0 until n.toInt).flatMap { i =>
+      val base = ifdOff.toInt + c.countWidth + i * c.entryWidth
+      require(base + c.entryWidth <= p.length, "truncated IFD")
+      val tag = bb.getShort(base) & 0xFFFF
+      val tpe = bb.getShort(base + 2) & 0xFFFF
+      val count = getU(bb, base + 4, c.valueWidth)
+      val slot = base + 4 + c.valueWidth
+      TypeSize.get(tpe).map { size =>
+        val at = if (count <= c.valueWidth / size) slot.toLong else getU(bb, slot, c.valueWidth)
+        tag -> Field(tpe, count, slot, at, bb)
+      }
+    }.toMap
+    Ifd(c, order, fields)
   }
+
+  /** Header-ONLY decode: the tag walk, for either container. Never
+    * touches a pixel — safe at any scale on any node, including the
+    * driver.
+    */
+  private[graft] def decodeMeta(payload: Array[Byte]): TiffMeta = readIfd(payload).meta
 
   /** TIFF-variant LZW decoder (the inverse of [[lzwEncode]]): 9→12-bit
     * MSB-first codes, ClearCode 256 / EOI 257, "early change" width
@@ -1066,27 +870,22 @@ object GeoTiff {
     out.toByteArray
   }
 
-  /** Full manual BigTIFF decode: meta plus the row-major pixel array —
+  /** Hand pixel decode of a BigTIFF payload into a row-major array —
     * strips or tiles (tile padding clipped), none/LZW/Deflate,
     * horizontal predictor, both byte orders, the three fixture sample
     * formats. Mirrors what the JDK codec does for classic files.
     */
-  private[graft] def bigTiffPixels(p: Array[Byte]): (TiffMeta, Array[Double]) = {
-    val f = bigFields(p)
-    val meta = bigTiffMeta(p)
+  private def bigTiffPixels(p: Array[Byte], ifd: Ifd): Array[Double] = {
+    val meta = ifd.meta
+    val f = ifd.fields
     val w = meta.width.toInt; val h = meta.height.toInt
     val bps = (meta.bits / 8).toInt
-    val order =
-      if (meta.bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
     def sample(seg: Array[Byte], idx: Int): Double = {
       val off = idx * bps
       meta.dtype match {
         case "uint8"   => (seg(off) & 0xFF).toDouble
-        case "int16"   =>
-          java.nio.ByteBuffer.wrap(seg, off, 2).order(order).getShort.toDouble
-        case "float32" =>
-          java.nio.ByteBuffer.wrap(seg, off, 4).order(order).getFloat.toDouble
+        case "int16"   => ByteBuffer.wrap(seg, off, 2).order(ifd.order).getShort.toDouble
+        case "float32" => ByteBuffer.wrap(seg, off, 4).order(ifd.order).getFloat.toDouble
         case d => throw new IllegalArgumentException(s"unsupported BigTIFF dtype $d")
       }
     }
@@ -1111,53 +910,72 @@ object GeoTiff {
           r += 1
         }
       }
+    // a strip is a tile as wide as the image: one segment loop for both
+    val (tw, th, offTag, cntTag) =
+      if (meta.tiled) (ifd.long(322).toInt, ifd.long(323).toInt, 324, 325)
+      else (w, math.min(ifd.longOr(278, h), h).toInt, 273, 279)
+    val offs = f(offTag).longs; val cnts = f(cntTag).longs
+    val ntx = (w + tw - 1) / tw
     val vals = new Array[Double](w * h)
-    if (meta.tiled) {
-      val tw = f(322).longAt(0).toInt; val th = f(323).longAt(0).toInt
-      val offs = f(324).longs; val cnts = f(325).longs
-      val ntx = (w + tw - 1) / tw
-      offs.indices.foreach { s =>
-        val raw = java.util.Arrays.copyOfRange(
-          p, offs(s).toInt, (offs(s) + cnts(s)).toInt)
-        val seg = decompress(raw, tw * th * bps)
-        undoPredictor(seg, tw)
-        val tx = s % ntx; val ty = s / ntx
-        var r = 0
-        while (r < th) {
-          var c = 0
-          while (c < tw) {
-            val x = tx * tw + c; val y = ty * th + r
-            if (x < w && y < h) vals(y * w + x) = sample(seg, r * tw + c)
-            c += 1
-          }
-          r += 1
+    offs.indices.foreach { s =>
+      val raw = java.util.Arrays.copyOfRange(p, offs(s).toInt, (offs(s) + cnts(s)).toInt)
+      val seg = decompress(raw, tw * th * bps)
+      undoPredictor(seg, tw)
+      val x0 = (s % ntx) * tw; val y0 = (s / ntx) * th
+      var r = 0
+      while (r < th && y0 + r < h) {
+        var c = 0
+        while (c < tw && x0 + c < w) {
+          vals((y0 + r) * w + x0 + c) = sample(seg, r * tw + c)
+          c += 1
         }
-      }
-    } else {
-      val rps = f.get(278).map(_.longAt(0).toInt).getOrElse(h)
-      val offs = f(273).longs; val cnts = f(279).longs
-      offs.indices.foreach { s =>
-        val raw = java.util.Arrays.copyOfRange(
-          p, offs(s).toInt, (offs(s) + cnts(s)).toInt)
-        val seg = decompress(raw, w * rps * bps)
-        undoPredictor(seg, w)
-        val y0 = s * rps
-        var r = 0
-        while (r < rps && y0 + r < h) {
-          var x = 0
-          while (x < w) {
-            vals((y0 + r) * w + x) = sample(seg, r * w + x)
-            x += 1
-          }
-          r += 1
-        }
+        r += 1
       }
     }
-    (meta, vals)
+    vals
   }
 
-  private def bigTiffStats(p: Array[Byte]): TiffInfo = {
-    val (meta, vals) = bigTiffPixels(p)
+  /** Classic-file pixels through the JDK ImageIO TIFF plugin — the only
+    * path for the classic inputs the hand decoder does not read
+    * (PackBits, JPEG, uint16/int32/float64, multi-sample) and the
+    * independent check on the writer. Reader and stream are disposed
+    * under try/finally (a malformed payload must not leak the
+    * ImageInputStream). `read(0)`, not `readRaster`: the plugin decodes
+    * to a BufferedImage and does not implement raster-only reads.
+    */
+  private def jdkPixels(payload: Array[Byte]): Array[Double] = {
+    javax.imageio.ImageIO.setUseCache(false)
+    val iis = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    try {
+      val readers = javax.imageio.ImageIO.getImageReaders(iis)
+      require(readers.hasNext, "no JDK TIFF reader available")
+      val reader = readers.next()
+      try {
+        reader.setInput(iis, true, false)
+        val raster = reader.read(0).getRaster
+        val w = raster.getWidth; val h = raster.getHeight
+        raster.getSamples(0, 0, w, h, 0, new Array[Double](w * h))
+      } finally reader.dispose()
+    } finally iis.close()
+  }
+
+  /** Meta plus every cell of one payload as a row-major value array —
+    * the JDK codec for classic files, the hand decoder for BigTIFF — so
+    * every reader accepts both containers transparently (rasterio
+    * parity).
+    */
+  private def decodeCells(payload: Array[Byte]): (TiffMeta, Array[Double]) = {
+    val ifd = readIfd(payload)
+    (ifd.meta, if (ifd.c == Big) bigTiffPixels(payload, ifd) else jdkPixels(payload))
+  }
+
+  /** Full decode: header facts plus ONE exact stats fold over the
+    * decoded cells. Executor-side callers pay exactly one decode per
+    * file.
+    */
+  private[graft] def decodeStats(payload: Array[Byte]): TiffInfo = {
+    val (meta, vals) = decodeCells(payload)
     var sum = 0.0
     var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
     var i = 0
@@ -1170,47 +988,6 @@ object GeoTiff {
     }
     TiffInfo(meta, vals.length.toLong, sum, mn, mx)
   }
-
-  /** Header-ONLY decode: IFD tag walk through the JDK TIFF plugin's
-    * metadata path (classic, magic 42) or the manual 8-byte walk
-    * (BigTIFF, magic 43). Never touches a pixel — safe at any scale on
-    * any node, including the driver.
-    */
-  private[graft] def decodeMeta(payload: Array[Byte]): TiffMeta =
-    if (isBigTiff(payload)) bigTiffMeta(payload)
-    else withReader(payload)(metaOf(_, payload.nonEmpty && payload(0) == 'M',
-      gdalNodata(payload)))
-
-  /** Full decode: header facts plus ONE pixel pass through the REAL
-    * JDK codec (`ImageReader.read` — strips/tiles, LZW/Deflate,
-    * predictor, both byte orders). One reader, one read; executor-side
-    * callers pay exactly one decode per file.
-    */
-  private[graft] def decodeStats(payload: Array[Byte]): TiffInfo =
-    if (isBigTiff(payload)) bigTiffStats(payload)
-    else withReader(payload) { reader =>
-      val meta = metaOf(reader, payload.nonEmpty && payload(0) == 'M',
-        gdalNodata(payload))
-      // read(0), not readRaster: the JDK TIFF plugin decodes to a
-      // BufferedImage and does not implement raster-only reads
-      val raster = reader.read(0).getRaster
-      val w = raster.getWidth; val h = raster.getHeight
-      var sum = 0.0
-      var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val v = raster.getSampleDouble(x, y, 0)
-          sum += v
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          x += 1
-        }
-        y += 1
-      }
-      TiffInfo(meta, w.toLong * h, sum, mn, mx)
-    }
 
   /** NumPy dtype promotion (`np.result_type`) over the sample formats
     * a GeoTIFF can carry — the reference's
@@ -1262,51 +1039,55 @@ object GeoTiff {
       r.getDouble(9), 0, 1, tiled = false, bigEndian = false,
       nodata = Option(r.getString(10)))
 
-  /** Decode every cell of one payload into a row-major value array
-    * through the right codec — JDK plugin for classic files, the
-    * manual reader for BigTIFF — so the load APIs accept both
-    * containers transparently (rasterio parity).
+  /** (path, content) of every file under `path` (optionally
+    * name-filtered) through the `binaryFile` source — HDFS/S3/local
+    * URIs all work.
     */
-  private def decodeCells(payload: Array[Byte]): (Int, Int, Array[Double]) =
-    if (isBigTiff(payload)) {
-      val (meta, vals) = bigTiffPixels(payload)
-      (meta.width.toInt, meta.height.toInt, vals)
-    } else withReader(payload) { reader =>
-      val raster = reader.read(0).getRaster
-      val w = raster.getWidth; val h = raster.getHeight
-      val vals = new Array[Double](w * h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { vals(y * w + x) = raster.getSampleDouble(x, y, 0); x += 1 }
-        y += 1
-      }
-      (w, h, vals)
-    }
+  private def binaryFiles(spark: SparkSession, path: String, glob: Option[String]): DataFrame = {
+    val reader = spark.read.format("binaryFile")
+    glob.fold(reader)(g => reader.option("pathGlobFilter", g))
+      .load(path)
+      .select(col("path"), col("content"))
+  }
+
+  private def fileName(row: Row): String = row.getString(0).split('/').last
 
   /** Header-only metas for every .tif under `path`, decoded IN
     * EXECUTORS over the `binaryFile` scan and returned as one small
     * (file name, header facts) row per file — the ONLY thing the
-    * driver ever holds. Listing is the source's (HDFS/S3/local URIs
-    * all work); payload bytes never reach the driver.
+    * driver ever holds. Payload bytes never reach the driver.
     */
-  private def headerMetas(spark: SparkSession, paths: Seq[String],
-                          glob: Option[String]): Vector[(String, TiffMeta)] = {
-    val reader = spark.read.format("binaryFile")
-    val src = glob.fold(reader)(g => reader.option("pathGlobFilter", g))
-      .load(paths: _*)
-      .select(col("path"), col("content"))
-    src.mapPartitions { it =>
-      it.map { row =>
-        val name = row.getString(0).split('/').last
-        metaRow(name, decodeMeta(row.getAs[Array[Byte]](1)))
-      }
-    }(org.apache.spark.sql.Encoders.row(metaSchema))
+  private def headerMetas(spark: SparkSession, path: String,
+                          glob: Option[String]): Vector[(String, TiffMeta)] =
+    binaryFiles(spark, path, glob)
+      .mapPartitions(_.map(row => metaRow(fileName(row), decodeMeta(row.getAs[Array[Byte]](1)))))(
+        Encoders.row(metaSchema))
       .collect()
       .map(r => r.getString(0) -> rowMeta(r))
       .sortBy(_._1)
       .toVector
-  }
+
+  private val cellSchema = StructType(Seq(
+    StructField("band_id", LongType, nullable = false),
+    StructField("x", LongType, nullable = false),
+    StructField("y", LongType, nullable = false),
+    StructField("v", DoubleType, nullable = false)))
+
+  /** The cell kernel every load API shares: `binaryFile` scan →
+    * [[decodeCells]] once per file, in executors → one
+    * (band_id, x, y, v) row per cell, where `place(file name)` gives
+    * the file's band id and its first row's y.
+    */
+  private def cellFrame(spark: SparkSession, path: String, glob: Option[String])(
+      place: String => (Long, Long)): DataFrame =
+    binaryFiles(spark, path, glob).mapPartitions { it =>
+      it.flatMap { row =>
+        val (band, y0) = place(fileName(row))
+        val (meta, vals) = decodeCells(row.getAs[Array[Byte]](1))
+        val w = meta.width.toInt
+        Iterator.range(0, vals.length).map(i => Row(band, (i % w).toLong, y0 + i / w, vals(i)))
+      }
+    }(Encoders.row(cellSchema))
 
   /** Load one GeoTIFF FILE into a [[RasterFrame]] whose [[GridMeta]]
     * is entirely file-derived: CRS from the GeoKey directory, affine
@@ -1316,25 +1097,11 @@ object GeoTiff {
     * header-only tag walk; pixels are decoded once, in executors.
     */
   def loadRaster(spark: SparkSession, path: String): RasterFrame = {
-    val metas = headerMetas(spark, Seq(path), glob = None)
+    val metas = headerMetas(spark, path, glob = None)
     require(metas.length == 1, s"expected one file at $path, found ${metas.length}")
     val info = metas.head._2
-    val cellSchema = StructType(Seq(
-      StructField("x", LongType, nullable = false),
-      StructField("y", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false)))
-    val df = spark.read.format("binaryFile").load(path)
-      .select(col("content"))
-      .mapPartitions { it =>
-        it.flatMap { row =>
-          val (w, h, vals) = decodeCells(row.getAs[Array[Byte]](0))
-          for {
-            y <- 0 until h
-            x <- 0 until w
-          } yield Row(x.toLong, y.toLong, vals(y * w + x))
-        }
-      }(org.apache.spark.sql.Encoders.row(cellSchema))
-    RasterFrame(df, info.width, info.height,
+    RasterFrame(cellFrame(spark, path, None)(_ => (0L, 0L)).drop("band_id"),
+      info.width, info.height,
       GridMeta(info.crs, info.transform, fillValue = fillOf(info)))
   }
 
@@ -1350,7 +1117,7 @@ object GeoTiff {
     * else, at any file count.
     */
   def loadStack(spark: SparkSession, dir: String): (DataFrame, GridMeta, String) = {
-    val metas = headerMetas(spark, Seq(dir), glob = Some("*.tif"))
+    val metas = headerMetas(spark, dir, glob = Some("*.tif"))
     require(metas.nonEmpty, s"no .tif files under $dir")
     val head = metas.head._2
     metas.foreach { case (name, m) =>
@@ -1361,27 +1128,9 @@ object GeoTiff {
     val declared = metas.flatMap(_._2.crs).distinct
     require(declared.size <= 1,
       s"conflicting declared CRS across stack: ${declared.mkString(", ")}")
-    val dtype = promote(metas.map(_._2.dtype))
-    val cellSchema = StructType(Seq(
-      StructField("band_id", LongType, nullable = false),
-      StructField("x", LongType, nullable = false),
-      StructField("y", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false)))
     val byName = metas.map(_._1).zipWithIndex.toMap
-    val cells = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .mapPartitions { it =>
-        it.flatMap { row =>
-          val name = row.getString(0).split('/').last
-          val band = byName(name).toLong
-          val (w, h, vals) = decodeCells(row.getAs[Array[Byte]](1))
-          for (y <- 0 until h; x <- 0 until w)
-            yield Row(band, x.toLong, y.toLong, vals(y * w + x))
-        }
-      }(org.apache.spark.sql.Encoders.row(cellSchema))
-    (cells, GridMeta(declared.headOption, head.transform), dtype)
+    val cells = cellFrame(spark, dir, Some("*.tif"))(name => (byName(name).toLong, 0L))
+    (cells, GridMeta(declared.headOption, head.transform), promote(metas.map(_._2.dtype)))
   }
 
   // ---- the gates ----

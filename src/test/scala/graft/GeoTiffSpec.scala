@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GeoTiff
 
-/** E17/A59: real raster-FILE ingest — canonical GeoTIFF bytes on disk,
-  * decoded back through the JDK ImageIO TIFF plugin (pixels) and the
-  * javax.imageio.plugins.tiff tag walk (georeference). Mirrors the
+/** E17/A59: real raster-FILE ingest — GeoTIFF bytes on disk, classic
+  * and BigTIFF, decoded back through one IFD tag walk for both
+  * containers (georeference, header-only) and, for pixels, the JDK
+  * ImageIO TIFF plugin (classic) or the hand decoder (BigTIFF). Mirrors the
   * reference's load-from-disk contract (datasets/_base.py:108
   * `_load_rasters_to_array`) and the dtype-promotion test
   * (tests/test_datasets.py:122 `test_load_rasters_promotes_dtype`).
@@ -201,6 +202,84 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(r23.getAs[Long]("predictor") == 1)
   }
 
+  /** The written bytes are pinned: every fixture, the header-only file
+    * and both WRITE paths hash to fixed digests, so a change to the
+    * container writer that moves any byte fails here.
+    */
+  test("writer output is byte-identical: fixtures, header-only file, both write paths") {
+    def md5(parts: Iterable[Array[Byte]]): String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      parts.foreach(p => md.update(p))
+      md.digest().map(b => f"${b & 0xFF}%02x").mkString
+    }
+    assert(md5((0L until 48L).map(GeoTiff.encode)) ==
+      "43e49cadaae609e25dbaf377ccf7ab9c")
+    assert(md5((0L until 48L).map(GeoTiff.encodeShaped)) ==
+      "c956a9093cdf747d63829509e3acf339")
+    assert(md5(Seq(GeoTiff.encodeHeaderOnly(6L))) ==
+      "a63a59fc95e8116913a2b790e43ef38f")
+    // q_raster_roundtrip's grid: 96×64 quarter values, ~1/23 missing
+    import org.apache.spark.sql.functions._
+    import graft.functions.TextFunctions.hexPrefix52
+    val w = 96L; val h = 64L
+    val cells = spark.range(w * h)
+      .select((col("id") % w).as("x"), expr(s"id div $w").as("y"))
+      .withColumn("v", ((col("x") * 11 + col("y") * 13) % 997).cast("double") / 4.0)
+      .filter(hexPrefix52(concat(lit("rr|"), col("x").cast("string"),
+        lit(","), col("y").cast("string"))) % 23 =!= 0)
+    val rf = graft.core.RasterFrame(cells, w, h,
+      graft.core.GridMeta(Some("EPSG:32614"),
+        Vector(30.0, 0.0, 500000.0, 0.0, -30.0, 4200000.0),
+        fillValue = Some(-9999L)))
+    val d = tmpDir()
+    GeoTiff.writeRaster(rf, d.resolve("pred.tif").toString, rowsPerStrip = 16)
+    assert(md5(Seq(java.nio.file.Files.readAllBytes(d.resolve("pred.tif")))) ==
+      "f8d6358184ef623eee7a80a9aaf01413")
+    GeoTiff.writeRasterSharded(rf, d.resolve("sharded").toString, bandRows = 16)
+    val shards = (0 until 4).map(i => f"shard_$i%05d.tif") :+ "_manifest.txt"
+    assert(md5(shards.map(n =>
+      java.nio.file.Files.readAllBytes(d.resolve("sharded").resolve(n)))) ==
+      "90ca3cefef65f18e9ffaf058ce65c32b")
+  }
+
+  /** TIFF writers emit field types the meta never reads (RATIONAL
+    * resolutions, SSHORT, FLOAT, UNDEFINED): the tag walk must size
+    * them and move on, in either container.
+    */
+  test("decodeMeta skips unread entries of any field type, classic and BigTIFF") {
+    // retype `tag` in the first IFD, in place; classic: 4-byte IFD
+    // offset at 4, 2-byte entry count, 12-byte entries; BigTIFF: 8, 8, 20
+    def retype(p: Array[Byte], big: Boolean, tag: Int, tpe: Int): Array[Byte] = {
+      val out = p.clone()
+      val bb = java.nio.ByteBuffer.wrap(out).order(
+        if (out(0) == 'M') java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
+      val ifd = if (big) bb.getLong(8).toInt else bb.getInt(4)
+      val n = if (big) bb.getLong(ifd).toInt else bb.getShort(ifd).toInt
+      val entries = (0 until n).map(i => ifd + (if (big) 8 + 20 * i else 2 + 12 * i))
+      val base = entries.find(e => bb.getShort(e) == tag).get
+      bb.putShort(base + 2, tpe.toShort)
+      out
+    }
+    val SShort = 8
+    // band 0: classic little-endian; band 21: BigTIFF big-endian tiled
+    for ((p, big) <- Seq(GeoTiff.encode(0L) -> false, GeoTiff.encodeShaped(21L) -> true))
+      assert(GeoTiff.decodeMeta(retype(p, big, 262, SShort)) == GeoTiff.decodeMeta(p),
+        s"bigTiff=$big")
+  }
+
+  test("a GDAL_NODATA string that fits the value field is written inline") {
+    // "0" and "-1" pad to 2 and 4 bytes: TIFF keeps values that fit the
+    // 4-byte (classic) or 8-byte (BigTIFF) field inline, and the walk
+    // reads them from there
+    for (nd <- Seq("0", "-1", "-9999"); big <- Seq(false, true)) {
+      val p = GeoTiff.writeContainer(2, 2, 1, 1, Vector(Array[Byte](1, 2, 3, 4)),
+        GeoTiff.Layout(bigEndian = big, 1, 1, None, 2, bigTiff = big),
+        32610, 30.0, 30.0, 500000.0, 4200000.0, nodata = Some(nd))
+      assert(GeoTiff.decodeMeta(p).nodata.contains(nd), s"nodata $nd, bigTiff=$big")
+      assert(GeoTiff.decodeStats(p).vsum == 10.0)
+    }
+  }
+
   test("loadStack reads a mixed classic + BigTIFF stack transparently") {
     // rasterio parity: the load APIs must not care which container a
     // band arrived in — write an aligned pair (one classic, one
@@ -210,7 +289,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val classic = GeoTiff.buildTiff(w, h, "uint8",
       (x, y) => ((3 * x + 5 * y) % 256).toDouble, 32610, 500000.0, 4200000.0,
       GeoTiff.Layout(bigEndian = false, 1, 1, None, h))
-    val big = GeoTiff.buildBigTiff(w, h, "int16",
+    val big = GeoTiff.buildTiff(w, h, "int16",
       (x, y) => ((17 * x + 23 * y) % 1201 - 600).toDouble, 32610, 500000.0, 4200000.0,
       GeoTiff.Layout(bigEndian = true, 5, 1, Some((16, 16)), h, bigTiff = true))
     java.nio.file.Files.write(dir.resolve("band_a.tif"), classic)

@@ -8,10 +8,26 @@ import graft.sources.Tables
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Ev
 
+/** The MemoryStream row types. They live in a top-level object, not
+  * inside the suite class: Spark's generated code must construct them,
+  * and a class nested in the suite is out of its reach (each such
+  * encoder falls back to interpreted projections).
+  */
+object StreamingSpec {
+  case class TEv(ts: Long, event_type: String, value: Double)
+  case class Cell(x: Long, y: Long, v: Option[Long])
+  case class TDoc(doc_id: Long, text: String)
+  case class PiiDoc(doc_id: Long, t: String)
+  case class REv(user_id: Long, ts: Long, event_id: Long,
+                 event_type: String, value: Double)
+}
+
 /** F1/F2: streaming results must equal their batch twins (B11/B10) on
   * the same events.
   */
 class StreamingSpec extends AnyFunSuite {
+  import StreamingSpec._
+
   private lazy val spark = TestSpark.spark
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -31,10 +47,6 @@ class StreamingSpec extends AnyFunSuite {
     * still holds.
     */
   private def withRetry[A](batch: Seq[A]): Seq[A] = batch :+ batch(batch.length / 2)
-
-  private case class TEv(ts: Long, event_type: String, value: Double)
-
-  private case class Cell(x: Long, y: Long, v: Option[Long])
 
   test("streaming tumbling agg equals the batch aggregate") {
     import spark.implicits._
@@ -1192,8 +1204,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  private case class TDoc(doc_id: Long, text: String)
-
   test("F26 streaming drift-bucket histogram equals batch; PSI meets the static baseline") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1619,8 +1629,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  private case class PiiDoc(doc_id: Long, t: String)
-
   test("F8 streaming PII curation equals the batch pipeline across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1746,9 +1754,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == 300, s"expected 300 unique events, got $got")
     } finally q.stop()
   }
-
-  private case class REv(user_id: Long, ts: Long, event_id: Long,
-                         event_type: String, value: Double)
 
   test("stream-stream interval join equals the batch range join") {
     import spark.implicits._
