@@ -1,5 +1,12 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+import java.security.MessageDigest
+import java.util.HexFormat
+import javax.imageio.ImageIO
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +22,73 @@ import graft.sources.Tables._
   * in per-partition kernels whose Spark-side plumbing (schema, batching,
   * partitioning) is real while the codec itself is pluggable.
   *
+  * Every kernel runs through one helper, [[payloadRows]]: it reads one
+  * (id, payload) pair per row, builds the kernel once per partition (its
+  * MessageDigest and other scratch state live there) and encodes the
+  * rows the kernel returns under the caller's schema. The doc-driven
+  * synthesizers enter it through [[synthesizeBy]], whose payload is a
+  * document's text or its id alone. The helper owns the null policy: a
+  * null id or payload fails with an IllegalArgumentException naming the
+  * column and the id, never an NPE inside a codec. Payloads arrive from
+  * outside the program on the E7 ingest path ([[readBlobs]]), so this is
+  * the check on that input, as are the magic and structure `require`s of
+  * each codec.
+  *
   * Scale posture: metadata extraction (size/hash/magic) is codegen'd
   * Column work — no kernel, no shuffle. Decoding streams partitions
   * through a kernel; payload bytes never cross a shuffle boundary.
   */
 object Multimodal {
+
+  /** The one per-row kernel of this file: `kernel()` is built once per
+    * partition and maps each row's (id, payload) — the `idCol` and
+    * `payloadCol` columns of `in` — to its output rows under `out`. A
+    * null id or payload fails with `require`, naming the column and,
+    * for a null payload, the id.
+    */
+  private def payloadRows[P](in: DataFrame, out: StructType,
+      idCol: String = "media_id", payloadCol: String = "payload")(
+      kernel: () => (Long, P) => Iterator[Row]): DataFrame =
+    in.select(col(idCol), col(payloadCol)).mapPartitions { it =>
+      val k = kernel()
+      it.flatMap { row =>
+        require(!row.isNullAt(0), s"non-null $idCol violated")
+        val id = row.getLong(0)
+        require(!row.isNullAt(1), s"non-null $payloadCol violated at $idCol $id")
+        k(id, row.getAs[P](1))
+      }
+    }(Encoders.row(out))
+
+  /** The doc-driven entry to [[payloadRows]]: one kernel call per
+    * document of `dir`, the documents spread by `fanOut`. The payload is
+    * the `text` column, or with `payloadCol = "doc_id"` the id itself,
+    * for a synthesizer that derives everything from the id (reading
+    * only `doc_id` keeps `text` out of the scan and of any exchange).
+    */
+  private def synthesizeBy[P](s: SparkSession, dir: String, out: StructType,
+      payloadCol: String)(kernel: () => (Long, P) => Iterator[Row]): DataFrame = {
+    val docs = documents(s, dir)
+    val read = if (payloadCol == "doc_id") docs.select(col("doc_id"))
+               else docs.select(col("doc_id"), col(payloadCol))
+    payloadRows(fanOut(read), out, "doc_id", payloadCol)(kernel)
+  }
+
+  private val blobSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("payload", BinaryType, nullable = false)))
+
+  /** The synthesized-media frame shared by every single-payload
+    * fixture: one (media_id, payload) row per document, the payload
+    * `encode(doc_id)`. */
+  private def synthesizeBlobs(s: SparkSession, dir: String)(
+      encode: Long => Array[Byte]): DataFrame =
+    synthesizeBy[Long](s, dir, blobSchema, "doc_id") { () => (id, _) =>
+      Iterator.single(Row(id, encode(id)))
+    }
+
+  /** Lowercase hex md5 of `bytes`. */
+  private def md5Hex(md: MessageDigest, bytes: Array[Byte]): String =
+    HexFormat.of().formatHex(md.digest(bytes))
 
   /** E1: binary metadata extraction over payloads synthesized from the
     * documents table (the container has no media files — the payload
@@ -51,6 +120,57 @@ object Multimodal {
               size(col("features")).cast("long").as("n_features"))
   }
 
+  private val containerSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("payload", BinaryType, nullable = false),
+    StructField("n_frames", IntegerType, nullable = false)))
+
+  /** The E4/E5 frame-container writer, as a [[payloadRows]] kernel over
+    * (doc_id, text): `magic`, the frame count n = 2 + id%4, then each
+    * frame as an int length and its bytes. GRFV and GRFB differ only in
+    * the magic and in `split`, which cuts a text into its n frames.
+    */
+  private def writeFrames(magic: String)(
+      split: (String, Int) => IndexedSeq[Array[Byte]]): () => (Long, String) => Iterator[Row] =
+    () => (id, text) => {
+      val n = (2 + id % 4).toInt
+      val frames = split(text, n)
+      val bb = ByteBuffer.allocate(8 + frames.map(_.length + 4).sum)
+      bb.put(magic.getBytes); bb.putInt(n)
+      frames.foreach { f => bb.putInt(f.length); bb.put(f) }
+      Iterator.single(Row(id, bb.array(), n))
+    }
+
+  /** The E4/E5 stride sampler: parse a `magic` container and emit every
+    * `stride`-th frame as (media_id, frame_idx, measure, md5), where
+    * `report` gives a sampled frame's measure and hex md5. The sampling
+    * decision happens INSIDE the parse loop, so skipped frames are
+    * seeked over, not read (the property that matters when a frame is
+    * 2 MB of pixels instead of a text chunk).
+    */
+  private def sampleContainer(media: DataFrame, magic: String, stride: Int,
+      out: StructType)(report: (MessageDigest, Array[Byte]) => (Long, String)): DataFrame =
+    payloadRows[Array[Byte]](media, out) { () =>
+      val md = MessageDigest.getInstance("MD5")
+      (id, payload) => {
+        val bb = ByteBuffer.wrap(payload)
+        val m = new Array[Byte](4); bb.get(m)
+        require(new String(m) == magic, s"bad magic for media $id")
+        val n = bb.getInt
+        (0 until n).flatMap { i =>
+          val flen = bb.getInt
+          if (i % stride == 0) {
+            val f = new Array[Byte](flen); bb.get(f)
+            val (measure, digest) = report(md, f)
+            Some(Row(id, i, measure, digest))
+          } else {
+            bb.position(bb.position() + flen) // seek, don't decode
+            None
+          }
+        }.iterator
+      }
+    }
+
   /** E4 media record: multi-frame payload ("GRFV" + frame count + int
     * length-prefixed frames — the text chopped into 2–5 char-boundary
     * chunks, so a SQL oracle can rebuild every frame). Contract limit:
@@ -60,29 +180,11 @@ object Multimodal {
     * pair at a boundary). A production container would chunk on byte
     * offsets instead.
     */
-  def synthesizeVideo(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id"), col("text")))
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val text = row.getString(1)
-          val len = text.length
-          val n = (2 + id % 4).toInt
-          val frames = (0 until n).map { i =>
-            text.substring((i * len) / n, ((i + 1) * len) / n)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
-          val bb = java.nio.ByteBuffer.allocate(8 + frames.map(_.length + 4).sum)
-          bb.put("GRFV".getBytes); bb.putInt(n)
-          frames.foreach { f => bb.putInt(f.length); bb.put(f) }
-          Row(id, bb.array(), n)
-        }
-      }(Encoders.row(outSchema))
-  }
+  def synthesizeVideo(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy(s, dir, containerSchema, "text")(writeFrames("GRFV") { (text, n) =>
+      val len = text.length
+      (0 until n).map(i => text.substring((i * len) / n, ((i + 1) * len) / n).getBytes(UTF_8))
+    })
 
   private val frameSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -90,38 +192,12 @@ object Multimodal {
     StructField("frame_chars", LongType, nullable = false),
     StructField("frame_md5", StringType, nullable = false)))
 
-  /** E4: stride frame sampling — parse the container, emit every
-    * `stride`-th frame with its char count and content hash. The
-    * sampling decision happens INSIDE the parse loop, so skipped frames
-    * are seeked over, not decoded (the property that matters when a
-    * frame is 2 MB of pixels instead of a text chunk).
-    */
-  def sampleFrames(media: DataFrame, stride: Int): DataFrame = {
-    media.select(col("media_id"), col("payload"))
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { row =>
-          val id = row.getLong(0)
-          val bb = java.nio.ByteBuffer.wrap(row.getAs[Array[Byte]](1))
-          val magic = new Array[Byte](4); bb.get(magic)
-          require(new String(magic) == "GRFV", s"bad magic for media $id")
-          val n = bb.getInt
-          (0 until n).flatMap { i =>
-            val flen = bb.getInt
-            if (i % stride == 0) {
-              val f = new Array[Byte](flen); bb.get(f)
-              md.reset()
-              val hex = md.digest(f).map(b => f"$b%02x").mkString
-              val chars = new String(f, java.nio.charset.StandardCharsets.UTF_8).length.toLong
-              Some(Row(id, i, chars, hex))
-            } else {
-              bb.position(bb.position() + flen) // seek, don't decode
-              None
-            }
-          }
-        }
-      }(Encoders.row(frameSchema))
-  }
+  /** E4: stride frame sampling — every `stride`-th frame with its char
+    * count and content hash. */
+  def sampleFrames(media: DataFrame, stride: Int): DataFrame =
+    sampleContainer(media, "GRFV", stride, frameSchema) { (md, f) =>
+      (new String(f, UTF_8).length.toLong, md5Hex(md, f))
+    }
 
   def qMediaFrames(s: SparkSession, dir: String): DataFrame =
     sampleFrames(synthesizeVideo(s, dir), stride = 2)
@@ -136,39 +212,26 @@ object Multimodal {
     * (its frames are already byte-addressed).
     */
   def synthesizeVideoBytes(s: SparkSession, dir: String): DataFrame =
-    chunkBytes(fanOut(documents(s, dir).select(col("doc_id"), col("text"))))
+    synthesizeBy(s, dir, containerSchema, "text")(byteFrames)
 
   /** E5 chunker over any (doc_id, text) frame — split out so specs can
     * feed multibyte/astral content the all-ASCII corpus lacks.
     */
-  def chunkBytes(docs: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false)))
-    docs.select(col("doc_id"), col("text"))
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val bytes = row.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val blen = bytes.length
-          val n = (2 + id % 4).toInt
-          // snapped boundary: min o in 0..3 with b+o at end-of-buffer or
-          // on a non-continuation byte (mirrors the oracle's list_min)
-          def snap(b: Int): Int = {
-            var o = 0
-            while (o < 3 && b + o < blen && (bytes(b + o) & 0xC0) == 0x80) o += 1
-            b + o
-          }
-          val bnds = Array.tabulate(n + 1)(i => snap((i.toLong * blen / n).toInt))
-          val frames = (0 until n).map(i =>
-            java.util.Arrays.copyOfRange(bytes, bnds(i), bnds(i + 1)))
-          val bb = java.nio.ByteBuffer.allocate(8 + frames.map(_.length + 4).sum)
-          bb.put("GRFB".getBytes); bb.putInt(n)
-          frames.foreach { f => bb.putInt(f.length); bb.put(f) }
-          Row(id, bb.array(), n)
-        }
-      }(Encoders.row(outSchema))
+  def chunkBytes(docs: DataFrame): DataFrame =
+    payloadRows(docs, containerSchema, "doc_id", "text")(byteFrames)
+
+  private val byteFrames = writeFrames("GRFB") { (text, n) =>
+    val bytes = text.getBytes(UTF_8)
+    val blen = bytes.length
+    // snapped boundary: min o in 0..3 with b+o at end-of-buffer or
+    // on a non-continuation byte (mirrors the oracle's list_min)
+    def snap(b: Int): Int = {
+      var o = 0
+      while (o < 3 && b + o < blen && (bytes(b + o) & 0xC0) == 0x80) o += 1
+      b + o
+    }
+    val bnds = Array.tabulate(n + 1)(i => snap((i.toLong * blen / n).toInt))
+    (0 until n).map(i => java.util.Arrays.copyOfRange(bytes, bnds(i), bnds(i + 1)))
   }
 
   private val byteFrameSchema: StructType = StructType(Seq(
@@ -177,45 +240,16 @@ object Multimodal {
     StructField("frame_bytes", LongType, nullable = false),
     StructField("frame_md5", StringType, nullable = false)))
 
-  /** E5: stride sampling over the byte-offset container. Skipped frames
-    * are seeked, not read. The content hash is md5 of the frame's
-    * UPPERCASE-HEX rendering — DuckDB's md5 only takes VARCHAR, and
-    * hex(blob) is the one bridge both engines render identically.
+  /** E5: stride sampling over the byte-offset container. The content
+    * hash is md5 of the frame's UPPERCASE-HEX rendering — DuckDB's md5
+    * only takes VARCHAR, and hex(blob) is the one bridge both engines
+    * render identically.
     */
-  def sampleByteFrames(media: DataFrame, stride: Int): DataFrame = {
-    media.select(col("media_id"), col("payload"))
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hexd = "0123456789ABCDEF".toCharArray
-        it.flatMap { row =>
-          val id = row.getLong(0)
-          val bb = java.nio.ByteBuffer.wrap(row.getAs[Array[Byte]](1))
-          val magic = new Array[Byte](4); bb.get(magic)
-          require(new String(magic) == "GRFB", s"bad magic for media $id")
-          val n = bb.getInt
-          (0 until n).flatMap { i =>
-            val flen = bb.getInt
-            if (i % stride == 0) {
-              val f = new Array[Byte](flen); bb.get(f)
-              val hx = new Array[Char](2 * flen)
-              var j = 0
-              while (j < flen) {
-                hx(2 * j) = hexd((f(j) & 0xF0) >> 4)
-                hx(2 * j + 1) = hexd(f(j) & 0x0F)
-                j += 1
-              }
-              md.reset()
-              val dig = md.digest(new String(hx)
-                .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-              Some(Row(id, i, flen.toLong, dig.map(b => f"$b%02x").mkString))
-            } else {
-              bb.position(bb.position() + flen) // seek, don't decode
-              None
-            }
-          }
-        }
-      }(Encoders.row(byteFrameSchema))
-  }
+  def sampleByteFrames(media: DataFrame, stride: Int): DataFrame =
+    sampleContainer(media, "GRFB", stride, byteFrameSchema) { (md, f) =>
+      val hex = HexFormat.of().withUpperCase().formatHex(f)
+      (f.length.toLong, md5Hex(md, hex.getBytes(US_ASCII)))
+    }
 
   def qMediaBytes(s: SparkSession, dir: String): DataFrame =
     sampleByteFrames(synthesizeVideoBytes(s, dir), stride = 2)
@@ -531,10 +565,6 @@ object Multimodal {
     StructField("height", IntegerType, nullable = false),
     StructField("channels", IntegerType, nullable = false)))
 
-  /** Synthesize a media table with a fake header (magic "GRFT", then
-    * width/height/channels as big-endian ints) so decode plumbing has a
-    * real binary format to parse.
-    */
   /** E6 synthesis: a deterministic "PCM16" waveform per doc —
     * n = 64 + id%64 samples, s[t] = ((id·31 + t²·7) mod 4096) − 2048 —
     * packed LITTLE-ENDIAN int16 into a binary payload. Pure integer
@@ -543,11 +573,11 @@ object Multimodal {
     * roundtrip the way E3 proves the header roundtrip.
     */
   def synthesizeAudio(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeAudio)
+    synthesizeBlobs(s, dir)(encodeAudio)
 
   private def encodeAudio(id: Long): Array[Byte] = {
     val n = (64 + id % 64).toInt
-    val bb = java.nio.ByteBuffer.allocate(2 * n)
+    val bb = ByteBuffer.allocate(2 * n)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var t = 0
     while (t < n) {
@@ -557,26 +587,28 @@ object Multimodal {
     bb.array()
   }
 
-  /** The synthesized-media frame shared by every single-payload
-    * fixture: one (media_id, payload) row per document, the payload
-    * `encode(doc_id)`. */
-  private def synthesizeBy(s: SparkSession, dir: String)(
-      encode: Long => Array[Byte]): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row => val id = row.getLong(0); Row(id, encode(id)) }
-      }(Encoders.row(outSchema))
+  /** Peak |s|, zero crossings (sign flips between ADJACENT samples
+    * inside the range) and Σs² over `samples(st until en)` — exact
+    * integers, the shared fold of the E6 and E9 waveform gates.
+    */
+  private def waveStats(samples: Array[Long], st: Int, en: Int): (Long, Long, Long) = {
+    var peak = 0L; var zc = 0L; var sumsq = 0L
+    var t = st
+    while (t < en) {
+      val v = samples(t)
+      if (math.abs(v) > peak) peak = math.abs(v)
+      sumsq += v * v
+      if (t >= st + 1 && (samples(t - 1) < 0) != (v < 0)) zc += 1
+      t += 1
+    }
+    (peak, zc, sumsq)
   }
 
   /** E6: per-chunk waveform statistics over the packed PCM payload —
     * the audio analogue of frame sampling: 4 equal sample chunks
     * (boundaries (c·n)/4, the E4/E5 rule), and per chunk the count,
-    * peak |s|, zero crossings (sign flips between ADJACENT samples
-    * inside the chunk), and RMS. Everything but the final RMS is exact
-    * integer arithmetic; RMS = sqrt(sumsq/cnt) is one IEEE-exact
+    * peak |s|, zero crossings, and RMS. Everything but the final RMS is
+    * exact integer arithmetic; RMS = sqrt(sumsq/cnt) is one IEEE-exact
     * sqrt of a quotient of exact integers — engine-identical before
     * the 4dp output rounding.
     */
@@ -588,33 +620,19 @@ object Multimodal {
       StructField("peak", LongType, nullable = false),
       StructField("n_zero_cross", LongType, nullable = false),
       StructField("sumsq", LongType, nullable = false)))
-    synthesizeAudio(s, dir)
-      .mapPartitions { it =>
-        it.flatMap { row =>
-          val id = row.getLong(0)
-          val bb = java.nio.ByteBuffer.wrap(row.getAs[Array[Byte]](1))
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val n = bb.remaining() / 2
-          val samples = Array.fill(n)(bb.getShort().toLong)
-          (0 until 4).map { c =>
-            val st = c * n / 4
-            val en = (c + 1) * n / 4
-            var peak = 0L; var zc = 0L; var sumsq = 0L
-            var t = st
-            while (t < en) {
-              val v = samples(t)
-              if (math.abs(v) > peak) peak = math.abs(v)
-              sumsq += v * v
-              if (t >= st + 1 && (samples(t - 1) < 0) != (v < 0)) zc += 1
-              t += 1
-            }
-            Row(id, c, (en - st).toLong, peak, zc, sumsq)
-          }
-        }
-      }(Encoders.row(outSchema))
-      .select(col("media_id"), col("chunk_idx"), col("n_samples"),
-              col("peak"), col("n_zero_cross"),
-              dec4(sqrt(col("sumsq").cast("double") / col("n_samples"))).as("rms"))
+    payloadRows[Array[Byte]](synthesizeAudio(s, dir), outSchema) { () => (id, payload) =>
+      val bb = ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val n = bb.remaining() / 2
+      val samples = Array.fill(n)(bb.getShort().toLong)
+      Iterator.tabulate(4) { c =>
+        val st = c * n / 4
+        val en = (c + 1) * n / 4
+        val (peak, zc, sumsq) = waveStats(samples, st, en)
+        Row(id, c, (en - st).toLong, peak, zc, sumsq)
+      }
+    }.select(col("media_id"), col("chunk_idx"), col("n_samples"),
+             col("peak"), col("n_zero_cross"),
+             dec4(sqrt(col("sumsq").cast("double") / col("n_samples"))).as("rms"))
   }
 
   /** E9 synthesis: REAL RIFF/WAVE audio files — a canonical 44-byte
@@ -627,13 +645,13 @@ object Multimodal {
     * gates cannot mask each other.
     */
   def synthesizeWav(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeWav)
+    synthesizeBlobs(s, dir)(encodeWav)
 
   private[graft] def encodeWav(id: Long): Array[Byte] = {
     val n = (48 + id % 96).toInt
     val rate = (8000 + (id % 5) * 2000).toInt
     val dataLen = 2 * n
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
+    val bb = ByteBuffer.allocate(44 + dataLen)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.put("RIFF".getBytes("US-ASCII")); bb.putInt(36 + dataLen)
     bb.put("WAVE".getBytes("US-ASCII"))
@@ -655,20 +673,19 @@ object Multimodal {
 
   /** Decode a WAV payload through the JRE's `AudioSystem` (the E9 RIFF
     * walker — one opener for every WAV consumer): (sample rate, the
-    * samples as a buffer in the stream's byte order, sample count).
-    * Only mono 16-bit PCM is accepted.
+    * samples in stream order). Only mono 16-bit PCM is accepted.
     */
-  private def openWav(id: Long, payload: Array[Byte]): (Long, java.nio.ByteBuffer, Int) = {
+  private def openWav(id: Long, payload: Array[Byte]): (Long, Array[Long]) = {
     val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(payload))
     val fmt = ais.getFormat
     require(fmt.getChannels == 1 && fmt.getSampleSizeInBits == 16,
             s"unexpected wav format for media $id")
     val raw = ais.readAllBytes()
-    val bb = java.nio.ByteBuffer.wrap(raw).order(
+    val bb = ByteBuffer.wrap(raw).order(
       if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
       else java.nio.ByteOrder.LITTLE_ENDIAN)
-    (fmt.getSampleRate.toLong, bb, raw.length / 2)
+    (fmt.getSampleRate.toLong, Array.fill(raw.length / 2)(bb.getShort().toLong))
   }
 
   /** E9: REAL audio container codec — the WAV payloads are decoded by
@@ -693,27 +710,15 @@ object Multimodal {
       StructField("n_zero_cross", LongType, nullable = false),
       StructField("sumsq", LongType, nullable = false),
       StructField("duration_us", LongType, nullable = false)))
-    synthesizeWav(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val (rate, bb, n) = openWav(id, row.getAs[Array[Byte]](1))
-          var peak = 0L; var zc = 0L; var sumsq = 0L
-          var prev = 0L; var t = 0
-          while (t < n) {
-            val v = bb.getShort().toLong
-            if (math.abs(v) > peak) peak = math.abs(v)
-            sumsq += v * v
-            if (t >= 1 && (prev < 0) != (v < 0)) zc += 1
-            prev = v; t += 1
-          }
-          Row(id, rate, n.toLong, peak, zc, sumsq, n.toLong * 1000000L / rate)
-        }
-      }(Encoders.row(outSchema))
-      .select(col("media_id"), col("sample_rate"), col("n_samples"),
-              col("peak"), col("n_zero_cross"),
-              dec4(sqrt(col("sumsq").cast("double") / col("n_samples"))).as("rms"),
-              col("duration_us"))
+    payloadRows[Array[Byte]](synthesizeWav(s, dir), outSchema) { () => (id, payload) =>
+      val (rate, samples) = openWav(id, payload)
+      val n = samples.length
+      val (peak, zc, sumsq) = waveStats(samples, 0, n)
+      Iterator.single(Row(id, rate, n.toLong, peak, zc, sumsq, n.toLong * 1000000L / rate))
+    }.select(col("media_id"), col("sample_rate"), col("n_samples"),
+             col("peak"), col("n_zero_cross"),
+             dec4(sqrt(col("sumsq").cast("double") / col("n_samples"))).as("rms"),
+             col("duration_us"))
   }
 
   /** E18 synthesis: REAL RIFF/AVI video containers — the standard
@@ -739,7 +744,7 @@ object Multimodal {
     val movi = 12 + nf * chunk                        // LIST movi{00db...}
     val idx1 = 8 + nf * 16
     val total = 12 + hdrl + movi + idx1
-    val bb = java.nio.ByteBuffer.allocate(total)
+    val bb = ByteBuffer.allocate(total)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     def fcc(s: String): Unit = bb.put(s.getBytes("US-ASCII"))
     fcc("RIFF"); bb.putInt(total - 8); fcc("AVI ")
@@ -786,7 +791,7 @@ object Multimodal {
   }
 
   private[graft] def synthesizeAvi(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeAvi)
+    synthesizeBlobs(s, dir)(encodeAvi)
 
   /** E18: video frame sampling THROUGH THE CONTAINER INDEX — the
     * production pattern for video at 100 TB: the consumer never scans
@@ -816,65 +821,59 @@ object Multimodal {
       StructField("n_key", LongType, nullable = false),
       StructField("n_sampled", LongType, nullable = false),
       StructField("sampled_checksum", LongType, nullable = false)))
-    synthesizeAvi(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val bytes = row.getAs[Array[Byte]](1)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          def fcc(pos: Int): String = new String(bytes, pos, 4, "US-ASCII")
-          require(fcc(0) == "RIFF" && fcc(8) == "AVI ",
-            s"media $id: not an AVI container")
-          require(bb.getInt(4) == bytes.length - 8,
-            s"media $id: RIFF size mismatch")
-          // generic top-level chunk walk: hdrl geometry, movi pos, idx1
-          var usf = 0L; var nf = 0L; var w = 0L; var h = 0L
-          var moviFourcc = -1; var idx1Pos = -1; var idx1Len = 0
-          var p = 12
-          while (p + 8 <= bytes.length) {
-            val ck = fcc(p); val sz = bb.getInt(p + 4)
-            if (ck == "LIST") {
-              val lt = fcc(p + 8)
-              if (lt == "hdrl") {
-                require(fcc(p + 12) == "avih" && bb.getInt(p + 16) == 56,
-                  s"media $id: missing avih")
-                val a = p + 20
-                usf = bb.getInt(a).toLong
-                nf = bb.getInt(a + 16).toLong
-                require((bb.getInt(a + 12) & 0x10) != 0,
-                  s"media $id: AVIF_HASINDEX not set")
-                w = bb.getInt(a + 32).toLong; h = bb.getInt(a + 36).toLong
-              } else if (lt == "movi") moviFourcc = p + 8
-            } else if (ck == "idx1") { idx1Pos = p + 8; idx1Len = sz }
-            p += 8 + sz + (sz & 1)
+    payloadRows[Array[Byte]](synthesizeAvi(s, dir), outSchema) { () => (id, bytes) =>
+      val bb = ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      def fcc(pos: Int): String = new String(bytes, pos, 4, "US-ASCII")
+      require(fcc(0) == "RIFF" && fcc(8) == "AVI ",
+        s"media $id: not an AVI container")
+      require(bb.getInt(4) == bytes.length - 8,
+        s"media $id: RIFF size mismatch")
+      // generic top-level chunk walk: hdrl geometry, movi pos, idx1
+      var usf = 0L; var nf = 0L; var w = 0L; var h = 0L
+      var moviFourcc = -1; var idx1Pos = -1; var idx1Len = 0
+      var p = 12
+      while (p + 8 <= bytes.length) {
+        val ck = fcc(p); val sz = bb.getInt(p + 4)
+        if (ck == "LIST") {
+          val lt = fcc(p + 8)
+          if (lt == "hdrl") {
+            require(fcc(p + 12) == "avih" && bb.getInt(p + 16) == 56,
+              s"media $id: missing avih")
+            val a = p + 20
+            usf = bb.getInt(a).toLong
+            nf = bb.getInt(a + 16).toLong
+            require((bb.getInt(a + 12) & 0x10) != 0,
+              s"media $id: AVIF_HASINDEX not set")
+            w = bb.getInt(a + 32).toLong; h = bb.getInt(a + 36).toLong
+          } else if (lt == "movi") moviFourcc = p + 8
+        } else if (ck == "idx1") { idx1Pos = p + 8; idx1Len = sz }
+        p += 8 + sz + (sz & 1)
+      }
+      require(moviFourcc >= 0 && idx1Pos >= 0 && idx1Len == nf * 16,
+        s"media $id: movi/idx1 not found or index truncated")
+      val frameLen = w * h
+      var nKey = 0L; var nSampled = 0L; var checksum = 0L
+      var f = 0
+      while (f < nf) {
+        val e = idx1Pos + f * 16
+        require(fcc(e) == "00db", s"media $id: idx1 entry $f fourcc")
+        if ((bb.getInt(e + 4) & 0x10) != 0) nKey += 1
+        if (f % 3 == 0) {
+          // the ranged read: seek via the index, never scan movi
+          val cp = moviFourcc + bb.getInt(e + 8)
+          require(fcc(cp) == "00db" && bb.getInt(cp + 4) == bb.getInt(e + 12)
+            && bb.getInt(cp + 4) == frameLen,
+            s"media $id: frame $f index/chunk mismatch")
+          var i = 0
+          while (i < frameLen) {
+            checksum += (i + 1).toLong * (bytes(cp + 8 + i) & 0xff); i += 1
           }
-          require(moviFourcc >= 0 && idx1Pos >= 0 && idx1Len == nf * 16,
-            s"media $id: movi/idx1 not found or index truncated")
-          val frameLen = w * h
-          var nKey = 0L; var nSampled = 0L; var checksum = 0L
-          var f = 0
-          while (f < nf) {
-            val e = idx1Pos + f * 16
-            require(fcc(e) == "00db", s"media $id: idx1 entry $f fourcc")
-            if ((bb.getInt(e + 4) & 0x10) != 0) nKey += 1
-            if (f % 3 == 0) {
-              // the ranged read: seek via the index, never scan movi
-              val cp = moviFourcc + bb.getInt(e + 8)
-              require(fcc(cp) == "00db" && bb.getInt(cp + 4) == bb.getInt(e + 12)
-                && bb.getInt(cp + 4) == frameLen,
-                s"media $id: frame $f index/chunk mismatch")
-              var i = 0
-              while (i < frameLen) {
-                checksum += (i + 1).toLong * (bytes(cp + 8 + i) & 0xff); i += 1
-              }
-              nSampled += 1
-            }
-            f += 1
-          }
-          Row(id, w, h, nf, nf * usf, nKey, nSampled, checksum)
+          nSampled += 1
         }
-      }(Encoders.row(outSchema))
+        f += 1
+      }
+      Iterator.single(Row(id, w, h, nf, nf * usf, nKey, nSampled, checksum))
+    }
   }
 
   /** E19 synthesis: REAL MPEG-1 Layer III (MP3) streams — an ID3v2
@@ -897,7 +896,7 @@ object Multimodal {
     val base = 144 * kbps * 1000 / sr
     val id3c = (id % 32 + 10).toInt
     val total = 10 + id3c + (0 until nf).map(f => base + (f % 2)).sum
-    val bb = java.nio.ByteBuffer.allocate(total)
+    val bb = ByteBuffer.allocate(total)
     bb.put("ID3".getBytes("US-ASCII"))
     bb.put(3.toByte); bb.put(0.toByte)    // v2.3.0
     bb.put(0.toByte)                       // flags
@@ -923,7 +922,7 @@ object Multimodal {
   }
 
   private[graft] def synthesizeMp3(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeMp3)
+    synthesizeBlobs(s, dir)(encodeMp3)
 
   /** E19: MP3 stream census by FRAME-SYNC WALK — the third real audio
     * byte path (E9 decodes RIFF/WAV through AudioSystem, E16 QCs it;
@@ -952,46 +951,41 @@ object Multimodal {
       StructField("duration_us", LongType, nullable = false),
       StructField("stream_bytes", LongType, nullable = false),
       StructField("probe_checksum", LongType, nullable = false)))
-    synthesizeMp3(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val bytes = row.getAs[Array[Byte]](1)
-          var p = 0
-          if (bytes.length >= 10 && bytes(0) == 'I' && bytes(1) == 'D'
-              && bytes(2) == '3') {
-            val ss = ((bytes(6) & 0x7f) << 21) | ((bytes(7) & 0x7f) << 14) |
-              ((bytes(8) & 0x7f) << 7) | (bytes(9) & 0x7f)
-            p = 10 + ss
+    payloadRows[Array[Byte]](synthesizeMp3(s, dir), outSchema) { () => (id, bytes) =>
+      var p = 0
+      if (bytes.length >= 10 && bytes(0) == 'I' && bytes(1) == 'D'
+          && bytes(2) == '3') {
+        val ss = ((bytes(6) & 0x7f) << 21) | ((bytes(7) & 0x7f) << 14) |
+          ((bytes(8) & 0x7f) << 7) | (bytes(9) & 0x7f)
+        p = 10 + ss
+      }
+      var nf = 0L; var kbps = -1; var sr = -1
+      var streamBytes = 0L; var checksum = 0L
+      while (p + 4 <= bytes.length) {
+        require((bytes(p) & 0xff) == 0xff && (bytes(p + 1) & 0xe0) == 0xe0,
+          s"media $id: lost frame sync at $p")
+        require(((bytes(p + 1) >> 3) & 3) == 3 && ((bytes(p + 1) >> 1) & 3) == 1,
+          s"media $id: not MPEG-1 Layer III")
+        val b2 = bytes(p + 2) & 0xff
+        val br = brTable(b2 >> 4)
+        val fsr = srTable((b2 >> 2) & 3)
+        val pad = (b2 >> 1) & 1
+        if (kbps < 0) { kbps = br; sr = fsr }
+        else require(kbps == br && sr == fsr,
+          s"media $id: VBR/rate change at frame $nf — CBR contract")
+        val flen = 144 * br * 1000 / fsr + pad
+        if (nf == 0L) {
+          var i = 0
+          while (i < flen - 4) {
+            checksum += (i + 1).toLong * (bytes(p + 4 + i) & 0xff); i += 1
           }
-          var nf = 0L; var kbps = -1; var sr = -1
-          var streamBytes = 0L; var checksum = 0L
-          while (p + 4 <= bytes.length) {
-            require((bytes(p) & 0xff) == 0xff && (bytes(p + 1) & 0xe0) == 0xe0,
-              s"media $id: lost frame sync at $p")
-            require(((bytes(p + 1) >> 3) & 3) == 3 && ((bytes(p + 1) >> 1) & 3) == 1,
-              s"media $id: not MPEG-1 Layer III")
-            val b2 = bytes(p + 2) & 0xff
-            val br = brTable(b2 >> 4)
-            val fsr = srTable((b2 >> 2) & 3)
-            val pad = (b2 >> 1) & 1
-            if (kbps < 0) { kbps = br; sr = fsr }
-            else require(kbps == br && sr == fsr,
-              s"media $id: VBR/rate change at frame $nf — CBR contract")
-            val flen = 144 * br * 1000 / fsr + pad
-            if (nf == 0L) {
-              var i = 0
-              while (i < flen - 4) {
-                checksum += (i + 1).toLong * (bytes(p + 4 + i) & 0xff); i += 1
-              }
-            }
-            streamBytes += flen; nf += 1; p += flen
-          }
-          require(p == bytes.length, s"media $id: trailing garbage")
-          Row(id, nf, kbps.toLong, sr.toLong,
-            nf * 1152L * 1000000L / sr, streamBytes, checksum)
         }
-      }(Encoders.row(outSchema))
+        streamBytes += flen; nf += 1; p += flen
+      }
+      require(p == bytes.length, s"media $id: trailing garbage")
+      Iterator.single(Row(id, nf, kbps.toLong, sr.toLong,
+        nf * 1152L * 1000000L / sr, streamBytes, checksum))
+    }
   }
 
   /** E20 synthesis: REAL ZIP archives (STORED entries) — the
@@ -1022,7 +1016,7 @@ object Multimodal {
     }
     val localSize = members.map { case (nm, c, _) => 30 + nm.length + c.length }.sum
     val cdSize = members.map { case (nm, _, _) => 46 + nm.length }.sum
-    val bb = java.nio.ByteBuffer.allocate(localSize + cdSize + 22)
+    val bb = ByteBuffer.allocate(localSize + cdSize + 22)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val offsets = new Array[Int](m)
     members.zipWithIndex.foreach { case ((nm, c, crc), j) =>
@@ -1057,29 +1051,12 @@ object Multimodal {
   }
 
   private[graft] def synthesizeZip(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeZip)
+    synthesizeBlobs(s, dir)(encodeZip)
 
-  /** E20: ZIP archive ingest census — the crawl-side "blob of blobs"
-    * walk (WARC/zip bundles land before any per-document pass; the
-    * ingest job must enumerate members, verify integrity, and route
-    * payloads WITHOUT unpacking to disk): the reader follows the real
-    * contract — find the end-of-central-directory record by BACKWARD
-    * scan for PK\5\6 (ZIPs are read from the end; that is why the
-    * format streams badly and ingest probes ranged-read the tail),
-    * walk the central directory, and for each member verify the
-    * local-header signature + name at the recorded offset, probe-read
-    * the STORED content and recompute its java.util.zip CRC-32
-    * against the directory's — the E17 integrity posture: the id%89
-    * bit-rot arm is caught ONLY by the checksum (structure stays
-    * valid), published as crc_ok, never a crash. Member 0's content
-    * also yields a position-weighted probe checksum. Oracle predicts
-    * counts/sizes/probe from id arithmetic and crc_ok from the
-    * corruption arm alone. Payloads never shuffle.
-    */
   /** E20 kernel, factored for reuse by the F51 streaming blob path:
     * one archive in, the census tuple out. */
   private[graft] def zipCensus(id: Long, bytes: Array[Byte]): (Long, Long, Long, Int) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val bb = ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     // backward EOCD scan — the real ZIP reader contract
     var e = bytes.length - 22
@@ -1119,6 +1096,23 @@ object Multimodal {
     (nMembers, totalBytes, probe, crcOk)
   }
 
+  /** E20: ZIP archive ingest census — the crawl-side "blob of blobs"
+    * walk (WARC/zip bundles land before any per-document pass; the
+    * ingest job must enumerate members, verify integrity, and route
+    * payloads WITHOUT unpacking to disk): the reader follows the real
+    * contract — find the end-of-central-directory record by BACKWARD
+    * scan for PK\5\6 (ZIPs are read from the end; that is why the
+    * format streams badly and ingest probes ranged-read the tail),
+    * walk the central directory, and for each member verify the
+    * local-header signature + name at the recorded offset, probe-read
+    * the STORED content and recompute its java.util.zip CRC-32
+    * against the directory's — the E17 integrity posture: the id%89
+    * bit-rot arm is caught ONLY by the checksum (structure stays
+    * valid), published as crc_ok, never a crash. Member 0's content
+    * also yields a position-weighted probe checksum. Oracle predicts
+    * counts/sizes/probe from id arithmetic and crc_ok from the
+    * corruption arm alone. Payloads never shuffle.
+    */
   def qMediaZip(s: SparkSession, dir: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
@@ -1126,14 +1120,10 @@ object Multimodal {
       StructField("total_bytes", LongType, nullable = false),
       StructField("probe_checksum", LongType, nullable = false),
       StructField("crc_ok", IntegerType, nullable = false)))
-    synthesizeZip(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val (n, tb, probe, ok) = zipCensus(id, row.getAs[Array[Byte]](1))
-          Row(id, n, tb, probe, ok)
-        }
-      }(Encoders.row(outSchema))
+    payloadRows[Array[Byte]](synthesizeZip(s, dir), outSchema) { () => (id, bytes) =>
+      val (n, tb, probe, ok) = zipCensus(id, bytes)
+      Iterator.single(Row(id, n, tb, probe, ok))
+    }
   }
 
   /** E21 synthesis: REAL WARC/1.0 files — the web-crawl archive format
@@ -1181,7 +1171,7 @@ object Multimodal {
   }
 
   private[graft] def synthesizeWarc(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeWarc)
+    synthesizeBlobs(s, dir)(encodeWarc)
 
   /** E21: WARC crawl-archive census — the FIRST pass of every
     * web-scale corpus pipeline (Common Crawl lands as WARC; the
@@ -1206,53 +1196,48 @@ object Multimodal {
       StructField("n_responses", LongType, nullable = false),
       StructField("payload_bytes", LongType, nullable = false),
       StructField("probe_checksum", LongType, nullable = false)))
-    synthesizeWarc(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val bytes = row.getAs[Array[Byte]](1)
-          var p = 0
-          def line(): String = {
-            val start = p
-            while (p + 1 < bytes.length &&
-              !(bytes(p) == '\r' && bytes(p + 1) == '\n')) p += 1
-            val s0 = new String(bytes, start, p - start, "US-ASCII")
-            p += 2
-            s0
-          }
-          var nRec = 0L; var nResp = 0L; var payloadBytes = 0L; var probe = 0L
-          while (p < bytes.length) {
-            require(line() == "WARC/1.0", s"media $id: bad WARC version line")
-            var wtype = ""; var clen = -1
-            var h = line()
-            while (h.nonEmpty) {
-              val k = h.substring(0, h.indexOf(':')).toLowerCase
-              val v = h.substring(h.indexOf(':') + 1).trim
-              if (k == "warc-type") wtype = v
-              else if (k == "content-length") clen = v.toInt
-              h = line()
-            }
-            require(clen >= 0 && p + clen + 4 <= bytes.length,
-              s"media $id: missing Content-Length or truncated record")
-            if (wtype == "response") {
-              if (nResp == 0L) {
-                var i = 0
-                while (i < clen) {
-                  probe += (i + 1).toLong * (bytes(p + i) & 0xff); i += 1
-                }
-              }
-              nResp += 1; payloadBytes += clen
-            }
-            p += clen
-            require(bytes(p) == '\r' && bytes(p + 1) == '\n' &&
-              bytes(p + 2) == '\r' && bytes(p + 3) == '\n',
-              s"media $id: record separator missing")
-            p += 4
-            nRec += 1
-          }
-          Row(id, nRec, nResp, payloadBytes, probe)
+    payloadRows[Array[Byte]](synthesizeWarc(s, dir), outSchema) { () => (id, bytes) =>
+      var p = 0
+      def line(): String = {
+        val start = p
+        while (p + 1 < bytes.length &&
+          !(bytes(p) == '\r' && bytes(p + 1) == '\n')) p += 1
+        val s0 = new String(bytes, start, p - start, "US-ASCII")
+        p += 2
+        s0
+      }
+      var nRec = 0L; var nResp = 0L; var payloadBytes = 0L; var probe = 0L
+      while (p < bytes.length) {
+        require(line() == "WARC/1.0", s"media $id: bad WARC version line")
+        var wtype = ""; var clen = -1
+        var h = line()
+        while (h.nonEmpty) {
+          val k = h.substring(0, h.indexOf(':')).toLowerCase
+          val v = h.substring(h.indexOf(':') + 1).trim
+          if (k == "warc-type") wtype = v
+          else if (k == "content-length") clen = v.toInt
+          h = line()
         }
-      }(Encoders.row(outSchema))
+        require(clen >= 0 && p + clen + 4 <= bytes.length,
+          s"media $id: missing Content-Length or truncated record")
+        if (wtype == "response") {
+          if (nResp == 0L) {
+            var i = 0
+            while (i < clen) {
+              probe += (i + 1).toLong * (bytes(p + i) & 0xff); i += 1
+            }
+          }
+          nResp += 1; payloadBytes += clen
+        }
+        p += clen
+        require(bytes(p) == '\r' && bytes(p + 1) == '\n' &&
+          bytes(p + 2) == '\r' && bytes(p + 3) == '\n',
+          s"media $id: record separator missing")
+        p += 4
+        nRec += 1
+      }
+      Iterator.single(Row(id, nRec, nResp, payloadBytes, probe))
+    }
   }
 
   /** E17: PNG container-INTEGRITY audit — the ingest-side corruption
@@ -1279,19 +1264,15 @@ object Multimodal {
       StructField("sig_ok", IntegerType, nullable = false),
       StructField("n_bad_chunks", LongType, nullable = false),
       StructField("crc_ok", IntegerType, nullable = false)))
-    synthesizePng(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val bytes = row.getAs[Array[Byte]](1).clone()
-          // deterministic corruption: first data byte of chunk #2
-          // (sig 8 + IHDR 25 = offset 33; its data starts at 41)
-          if (id % 97 == 0 && bytes.length > 45)
-            bytes(41) = (bytes(41) ^ 0xFF).toByte
-          val (sigOk, nBad, ok) = pngAudit(bytes)
-          Row(id, sigOk, nBad, ok)
-        }
-      }(Encoders.row(outSchema))
+    payloadRows[Array[Byte]](synthesizePng(s, dir), outSchema) { () => (id, payload) =>
+      val bytes = payload.clone()
+      // deterministic corruption: first data byte of chunk #2
+      // (sig 8 + IHDR 25 = offset 33; its data starts at 41)
+      if (id % 97 == 0 && bytes.length > 45)
+        bytes(41) = (bytes(41) ^ 0xFF).toByte
+      val (sigOk, nBad, ok) = pngAudit(bytes)
+      Iterator.single(Row(id, sigOk, nBad, ok))
+    }
   }
 
   /** The E17 chunk walker: (sig_ok, n_bad_chunks, crc_ok). A structural
@@ -1350,29 +1331,25 @@ object Multimodal {
       StructField("n_silent", LongType, nullable = false),
       StructField("n_rail", LongType, nullable = false),
       StructField("lead_silence", LongType, nullable = false)))
-    synthesizeWav(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val (_, bb, n) = openWav(id, row.getAs[Array[Byte]](1))
-          var nSil = 0L; var nRail = 0L; var lead = -1L
-          var t = 0
-          while (t < n) {
-            val v = bb.getShort().toLong
-            val sil = math.abs(v) <= 256
-            if (sil) nSil += 1 else if (lead < 0) lead = t.toLong
-            if (v == 2047L || v == -2048L) nRail += 1
-            t += 1
-          }
-          Row(id, n.toLong, nSil, nRail, if (lead < 0) n.toLong else lead)
-        }
-      }(Encoders.row(outSchema))
-      .select(col("media_id"), col("n_samples"), col("n_silent"),
-              col("n_rail"), col("lead_silence"),
-              expr("CAST((n_silent * 1000) div n_samples AS BIGINT)")
-                .as("silent_permille"),
-              expr("CAST(CASE WHEN (n_silent * 1000) div n_samples <= 900 " +
-                   "THEN 1 ELSE 0 END AS BIGINT)").as("qc_pass"))
+    payloadRows[Array[Byte]](synthesizeWav(s, dir), outSchema) { () => (id, payload) =>
+      val (_, samples) = openWav(id, payload)
+      val n = samples.length
+      var nSil = 0L; var nRail = 0L; var lead = -1L
+      var t = 0
+      while (t < n) {
+        val v = samples(t)
+        val sil = math.abs(v) <= 256
+        if (sil) nSil += 1 else if (lead < 0) lead = t.toLong
+        if (v == 2047L || v == -2048L) nRail += 1
+        t += 1
+      }
+      Iterator.single(Row(id, n.toLong, nSil, nRail, if (lead < 0) n.toLong else lead))
+    }.select(col("media_id"), col("n_samples"), col("n_silent"),
+             col("n_rail"), col("lead_silence"),
+             expr("CAST((n_silent * 1000) div n_samples AS BIGINT)")
+               .as("silent_permille"),
+             expr("CAST(CASE WHEN (n_silent * 1000) div n_samples <= 900 " +
+                  "THEN 1 ELSE 0 END AS BIGINT)").as("qc_pass"))
   }
 
   /** E11: decimation resampling through the REAL audio codec path —
@@ -1397,45 +1374,37 @@ object Multimodal {
       StructField("sumsq", LongType, nullable = false),
       StructField("wsum", LongType, nullable = false),
       StructField("duration_us", LongType, nullable = false)))
-    synthesizeWav(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val (rate, bb, n) = openWav(id, row.getAs[Array[Byte]](1))
-          val outRate = rate / 2
-          var peak = 0L; var sumsq = 0L; var wsum = 0L; var k = 0L
-          var t = 0
-          while (t < n) {
-            val v = bb.getShort().toLong
-            if (t % 2 == 0) {
-              if (math.abs(v) > peak) peak = math.abs(v)
-              sumsq += v * v
-              k += 1
-              wsum += k * v
-            }
-            t += 1
-          }
-          Row(id, outRate, k, peak, sumsq, wsum, k * 1000000L / outRate)
-        }
-      }(Encoders.row(outSchema))
-      .select(col("media_id"), col("out_rate"), col("n_out"), col("peak"),
-              dec4(sqrt(col("sumsq").cast("double") / col("n_out"))).as("rms"),
-              col("wsum"), col("duration_us"))
+    payloadRows[Array[Byte]](synthesizeWav(s, dir), outSchema) { () => (id, payload) =>
+      val (rate, samples) = openWav(id, payload)
+      val outRate = rate / 2
+      var peak = 0L; var sumsq = 0L; var wsum = 0L; var k = 0L
+      var t = 0
+      while (t < samples.length) {
+        val v = samples(t)
+        if (math.abs(v) > peak) peak = math.abs(v)
+        sumsq += v * v
+        k += 1
+        wsum += k * v
+        t += 2
+      }
+      Iterator.single(Row(id, outRate, k, peak, sumsq, wsum, k * 1000000L / outRate))
+    }.select(col("media_id"), col("out_rate"), col("n_out"), col("peak"),
+             dec4(sqrt(col("sumsq").cast("double") / col("n_out"))).as("rms"),
+             col("wsum"), col("duration_us"))
   }
 
-  def synthesizeMedia(s: SparkSession, dir: String): DataFrame = {
-    val docs = fanOut(documents(s, dir).select(col("doc_id"), col("text")))
-    docs.mapPartitions { it =>
-      it.map { row =>
-        val id = row.getLong(0)
-        val body = row.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val w = 16 + (id % 16).toInt; val h = 16 + (id % 8).toInt; val c = 3
-        val bb = java.nio.ByteBuffer.allocate(16 + body.length)
-        bb.put("GRFT".getBytes); bb.putInt(w); bb.putInt(h); bb.putInt(c); bb.put(body)
-        Row(id, "image", bb.array(), w, h, c)
-      }
-    }(Encoders.row(mediaSchema))
-  }
+  /** Synthesize a media table with a fake header (magic "GRFT", then
+    * width/height/channels as big-endian ints) so decode plumbing has a
+    * real binary format to parse.
+    */
+  def synthesizeMedia(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy[String](s, dir, mediaSchema, "text") { () => (id, text) =>
+      val body = text.getBytes(UTF_8)
+      val w = 16 + (id % 16).toInt; val h = 16 + (id % 8).toInt; val c = 3
+      val bb = ByteBuffer.allocate(16 + body.length)
+      bb.put("GRFT".getBytes); bb.putInt(w); bb.putInt(h); bb.putInt(c); bb.put(body)
+      Iterator.single(Row(id, "image", bb.array(), w, h, c))
+    }
 
   val decodedSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -1444,48 +1413,76 @@ object Multimodal {
     StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))
 
   /** E2: decode + feature-extract plumbing, dispatched on the payload's
-    * magic bytes: "BM" → REAL BMP decode (JDK ImageIO) with per-channel
-    * pixel statistics as the feature vector; "GRFT" → the synthetic
-    * header format with the deterministic `fakeDecode` fallback (the
-    * payload body is document text, not pixels). Adding a codec =
-    * adding a magic branch; the schema/batching/partitioning contract
-    * is shared, and payload bytes never cross a shuffle either way.
+    * magic bytes: "BM" or the PNG signature → REAL image decode (JDK
+    * ImageIO) with per-channel pixel statistics as the feature vector;
+    * "GRFT" → the synthetic header format with the deterministic
+    * `fakeDecode` features (the payload body is document text, not
+    * pixels). Any other payload fails with "bad magic for media <id>":
+    * this is the check on blobs read from outside the program (E7).
+    * Adding a codec = adding a magic branch; the schema/batching/
+    * partitioning contract is shared, and payload bytes never cross a
+    * shuffle either way.
     */
-  def decodeFeatures(media: DataFrame, featureDim: Int = 8): DataFrame = {
-    media.select(col("media_id"), col("payload"))
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val payload = row.getAs[Array[Byte]](1)
-          val isBmp = payload.length >= 2 &&
-            payload(0) == 'B'.toByte && payload(1) == 'M'.toByte
-          val isPng = payload.length >= 4 && payload(0) == 0x89.toByte &&
-            payload(1) == 'P'.toByte && payload(2) == 'N'.toByte &&
-            payload(3) == 'G'.toByte
-          if (isBmp || isPng) {
-            val img = decodeImage(id, payload)
-            Row(id, img.getWidth, img.getHeight, imageFeatures(img, featureDim))
-          } else {
-            val bb = java.nio.ByteBuffer.wrap(payload)
-            val magic = new Array[Byte](4); bb.get(magic)
-            require(new String(magic) == "GRFT", s"bad magic for media $id")
-            val w = bb.getInt; val h = bb.getInt; bb.getInt // channels
-            Row(id, w, h, fakeDecode(payload, featureDim))
-          }
-        }
-      }(Encoders.row(decodedSchema))
-  }
+  def decodeFeatures(media: DataFrame, featureDim: Int = 8): DataFrame =
+    payloadRows[Array[Byte]](media, decodedSchema) { () => (id, payload) =>
+      val isBmp = payload.length >= 2 &&
+        payload(0) == 'B'.toByte && payload(1) == 'M'.toByte
+      val isPng = payload.length >= 4 && payload(0) == 0x89.toByte &&
+        payload(1) == 'P'.toByte && payload(2) == 'N'.toByte &&
+        payload(3) == 'G'.toByte
+      if (isBmp || isPng) {
+        val img = decodeImage(id, payload)
+        Iterator.single(Row(id, img.getWidth, img.getHeight, imageFeatures(img, featureDim)))
+      } else {
+        // a 16-byte GRFT header: magic, width, height, channels
+        require(payload.length >= 16 && new String(payload, 0, 4) == "GRFT",
+          s"bad magic for media $id")
+        val bb = ByteBuffer.wrap(payload, 4, 8)
+        val w = bb.getInt; val h = bb.getInt
+        Iterator.single(Row(id, w, h, fakeDecode(payload, featureDim)))
+      }
+    }
 
   /** REAL image decode: the JDK's ImageIO (BMP reader ships with the
     * JRE — no external dependency, honoring the no-new-libraries
     * constraint). Stream cache off: decode stays in-memory per task,
     * no temp-file I/O in the hot loop.
     */
-  private def decodeImage(id: Long, payload: Array[Byte]): java.awt.image.BufferedImage = {
-    javax.imageio.ImageIO.setUseCache(false)
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+  private def decodeImage(id: Long, payload: Array[Byte]): BufferedImage = {
+    ImageIO.setUseCache(false)
+    val img = ImageIO.read(new java.io.ByteArrayInputStream(payload))
     require(img != null, s"undecodable image payload for media $id")
     img
+  }
+
+  /** Exact integer statistics of a run of pixels: the count, the
+    * channel sums and the min/max luminance 299r + 587g + 114b. */
+  private final case class PixelStats(
+      n: Long, sumR: Long, sumG: Long, sumB: Long, minLum: Long, maxLum: Long)
+
+  /** The one pixel fold: pixels 0 until n, `rgb(i)` giving pixel i as
+    * 0xRRGGBB. Every decode gate and the feature extractor read their
+    * statistics from it. */
+  private def pixelStats(n: Int)(rgb: Int => Int): PixelStats = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var minL = Long.MaxValue; var maxL = Long.MinValue
+    var i = 0
+    while (i < n) {
+      val p = rgb(i)
+      val r = (p >> 16) & 0xFF; val g = (p >> 8) & 0xFF; val b = p & 0xFF
+      sr += r; sg += g; sb += b
+      val lum = 299L * r + 587L * g + 114L * b
+      if (lum < minL) minL = lum
+      if (lum > maxL) maxL = lum
+      i += 1
+    }
+    PixelStats(n.toLong, sr, sg, sb, minL, maxL)
+  }
+
+  /** [[pixelStats]] over every pixel of a decoded image, row-major. */
+  private def imageStats(img: BufferedImage): PixelStats = {
+    val w = img.getWidth
+    pixelStats(w * img.getHeight)(i => img.getRGB(i % w, i / w))
   }
 
   /** Deterministic pixel-statistic features in [0,1] from a decoded
@@ -1493,36 +1490,46 @@ object Multimodal {
     * dimensions — one pixel pass, same output order regardless of task
     * placement. Dims beyond 8 pad with 0.
     */
-  private def imageFeatures(img: java.awt.image.BufferedImage, dim: Int): Array[Float] = {
+  private def imageFeatures(img: BufferedImage, dim: Int): Array[Float] = {
     val w = img.getWidth; val h = img.getHeight
-    var sr = 0L; var sg = 0L; var sb = 0L
-    var minL = Long.MaxValue; var maxL = Long.MinValue
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val p = img.getRGB(x, y)
-        val r = (p >> 16) & 0xFF; val g = (p >> 8) & 0xFF; val b = p & 0xFF
-        sr += r; sg += g; sb += b
-        val lum = 299L * r + 587L * g + 114L * b
-        if (lum < minL) minL = lum
-        if (lum > maxL) maxL = lum
-        x += 1
-      }
-      y += 1
-    }
-    val n = w.toLong * h
+    val st = imageStats(img)
+    val n = st.n
     val full = Array(
-      (sr.toDouble / n / 255.0).toFloat,
-      (sg.toDouble / n / 255.0).toFloat,
-      (sb.toDouble / n / 255.0).toFloat,
-      ((299.0 * sr + 587.0 * sg + 114.0 * sb) / n / 255000.0).toFloat,
-      (minL.toDouble / 255000.0).toFloat,
-      (maxL.toDouble / 255000.0).toFloat,
+      (st.sumR.toDouble / n / 255.0).toFloat,
+      (st.sumG.toDouble / n / 255.0).toFloat,
+      (st.sumB.toDouble / n / 255.0).toFloat,
+      ((299.0 * st.sumR + 587.0 * st.sumG + 114.0 * st.sumB) / n / 255000.0).toFloat,
+      (st.minLum.toDouble / 255000.0).toFloat,
+      (st.maxLum.toDouble / 255000.0).toFloat,
       w / 256.0f,
       h / 256.0f)
     if (dim <= full.length) full.take(dim)
     else full ++ Array.fill(dim - full.length)(0.0f)
+  }
+
+  /** The one formula-image writer: a w×h RGB image whose pixel (x, y)
+    * is `rgb(x, y)` as 0xRRGGBB. [[imageBytes]] encodes it. */
+  private def rgbImage(w: Int, h: Int)(rgb: (Int, Int) => Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { img.setRGB(x, y, rgb(x, y)); x += 1 }
+      y += 1
+    }
+    img
+  }
+
+  /** One 0xRRGGBB pixel, each channel taken mod 256. */
+  private def packRgb(r: Long, g: Long, b: Long): Int =
+    (((r % 256) << 16) | ((g % 256) << 8) | (b % 256)).toInt
+
+  /** `img` encoded by ImageIO's `fmt` writer, stream cache off. */
+  private def imageBytes(img: BufferedImage, fmt: String): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    ImageIO.setUseCache(false)
+    require(ImageIO.write(img, fmt, bos), s"no $fmt writer available")
+    bos.toByteArray
   }
 
   /** E2 synthesis for the REAL codec path: a deterministic RGB image
@@ -1540,60 +1547,37 @@ object Multimodal {
     * hash-mismatches).
     */
   def synthesizeBmp(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodeBmp)
+    synthesizeBlobs(s, dir)(encodeBmp)
 
   /** Build the deterministic image for `id` and encode it as a real BMP. */
+  private[graft] def encodeBmp(id: Long): Array[Byte] =
+    imageBytes(rgbImage((8 + id % 16).toInt, (8 + id % 8).toInt) { (x, y) =>
+      packRgb(7 * id + 3L * x + 5L * y, 11 * id + x + 2L * y, 13 * id + 2L * x + y)
+    }, "bmp")
+
   /** The E12 shared pixel formula: one content id → one deterministic
     * RGB image, encoded by TWO different real codecs below. The
     * per-channel bases are md5-derived so no two content ids share an
     * image (a plain linear-in-cid base repeats with period 256 — two
     * contents 256 apart would be true duplicates of each other).
     */
-  private def contentImage(cid: Long): java.awt.image.BufferedImage = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  private def contentImage(cid: Long): BufferedImage = {
+    val md = MessageDigest.getInstance("MD5")
     val br = graft.functions.TextKernels.md5Prefix52(md, s"img|r|$cid") % 256
     val bg = graft.functions.TextKernels.md5Prefix52(md, s"img|g|$cid") % 256
     val bb = graft.functions.TextKernels.md5Prefix52(md, s"img|b|$cid") % 256
-    val w = (8 + cid % 16).toInt; val h = (8 + cid % 8).toInt
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val r = ((br + 3L * x + 5L * y) % 256).toInt
-        val g = ((bg + x + 2L * y) % 256).toInt
-        val b = ((bb + 2L * x + y) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
+    rgbImage((8 + cid % 16).toInt, (8 + cid % 8).toInt) { (x, y) =>
+      packRgb(br + 3L * x + 5L * y, bg + x + 2L * y, bb + 2L * x + y)
     }
-    img
   }
 
   /** E12 fixture: every content id ships TWICE — media 2c as a real
     * BMP and media 2c+1 as a real PNG of the IDENTICAL pixels. */
-  def synthesizeCrossCodec(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { row =>
-          val c = row.getLong(0)
-          val img = contentImage(c)
-          def enc(fmt: String): Array[Byte] = {
-            val bos = new java.io.ByteArrayOutputStream()
-            require(javax.imageio.ImageIO.write(img, fmt, bos),
-                    s"no $fmt writer available")
-            bos.toByteArray
-          }
-          Iterator(Row(2 * c, enc("bmp")), Row(2 * c + 1, enc("png")))
-        }
-      }(Encoders.row(outSchema))
-  }
+  def synthesizeCrossCodec(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy[Long](s, dir, blobSchema, "doc_id") { () => (c, _) =>
+      val img = contentImage(c)
+      Iterator(Row(2 * c, imageBytes(img, "bmp")), Row(2 * c + 1, imageBytes(img, "png")))
+    }
 
   /** E12: content-addressed CROSS-CODEC media dedup — the multimodal
     * face of C1's exact dedup and the step every media pipeline needs
@@ -1619,34 +1603,27 @@ object Multimodal {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("digest", StringType, nullable = false)))
-    synthesizeCrossCodec(s, dir)
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { row =>
-          val id = row.getLong(0)
-          val in = new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](1))
-          val img = javax.imageio.ImageIO.read(in)
-          val sb = new StringBuilder
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val p = img.getRGB(x, y)
-              sb.append(x).append(',').append(y).append(',')
-                .append((p >> 16) & 0xFF).append(',')
-                .append((p >> 8) & 0xFF).append(',')
-                .append(p & 0xFF).append(';')
-              x += 1
-            }
-            y += 1
+    payloadRows[Array[Byte]](synthesizeCrossCodec(s, dir), outSchema) { () =>
+      val md = MessageDigest.getInstance("MD5")
+      (id, payload) => {
+        val img = decodeImage(id, payload)
+        val sb = new StringBuilder
+        var y = 0
+        while (y < img.getHeight) {
+          var x = 0
+          while (x < img.getWidth) {
+            val p = img.getRGB(x, y)
+            sb.append(x).append(',').append(y).append(',')
+              .append((p >> 16) & 0xFF).append(',')
+              .append((p >> 8) & 0xFF).append(',')
+              .append(p & 0xFF).append(';')
+            x += 1
           }
-          md.reset()
-          val dg = md.digest(sb.toString.getBytes("US-ASCII"))
-            .map("%02x".format(_)).mkString
-          Row(id, dg)
+          y += 1
         }
-      }(Encoders.row(outSchema))
-      .groupBy(col("digest"))
+        Iterator.single(Row(id, md5Hex(md, sb.toString.getBytes(US_ASCII))))
+      }
+    }.groupBy(col("digest"))
       .agg(count(lit(1)).as("n_members"), min(col("media_id")).as("keeper"))
   }
 
@@ -1685,28 +1662,6 @@ object Multimodal {
               col("i_ok").cast("long").as("i_ok"), col("n"), col("kept_md5"))
   }
 
-  private[graft] def encodeBmp(id: Long): Array[Byte] = {
-    val w = (8 + id % 16).toInt; val h = (8 + id % 8).toInt
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val r = ((7 * id + 3L * x + 5L * y) % 256).toInt
-        val g = ((11 * id + x + 2L * y) % 256).toInt
-        val b = ((13 * id + 2L * x + y) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.setUseCache(false)
-    require(javax.imageio.ImageIO.write(img, "bmp", bos), "no BMP writer available")
-    bos.toByteArray
-  }
-
   private val decodeStatsSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("width", LongType, nullable = false),
@@ -1716,6 +1671,10 @@ object Multimodal {
     StructField("sum_g", LongType, nullable = false),
     StructField("sum_b", LongType, nullable = false),
     StructField("max_lum", LongType, nullable = false)))
+
+  /** A [[decodeStatsSchema]] row: geometry plus the pixel fold. */
+  private def statsRow(id: Long, w: Int, h: Int, st: PixelStats): Row =
+    Row(id, w.toLong, h.toLong, st.n, st.sumR, st.sumG, st.sumB, st.maxLum)
 
   /** E2: the real-codec gate query — encode every doc's deterministic
     * image as an actual BMP, DECODE the bytes back with ImageIO, and
@@ -1765,35 +1724,31 @@ object Multimodal {
       StructField("b1", LongType, nullable = false),
       StructField("b2", LongType, nullable = false),
       StructField("b3", LongType, nullable = false)))
-    val hashes = synthesizeBmp(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val img = decodeImage(id, row.getAs[Array[Byte]](1))
-          val w = img.getWidth; val h = img.getHeight
-          val lum = Array.ofDim[Long](8, 9)
-          var yt = 0
-          while (yt < 8) {
-            var xt = 0
-            while (xt < 9) {
-              val p = img.getRGB((xt * w) / 9, (yt * h) / 8)
-              lum(yt)(xt) = 299L * ((p >> 16) & 0xFF) +
-                587L * ((p >> 8) & 0xFF) + 114L * (p & 0xFF)
-              xt += 1
-            }
-            yt += 1
-          }
-          val bands = new Array[Long](4)
-          var idx = 0
-          while (idx < 64) {
-            val x = idx % 8; val y = idx / 8
-            if (lum(y)(x + 1) > lum(y)(x))
-              bands(idx / 16) |= 1L << (idx % 16)
-            idx += 1
-          }
-          Row(id, bands(0), bands(1), bands(2), bands(3))
+    val hashes = payloadRows[Array[Byte]](synthesizeBmp(s, dir), hashSchema) { () => (id, payload) =>
+      val img = decodeImage(id, payload)
+      val w = img.getWidth; val h = img.getHeight
+      val lum = Array.ofDim[Long](8, 9)
+      var yt = 0
+      while (yt < 8) {
+        var xt = 0
+        while (xt < 9) {
+          val p = img.getRGB((xt * w) / 9, (yt * h) / 8)
+          lum(yt)(xt) = 299L * ((p >> 16) & 0xFF) +
+            587L * ((p >> 8) & 0xFF) + 114L * (p & 0xFF)
+          xt += 1
         }
-      }(Encoders.row(hashSchema))
+        yt += 1
+      }
+      val bands = new Array[Long](4)
+      var idx = 0
+      while (idx < 64) {
+        val x = idx % 8; val y = idx / 8
+        if (lum(y)(x + 1) > lum(y)(x))
+          bands(idx / 16) |= 1L << (idx % 16)
+        idx += 1
+      }
+      Iterator.single(Row(id, bands(0), bands(1), bands(2), bands(3)))
+    }
     val bands = hashes.selectExpr("media_id",
       "stack(4, CAST(0 AS BIGINT), b0, CAST(1 AS BIGINT), b1, " +
       "CAST(2 AS BIGINT), b2, CAST(3 AS BIGINT), b3) AS (band_id, v)")
@@ -1815,29 +1770,10 @@ object Multimodal {
     * of payload bytes.
     */
   private def decodeStats(media: DataFrame): DataFrame =
-    media
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val img = decodeImage(id, row.getAs[Array[Byte]](1))
-          val w = img.getWidth; val h = img.getHeight
-          var sr = 0L; var sg = 0L; var sb = 0L; var maxL = Long.MinValue
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = img.getRGB(x, y)
-              val r = (p >> 16) & 0xFF; val g = (p >> 8) & 0xFF; val b = p & 0xFF
-              sr += r; sg += g; sb += b
-              val lum = 299L * r + 587L * g + 114L * b
-              if (lum > maxL) maxL = lum
-              x += 1
-            }
-            y += 1
-          }
-          Row(id, w.toLong, h.toLong, w.toLong * h, sr, sg, sb, maxL)
-        }
-      }(Encoders.row(decodeStatsSchema))
+    payloadRows[Array[Byte]](media, decodeStatsSchema) { () => (id, payload) =>
+      val img = decodeImage(id, payload)
+      Iterator.single(statsRow(id, img.getWidth, img.getHeight, imageStats(img)))
+    }
 
   private val resizeStatsSchema = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -1864,35 +1800,28 @@ object Multimodal {
     */
   def qMediaResize(s: SparkSession, dir: String): DataFrame = {
     val Wt = 8; val Ht = 4
-    synthesizeBmp(s, dir)
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          val img = decodeImage(id, row.getAs[Array[Byte]](1))
-          val w = img.getWidth; val h = img.getHeight
-          var sr = 0L; var sg = 0L; var sb = 0L; var ws = 0L
-          var yt = 0
-          while (yt < Ht) {
-            var xt = 0
-            while (xt < Wt) {
-              val sx = xt * w / Wt
-              val sy = yt * h / Ht
-              val p = img.getRGB(sx, sy)
-              val r = (p >> 16) & 0xFF; val g = (p >> 8) & 0xFF; val b = p & 0xFF
-              sr += r; sg += g; sb += b
-              ws += (1L + xt + Wt.toLong * yt) * (299L * r + 587L * g + 114L * b)
-              xt += 1
-            }
-            yt += 1
-          }
-          Row(id, w.toLong, h.toLong, sr, sg, sb, ws)
+    payloadRows[Array[Byte]](synthesizeBmp(s, dir), resizeStatsSchema) { () => (id, payload) =>
+      val img = decodeImage(id, payload)
+      val w = img.getWidth; val h = img.getHeight
+      var sr = 0L; var sg = 0L; var sb = 0L; var ws = 0L
+      var yt = 0
+      while (yt < Ht) {
+        var xt = 0
+        while (xt < Wt) {
+          val sx = xt * w / Wt
+          val sy = yt * h / Ht
+          val p = img.getRGB(sx, sy)
+          val r = (p >> 16) & 0xFF; val g = (p >> 8) & 0xFF; val b = p & 0xFF
+          sr += r; sg += g; sb += b
+          ws += (1L + xt + Wt.toLong * yt) * (299L * r + 587L * g + 114L * b)
+          xt += 1
         }
-      }(Encoders.row(resizeStatsSchema))
+        yt += 1
+      }
+      Iterator.single(Row(id, w.toLong, h.toLong, sr, sg, sb, ws))
+    }
   }
 
-  /** E8 synthesis: deterministic RGB images (distinct formulas and
-    * dimensions from the BMP set) encoded as REAL PNGs.
-    */
   /** E14 encoder: a REAL Netpbm P6 writer — the standard
     * "P6\n<w> <h>\n255\n" ASCII header followed by raw RGB triples.
     * Pixel formula distinct from E2/E8 so the codecs cannot be
@@ -1957,70 +1886,34 @@ object Multimodal {
     * pixel statistics; the oracle recomputes from the pixel formula,
     * blind to the codec (the E8 contract shape).
     */
-  def qMediaPpm(s: SparkSession, dir: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("n_px", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("max_lum", LongType, nullable = false)))
-    fanOut(documents(s, dir).select(col("doc_id")))
-      .mapPartitions { it =>
-        it.map { row =>
-          val id = row.getLong(0)
-          // comment injection: the parser must skip it per spec
-          val raw = encodePpm(id)
-          val withComment =
-            ("P6\n# graft synthetic raster\n" +
-              new String(raw, 3, raw.length - 3, "ISO-8859-1"))
-              .getBytes("ISO-8859-1")
-          val (w, h, px) = parsePpm(withComment)
-          var sr = 0L; var sg = 0L; var sb = 0L; var maxL = Long.MinValue
-          var i = 0
-          while (i < px.length) {
-            val r = px(i) & 0xFF; val g = px(i + 1) & 0xFF
-            val b = px(i + 2) & 0xFF
-            sr += r; sg += g; sb += b
-            val lum = 299L * r + 587L * g + 114L * b
-            if (lum > maxL) maxL = lum
-            i += 3
-          }
-          Row(id, w.toLong, h.toLong, w.toLong * h, sr, sg, sb, maxL)
-        }
-      }(Encoders.row(outSchema))
-  }
+  def qMediaPpm(s: SparkSession, dir: String): DataFrame =
+    synthesizeBy[Long](s, dir, decodeStatsSchema, "doc_id") { () => (id, _) =>
+      // comment injection: the parser must skip it per spec
+      val raw = encodePpm(id)
+      val withComment =
+        ("P6\n# graft synthetic raster\n" +
+          new String(raw, 3, raw.length - 3, "ISO-8859-1"))
+          .getBytes("ISO-8859-1")
+      val (w, h, px) = parsePpm(withComment)
+      Iterator.single(statsRow(id, w, h, pixelStats(w * h) { i =>
+        packRgb(px(3 * i) & 0xFF, px(3 * i + 1) & 0xFF, px(3 * i + 2) & 0xFF)
+      }))
+    }
 
+  /** E8 synthesis: deterministic RGB images (distinct formulas and
+    * dimensions from the BMP set) encoded as REAL PNGs.
+    */
   def synthesizePng(s: SparkSession, dir: String): DataFrame =
-    synthesizeBy(s, dir)(encodePng)
+    synthesizeBlobs(s, dir)(encodePng)
 
   /** Build the E8 deterministic image for `id` — w = 8 + id%12,
     * h = 8 + id%6, r = (3·id + 5x + 7y) % 256, g = (5·id + 3x + y)
     * % 256, b = (17·id + x + 3y) % 256 — and encode it as a real PNG.
     */
-  private[graft] def encodePng(id: Long): Array[Byte] = {
-    val w = (8 + id % 12).toInt; val h = (8 + id % 6).toInt
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val r = ((3 * id + 5L * x + 7L * y) % 256).toInt
-        val g = ((5 * id + 3L * x + y) % 256).toInt
-        val b = ((17 * id + x + 3L * y) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.setUseCache(false)
-    require(javax.imageio.ImageIO.write(img, "png", bos), "no PNG writer available")
-    bos.toByteArray
-  }
+  private[graft] def encodePng(id: Long): Array[Byte] =
+    imageBytes(rgbImage((8 + id % 12).toInt, (8 + id % 6).toInt) { (x, y) =>
+      packRgb(3 * id + 5L * x + 7L * y, 5 * id + 3L * x + y, 17 * id + x + 3L * y)
+    }, "png")
 
   /** E7: the production blob-ingest path — one file per blob on
     * shared storage, read by Spark's `binaryFile` source (path, length,
@@ -2040,11 +1933,11 @@ object Multimodal {
   def ingestBlobs(s: SparkSession, dir: String, featureDim: Int = 8): DataFrame =
     decodeFeatures(readBlobs(s, dir), featureDim)
 
-  /** Deterministic hash-derived "features" in [0,1) for ARBITRARY
-    * payloads (the format-specific real codecs live in decodeBmp /
-    * decodePng / decodeWav below): keeps the E7 ingest path total —
-    * every blob gets a feature row even when its bytes are not one of
-    * the decoded container formats.
+  /** Deterministic hash-derived "features" in [0,1) for the GRFT
+    * payloads, whose body is document text rather than pixels (the
+    * real codecs are the ImageIO branch of [[decodeFeatures]]). Only
+    * GRFT payloads reach it: [[decodeFeatures]] rejects a payload whose
+    * magic it does not know.
     */
   private def fakeDecode(payload: Array[Byte], dim: Int): Array[Float] = {
     val out = new Array[Float](dim)

@@ -141,4 +141,81 @@ class MultimodalSpec extends AnyFunSuite {
       while (e2 != null) { bad.readAllBytes(); e2 = bad.getNextEntry }
     }
   }
+  /** md5 of (id, length, bytes) per payload, in the given order. */
+  private def md5Of(payloads: Iterator[(Long, Array[Byte])]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    payloads.foreach { case (id, b) =>
+      md.update(java.nio.ByteBuffer.allocate(12).putLong(id).putInt(b.length).array())
+      md.update(b)
+    }
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  test("synthesized payload bytes are pinned: every encoder and every synthesizer") {
+    val spark = TestSpark.spark
+    val sfDir = "/root/testdata/sf0.001"
+    val encoders = Seq[(String, Long => Array[Byte])](
+      "encodeBmp" -> Multimodal.encodeBmp, "encodePng" -> Multimodal.encodePng,
+      "encodeWav" -> Multimodal.encodeWav, "encodeAvi" -> Multimodal.encodeAvi,
+      "encodeMp3" -> Multimodal.encodeMp3, "encodeZip" -> Multimodal.encodeZip,
+      "encodeWarc" -> Multimodal.encodeWarc, "encodePpm" -> Multimodal.encodePpm)
+    val frames = Seq(
+      "synthesizeVideo" -> Multimodal.synthesizeVideo(spark, sfDir),
+      "synthesizeVideoBytes" -> Multimodal.synthesizeVideoBytes(spark, sfDir),
+      "synthesizeMedia" -> Multimodal.synthesizeMedia(spark, sfDir),
+      "synthesizeAudio" -> Multimodal.synthesizeAudio(spark, sfDir),
+      "synthesizeCrossCodec" -> Multimodal.synthesizeCrossCodec(spark, sfDir))
+    val got = encoders.map { case (name, enc) =>
+      name -> md5Of((0L until 48L).iterator.map(id => id -> enc(id)))
+    } ++ frames.map { case (name, df) =>
+      name -> md5Of(df.select("media_id", "payload").collect()
+        .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).sortBy(_._1).iterator)
+    }
+    // the oracles rebuild these payloads from the same formulas, so any
+    // byte a refactor of the writers changes is a format change
+    val pinned = Map(
+      "encodeBmp" -> "995b9166d3e945201faf6d4d749f47ff",
+      "encodePng" -> "e0d289f43403de8f5a6ed2aa856f34ee",
+      "encodeWav" -> "0c86f47b6d22b84592774f54e29997f7",
+      "encodeAvi" -> "02a3c9c24fea4e4e667771a41b226cf2",
+      "encodeMp3" -> "37927f929ded6f75889faafc4b0852f3",
+      "encodeZip" -> "7fa8ccdafbae05377cc3940e24ddbede",
+      "encodeWarc" -> "c8b746fdb229a03e65ff27f37a012ff3",
+      "encodePpm" -> "e0db3b28ba14f7ba4da8eacf9f3b6042",
+      "synthesizeVideo" -> "30f67482e06759582ea8723698c2dd95",
+      "synthesizeVideoBytes" -> "c727f1cec52a8850ba05f3eb49b96d9c",
+      "synthesizeMedia" -> "683236eca6a82dbace44acc400d3f731",
+      "synthesizeAudio" -> "bf178da21f7fed56b17c998f45851a40",
+      "synthesizeCrossCodec" -> "186e0357a5b245b724d845b5cd3dcf67")
+    got.foreach { case (name, h) => assert(h == pinned(name), name) }
+  }
+
+  test("a null or empty payload fails the payload kernels with its id, not an NPE") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val grfv = java.nio.ByteBuffer.allocate(8).put("GRFV".getBytes).putInt(0).array()
+    val cases = Seq[(String, () => Any, String)](
+      ("decodeFeatures", () => Multimodal.decodeFeatures(
+        Seq(1L -> Option(Multimodal.encodeBmp(1L)), 7L -> None)
+          .toDF("media_id", "payload")).collect(),
+        "non-null payload violated at media_id 7"),
+      ("sampleFrames", () => Multimodal.sampleFrames(
+        Seq(1L -> Option(grfv), 7L -> None).toDF("media_id", "payload"), 1).collect(),
+        "non-null payload violated at media_id 7"),
+      ("chunkBytes", () => Multimodal.chunkBytes(
+        Seq(1L -> Option("some text"), 7L -> None).toDF("doc_id", "text")).collect(),
+        "non-null text violated at doc_id 7"),
+      // an empty blob (an empty file on the ingest path) has no magic
+      ("decodeFeatures, empty payload", () => Multimodal.decodeFeatures(
+        Seq(1L -> Multimodal.encodeBmp(1L), 7L -> Array.empty[Byte])
+          .toDF("media_id", "payload")).collect(),
+        "bad magic for media 7"))
+    for ((name, run, msg) <- cases) {
+      val e = intercept[Exception](run())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains(msg)), s"$name: ${chain.mkString("\n")}")
+      assert(!chain.exists(_.isInstanceOf[NullPointerException]), name)
+    }
+  }
 }
